@@ -269,27 +269,6 @@ object ScaleSoak {
       corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("doc_id"))
         .count()
     }
-    probed("clean_shingle_df") {
-      // the ORIGINAL df-via-window shape (pre-round-7): kept as the
-      // before-measurement of the hot-key straggler — one window
-      // partition holds every row of a corpus-hot shingle ("and of
-      // note", df = 0.96·N here), a single ~N-row task no partition
-      // count can split
-      val dfW = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
-      graft.dedup.Dedup.shingles(corpus).distinct()
-        .withColumn("df", count(lit(1)).over(dfW))
-        .filter(col("df") <= 50).count()
-    }
-    probed("clean_shingle_df_hotset") {
-      // the UNHINTED groupBy + anti-join (round 7's first fix attempt,
-      // kept as a before-measurement): without an explicit broadcast
-      // the anti-join plans sort-merge — a second full index shuffle
-      // whose hot-key partition is its own straggler (613 s at 10M)
-      val dist = graft.dedup.Dedup.shingles(corpus).distinct()
-      val hot = dist.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > 50).select(col("shingle"))
-      dist.join(hot, Seq("shingle"), "left_anti").count()
-    }
     probed("clean_shingle_df_hotset_bcast") {
       // the SHIPPED shape (Dedup.jaccardPairs since the round-7 A/B):
       // combinable groupBy df → tiny over-cap set → EXPLICIT broadcast
@@ -303,34 +282,6 @@ object ScaleSoak {
     probed("clean_jaccard") {
       graft.dedup.Dedup.jaccardPairs(corpus, minJaccard = 0.5, maxShingleDf = 50)
         .count()
-    }
-    probed("clean_jaccard_ckpt") {
-      // the REFUTED index-materialization shape (round-7 A/B, paired
-      // with clean_jaccard): jaccardPairs' exact plan plus a
-      // localCheckpoint of the distinct shingle index. Hypothesis was
-      // that the three consumers re-execute the explode+md5 lineage;
-      // the 2.5M stage-detail A/B showed identical stage structure and
-      // shuffle bytes either way (exchange reuse already covers it)
-      // while the checkpoint cost 3× the task CPU (10,254 vs 3,505
-      // task-seconds) serializing the index to the block store and
-      // reading it back — see SCALE.md "clean_corpus decomposition"
-      val dist = graft.dedup.Dedup.shingles(corpus).distinct().localCheckpoint(false)
-      val hot = dist.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > 50).select(col("shingle"))
-      val sh = dist.join(broadcast(hot), Seq("shingle"), "left_anti")
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = sh.alias("a")
-        .join(sh.alias("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("n_inter"))
-      val jac = col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter"))
-      inter
-        .join(sizes.select(col("doc_id"), col("n").as("na")),
-          col("doc1") === col("doc_id")).drop("doc_id")
-        .join(sizes.select(col("doc_id"), col("n").as("nb")),
-          col("doc2") === col("doc_id")).drop("doc_id")
-        .filter(jac >= 0.5).count()
     }
     probed("clean_clusters") {
       graft.dedup.Dedup.clusters(
@@ -601,28 +552,6 @@ object ScaleSoak {
       noBroadcast(
         graft.dedup.SimilarityJoin.prefixJaccardPairsOver(sh, minJaccard = 0.5).count())
     }
-    probed("prefix_jaccard_occupancy") {
-      // diagnostic for the 2.5M straggler: the candidate join's cost is
-      // Σ occupancy² over PREFIX postings per token — this names the
-      // hot keys (prints top-5 tokens by prefix-posting count) without
-      // running the join
-      val sh = graft.dedup.Dedup.shingles(corpus)
-        .select(col("doc_id"), col("shingle").as("tok")).distinct()
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))
-      val withDf = sh.withColumn("df", count(lit(1)).over(w))
-      val ordered = withDf.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ts"))
-        .select(col("doc_id"),
-          transform(col("ts"), t => t("tok")).as("toks"), size(col("ts")).as("n"))
-      val prefixLen = (col("n") - ceil(lit(0.5) * col("n")) + 1).cast("int")
-      val occ = ordered
-        .select(explode(slice(col("toks"), lit(1), prefixLen)).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("postings"))
-      occ.orderBy(col("postings").desc).limit(5).collect()
-        .foreach(r => System.err.println(
-          s"[soak] prefix posting hot: '${r.getString(0)}' -> ${r.getLong(1)}"))
-      occ.agg(sum(col("postings") * col("postings"))).head().getLong(0)
-    }
     probed("editdist_pairs") {
       // 16-hex-char entity names, one planted 1-char typo per 20 ids:
       // deletion-neighborhood keys are 17·N with bucket sizes ~2 (random
@@ -690,21 +619,15 @@ object ScaleSoak {
       graft.ann.Ann.ivfSearch(indexed, "label", queries, k = 10, nprobe = 2).count()
     }
     timed("int8_quantize") { sinkCount(graft.ann.Ann.quantizeInt8(emb)) }
-    // the lsh payload pair measures SHUFFLE-JOIN payload cost, so force
+    // lsh_pairs_carry measures SHUFFLE-JOIN payload cost, so force
     // shuffle plans: spark.range's tiny size estimate otherwise baits the
     // planner into BROADCASTING the multi-GB banded frame — a plan a real
     // corpus-scale band join can never take (and whose driver
     // materialization cost swamps the thing being measured)
     timed("lsh_pairs_carry") {
-      // vectors ride the band-key shuffle (2 exchanges, dim-wide rows):
-      // paired with lsh_pairs_rejoin below, this measures the payload
-      // tradeoff GRAFT_SOAK_DIM sweeps — see SCALE.md lsh payload table
-      noBroadcast(graft.ann.Ann.lshPairs(emb, dim = dim, carryVectors = Some(true)).count())
-    }
-    timed("lsh_pairs_rejoin") {
-      // ids-only band shuffle + two re-attach equi-joins, pairs dedup'd
-      // BEFORE any cosine
-      noBroadcast(graft.ann.Ann.lshPairs(emb, dim = dim, carryVectors = Some(false)).count())
+      // vectors ride the band-key shuffle (2 exchanges, dim-wide rows);
+      // GRAFT_SOAK_DIM sweeps its payload — see SCALE.md lsh payload table
+      noBroadcast(graft.ann.Ann.lshPairs(emb, dim = dim).count())
     }
     timed("shuffle_order") {
       sinkCount(graft.dedup.Sampling.shuffleOrder(corpus.select("doc_id"), "doc_id"))

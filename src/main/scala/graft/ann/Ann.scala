@@ -102,64 +102,24 @@ object Ann {
     * of a fixed 8-bit code); independent tables recover the recall a
     * single long code gives up.
     *
-    * Two physically different, result-identical plans sit behind
-    * `carryVectors` (AnnSpec locks the equality):
-    *   - carry (true, DEFAULT): vectors ride the band-key shuffle on
-    *     both sides, cosine + the minSim filter run inside the bucket
-    *     join, pairs dedup after — exchange volume is N·tables·dim,
-    *     FIXED by corpus size, and nothing downstream of the filter
-    *     moves more than the surviving pairs;
-    *   - rejoin (false): the band shuffle carries IDS ONLY, candidate
-    *     pairs dedup BEFORE any cosine, then two equi-joins re-attach
-    *     the vectors — every exchange before the filter is ~dim×
-    *     lighter, but the re-attach moves candidates·dim bytes, a
-    *     quantity the CORPUS does not bound.
-    * Measured (SCALE.md, lsh payload table, forced shuffle joins):
-    * rejoin wins only the small-corpus corner where candidates stay
-    * ≈ N (500k docs / dim 64: 27.5 s vs 82.9 s); at dim 512 its
-    * re-attach spilled 17 GB and lost outright, and in the quadratic
-    * collision regime (2.5M docs, 130M candidates) it exhausted 44 GB
-    * of spill disk and DIED while carry completed in 764 s with zero
-    * spill. Candidate volume is unknowable before running, so the
-    * default is the strategy whose cost the corpus bounds; flip to
-    * rejoin only when candidates are known ≈ N (high bits, verified
-    * occupancy) and dim is small.
+    * Vectors ride the band-key shuffle so exchange volume is bounded by
+    * the corpus (N·tables·dim), not by candidate volume (SCALE.md "LSH
+    * pair-generation payload tradeoff" measures the ids-only rejoin plan).
     */
   def lshPairs(embeddings: DataFrame, dim: Int = 64, bits: Int = 16, tables: Int = 4,
-      minSim: Double = 0.2, carryVectors: Option[Boolean] = None): DataFrame = {
-    val carry = carryVectors.getOrElse(true)
-    val base = embeddings.select(col("vec_id"), toD(col("embedding")).as("e"))
-    def coded(withVec: Boolean): DataFrame = {
-      val cols = if (withVec) Seq(col("vec_id"), col("e")) else Seq(col("vec_id"))
-      base.select(cols :+
+      minSim: Double = 0.2): DataFrame = {
+    val c = embeddings.select(col("vec_id"), toD(col("embedding")).as("e"))
+      .select(col("vec_id"), col("e"),
         posexplode(array((0 until tables).map(t => hyperplaneCode(col("e"), dim, bits, t)): _*))
-          .as(Seq("table_no", "bucket")): _*)
-    }
-    if (carry) {
-      val c = coded(withVec = true)
-      val sim = VectorOps.cosine(col("a.e"), col("b.e"))
-      c.alias("a")
-        .join(c.alias("b"),
-          col("a.table_no") === col("b.table_no") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"), sim.as("sim"))
-        .filter(col("sim") >= minSim)
-        .distinct()
-    } else {
-      val c = coded(withVec = false)
-      val cands = c.alias("a")
-        .join(c.alias("b"),
-          col("a.table_no") === col("b.table_no") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"))
-        .distinct()
-      val sim = VectorOps.cosine(col("e1"), col("e2"))
-      cands
-        .join(base.select(col("vec_id").as("id1"), col("e").as("e1")), Seq("id1"))
-        .join(base.select(col("vec_id").as("id2"), col("e").as("e2")), Seq("id2"))
-        .select(col("id1"), col("id2"), sim.as("sim"))
-        .filter(col("sim") >= minSim)
-    }
+          .as(Seq("table_no", "bucket")))
+    val sim = VectorOps.cosine(col("a.e"), col("b.e"))
+    c.alias("a")
+      .join(c.alias("b"),
+        col("a.table_no") === col("b.table_no") && col("a.bucket") === col("b.bucket") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"), sim.as("sim"))
+      .filter(col("sim") >= minSim)
+      .distinct()
   }
 
   /** Per-cell centroids as (cell, dim, centroid) — exact decimal means so

@@ -23,13 +23,12 @@ import org.apache.spark.sql.SparkSession
   * a per-session reference count makes the first entry save the
   * caller's value and the last exit restore it (a naive set/restore
   * pair would let two overlapping loops clobber each other's restore
-  * and leave the advisory permanently altered). Overlapping wrappers
-  * requesting DIFFERENT advisory values share the first one's — the
-  * remedy is a granularity hint, not a correctness setting.
+  * and leave the advisory permanently altered).
   */
 object AqeHints {
 
   private val AdvisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  private val TinyRowAdvisory = "8m"
 
   /** Per-session nesting depth + the conf value saved by the OUTERMOST
     * wrapper (restored only when the count returns to zero). Keyed by
@@ -41,36 +40,29 @@ object AqeHints {
 
   /** Run `body` (an eager loop — the frames it materializes must
     * execute inside it, e.g. via localCheckpoint(true) or count) with
-    * the advisory partition size dropped to `bytes`.
+    * the advisory partition size dropped to 8 MB.
     */
-  def withTinyRowAdvisory[T](spark: SparkSession, bytes: String = "8m")(body: => T): T = {
-    // GRAFT_TINY_ROW_ADVISORY: A/B hook — override the advisory value,
-    // or "off" to run `body` under the caller's unmodified session
-    // (the two-jar-forensics knob without a jar swap)
-    val value = sys.env.getOrElse("GRAFT_TINY_ROW_ADVISORY", bytes)
-    if (value == "off") body
-    else {
-      active.synchronized {
-        active.get(spark) match {
-          case null =>
-            val prev = spark.conf.getOption(AdvisoryKey)
-            spark.conf.set(AdvisoryKey, value)
-            active.put(spark, (1, prev))
-          case (n, prev) =>
-            active.put(spark, (n + 1, prev)) // inner wrapper: no re-save
-        }
+  def withTinyRowAdvisory[T](spark: SparkSession)(body: => T): T = {
+    active.synchronized {
+      active.get(spark) match {
+        case null =>
+          val prev = spark.conf.getOption(AdvisoryKey)
+          spark.conf.set(AdvisoryKey, TinyRowAdvisory)
+          active.put(spark, (1, prev))
+        case (n, prev) =>
+          active.put(spark, (n + 1, prev)) // inner wrapper: no re-save
       }
-      try body
-      finally active.synchronized {
-        active.get(spark) match {
-          case (1, prev) =>
-            active.remove(spark)
-            prev match {
-              case Some(v) => spark.conf.set(AdvisoryKey, v)
-              case None    => spark.conf.unset(AdvisoryKey)
-            }
-          case (n, prev) => active.put(spark, (n - 1, prev))
-        }
+    }
+    try body
+    finally active.synchronized {
+      active.get(spark) match {
+        case (1, prev) =>
+          active.remove(spark)
+          prev match {
+            case Some(v) => spark.conf.set(AdvisoryKey, v)
+            case None    => spark.conf.unset(AdvisoryKey)
+          }
+        case (n, prev) => active.put(spark, (n - 1, prev))
       }
     }
   }

@@ -315,6 +315,14 @@ object Dedup {
     * observability hook (DedupSpec asserts the O(log n) bound on a long
     * path graph).
     *
+    * `maxIter` bounds the pointer-doubling loop AFTER the contraction,
+    * not the whole run: the two init rounds (outer and quotient) come on
+    * top, so the reported round count can reach `maxIter + 2`. The
+    * returned frame is backed by two retained checkpoints, the outer
+    * init labels and the loop's final round; the caller owns them. On
+    * any throw (non-convergence included) every block this call
+    * persisted is freed first.
+    *
     * Structure (r11): init (absorbing round 1) → ONE-TIME GRAPH
     * CONTRACTION → pointer-doubling loop on the contracted graph →
     * compose. After the init round, edge (u, v) is rewritten to
@@ -324,8 +332,9 @@ object Dedup {
     * that follows propagates over the label-QUOTIENT graph instead of
     * the full candidate edge set — on the dense dedup graphs this
     * library builds, that is a collapse of orders of magnitude
-    * (RoundFloorProbe: d17's image graph, 1.54 M edges → 54 after one
-    * init round; output diff vs the uncontracted loop = 0). The final
+    * (OPTIMIZATION_r11.md "clusters() contraction and second jump":
+    * d17's image graph, 1.54 M edges → 54 after one init round; output
+    * diff vs the uncontracted loop = 0). The final
     * labels compose: out(v) = rep(label₁(v)), where labels absent from
     * the contracted graph are provably converged (all-equal labels in a
     * component mean the shared label is the component min, because the
@@ -399,8 +408,16 @@ object Dedup {
         .agg(min(col("src")).as("nmin"))
         .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
         .localCheckpoint()
-      val (rep, innerRounds) = propagationLoop(cEdges, qInit, maxIter)
-      graft.core.Checkpoints.unpersistCheckpoint(cEdges)
+      // the loop owns qInit and frees its own round checkpoints when it
+      // throws; the blocks held here are freed on every exit, and
+      // initLabels is kept only on success (the result reads it)
+      val (rep, innerRounds) =
+        try propagationLoop(cEdges, qInit, maxIter)
+        catch {
+          case e: Throwable =>
+            graft.core.Checkpoints.unpersistCheckpoint(initLabels)
+            throw e
+        } finally graft.core.Checkpoints.unpersistCheckpoint(cEdges)
       // compose: quotient-resolved representative of my init label; init
       // labels outside the quotient were converged already (see scaladoc)
       val out = initLabels
@@ -445,7 +462,7 @@ object Dedup {
     var frontier = labels.filter(col("label") =!= col("doc_id"))
     var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+    try while (changed > 0 && iter < maxIter) {
       val prop = edges.join(frontier.select(col("doc_id").as("src"), col("label")), "src")
         .groupBy(col("dst").as("doc_id"))
         .agg(min(col("label")).as("nlabel"))
@@ -475,7 +492,8 @@ object Dedup {
       // its fixed scheduling cost, so trading one more label-keyed join
       // per round for ~half the rounds is a direct win (A/B below); the
       // output is unchanged — every jump application is monotone toward
-      // the same min-label fixpoint (ClusterProbe's 2j variant, diff 0).
+      // the same min-label fixpoint (OPTIMIZATION_r11.md: the 2j variant
+      // matched the one-jump loop with diff 0).
       val jump2 = labels
         .select(col("doc_id").as("l1"), col("label").as("plabel2"))
       val next = half.join(jump2, Seq("l1"), "left")
@@ -508,11 +526,19 @@ object Dedup {
       frontier = next.filter(col("nextLabel") =!= col("prevLabel"))
         .select(col("doc_id"), col("nextLabel").as("label"))
       iter += 1
+    } catch {
+      case e: Throwable =>
+        graft.core.Checkpoints.unpersistCheckpoint(checkpointed)
+        throw e
     }
-    if (changed > 0) throw new IllegalStateException(
-      s"clusters() did not converge in $maxIter rounds ($changed labels still " +
-        "moving) — with pointer doubling this means a component ~2^maxIter hops " +
-        "across; raise maxIter")
+    if (changed > 0) {
+      graft.core.Checkpoints.unpersistCheckpoint(checkpointed)
+      throw new IllegalStateException(
+        s"clusters() did not converge: $changed labels still moving after " +
+          s"$maxIter rounds past the graph contraction (${maxIter + 2} rounds " +
+          "counting the two init rounds) — with pointer doubling this means a " +
+          "component ~4^maxIter hops across; raise maxIter")
+    }
     (labels, iter)
   }
 

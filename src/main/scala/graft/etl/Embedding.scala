@@ -89,56 +89,4 @@ object Embedding {
       config: W2VConfig = W2VConfig(),
       ranks: Seq[SectionRank] = SectionRanks.default): Word2VecModel =
     fit(trainingSet(matches, spark, ranks), config)
-
-  /** SHARD-AND-AVERAGE skip-gram — the candidate break of the MLlib fit
-    * ceiling (the fit is 40%+ of the 10M pipeline): split the bags into
-    * `shards` deterministic pmid-hash shards, fit an INDEPENDENT model
-    * per shard from the same seed, and average each word's vectors
-    * across the shards that saw it (unweighted; hash sharding balances
-    * shard sizes). This is MLlib's own async replica-averaging taken to
-    * its extreme — replicas sync once at the END instead of every
-    * iteration — so it trades synonym quality for fit isolation; the
-    * W2VProbe A/B measures both sides (wall AND top-k synonym
-    * agreement vs the single fit), and SCALE.md records the verdict.
-    *
-    * `shards = 1` is exactly [[fit]] (degenerate case, spec-locked).
-    * Caveat: `minCount` applies PER SHARD — a word at the threshold can
-    * fall below it in every shard and vanish; keep minCount at the
-    * reference's 1 when sharding.
-    *
-    * Returns the averaged vector table in `model.getVectors`' exact
-    * shape — (word, vector ml.linalg.Vector) — so [[Vectors.compute]]
-    * and Evidence consume it unchanged. The averaging is one
-    * vocab-bounded aggregation (vocab × dim × shards rows), never
-    * corpus-shaped.
-    */
-  def fitSharded(training: DataFrame, config: W2VConfig = W2VConfig(),
-      shards: Int = 2): DataFrame = {
-    require(shards >= 1, "shards must be >= 1")
-    if (shards == 1) return fit(training, config).getVectors
-    val tagged = training
-      .withColumn("_shard", pmod(xxhash64(col("pmid")), lit(shards)))
-    // one pass to find the nonempty shards: MLlib refuses an empty
-    // vocabulary, and tiny corpora can leave a hash shard empty
-    // (callers should persist `training`; each shard fit scans it)
-    val present = tagged.groupBy(col("_shard")).count()
-      .collect().map(_.getLong(0)).toSet
-    val perShard = (0 until shards).filter(s => present(s.toLong)).map { s =>
-      fit(tagged.filter(col("_shard") === s).drop("_shard"), config)
-        .getVectors
-        .select(col("word"),
-          org.apache.spark.ml.functions.vector_to_array(col("vector")).as("v"))
-    }
-    require(perShard.nonEmpty, "fitSharded: training set is empty")
-    perShard.reduce(_ unionByName _)
-      .select(col("word"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("word"), col("pos"))
-      .agg(avg(col("x")).as("x"))
-      .groupBy(col("word"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("x")))),
-        s => s.getField("x")).as("arr"))
-      .select(col("word"),
-        org.apache.spark.ml.functions.array_to_vector(col("arr")).as("vector"))
-  }
 }

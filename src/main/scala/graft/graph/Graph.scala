@@ -133,12 +133,13 @@ object Graph {
     while (iter < maxIter) {
       val next = kCorePeel(e, k, rounds = 1) // checkpointed on return
       val m = next.count()
-      if (m == n) return next
       // free the superseded generation (no-op for the raw input on the
       // first round) — retention stays one generation over any depth
       graft.core.Checkpoints.unpersistCheckpoint(e)
+      if (m == n) return next
       e = next; n = m; iter += 1
     }
+    graft.core.Checkpoints.unpersistCheckpoint(e)
     throw new IllegalStateException(
       s"k-core did not converge in $maxIter rounds ($n edges remaining)")
   }

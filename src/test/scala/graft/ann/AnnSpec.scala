@@ -291,19 +291,6 @@ class AnnSpec extends SparkSpec {
     check.filter(col("a0") =!= col("b0") && col("a1") =!= col("b1")).count() shouldBe 0
   }
 
-  it should "produce the identical pair set under carry and rejoin plans" in {
-    // the two physical strategies (vectors riding the band shuffle vs
-    // ids-only shuffle + re-attach joins) must be result-identical —
-    // sim included, since cosine runs on the same double arrays
-    val carry = Ann.lshPairs(emb, dim = 64, bits = 16, tables = 2, minSim = 0.2,
-      carryVectors = Some(true))
-    val rejoin = Ann.lshPairs(emb, dim = 64, bits = 16, tables = 2, minSim = 0.2,
-      carryVectors = Some(false))
-    carry.exceptAll(rejoin).count() shouldBe 0
-    rejoin.exceptAll(carry).count() shouldBe 0
-    rejoin.count() should be > 0L
-  }
-
   it should "always recall an exact duplicate, in a bucket space that grows with bits" in {
     // identical vectors get identical codes in every table -> guaranteed pair
     val dup = emb.filter(col("vec_id") === 0)

@@ -171,8 +171,11 @@ class DedupSpec extends SparkSpec {
   it should "throw instead of returning split clusters when not converged" in {
     val path = (0 until 40).map(i => (i.toLong, i.toLong + 1)).toDF("doc1", "doc2")
     // maxIter=1 cannot close a 40-hop chain even with doubling
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     an[IllegalStateException] should be thrownBy
       Dedup.clusters(path, maxIter = 1)
+    // the throw frees every block the call persisted
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before) shouldBe empty
     // maxIter <= 0 is a caller bug, rejected up front — not reported as
     // the (misleading) non-convergence failure
     an[IllegalArgumentException] should be thrownBy

@@ -122,31 +122,6 @@ class PipelineSpec extends SparkSpec {
     s1 shouldBe s2
   }
 
-  "Embedding.fitSharded" should
-      "reduce to fit() at one shard, keep the full vocab, and stay deterministic" in {
-    val cfg = Embedding.W2VConfig(vectorSize = 8, numPartitions = 1)
-    val training = Embedding.trainingSet(matches, spark).persist()
-    try {
-      val single = Embedding.fit(training, cfg).getVectors
-      // degenerate case: one shard IS the plain fit
-      Embedding.fitSharded(training, cfg, shards = 1)
-        .orderBy("word").collect().map(_.toString) shouldBe
-        single.orderBy("word").collect().map(_.toString)
-      val two = Embedding.fitSharded(training, cfg, shards = 2).cache()
-      // model.getVectors shape: Vectors.compute consumes it unchanged
-      val vecs = Vectors.compute(two)
-      vecs.columns.toSeq shouldBe Seq("category", "word", "norm", "vector")
-      vecs.filter(col("norm") <= 0).count() shouldBe 0
-      // vocabulary = union of shard vocabs = the full vocab at minCount 1
-      two.select("word").as[String].collect().toSet shouldBe
-        single.select("word").as[String].collect().toSet
-      // deterministic: seed + pinned partitions + hash shards
-      Embedding.fitSharded(training, cfg, shards = 2)
-        .orderBy("word").collect().map(_.toString) shouldBe
-        two.orderBy("word").collect().map(_.toString)
-    } finally training.unpersist()
-  }
-
   "Word2Vec model" should "survive a save/load round trip" in {
     val model = Embedding.generateModel(matches, spark,
       Embedding.W2VConfig(vectorSize = 8, numPartitions = 1))

@@ -100,9 +100,12 @@ class GraphSpec extends SparkSpec {
   }
 
   it should "throw rather than return a half-peeled graph when maxIter is too small" in {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException] {
       Graph.kCore(coreEdges, 2, maxIter = 1)
     }
+    // the throw frees the last peeled generation
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before) shouldBe empty
   }
 
   behavior of "Graph.bfsDistances"
