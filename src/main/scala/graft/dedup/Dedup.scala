@@ -1,7 +1,9 @@
 package graft.dedup
 
+import graft.core.{Checkpoints, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication at corpus scale: exact, MinHash+LSH, SimHash and
   * n-gram-Jaccard near-dup — each shaped so the shuffle carries hashes and
@@ -304,8 +306,7 @@ object Dedup {
     * label-chain each round, giving O(log diameter) convergence —
     * maxIter=20 covers components a million hops across. The per-round
     * work is two shuffles on doc_id/label at candidate-set scale (pairs,
-    * not corpus); the driver only ever sees a changed-row count, lineage
-    * is cut per round so the plan stays flat at any scale, and
+    * not corpus); rounds run on [[graft.core.Fixpoint]], so
     * non-convergence throws instead of returning split clusters.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame =
@@ -344,107 +345,83 @@ object Dedup {
     * contraction idea applied once, where it is cheapest.
     */
   def clustersWithRounds(pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
-    // changed starts at 1 so the loop runs at least once; maxIter <= 0
-    // would skip the loop entirely and mis-report as non-convergence
+    // maxIter <= 0 would run no round and mis-report as non-convergence
     require(maxIter > 0, s"clusters() needs maxIter > 0, got $maxIter")
-    // tiny-row advisory for the label rounds: (doc_id, label) rows are
-    // 16 bytes but CPU-heavy to aggregate — without it AQE's byte-based
-    // coalescing rebuilds the few-fat-tasks wall the 40M LPA A/B
-    // measured (SCALE.md "label_propagation at 40M")
-    graft.core.AqeHints.withTinyRowAdvisory(pairs.sparkSession) {
-    // SERIALIZED storage for the edge blocks: edges are only ever
-    // SCANNED once per round (never random-accessed), and they are the
-    // one frame here whose size tracks the candidate volume — at 40M
-    // soak docs the deserialized default filled the block manager with
-    // ~360 MB row-object partitions and drove the JVM into a shuffle-
-    // write OOM, while serialized+compressed blocks hold the same edges
-    // in a fraction of the heap and overflow to disk cleanly. The
-    // per-round label checkpoints stay deserialized: they are
-    // docs-in-pairs-sized, re-read three times per round, and the
-    // round-6 A/B showed serialization CPU is pure cost when blocks fit.
-    val edges = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
-      .unionByName(pairs.select(col("doc2").as("src"), col("doc1").as("dst")))
-      .distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // INIT ABSORBS ROUND 1 (r11): with labels = self, the first round's
-    // jump is a no-op and its prop reduces to "min over self and
-    // neighbors" — computable directly at init as groupBy(dst).min(src)
-    // (the edge set is symmetric, so every node appears as dst and its
-    // srcs are exactly its neighbors). State equals the old round-1
-    // output exactly: label(v) = min(v, N(v)).
-    val initLabels = edges.groupBy(col("dst").as("doc_id"))
-      .agg(min(col("src")).as("nmin"))
-      .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
-      .localCheckpoint()
-    // contract: relabel both edge endpoints through the init labels, drop
-    // the (now converged) self-loops, dedupe. The row count is observed
-    // during the checkpoint action itself so the empty-quotient short
-    // circuit costs no extra job.
-    val cObs = org.apache.spark.sql.Observation()
-    val cEdges = edges
-      .join(initLabels.select(col("doc_id").as("src"), col("label").as("ls")), "src")
-      .join(initLabels.select(col("doc_id").as("dst"), col("label").as("ld")), "dst")
-      .filter(col("ls") =!= col("ld"))
-      .select(col("ls").as("src"), col("ld").as("dst"))
-      .distinct()
-      .observe(cObs, count(lit(1)).as("n"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    graft.core.Checkpoints.unpersistCheckpoint(edges)
-    val nQuotient =
-      try {
-        val row = scala.concurrent.Await.result(cObs.future,
-          scala.concurrent.duration.Duration(30, "s"))
-        row.getAs[Long]("n")
-      } catch {
-        case _: java.util.concurrent.TimeoutException => cEdges.count()
-      }
-    if (nQuotient == 0L) {
-      // every component agreed on one label at init — already the
-      // component min (the min node's label is itself)
-      graft.core.Checkpoints.unpersistCheckpoint(cEdges)
-      (initLabels.select(col("doc_id"), col("label").as("canonical_id")), 1)
-    } else {
-      val qInit = cEdges.groupBy(col("dst").as("doc_id"))
+    // candidate-volume-sized, scan-only edges: serialized; the init and
+    // contraction shuffle the same tiny rows as the rounds, so they run
+    // inside the driver's advisory scope too
+    val symmetric = graft.graph.Graph.undirected(
+      pairs.select(col("doc1").as("src"), col("doc2").as("dst"))).distinct()
+    Fixpoint.withCheckpoint(symmetric, StorageLevel.MEMORY_AND_DISK_SER) { edges =>
+      // INIT ABSORBS ROUND 1 (r11): with labels = self, the first round's
+      // jump is a no-op and its prop reduces to "min over self and
+      // neighbors" — computable directly at init as groupBy(dst).min(src)
+      // (the edge set is symmetric, so every node appears as dst and its
+      // srcs are exactly its neighbors). State equals the old round-1
+      // output exactly: label(v) = min(v, N(v)).
+      val initLabels = edges.groupBy(col("dst").as("doc_id"))
         .agg(min(col("src")).as("nmin"))
         .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
         .localCheckpoint()
-      // the loop owns qInit and frees its own round checkpoints when it
-      // throws; the blocks held here are freed on every exit, and
       // initLabels is kept only on success (the result reads it)
-      val (rep, innerRounds) =
-        try propagationLoop(cEdges, qInit, maxIter)
-        catch {
-          case e: Throwable =>
-            graft.core.Checkpoints.unpersistCheckpoint(initLabels)
-            throw e
-        } finally graft.core.Checkpoints.unpersistCheckpoint(cEdges)
-      // compose: quotient-resolved representative of my init label; init
-      // labels outside the quotient were converged already (see scaladoc)
-      val out = initLabels
-        .join(rep.select(col("doc_id").as("label"), col("label").as("rlabel")),
-          Seq("label"), "left")
-        .select(col("doc_id"),
-          coalesce(col("rlabel"), col("label")).as("canonical_id"))
-      // rounds = outer init + quotient init + inner loop rounds (each of
-      // the two inits absorbs a propagation round)
-      (out, 2 + innerRounds)
-    }
+      try {
+        // contract: relabel both edge endpoints through the init labels, drop
+        // the (now converged) self-loops, dedupe. The row count is observed
+        // during the checkpoint action itself so the empty-quotient short
+        // circuit costs no extra job.
+        val (cEdges, nQuotient) = Fixpoint.checkpointObserved(edges
+          .join(initLabels.select(col("doc_id").as("src"), col("label").as("ls")), "src")
+          .join(initLabels.select(col("doc_id").as("dst"), col("label").as("ld")), "dst")
+          .filter(col("ls") =!= col("ld"))
+          .select(col("ls").as("src"), col("ld").as("dst"))
+          .distinct(), StorageLevel.MEMORY_AND_DISK_SER, count(lit(1)))
+        // dead once contracted: free it now, not at the scope's exit
+        Checkpoints.unpersistCheckpoint(edges)
+        if (nQuotient == 0L) {
+          // every component agreed on one label at init — already the
+          // component min (the min node's label is itself)
+          Checkpoints.unpersistCheckpoint(cEdges)
+          (initLabels.select(col("doc_id"), col("label").as("canonical_id")), 1)
+        } else {
+          val qInit = cEdges.groupBy(col("dst").as("doc_id"))
+            .agg(min(col("src")).as("nmin"))
+            .select(col("doc_id"), least(col("doc_id"), col("nmin")).as("label"))
+          // node-sized label rounds, re-read thrice per round: deserialized
+          val (last, innerRounds) =
+            try Fixpoint.run(qInit, StorageLevel.MEMORY_AND_DISK, maxIter,
+              Some(Fixpoint.Zero(count(when(col("nextLabel") =!= col("prevLabel"), 1)),
+                changed => s"clusters() has $changed labels still moving past the graph " +
+                  s"contraction (${maxIter + 2} rounds counting the two init rounds) — with " +
+                  "pointer doubling this means a component ~4^maxIter hops across; raise maxIter")))(
+              labelRound(cEdges))
+            finally Checkpoints.unpersistCheckpoint(cEdges)
+          val rep = last.select(col("doc_id"), col("nextLabel").as("label"))
+          // compose: quotient-resolved representative of my init label; init
+          // labels outside the quotient were converged already (see scaladoc)
+          val out = initLabels
+            .join(rep.select(col("doc_id").as("label"), col("label").as("rlabel")),
+              Seq("label"), "left")
+            .select(col("doc_id"),
+              coalesce(col("rlabel"), col("label")).as("canonical_id"))
+          // rounds = outer init + quotient init + inner loop rounds (each of
+          // the two inits absorbs a propagation round)
+          (out, 2 + innerRounds)
+        }
+      } catch {
+        case e: Throwable =>
+          Checkpoints.unpersistCheckpoint(initLabels)
+          throw e
+      }
     }
   }
 
-  /** The pointer-doubling min-label loop over a SYMMETRIC, eagerly
-    * checkpointed edge frame and an initial (doc_id, label) frame, one
-    * row per node. Returns the converged labels (backed by the final
-    * round's checkpoint — the caller must keep it persisted) and the
-    * round count; throws on non-convergence within maxIter.
+  /** One pointer-doubling min-label round over the SYMMETRIC, eagerly
+    * checkpointed quotient `edges`: `prev` is the init (doc_id, label)
+    * frame in round 1 and the previous round's (doc_id, nextLabel,
+    * prevLabel) checkpoint after it. Rounds run on [[Fixpoint.run]]
+    * until no label changes.
     */
-  private def propagationLoop(edges: DataFrame, init: DataFrame,
-      maxIter: Int): (DataFrame, Int) = {
-    var labels = init
-    // the round's directly-checkpointed frame: `labels` becomes a lazy
-    // projection over it after each round, so the block-freeing handle
-    // must be the checkpoint product itself
-    var checkpointed = labels
+  private def labelRound(edges: DataFrame)(prev: DataFrame, round: Int): DataFrame = {
     // CONVERGED-COMPONENT FRONTIER: only labels that CHANGED last round
     // feed the edge-propagation join. Skipping an unchanged src loses
     // nothing — its current label was already propagated to every
@@ -459,87 +436,40 @@ object Dedup {
     // ("everyone's label has been propagated to every neighbor in the
     // round after it last changed") holds because the init's
     // neighbor-min is, by edge symmetry, exactly round 1's propagation.
-    var frontier = labels.filter(col("label") =!= col("doc_id"))
-    var iter = 0
-    var changed = 1L
-    try while (changed > 0 && iter < maxIter) {
-      val prop = edges.join(frontier.select(col("doc_id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("doc_id"))
-        .agg(min(col("label")).as("nlabel"))
-      // pointer jump: the label of my label (labels is keyed by every
-      // doc_id and labels only ever hold doc_ids, so the lookup is total)
-      val jump = labels
-        .select(col("doc_id").as("label"), col("label").as("plabel"))
-      // the changed count is OBSERVED during the checkpoint action
-      // itself (CollectMetricsExec passes rows through and accumulates),
-      // so convergence detection costs zero extra jobs — the previous
-      // filter-count over the materialized blocks was cheap but paid one
-      // more scheduled job per round, and the loop's wall at converged
-      // scale is all per-round fixed cost (r10 d17 stage trace: ~70
-      // sub-second stages per run)
-      val obs = org.apache.spark.sql.Observation(s"clusters_changed_$iter")
-      val half = labels.join(prop, Seq("doc_id"), "left")
-        .join(jump, Seq("label"), "left")
-        .select(col("doc_id"),
-          least(col("label"),
-            coalesce(col("nlabel"), col("label")),
-            coalesce(col("plabel"), col("label"))).as("l1"),
-          col("label").as("prevLabel"))
-      // SECOND pointer jump (r11): label-of-label-of-label — the chain to
-      // the component min contracts ~4x per round instead of ~2x, so the
-      // loop converges in ~log4 rounds. After the one-time contraction the
-      // per-round frames are quotient-sized and each round is dominated by
-      // its fixed scheduling cost, so trading one more label-keyed join
-      // per round for ~half the rounds is a direct win (A/B below); the
-      // output is unchanged — every jump application is monotone toward
-      // the same min-label fixpoint (OPTIMIZATION_r11.md: the 2j variant
-      // matched the one-jump loop with diff 0).
-      val jump2 = labels
-        .select(col("doc_id").as("l1"), col("label").as("plabel2"))
-      val next = half.join(jump2, Seq("l1"), "left")
-        .select(col("doc_id"),
-          least(col("l1"), coalesce(col("plabel2"), col("l1"))).as("nextLabel"),
-          col("prevLabel"))
-        .observe(obs, count(when(col("nextLabel") =!= col("prevLabel"), 1)).as("changed"))
-        .localCheckpoint()
-      // BOUNDED wait on the observed metric (ADVICE r10): obs.get blocks
-      // forever if the QueryExecutionListener event is ever dropped
-      // (checkpoint not routed through withAction, listener bus overload).
-      // Await the metric future briefly, then fall back to the explicit
-      // filter-count — one extra job in a path that should never execute,
-      // instead of a silent hang.
-      changed =
-        try {
-          val row = scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(30, "s"))
-          row.getAs[Long]("changed")
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            next.filter(col("nextLabel") =!= col("prevLabel")).count()
-        }
-      // next is materialized — free the superseded round's label blocks
-      // so block-manager usage stays one-generation-bounded over the
-      // O(log diameter) rounds (same discipline as CorpusStream's fold)
-      graft.core.Checkpoints.unpersistCheckpoint(checkpointed)
-      checkpointed = next
-      labels = next.select(col("doc_id"), col("nextLabel").as("label"))
-      frontier = next.filter(col("nextLabel") =!= col("prevLabel"))
-        .select(col("doc_id"), col("nextLabel").as("label"))
-      iter += 1
-    } catch {
-      case e: Throwable =>
-        graft.core.Checkpoints.unpersistCheckpoint(checkpointed)
-        throw e
-    }
-    if (changed > 0) {
-      graft.core.Checkpoints.unpersistCheckpoint(checkpointed)
-      throw new IllegalStateException(
-        s"clusters() did not converge: $changed labels still moving after " +
-          s"$maxIter rounds past the graph contraction (${maxIter + 2} rounds " +
-          "counting the two init rounds) — with pointer doubling this means a " +
-          "component ~4^maxIter hops across; raise maxIter")
-    }
-    (labels, iter)
+    val (labels, frontier) =
+      if (round == 1) (prev, prev.filter(col("label") =!= col("doc_id")))
+      else (prev.select(col("doc_id"), col("nextLabel").as("label")),
+        prev.filter(col("nextLabel") =!= col("prevLabel"))
+          .select(col("doc_id"), col("nextLabel").as("label")))
+    val prop = edges.join(frontier.select(col("doc_id").as("src"), col("label")), "src")
+      .groupBy(col("dst").as("doc_id"))
+      .agg(min(col("label")).as("nlabel"))
+    // pointer jump: the label of my label (labels is keyed by every
+    // doc_id and labels only ever hold doc_ids, so the lookup is total)
+    val jump = labels
+      .select(col("doc_id").as("label"), col("label").as("plabel"))
+    val half = labels.join(prop, Seq("doc_id"), "left")
+      .join(jump, Seq("label"), "left")
+      .select(col("doc_id"),
+        least(col("label"),
+          coalesce(col("nlabel"), col("label")),
+          coalesce(col("plabel"), col("label"))).as("l1"),
+        col("label").as("prevLabel"))
+    // SECOND pointer jump (r11): label-of-label-of-label — the chain to
+    // the component min contracts ~4x per round instead of ~2x, so the
+    // loop converges in ~log4 rounds. After the one-time contraction the
+    // per-round frames are quotient-sized and each round is dominated by
+    // its fixed scheduling cost, so trading one more label-keyed join
+    // per round for ~half the rounds is a direct win; the output is
+    // unchanged — every jump application is monotone toward the same
+    // min-label fixpoint (OPTIMIZATION_r11.md: the 2j variant matched
+    // the one-jump loop with diff 0).
+    val jump2 = labels
+      .select(col("doc_id").as("l1"), col("label").as("plabel2"))
+    half.join(jump2, Seq("l1"), "left")
+      .select(col("doc_id"),
+        least(col("l1"), coalesce(col("plabel2"), col("l1"))).as("nextLabel"),
+        col("prevLabel"))
   }
 
   /** Quality-aware canonical selection over resolved duplicate clusters:

@@ -1,7 +1,9 @@
 package graft.graph
 
+import graft.core.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph primitives over plain edge-list DataFrames
   * (`src`, `dst` long columns, undirected, src < dst, no duplicates —
@@ -13,6 +15,9 @@ import org.apache.spark.sql.functions._
   * similarity-graph analysis needs on top of the pair streams.
   */
 object Graph {
+
+  /** Edge-volume-sized frames are stored serialized (the Fixpoint rule). */
+  private val Ser = StorageLevel.MEMORY_AND_DISK_SER
 
   /** Per-node degree of the undirected edge list: one combinable shuffle
     * over the exploded endpoints.
@@ -49,7 +54,7 @@ object Graph {
     // semi-join), so an un-cut lineage re-executes the caller's edge
     // derivation (g1/g4: an md5 self-join over the tripled corpus) and
     // the two degree joins once per consumer. Serialized blocks — the
-    // frame is edge-volume-sized and scan-only (the clusters() storage
+    // frame is edge-volume-sized and scan-only (the Fixpoint storage
     // rule).
     val oriented0 = edges
       .join(deg.withColumnRenamed("node", "src").withColumnRenamed("degree", "sdeg"), "src")
@@ -62,8 +67,7 @@ object Graph {
           (col("sdeg") === col("ddeg") && col("src") < col("dst")), col("dst"))
           .otherwise(col("src")).as("hi"),
         greatest(col("sdeg"), col("ddeg")).as("hideg"))
-    val oriented = oriented0.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val oriented = oriented0.localCheckpoint(true, Ser)
     val o1 = oriented.select(col("lo"), col("hi").as("b"), col("hideg").as("bdeg"))
     val o2 = oriented.select(col("lo"), col("hi").as("c"), col("hideg").as("cdeg"))
     val closing = oriented.select(col("lo").as("b"), col("hi").as("c"))
@@ -79,6 +83,13 @@ object Graph {
         greatest(col("lo"), col("b"), col("c")).as("z"))
   }
 
+  /** The symmetric edge list (src, dst) ∪ (dst, src) of an undirected
+    * (`src`, `dst`) edge frame — the adjacency every neighbor join reads.
+    */
+  def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+
   /** Synchronous k-core peeling, `rounds` rounds: each round drops every
     * node whose CURRENT degree is below `k`, then the edges touching it.
     * After enough rounds this converges to the k-core — the maximal
@@ -92,56 +103,30 @@ object Graph {
     * by round); [[kCore]] iterates to the fixpoint. Per round: one
     * combinable degree aggregation plus two semi-joins against the
     * node-sized survivor set — edge-linear, no N² anywhere, and the
-    * peel only shrinks the frame. Every round EAGER-checkpoints the
-    * surviving edges (serialized blocks — the frame is scan-only and
-    * edge-volume-sized, the [[graft.dedup.Dedup.clusters]] storage
-    * rule) and frees the superseded generation: each round's plan reads
-    * the edge set THREE times (degree agg + both semi-joins), so an
-    * un-cut lineage re-executes the upstream pair generator 3^rounds
-    * times — measured at 45 s vs 1.1 s for a 3-round peel over the g3
-    * fixture's md5 self-join at sf0.1.
+    * peel only shrinks the frame. Rounds run on [[graft.core.Fixpoint]].
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    graft.core.AqeHints.withTinyRowAdvisory(edges.sparkSession) {
-      val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      var e = edges.select(col("src"), col("dst")).localCheckpoint(true, ser)
-      for (_ <- 1 to rounds) {
-        val survivors = degrees(e).filter(col("degree") >= k).select(col("node"))
-        val next = e
-          .join(survivors.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(survivors.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          // the Seq-key join hoists its key first — keep (src, dst) order
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true, ser)
-        graft.core.Checkpoints.unpersistCheckpoint(e)
-        e = next
-      }
-      e
-    }
+    Fixpoint.run(edges.select(col("src"), col("dst")), Ser, rounds)((e, _) => peel(e, k))._1
 
-  /** The converged k-core: peel until the edge set is stable. Each
-    * round materializes a count (the convergence test) — the peel's
+  /** The converged k-core: peel until the edge set is stable. The peel's
     * round count is bounded by the graph's degeneracy ordering depth,
     * ≤ diameter-ish in practice; `maxIter` guards pathological chains
     * and THROWS rather than returning a half-peeled subgraph as if it
-    * were the core.
+    * were the core. Rounds run on [[graft.core.Fixpoint]], converging on
+    * an unchanged observed edge count.
     */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
-    var n = e.count()
-    var iter = 0
-    while (iter < maxIter) {
-      val next = kCorePeel(e, k, rounds = 1) // checkpointed on return
-      val m = next.count()
-      // free the superseded generation (no-op for the raw input on the
-      // first round) — retention stays one generation over any depth
-      graft.core.Checkpoints.unpersistCheckpoint(e)
-      if (m == n) return next
-      e = next; n = m; iter += 1
-    }
-    graft.core.Checkpoints.unpersistCheckpoint(e)
-    throw new IllegalStateException(
-      s"k-core did not converge in $maxIter rounds ($n edges remaining)")
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame =
+    Fixpoint.run(edges.select(col("src"), col("dst")), Ser, maxIter,
+      Some(Fixpoint.Unchanged(count(lit(1)), n => s"k-core has $n edges remaining")))(
+      (e, _) => peel(e, k))._1
+
+  /** One peel round: the edges whose endpoints both have degree ≥ k. */
+  private def peel(e: DataFrame, k: Int): DataFrame = {
+    val survivors = degrees(e).filter(col("degree") >= k).select(col("node"))
+    e.join(survivors.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+      .join(survivors.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+      // the Seq-key join hoists its key first — keep (src, dst) order
+      .select(col("src"), col("dst"))
   }
 
   /** Fixed-round BFS distances from a seed set over the undirected edge
@@ -155,34 +140,18 @@ object Graph {
     * Per round: one equi-join of the frontier-so-far against the
     * adjacency plus one combinable min — edge-linear, hub-safe (a hub's
     * in-edges meet in a map-side-combinable min, never a cross
-    * product). Rounds eager-checkpoint and free the superseded
-    * generation (the [[kCorePeel]] discipline: the distance frame is
-    * read by the next round's join AND union, so an un-cut lineage
-    * doubles per round).
+    * product). Every round re-reads the adjacency, so it is
+    * checkpointed once; rounds run on [[graft.core.Fixpoint]].
     */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    graft.core.AqeHints.withTinyRowAdvisory(edges.sparkSession) {
-      val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      // Checkpoint the adjacency ONCE (the [[kCorePeel]] discipline):
-      // every round is its own eager action, so a lazy `und` re-executes
-      // the caller's edge derivation — for the g5 fixture, an md5
-      // self-join over the tripled corpus — once per round.
-      val und = edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true, ser)
-      var dist = seeds.select(col("node")).distinct()
-        .withColumn("dist", lit(0L)).localCheckpoint(true, ser)
-      for (_ <- 1 to rounds) {
-        val next = und.join(dist, und("src") === dist("node"))
+    Fixpoint.withCheckpoint(undirected(edges), Ser) { und =>
+      val seeded = seeds.select(col("node")).distinct().withColumn("dist", lit(0L))
+      Fixpoint.run(seeded, Ser, rounds) { (dist, _) =>
+        und.join(dist, und("src") === dist("node"))
           .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
           .unionByName(dist)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true, ser)
-        graft.core.Checkpoints.unpersistCheckpoint(dist)
-        dist = next
-      }
-      graft.core.Checkpoints.unpersistCheckpoint(und)
-      dist
+      }._1
     }
 
   /** Synchronous label propagation (Raghavan et al. 2007), `rounds`
@@ -202,47 +171,22 @@ object Graph {
     * combinable aggregations — vote counts groupBy (node, label), then
     * argmax as min(struct(-cnt, label)) — so a hub's votes partial-
     * aggregate map-side and nothing materializes a neighborhood in one
-    * task. Rounds eager-checkpoint serialized and free the superseded
-    * generation (the [[bfsDistances]] discipline). Parallel edges count
+    * task. The seeding and every round re-read the adjacency, so it is
+    * checkpointed once; rounds run on [[graft.core.Fixpoint]], whose
+    * tiny-row advisory was measured on this loop. Parallel edges count
     * as extra votes; feed a deduped edge list for simple-graph voting.
-    *
-    * AQE (measured, SCALE.md "label_propagation at 40M"): vote rows
-    * are 16-byte longs but CPU-heavy to aggregate, so AQE's BYTE-based
-    * partition coalescing (advisory 64 MB) rebuilds the few-fat-tasks
-    * pathology on any requested partition count — at 40M edges,
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes=8m` was 2.2×
-    * wall and 2.1× CPU BETTER than the default. Since round 9 the 8 MB
-    * advisory is applied BY DEFAULT for the duration of the rounds via
-    * [[graft.core.AqeHints.withTinyRowAdvisory]] (also [[kCorePeel]],
-    * [[bfsDistances]], and [[graft.dedup.Dedup.clusters]]); [[pageRank]]
-    * stays lazy — its plan executes at the caller's sink, outside any
-    * scope this function could manage, so callers materializing huge
-    * pageRank runs should apply the same advisory at their sink.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
-    graft.core.AqeHints.withTinyRowAdvisory(edges.sparkSession) {
-      val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      // Checkpoint the adjacency ONCE (the [[kCorePeel]] discipline):
-      // each of the `rounds` eager actions PLUS the label seeding would
-      // otherwise re-execute the caller's edge derivation from scratch.
-      val und = edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true, ser)
-      var labels = und.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")).localCheckpoint(true, ser)
-      for (_ <- 1 to rounds) {
-        val next = und.join(labels, und("src") === labels("node"))
+    Fixpoint.withCheckpoint(undirected(edges), Ser) { und =>
+      val seeded = und.select(col("src").as("node")).distinct().withColumn("label", col("node"))
+      Fixpoint.run(seeded, Ser, rounds) { (labels, _) =>
+        und.join(labels, und("src") === labels("node"))
           .groupBy(col("dst"), col("label"))
           .agg(count(lit(1)).as("cnt"))
           .groupBy(col("dst").as("node"))
           .agg(min(struct((-col("cnt")).as("neg_cnt"), col("label"))).as("best"))
           .select(col("node"), col("best").getField("label").as("label"))
-          .localCheckpoint(true, ser)
-        graft.core.Checkpoints.unpersistCheckpoint(labels)
-        labels = next
-      }
-      graft.core.Checkpoints.unpersistCheckpoint(und)
-      labels
+      }._1
     }
 
   /** Per-node local clustering coefficient over the undirected edge
@@ -282,13 +226,13 @@ object Graph {
     * adjacency against the current rank vector plus one combinable sum —
     * the rank vector is node-sized, never edge-sized, and hot hubs
     * concentrate into a map-side-combinable aggregation exactly like any
-    * skewed groupBy. For iteration counts beyond the default few, cut
-    * lineage with localCheckpoint every ~10 rounds (the
-    * [[graft.dedup.Dedup.clusters]] discipline).
+    * skewed groupBy. The plan stays lazy and executes at the caller's
+    * sink (no checkpoint, no tiny-row advisory); for iteration counts
+    * beyond the default few, run the rounds on [[graft.core.Fixpoint]]
+    * instead, which cuts lineage per round.
     */
   def pageRank(edges: DataFrame, iterations: Int = 3, scale: Long = 1000000L): DataFrame = {
-    val directed = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val directed = undirected(edges)
     val deg = directed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val adjacency = directed.join(deg, "src")
     var ranks = deg.select(col("src").as("node"), lit(scale).as("rank"))

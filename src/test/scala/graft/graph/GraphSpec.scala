@@ -127,6 +127,18 @@ class GraphSpec extends SparkSpec {
     m shouldBe Map(20L -> 0L, 10L -> 1L)
   }
 
+  it should "free the adjacency and every round's blocks when it throws" in {
+    val g = edgesDf((1L, 2L), (2L, 3L))
+    val seeds = Seq(1L, 2L).toDF("node").select(
+      when($"node" === 2L, raise_error(lit("bad seed"))).otherwise($"node").cast("long").as("node"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception] {
+      Graph.bfsDistances(g, seeds, rounds = 2)
+    }
+    e.getMessage should include("bad seed")
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before) shouldBe empty
+  }
+
   behavior of "Graph.labelPropagation"
 
   it should "collapse a clique-plus-pendant to the minimum label in two rounds" in {
