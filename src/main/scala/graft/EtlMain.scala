@@ -34,6 +34,11 @@ import graft.etl._
   * inference on JSON is a full extra pass over the corpus and is never
   * the default (core/Io.scala scaladoc).
   * Step-to-step inputs are read from the standard locations under out=.
+  * Within the processing step the same holds: the grounding writes
+  * (matches, cooccurrences and the failed sets) share one parse of the
+  * corpus through Grounding.compute's cached frames, which are freed once
+  * they are written; the literature index is then built from the written
+  * `matches`, not from the grounding plan.
   */
 object EtlMain {
 
@@ -85,9 +90,12 @@ object EtlMain {
         Io.read(spark, cfg.readSpec("targets", "parquet")),
         Io.read(spark, cfg.readSpec("diseases", "parquet")),
         Io.read(spark, cfg.readSpec("drugs", "parquet")))
-      val p = Processing.compute(g, spark, cfg.sectionRanks)
-      Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences",
-        "literatureIndex").foreach(n => w(n, p(n)))
+      try {
+        val p = Processing.compute(g, spark, cfg.sectionRanks)
+        Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences")
+          .foreach(n => w(n, p(n)))
+      } finally Seq("mappedLabels", "sentences").foreach(g(_).unpersist())
+      w("literatureIndex", Processing.literatureIndex(r("matches"), spark, cfg.sectionRanks))
     }
 
     def embedding(): Unit = {

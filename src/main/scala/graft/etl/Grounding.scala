@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
+import org.apache.spark.storage.StorageLevel
 import graft.text.TextNormalize
 import graft.text.TextNormalize.{LabelKeyType, TokenKeyType}
 
@@ -195,7 +196,7 @@ object Grounding {
     * Scale note: the key computation and join run over DISTINCT
     * (type, label) pairs, not over every sentence row — at corpus scale
     * the label vocabulary is orders of magnitude smaller than the match
-    * stream, and the stemming UDF only ever sees the vocabulary.
+    * stream, and the key kernel only ever sees the vocabulary.
     */
   def mapEntities(sentences: DataFrame, lut: DataFrame): DataFrame = {
     val labels = sentences
@@ -319,18 +320,26 @@ object Grounding {
 
   /** Full grounding pass: id repair → LUT → label grounding → match +
     * co-occurrence resolution (reference compute, Grounding.scala:563–610).
+    *
+    * Two frames are persisted MEMORY_AND_DISK, and the caller frees them
+    * (`unpersist` on `mappedLabels` first, then `sentences`) once every
+    * output is written:
+    *  - `sentences`, the filtered, id-repaired sentence frame: every
+    *    output (matches, co-occurrences, both failed sets, and each
+    *    disambiguation self-join) reads it, so without it each one parses
+    *    the EPMC JSON and repairs ids again;
+    *  - `mappedLabels`, the grounded-label table: it feeds both resolves
+    *    (matches and two co-occurrence sides), so without it the
+    *    vocabulary scan + key kernel + LUT join subtree runs three times
+    *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
     */
   def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
       diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] = {
     val idLut = loadEpmcIds(epmcIds)
     val lut = entityLut(targets, diseases, drugs)
     val sentences = filterSentences(loadSentences(graft.core.SchemaTools.replaceSpaces(epmc), idLut))
-    // persist: the grounded-label table feeds BOTH resolves (matches and
-    // two cooccurrence sides) — without it the vocabulary scan + stemming
-    // + LUT join subtree runs three times (reference Grounding.scala:603
-    // persists the same frame DISK_ONLY)
-    val mapped = mapEntities(sentences, lut)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val mapped = mapEntities(sentences, lut).persist(StorageLevel.MEMORY_AND_DISK)
     val (matches, matchesFailed) = resolveMatches(sentences, mapped)
     val (coocs, coocsFailed) = resolveCooccurrences(sentences, mapped)
     Map(
@@ -338,6 +347,7 @@ object Grounding {
       "matchesFailed" -> matchesFailed,
       "cooccurrences" -> coocs,
       "cooccurrencesFailed" -> coocsFailed,
+      "sentences" -> sentences,
       "mappedLabels" -> mapped)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.storage.StorageLevel
 import graft.etl.{Grounding, Processing}
 
 /** Incremental literature ingestion: ground new EPMC documents as they
@@ -39,14 +40,19 @@ object LiteratureStream {
 
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
+        // one parse of the batch's files and one label grounding for the
+        // matches and both co-occurrence sides, as in Grounding.compute
         val sentences = Grounding.filterSentences(
           Grounding.loadSentences(graft.core.SchemaTools.replaceSpaces(batch), idLut))
-        val mapped = Grounding.mapEntities(sentences, lut)
-        val (matches, _) = Grounding.resolveMatches(sentences, mapped)
-        val (coocs, _) = Grounding.resolveCooccurrences(sentences, mapped)
-        sink(BatchOutputs(batchId,
-          Processing.filterMatches(matches),
-          Processing.filterCooccurrences(coocs)))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val mapped = Grounding.mapEntities(sentences, lut).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (matches, _) = Grounding.resolveMatches(sentences, mapped)
+          val (coocs, _) = Grounding.resolveCooccurrences(sentences, mapped)
+          sink(BatchOutputs(batchId,
+            Processing.filterMatches(matches),
+            Processing.filterCooccurrences(coocs)))
+        } finally Seq(mapped, sentences).foreach(_.unpersist())
       }
     }
   }

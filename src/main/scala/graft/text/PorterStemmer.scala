@@ -8,9 +8,9 @@ package graft.text
   * This replaces the spark-nlp `Stemmer` annotator the reference depends on
   * (reference Grounding.scala:84–87) — the only piece of the reference's
   * NLP normalization that isn't expressible as Spark SQL expressions. It is
-  * pure, allocation-light, and wrapped in a UDF at the array level
-  * (graft.text.TextNormalize.stemTokens) so one invocation stems a whole
-  * token array.
+  * pure and allocation-light; the label-key kernel
+  * (graft.text.LabelKeyKernel) calls it per token, and StemArrayExpression
+  * stems a whole token array per call.
   */
 object PorterStemmer {
 

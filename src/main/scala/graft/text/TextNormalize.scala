@@ -1,7 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 
 /** Pure-Spark text normalization replacing the reference's spark-nlp
   * pipeline (reference Grounding.scala:45–108: DocumentAssembler →
@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * (lowercase, strip non-word) → StopWordsCleaner (case-sensitive) →
   * Normalizer → Stemmer → Finisher).
   *
-  * Everything except stemming is codegen'd Spark SQL expressions — split /
-  * filter / transform / regexp_replace — so the normalization runs inside
-  * WholeStageCodegen with no serialization. Stemming goes through one UDF
-  * call per token array (PorterStemmer). Tokenization is a simple
+  * Each key is one call into a Scala kernel (LabelKeyKernel), wrapped as
+  * a native codegen'd Catalyst expression (LabelKeyExpression): the
+  * kernel replaces a per-row tree of about a dozen higher-order column
+  * expressions (translate / split / filter / array_except / transform /
+  * regexp_replace / porter_stem / array_distinct / array_sort /
+  * array_join) with byte-identical keys. Tokenization is a simple
   * split-char model rather than spark-nlp's annotator grammar: same
   * capability, deliberately simpler; key semantics (LT/TT, below) are
   * preserved exactly.
@@ -27,6 +29,9 @@ import org.apache.spark.sql.functions._
   *    kept inside tokens) → lowercase + strip non-alphanumerics → concat in
   *    order. Order-sensitive: for gene symbols and chemical codes where
   *    token order is meaning-bearing.
+  * Both first transliterate Greek letters to Latin (reference
+  * spark/Helpers.scala:94–96: "α-synuclein" must match "a-synuclein"),
+  * and lowercase with Spark's own `lower` case mapping.
   */
 object TextNormalize {
 
@@ -53,63 +58,14 @@ object TextNormalize {
     Seq("a", "i") ++ base ++ base.map(_.capitalize)
   }
 
-  /** Greek → Latin transliteration (reference spark/Helpers.scala:94–96):
-    * NER surface forms like "α-synuclein" must match entity labels spelled
-    * "a-synuclein".
-    */
-  def transliterate(c: Column): Column =
-    translate(c, "αβγδεζηικλμνξπτυω", "abgdezhiklmnxptuo")
-
-  /** Split into raw tokens. `splitDashSlash` distinguishes the two
-    * reference tokenizers (Grounding.scala:51–61): the LT path also splits
-    * on - and /, the TT path keeps them inside tokens (they're stripped by
-    * normalization instead, gluing "TNF-alpha" into "tnfalpha").
-    */
-  def tokenize(c: Column, splitDashSlash: Boolean): Column = {
-    val pattern = if (splitDashSlash) "[\\s\\u00a0\\-/:,;]+" else "[\\s\\u00a0:,;]+"
-    filter(split(c, pattern), t => t =!= "")
-  }
-
-  /** Case-sensitive stop-word removal on raw (pre-lowercase) tokens —
-    * order matters: "AS" the gene symbol survives, "as" the conjunction
-    * doesn't (reference Grounding.scala:70–75).
-    */
-  def removeStopWords(tokens: Column): Column =
-    array_except(tokens, typedLit(stopWords))
-
-  /** Per-token normalization: lowercase then strip every char that is not
-    * a word char ([a-z0-9_] — Java-regex \w semantics, matching the
-    * reference Normalizer cleanup patterns Grounding.scala:63–68, 77–82,
-    * which reduce to exactly this on whitespace-free tokens).
-    */
-  def normalizeTokens(tokens: Column): Column =
-    filter(transform(tokens, t => regexp_replace(lower(t), "[^a-z0-9_]", "")), t => t =!= "")
-
-  /** Porter-stem every token — a native codegen'd Catalyst expression
-    * (graft.text.StemArrayExpression), not a UDF: stays inside
-    * WholeStageCodegen with no per-row converter allocation.
-    */
-  def stemTokens(tokens: Column): Column = StemArrayExpression(tokens)
-
-  /** Stemmed token array for the LT path (transliterate → tokenize with
-    * dash/slash splits → stop-word removal → normalize → stem).
-    */
-  def ltTokens(text: Column): Column =
-    stemTokens(normalizeTokens(removeStopWords(tokenize(transliterate(text), splitDashSlash = true))))
-
-  /** Normalized token array for the TT path. */
-  def ttTokens(text: Column): Column =
-    normalizeTokens(tokenize(transliterate(text), splitDashSlash = false))
-
   /** Order-insensitive stemmed key (reference Grounding.scala:377–382). */
-  def ltKey(text: Column): Column =
-    array_join(array_sort(array_distinct(ltTokens(text))), "")
+  def ltKey(text: Column): Column = keyFor(text, lit(LabelKeyType))
 
   /** Order-sensitive token key (reference Grounding.scala:383–385). */
-  def ttKey(text: Column): Column = array_join(ttTokens(text), "")
+  def ttKey(text: Column): Column = keyFor(text, lit(TokenKeyType))
 
-  /** Key selected by a per-row key-type discriminator column. */
-  def keyFor(text: Column, keyType: Column): Column =
-    when(keyType === LabelKeyType, ltKey(text))
-      .when(keyType === TokenKeyType, ttKey(text))
+  /** Key selected by a per-row key-type discriminator column: null for a
+    * null text or a key type other than LT/TT.
+    */
+  def keyFor(text: Column, keyType: Column): Column = LabelKeyExpression(text, keyType)
 }

@@ -1,9 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.etl.{EtlConfig, Fixtures}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{AnalysisException, GraftTestBridge}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** End-to-end CLI-step dispatch over the fixture corpus: the run() body
@@ -11,6 +18,100 @@ import org.apache.spark.sql.functions._
   */
 class EtlMainSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Fixture inputs in a temp dir; the EPMC corpus is `copies` repeats of
+    * the fixture documents in one JSON file.
+    */
+  private def fixtureInputs(copies: Int = 1): String = {
+    val in = Files.createTempDirectory("graft-etl-in").toFile.getAbsolutePath
+    val epmc = Fixtures.epmc(spark)
+    Seq.fill(copies)(epmc).reduce(_ union _).coalesce(1).write.json(s"$in/epmc")
+    Fixtures.epmcIds(spark).write.option("header", "true").csv(s"$in/ids")
+    Fixtures.targets(spark).write.parquet(s"$in/targets")
+    Fixtures.diseases(spark).write.parquet(s"$in/diseases")
+    Fixtures.drugs(spark).write.parquet(s"$in/drugs")
+    in
+  }
+
+  private def fixtureConfig(in: String, more: Map[String, String] = Map.empty): EtlConfig =
+    EtlConfig.load(None, Map("epmc" -> s"$in/epmc", "epmcids" -> s"$in/ids",
+      "targets" -> s"$in/targets", "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs",
+      "out" -> (Files.createTempDirectory("graft-etl-out").toFile.getAbsolutePath + "/run")) ++ more)
+
+  /** Run `f` with `listener` on the bus, and return once the listener has
+    * seen every event `f` caused: a marker job after `f` ends on the same
+    * queue, after them.
+    */
+  private def listening(listener: SparkListener)(f: => Unit): Unit = {
+    val marker = s"listener-drain-${System.nanoTime()}"
+    val ended = new ConcurrentLinkedQueue[Int]
+    val drain = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(drain)
+    try {
+      f
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(marker).toSet
+      val deadline = System.currentTimeMillis() + 30000
+      while (!ended.asScala.exists(jobs.contains) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(drain)
+    }
+  }
+
+  "EtlMain.run(processing)" should "leave no cached frame or persisted RDD behind, " +
+    "on success and when a write throws" in {
+    val in = fixtureInputs()
+    def cached = (GraftTestBridge.cachedEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+    val (entriesBefore, rddsBefore) = cached
+    val cfg = fixtureConfig(in)
+    EtlMain.run("processing", cfg, spark)
+    spark.read.parquet(s"${cfg.out}/matches").count() shouldBe 9
+    cached._1 shouldBe entriesBefore
+    cached._2.diff(rddsBefore) shouldBe empty
+
+    // cooccurrences is partitioned by a column it lacks: its write throws
+    // after the matches write has filled both caches
+    an[AnalysisException] should be thrownBy EtlMain.run("processing",
+      fixtureConfig(in, Map("outputs.cooccurrences.partitionBy" -> "no_such_column")), spark)
+    cached._1 shouldBe entriesBefore
+    cached._2.diff(rddsBefore) shouldBe empty
+  }
+
+  it should "parse the EPMC JSON once, and build the literature index from the written matches" in {
+    // many lines, so a stage that reads a handful of cached batches never
+    // reports the corpus's record count
+    val in = fixtureInputs(copies = 100)
+    val lines = spark.read.text(s"$in/epmc").count()
+    val cfg = fixtureConfig(in)
+    val jsonStages = new ConcurrentLinkedQueue[Long]
+    val plans = new ConcurrentLinkedQueue[String]
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (i.rddInfos.exists(GraftTestBridge.scopeNames(_).exists(_.startsWith("Scan json"))))
+          jsonStages.add(i.taskMetrics.inputMetrics.recordsRead)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    })(EtlMain.run("processing", cfg, spark))
+
+    withClue(s"records read by stages under a Scan json scope: ${jsonStages.asScala.mkString(", ")}; ") {
+      jsonStages.asScala.count(_ == lines) shouldBe 1
+    }
+    val indexWrites = plans.asScala.filter(_.contains(s"${cfg.out}/literatureIndex"))
+    indexWrites should have size 1
+    indexWrites.head should not include "Scan json"
+  }
 
   "EtlMain.run" should "execute all steps and write every dataset" in {
     val in = Files.createTempDirectory("graft-etl-in").toFile.getAbsolutePath
