@@ -2,7 +2,7 @@
 # Run the full Bench main against a scale factor.
 # Usage: scripts/bench.sh [sfDir] [outJson]
 set -e
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 SF_DIR=${1:-/root/testdata/sf0.1}
 OUT=${2:-/tmp/BENCH_run.json}
 sbt -batch package > /tmp/sbt_package.log 2>&1 || { tail -30 /tmp/sbt_package.log; exit 1; }

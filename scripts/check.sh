@@ -2,7 +2,7 @@
 # Build, run Verify on a scale factor, and compare against the DuckDB oracle.
 # Usage: scripts/check.sh [sfDir] [outDir]
 set -e
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 SF_DIR=${1:-/root/testdata/sf0.001}
 OUT_DIR=${2:-/tmp/verify_out}
 sbt -batch package > /tmp/sbt_package.log 2>&1 || { tail -30 /tmp/sbt_package.log; exit 1; }

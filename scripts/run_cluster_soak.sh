@@ -11,7 +11,7 @@
 #   (env knobs ride through: GRAFT_SOAK_DOCS/STAGES/DIM/SHUFFLE_PARTITIONS...)
 # Cleans up master+worker on exit.
 set -e
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 EXECUTORS=${1:-4}
 EXEC_CORES=${2:-8}
 EXEC_MEM=${3:-18g}
@@ -42,7 +42,7 @@ for i in $(seq 30); do
   sleep 1
 done
 
-JAR=$(ls /root/repo/target/scala-2.13/*.jar | head -1)
+JAR=$(ls "$PWD"/target/scala-2.13/*.jar | head -1)
 # spark.jars ships the application jar to executors; executor sizing
 # caps total parallelism at executors × cores so the comparison against
 # local[32] holds the core count fixed while splitting the heap.

@@ -3,7 +3,7 @@
 # --add-opens set Spark needs. Usage:
 #   scripts/run_soak.sh <MainClass> [xmx] (env vars ride through)
 set -e
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 MAIN=${1:-graft.ScaleSoak}
 XMX=${2:-90g}
 # SOAK_JAR pins an explicit jar snapshot for long multi-stage runs:

@@ -1,8 +1,11 @@
 package graft
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
+/** Benchmark main: runs every registered query (or the SPARK_GRAFT_ONLY
+  * subset) against SPARK_GRAFT_SF_DIR on the production session and prints
+  * one JSON line of per-query seconds.
   *
   * Results are materialized through the noop sink — unlike count(),
   * which lets Catalyst prune away every computed column, noop forces
@@ -16,74 +19,53 @@ import org.apache.spark.sql.SparkSession
   * reads as a phantom regression.
   */
 object Bench {
+
+  /** Min seconds over `reps` noop-sink runs of `q`. A rep that fails is
+    * skipped; when every rep fails, the first failure is thrown.
+    */
+  private def minSeconds(spark: SparkSession, q: RegistryRunner.Query, sfDir: String,
+      reps: Int): Double = {
+    val runs = (1 to reps).map { _ =>
+      // r11 (VERDICT item 4, composed-vs-isolated gap): free the block
+      // manager of RDDs left by earlier queries/reps BEFORE the clock
+      // starts. Some operators' results necessarily outlive their query
+      // (clusters()' final round, kCorePeel's surviving edges, the
+      // triangles orientation), so their serialized blocks accumulate
+      // over a 190-query session and tax later queries' GC — the very
+      // composition noise the end-of-run isolated re-runs keep
+      // measuring (a13 3.09 composed vs 1.65 isolated on the r10
+      // driver run). Cleanup is OUTSIDE the timed region and nothing
+      // is shared across queries, so timings measure the same work as
+      // before, from a clean heap — the isolated-rerun condition,
+      // applied to every query.
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      val t0 = System.nanoTime()
+      Try {
+        q(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
+    runs.flatMap(_.toOption).minOption.getOrElse(throw runs.head.failed.get)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 5: BENCH_r04's two phantom outliers (v8, e11) showed
     // min-of-3 still lets sustained driver-side contention through
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = RegistryRunner.localBuilder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/session warm-up outside any query's timing: codegen compiler,
     // shuffle subsystem, parquet footer reads
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     // a failed query records the sentinel -1 plus its error, never a
-    // normal-looking elapsed time; reps run back-to-back per query and
-    // the min wins (a rep that fails is skipped — only an all-reps
-    // failure reports the sentinel)
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated query names — time just a
-    // subset (e.g. to fill baseline entries for newly added queries
-    // without re-running the whole suite)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        // a typo'd name must fail loudly — silently dropping it would
-        // produce a normal-looking bench over the wrong query set
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // guide §1.5: label the jobs so stage-level forensics (event log /
-      // UI) can attribute stages to queries; thread-local, zero cost
-      spark.sparkContext.setJobDescription(s"bench:$name")
-      val runs = (1 to reps).map { _ =>
-        // r11 (VERDICT item 4, composed-vs-isolated gap): free the block
-        // manager of RDDs left by earlier queries/reps BEFORE the clock
-        // starts. Some operators' results necessarily outlive their query
-        // (clusters()' final round, kCorePeel's surviving edges, the
-        // triangles orientation), so their serialized blocks accumulate
-        // over a 190-query session and tax later queries' GC — the very
-        // composition noise the end-of-run isolated re-runs keep
-        // measuring (a13 3.09 composed vs 1.65 isolated on the r10
-        // driver run). Cleanup is OUTSIDE the timed region and nothing
-        // is shared across queries, so timings measure the same work as
-        // before, from a clean heap — the isolated-rerun condition,
-        // applied to every query.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9, None: Option[String])
-        } catch {
-          case e: Throwable =>
-            (-1.0, Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
-        }
-      }
-      val ok = runs.collect { case (t, None) => t }
-      val rec = if (ok.nonEmpty) (name, ok.min, None: Option[String])
-                else (name, -1.0, runs.head._2)
+    // normal-looking elapsed time
+    val results = RegistryRunner.foreachQuery(spark, "bench") { (_, q) =>
+      minSeconds(spark, q, sfDir, reps)
+    }.map { case (name, r) =>
+      val rec = r.fold(
+        e => (name, -1.0, Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")),
+        sec => (name, sec, None: Option[String]))
       // Stream one line per finished query to stderr so a run killed at a
       // timeout still leaves a per-query trail (BENCH_r10 died at rc 124
       // with zero attributable output because results were only printed at
@@ -118,18 +100,10 @@ object Bench {
         .collect { case (name, sec, None) if baseline.get(name).exists(_ > 0) =>
           (name, sec / baseline(name)) }
         .sortBy(-_._2).take(5).map(_._1)
+      val queries = SparkEntry.queries
       outliers.map { name =>
-        val fn = selected(name)
         spark.sparkContext.setJobDescription(s"bench-isolated:$name")
-        val runs = (1 to reps).flatMap { _ =>
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
-        val sec = if (runs.nonEmpty) runs.min else -1.0
+        val sec = Try(minSeconds(spark, queries(name), sfDir, reps)).getOrElse(-1.0)
         System.err.println(
           s"""[bench-progress] {"query":"$name","sec":$sec,"isolated":true}""")
         name -> sec

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
-import graft.core.Sessions
 import graft.streaming.{CrawlFetch, CrawlStream}
 
 /** Latest-wins crawl-CDC streaming soak — CrawlStream's runtime twin of
@@ -40,10 +39,8 @@ object CrawlStreamSoak {
     val batches = sys.env.getOrElse("GRAFT_CRAWL_BATCHES", "10").toInt
     require(revisits <= initial, "revisits target batch-0 URLs and must fit in them")
     require(revisits % 2 == 0, "revisits split evenly into changed/unchanged")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString).toInt
-    val spark = Sessions.builder("graft-crawl-stream-soak", Some(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
+    val cpus = RegistryRunner.cpus
+    val spark = RegistryRunner.localBuilder("graft-crawl-stream-soak")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()

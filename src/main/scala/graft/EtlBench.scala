@@ -1,18 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.Sessions
-import graft.etl._
+import graft.etl.EtlConfig
 
 /** Domain-pipeline throughput harness: generates a synthetic EPMC-shaped
   * corpus of configurable size ENTIRELY as distributed expressions (no
-  * driver-side loops, no files — `spark.range` + column builders, so the
-  * generator itself scales to any document count) and times
-  * grounding → processing → embedding → evidence end-to-end.
+  * driver-side loops — `spark.range` + column builders, so the generator
+  * itself scales to any document count), writes it to a temp dir and
+  * times the production pipeline on it, one `EtlMain.run` step at a time
+  * (processing, embedding, vectors, evidence).
   *
   * Env: GRAFT_ETL_DOCS (default 25000), GRAFT_ETL_ENTITIES (default 2000),
-  * SPARK_GRAFT_CPUS. Prints one JSON line with per-stage seconds and
+  * SPARK_GRAFT_CPUS. Prints one JSON line with per-step seconds and
   * docs/sec.
   */
 object EtlBench {
@@ -81,57 +83,53 @@ object EtlBench {
       s"array(${sentence("Title", 0)}, ${sentence("Abstract", 1)}, ${sentence("Results", 2)}) as sentences")
   }
 
-  def main(args: Array[String]): Unit = {
-    val d = sys.env.getOrElse("GRAFT_ETL_DOCS", "25000").toLong
-    val e = sys.env.getOrElse("GRAFT_ETL_ENTITIES", "2000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString).toInt
-    val spark = Sessions.builder("graft-etl-bench", Some(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Write a `d`-document, `e`-entity corpus under `dir`/in (EPMC JSON,
+    * entity parquets, a header-only epmcids CSV) and time each
+    * `EtlMain.run` step over it, outputs under `dir`/out. Returns the
+    * seconds of each step, in run order.
+    */
+  def run(spark: SparkSession, d: Long, e: Long, dir: String): Seq[(String, Double)] = {
+    val in = s"$dir/in"
     val (targets, diseases, drugs) = entities(spark, e)
-    val epmc = corpus(spark, d, e)
-    val ids = spark.range(0).selectExpr("'x' as PMID", "'PMCx' as PMCID") // empty LUT
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def sink(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // mirror the real pipeline's step boundaries (EtlMain): processing
-    // WRITES matches/cooccurrences as parquet, downstream steps READ them
-    // back — columnar storage means the evidence step's scans prune to
-    // the columns it needs, which a row-format persist cannot offer
-    val out = java.nio.file.Files.createTempDirectory("graft-etl-bench").toString
-    val (g, _) = timed(Grounding.compute(epmc, ids, targets, diseases, drugs))
-    val (_, tGround) = timed {
-      Processing.filterMatches(g("matches")).write.parquet(s"$out/matches")
-      Processing.filterCooccurrences(g("cooccurrences")).write.parquet(s"$out/coocs")
-    }
-    val matches = spark.read.parquet(s"$out/matches")
-    val coocs = spark.read.parquet(s"$out/coocs")
-    val (_, tIndex) = timed(sink(Processing.literatureIndex(matches, spark)))
-    val (training, _) = timed(Embedding.trainingSet(matches, spark).persist())
-    val (_, tTrainSet) = timed(sink(training))
+    corpus(spark, d, e).write.json(s"$in/epmc")
+    targets.write.parquet(s"$in/targets")
+    diseases.write.parquet(s"$in/diseases")
+    drugs.write.parquet(s"$in/drugs")
+    // no PMID/PMCID pairs: the id repair joins run against an empty LUT
+    Files.writeString(Paths.get(s"$in/epmcids.csv"), "PMID,PMCID\n")
     // numPartitions per the measured fit curve (SCALE.md "Isolated fit
     // curve"): ≈ max(cores, bags / 500k) — the pinned 16 of earlier
     // rounds loses 1.4× at 30M bags; cap at 128 so the replica-count
     // accuracy caveat stays bounded. Bags ≈ 3 per doc in this corpus
     // (per-rank + overall).
-    val w2vParts = math.max(cpus.toLong, math.min(128L, 3L * d / 500000L)).toInt
-    val (model, tFit) = timed(Embedding.fit(training,
-      Embedding.W2VConfig(vectorSize = 32, numPartitions = w2vParts)))
-    val (_, tEvidence) = timed(sink(
-      Evidence.generate(model, matches, coocs, spark, threshold = Some(-2.0))))
-    val total = tGround + tIndex + tTrainSet + tFit + tEvidence
+    val w2vParts = math.max(spark.sparkContext.defaultParallelism.toLong,
+      math.min(128L, 3L * d / 500000L))
+    val cfg = EtlConfig.load(None, Map(
+      "epmc" -> s"$in/epmc", "epmcids" -> s"$in/epmcids.csv", "targets" -> s"$in/targets",
+      "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs", "out" -> s"$dir/out",
+      "threshold" -> "-2.0", "w2v.vectorSize" -> "32", "w2v.numPartitions" -> w2vParts.toString))
+    EtlMain.validateSteps(Seq("all")).map { step =>
+      val t0 = System.nanoTime()
+      EtlMain.run(step, cfg, spark)
+      step -> (System.nanoTime() - t0) / 1e9
+    }
+  }
 
-    println(s"""{"metric":"etl_total","value":$total,"unit":"sec","docs":$d,"entities":$e,""" +
-      s""""docs_per_sec":${d / total},"stages":{"grounding_write":$tGround,""" +
-      s""""literature_index":$tIndex,"training_set":$tTrainSet,"w2v_fit":$tFit,""" +
-      s""""evidence":$tEvidence}}""")
-    spark.stop()
+  def main(args: Array[String]): Unit = {
+    val d = sys.env.getOrElse("GRAFT_ETL_DOCS", "25000").toLong
+    val e = sys.env.getOrElse("GRAFT_ETL_ENTITIES", "2000").toLong
+    val spark = RegistryRunner.localBuilder("graft-etl-bench").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-etl-bench").toFile
+    try {
+      val steps = run(spark, d, e, dir.getPath)
+      val total = steps.map(_._2).sum
+      println(s"""{"metric":"etl_total","value":$total,"unit":"sec","docs":$d,"entities":$e,""" +
+        s""""docs_per_sec":${d / total},"steps":""" +
+        steps.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}") + "}")
+    } finally {
+      spark.stop()
+      FileUtils.deleteQuietly(dir)
+    }
   }
 }

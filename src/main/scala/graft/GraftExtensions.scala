@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -83,10 +82,4 @@ object GraftExtensions {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
             if subst.contains(a.name) => subst(a.name)
       }
-
-  /** Register into an already-built session (tests, notebooks). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

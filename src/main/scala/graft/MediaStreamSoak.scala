@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Sessions
 import graft.multimodal.{ImageHash, MediaRow}
 import graft.streaming.MediaStream
 
@@ -70,13 +69,9 @@ object MediaStreamSoak {
     val initial = sys.env.getOrElse("GRAFT_STREAM_INITIAL", "50000").toLong
     val batchDocs = sys.env.getOrElse("GRAFT_STREAM_BATCH_DOCS", "20000").toLong
     val batches = sys.env.getOrElse("GRAFT_STREAM_BATCHES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString).toInt
     require(batchDocs % 50 == 0 && initial % 50 == 0,
       "initial/batch sizes must be multiples of the 50-id block")
-    val spark = Sessions.builder("graft-media-stream-soak", Some(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RegistryRunner.localBuilder("graft-media-stream-soak").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -84,14 +79,14 @@ object MediaStreamSoak {
     System.err.println(s"[media-soak] hashing initial corpus ($initial images)")
     val t0 = System.nanoTime()
     val initialHashes = ImageHash.dhashDocs(
-      images(spark, 0, initial, copyBack = 0, cpus)
+      images(spark, 0, initial, copyBack = 0, RegistryRunner.cpus)
         .filter(col("doc_id") % 50 =!= 13).as[MediaRow], spark)
     (0 until batches).foreach { b =>
       val from = initial + b * batchDocs
       // batch b>=1's ≡7 slots copy id − S − 1 (≡ 6 mod 50, plain,
       // admitted one batch earlier)
       images(spark, from, from + batchDocs,
-        copyBack = if (b > 0) batchDocs + 1 else 0, cpus)
+        copyBack = if (b > 0) batchDocs + 1 else 0, RegistryRunner.cpus)
         .coalesce(1).write.parquet(f"$landing/b$b%04d.parquet")
     }
     System.err.println(f"[media-soak] setup ${(System.nanoTime() - t0) / 1e9}%.1f s")

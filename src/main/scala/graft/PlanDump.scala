@@ -1,45 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round measurement tool (guide §1/§7.2): dump
   * `.explain("formatted")` for every registered query (or the
-  * GRAFT_PLAN_ONLY subset) to <outDir>/<name>_<suffix>.txt so plan-shape
+  * SPARK_GRAFT_ONLY subset) to <outDir>/<name>_<suffix>.txt so plan-shape
   * claims (Exchange count, join strategy, PushedFilters/ReadSchema) are
-  * checkable artifacts, not assertions. Same session settings as Bench so
-  * the dumped plan is the one the bench actually runs.
+  * checkable artifacts, not assertions. Runs on the production session,
+  * so the dumped plan is the one Bench and EtlMain actually run.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = if (args.length > 0) args(0) else "/tmp/plans"
     val suffix = if (args.length > 1) args(1) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = RegistryRunner.localBuilder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    val only = sys.env.get("GRAFT_PLAN_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_(kv._1)))
-      .foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-      }
+    RegistryRunner.foreachQuery(spark, "plandump") { (name, q) =>
+      val plan = q(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+    }
     spark.stop()
   }
 }

@@ -111,8 +111,7 @@ object ScaleSoak {
     val docs = sys.env.getOrElse("GRAFT_SOAK_DOCS", "2500000").toLong
     val dim = sys.env.getOrElse("GRAFT_SOAK_DIM", "64").toInt
     val vecs = sys.env.getOrElse("GRAFT_SOAK_VECS", docs.toString).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString).toInt
+    val cpus = RegistryRunner.cpus
     // GRAFT_SOAK_MASTER: point the soak at a real cluster manager
     // (e.g. spark://host:7077 standalone) instead of local[cpus] — the
     // multi-executor validation path. Executor sizing rides the usual

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Sessions
 import graft.streaming.CorpusStream
 
 /** Streaming-admission soak: drives CorpusStream's growing near-dup index
@@ -33,11 +32,7 @@ object StreamSoak {
     val initial = sys.env.getOrElse("GRAFT_STREAM_INITIAL", "100000").toLong
     val batchDocs = sys.env.getOrElse("GRAFT_STREAM_BATCH_DOCS", "100000").toLong
     val batches = sys.env.getOrElse("GRAFT_STREAM_BATCHES", "25").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString).toInt
-    val spark = Sessions.builder("graft-stream-soak", Some(s"local[$cpus]"), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = RegistryRunner.localBuilder("graft-stream-soak").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val landing = java.nio.file.Files.createTempDirectory("graft-stream-soak").toString

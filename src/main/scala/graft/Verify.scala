@@ -1,39 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump on the production session: each
+  * SparkEntry.queries result (or the SPARK_GRAFT_ONLY subset) → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 otherwise
-      // rejects; read it as long (ns since epoch) and convert in queries.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = RegistryRunner.localBuilder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_ONLY: comma-separated names — dump a subset during
-    // development (same contract as SPARK_GRAFT_BENCH_ONLY); unknown
-    // names fail loudly rather than silently verifying nothing.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"GRAFT_VERIFY_ONLY unknown queries: ${unknown.mkString(", ")}")
-    }
-    SparkEntry.queries.filter(kv => only.forall(_(kv._1))).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    RegistryRunner.foreachQuery(spark, "verify") { (name, q) =>
+      q(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

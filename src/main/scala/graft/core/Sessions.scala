@@ -35,9 +35,4 @@ object Sessions {
       .config("spark.sql.parquet.compression.codec", "zstd")
     master.fold(b)(b.master)
   }
-
-  def local(cores: Int = math.max(2, Runtime.getRuntime.availableProcessors())): SparkSession =
-    builder(master = Some(s"local[$cores]"), shufflePartitions = cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 }

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for all specs (one JVM-wide session — specs
-  * run in a single forked JVM, so getOrCreate dedups).
+/** Shared local SparkSession for all specs: the production session
+  * (core/Sessions) on local[4], one JVM-wide — specs run in a single
+  * forked JVM, so getOrCreate dedups.
   */
 trait SparkSpec extends AnyFlatSpec with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,13 +15,8 @@ trait SparkSpec extends AnyFlatSpec with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = Sessions.builder("graft-test", Some("local[4]"), shufflePartitions = 4)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

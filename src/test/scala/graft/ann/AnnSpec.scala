@@ -145,7 +145,6 @@ class AnnSpec extends SparkSpec {
   }
 
   "hyperplane_code" should "be registered as a SQL function via GraftExtensions" in {
-    graft.GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT hyperplane_code(array(1.0d, -2.0d, 0.5d, 3.0d), 4, 8, 0) AS c").head().getInt(0)
     val viaColumn = spark.range(1)
@@ -155,7 +154,6 @@ class AnnSpec extends SparkSpec {
   }
 
   "graft_cosine / graft_l2_norm" should "be SQL-callable and match the Column API" in {
-    graft.GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT graft_cosine(array(1.0d, 2.0d, 3.0d), array(3.0d, 2.0d, 1.0d)) AS c, " +
         "graft_l2_norm(array(3.0d, 4.0d)) AS n").head()
@@ -173,7 +171,6 @@ class AnnSpec extends SparkSpec {
     // splice the subtree per occurrence — a non-deterministic argument
     // would otherwise evaluate independently per site and give an
     // inconsistent result
-    graft.GraftExtensions.register(spark)
     emb.select(col("embedding").as("e1"), col("embedding").as("e2"))
       .createOrReplaceTempView("bind_once")
     val analyzed = spark.sql(

@@ -61,7 +61,6 @@ class SparkPrivateApiPinSpec extends SparkSpec {
   }
 
   "GraftExtensions.register" should "splice parsed kernels that evaluate through SQL" in {
-    graft.GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c, " +
         "graft_l2_norm(array(3.0D, 4.0D)) AS n").head()

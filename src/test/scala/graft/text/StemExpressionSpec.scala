@@ -24,7 +24,6 @@ class StemExpressionSpec extends SparkSpec {
   }
 
   it should "be registered as a SQL function via GraftExtensions" in {
-    graft.GraftExtensions.register(spark)
     spark.sql("SELECT porter_stem(array('nationalization','utilities')) AS s")
       .as[Seq[String]].head() shouldBe Seq("nation", "util")
   }
