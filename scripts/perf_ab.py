@@ -3,7 +3,8 @@
 
     python3 scripts/perf_ab.py --base HEAD~1 --workload etl_batch --pairs 10 --seeds 4 5 6 7
 
-Checks `--base` out into a temporary git worktree, then runs
+Exports `--base` into a temporary directory (`git archive`, so the
+repository gains no worktree entry, even when the run is killed), then runs
 `python3 perfbench/run.py` (untraced, for BENCHMARK.json's run_seconds) in
 the base tree and in this working tree, one pair per seed, cycling through
 `--seeds`. Pairs alternate which side runs first. Every run prints one line
@@ -12,6 +13,8 @@ prints each side's quartiles, the base's spread (IQR / median), the
 change/base ratio of the medians, and the pairs the change won (ties count
 for neither side), and applies the gain rule: the change wins at least nine
 tenths of the pairs and the medians differ by more than the base's IQR.
+It also prints each side's `peak_heap_mb` quartiles: run.py prints that
+value, but BENCHMARK.json does not bound it.
 
 Exits non-zero when any run fails or reports failed > 0. Nothing under
 perfbench/ is touched; each tree builds into its own .bench_build/.
@@ -37,7 +40,10 @@ def run_bench(tree, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-4000:])
         return None
-    return json.loads(lines[-1])
+    res = json.loads(lines[-1])
+    # printed by run.py but not a BENCHMARK.json metric: read from its line
+    res["peak_heap_mb"] = next((float(l.split()[1]) for l in lines if l.startswith("peak_heap_mb ")), None)
+    return res
 
 
 def quartiles(xs):
@@ -60,9 +66,11 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="perf_ab-")
     base_tree = os.path.join(tmp, "base")
-    subprocess.run(["git", "worktree", "add", "--detach", base_tree, a.base], cwd=ROOT, check=True,
-                   stdout=subprocess.DEVNULL)
+    os.makedirs(base_tree)
+    archive = subprocess.run(["git", "archive", a.base], cwd=ROOT, check=True, stdout=subprocess.PIPE).stdout
+    subprocess.run(["tar", "-x", "-C", base_tree], input=archive, check=True)
     runs = {"base": [], "change": []}
+    heaps = {"base": [], "change": []}
     failed = 0
     try:
         for i in range(a.pairs):
@@ -76,11 +84,14 @@ def main():
                     failed += 1
                 values = {m["name"]: res["metrics"][m["name"]]["value"] for m in metrics} if res else {}
                 runs[side].append(values)
+                if res and res["peak_heap_mb"] is not None:
+                    heaps[side].append(res["peak_heap_mb"])
                 print(f"pair {i + 1} seed {seed} {side:6s} "
                       + ("CRASHED" if res is None else f"failed {res['failed']}/{res['attempted']}  ")
-                      + "  ".join(f"{k} {v:.4f}" for k, v in values.items()), flush=True)
+                      + "  ".join(f"{k} {v:.4f}" for k, v in values.items())
+                      + (f"  peak_heap_mb {res['peak_heap_mb']:.1f}" if res and res["peak_heap_mb"] else ""),
+                      flush=True)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", base_tree], cwd=ROOT)
         shutil.rmtree(tmp, ignore_errors=True)
 
     pairs = [(b, c) for b, c in zip(runs["base"], runs["change"]) if b and c]
@@ -104,6 +115,10 @@ def main():
             verdict = f"within bound {m['bound']}"
         print(f"{name:14s} {bq[0]:9.3f}{bq[1]:9.3f}{bq[2]:9.3f} {cq[0]:9.3f}{cq[1]:9.3f}{cq[2]:9.3f} "
               f"{iqr / bq[1] if bq[1] else float('nan'):12.4f} {ratio:9.4f} {won:3d}/{len(pairs):<3d}  {verdict}")
+    if heaps["base"] and heaps["change"]:
+        print("peak_heap_mb (printed only, no bound): "
+              + "  ".join(f"{side} q1/med/q3 " + "/".join(f"{q:.1f}" for q in quartiles(heaps[side]))
+                          for side in ("base", "change")))
     if failed:
         sys.exit(f"{failed} run(s) failed or reported failed > 0")
 

@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.CompletableFuture
+
 import org.apache.spark.ml.feature.Word2VecModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{Io, Sessions}
+import graft.core.{Io, OutputGraph, Sessions}
 import graft.etl._
 
 /** CLI entry for the literature pipeline — the runnable surface a user of
@@ -33,16 +35,32 @@ import graft.etl._
   * declares `inputs.epmc.schema` (a DDL string, or `infer`) — schema
   * inference on JSON is a full extra pass over the corpus and is never
   * the default (core/Io.scala scaladoc).
-  * Step-to-step inputs are read from the standard locations under out=.
-  * Within the processing step the same holds: the grounding writes
-  * (matches, cooccurrences and the failed sets) share one parse of the
-  * corpus through Grounding.compute's cached frames, which are freed once
-  * they are written; the literature index is then built from the written
-  * `matches`, not from the grounding plan.
+  * The requested steps run as one graph of outputs (core/OutputGraph),
+  * each written as soon as its inputs exist:
+  *  - processing defines Grounding's two caches (the sentence frame and
+  *    the grounded-label table) and fills both with one action on a pool
+  *    thread, while this thread builds the grounding frames. Then
+  *    `matches`, `cooccurrences`, `failedMatches` and
+  *    `failedCooccurrences` are written concurrently, and the caches are
+  *    freed once all four are done, on success or failure;
+  *  - once `matches` is written, `literatureIndex`, `trainingSet` and the
+  *    Word2Vec fit start together, each from the written `matches`;
+  *  - the fitted model feeds the `W2VModel` save, `vectors` and
+  *    `evidence` (which also waits for `cooccurrences`) from memory.
+  * An input from a step not requested is read from its standard location
+  * under out=, as an earlier run wrote it: `evidence` alone loads
+  * `W2VModel`. A run returns once every output is on disk; when a write
+  * throws, outputs not yet started are skipped, the run waits for those
+  * that have started, frees the caches and rethrows the first exception.
   */
 object EtlMain {
 
   private val knownSteps = Seq("processing", "embedding", "vectors", "evidence")
+
+  /** Pool threads of one run: at least as many as `all` ever has outputs
+    * ready at once, so a ready output never waits for a thread.
+    */
+  private val Threads = 8
 
   def main(args: Array[String]): Unit = {
     val (stepArgs, optArgs) = args.span(!_.contains("="))
@@ -60,7 +78,7 @@ object EtlMain {
     }.toMap
     val cfg = EtlConfig.load(opts.get("config"), opts - "config")
     val spark = Sessions.builder(appName = s"graft-${steps.mkString("-")}").getOrCreate()
-    try steps.foreach(run(_, cfg, spark))
+    try run(steps, cfg, spark)
     finally spark.stop()
   }
 
@@ -75,52 +93,60 @@ object EtlMain {
     steps.flatMap(s => if (s == "all") knownSteps else Seq(s))
   }
 
-  private[graft] def run(step: String, cfg: EtlConfig, spark: SparkSession): Unit = {
+  private[graft] def run(step: String, cfg: EtlConfig, spark: SparkSession): Unit =
+    run(validateSteps(Seq(step)), cfg, spark)
+
+  /** Run the requested steps as one graph of outputs; each is written as
+    * soon as its inputs exist (see the object's scaladoc).
+    */
+  private def run(steps: Seq[String], cfg: EtlConfig, spark: SparkSession): Unit = {
     def w(name: String, df: DataFrame): Unit =
       Io.write(df, cfg.writeSpec(name, s"${cfg.out}/$name"))
     def r(name: String): DataFrame =
       Io.read(spark, Io.ReadSpec(cfg.format, s"${cfg.out}/$name"))
 
-    def processing(): Unit = {
-      val epmc = Io.read(spark, cfg.readSpec("epmc", "json", Some(EpmcSchema.schema)))
-      val ids = Io.read(spark,
-        cfg.readSpec("epmcids", "csv", None, Map("header" -> "true")))
-      val g = Grounding.compute(
-        epmc, ids,
-        Io.read(spark, cfg.readSpec("targets", "parquet")),
-        Io.read(spark, cfg.readSpec("diseases", "parquet")),
-        Io.read(spark, cfg.readSpec("drugs", "parquet")))
-      try {
-        val p = Processing.compute(g, spark, cfg.sectionRanks)
-        Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences")
-          .foreach(n => w(n, p(n)))
-      } finally Seq("mappedLabels", "sentences").foreach(g(_).unpersist())
-      w("literatureIndex", Processing.literatureIndex(r("matches"), spark, cfg.sectionRanks))
-    }
+    OutputGraph.run(Threads, "graft-etl") { g =>
+      // an output of a step not requested is read from disk, where an
+      // earlier run left it
+      var (matches, cooccurrences) = (g.done, g.done)
 
-    def embedding(): Unit = {
-      val matches = r("matches")
-      val training = Embedding.trainingSet(matches, spark, cfg.sectionRanks)
-      w("trainingSet", training)
-      Embedding.fit(training, cfg.w2v).save(s"${cfg.out}/W2VModel")
-    }
+      if (steps.contains("processing")) {
+        val epmc = Io.read(spark, cfg.readSpec("epmc", "json", Some(EpmcSchema.schema)))
+        val ids = Io.read(spark,
+          cfg.readSpec("epmcids", "csv", None, Map("header" -> "true")))
+        val caches = Grounding.caches(
+          epmc, ids,
+          Io.read(spark, cfg.readSpec("targets", "parquet")),
+          Io.read(spark, cfg.readSpec("diseases", "parquet")),
+          Io.read(spark, cfg.readSpec("drugs", "parquet")))
+        val cached = g.task()(Grounding.materialize(caches))
+        var readers: Seq[CompletableFuture[_]] = Seq(cached)
+        try {
+          val written = Processing.groundingOutputs(Grounding.resolve(caches))
+            .map { case (n, df) => n -> g.task(cached)(w(n, df)) }
+          readers ++= written.values
+          matches = written("matches")
+          cooccurrences = written("cooccurrences")
+        } finally g.always(readers: _*)(Grounding.free(caches))
+        g.task(matches)(
+          w("literatureIndex", Processing.literatureIndex(r("matches"), spark, cfg.sectionRanks)))
+      }
 
-    def vectors(): Unit =
-      w("vectors", Vectors.fromModel(Word2VecModel.load(s"${cfg.out}/W2VModel")))
+      val fitted = Option.when(steps.contains("embedding")) {
+        def training = Embedding.trainingSet(r("matches"), spark, cfg.sectionRanks)
+        g.task(matches)(w("trainingSet", training))
+        val model = g.task(matches)(Embedding.fit(training, cfg.w2v))
+        g.task(model)(model.join().save(s"${cfg.out}/W2VModel"))
+        model
+      }
+      lazy val model = fitted.getOrElse(g.task()(Word2VecModel.load(s"${cfg.out}/W2VModel")))
 
-    def evidence(): Unit =
-      w("evidence", Evidence.generate(
-        Word2VecModel.load(s"${cfg.out}/W2VModel"), r("matches"), r("cooccurrences"),
-        spark, Some(cfg.threshold), cfg.sectionRanks))
-
-    step match {
-      case "processing" => processing()
-      case "embedding"  => embedding()
-      case "vectors"    => vectors()
-      case "evidence"   => evidence()
-      case "all"        => knownSteps.foreach(run(_, cfg, spark))
-      case other        => sys.error(s"unknown step '$other' " +
-        s"(expected ${knownSteps.mkString("|")}|all)")
+      if (steps.contains("vectors"))
+        g.task(model)(w("vectors", Vectors.fromModel(model.join())))
+      if (steps.contains("evidence"))
+        g.task(model, matches, cooccurrences)(w("evidence", Evidence.generate(
+          model.join(), r("matches"), r("cooccurrences"),
+          spark, Some(cfg.threshold), cfg.sectionRanks)))
     }
   }
 }

@@ -319,11 +319,17 @@ object Grounding {
   }
 
   /** Full grounding pass: id repair → LUT → label grounding → match +
-    * co-occurrence resolution (reference compute, Grounding.scala:563–610).
-    *
-    * Two frames are persisted MEMORY_AND_DISK, and the caller frees them
-    * (`unpersist` on `mappedLabels` first, then `sentences`) once every
-    * output is written:
+    * co-occurrence resolution (reference compute, Grounding.scala:563–610),
+    * in two phases: [[caches]] then [[resolve]]. It returns the resolved
+    * frames and both caches, which the caller frees ([[free]]) once every
+    * output is written.
+    */
+  def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
+      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] =
+    resolve(caches(epmc, epmcIds, targets, diseases, drugs))
+
+  /** The two frames every grounding output reads, persisted
+    * MEMORY_AND_DISK and not yet materialized:
     *  - `sentences`, the filtered, id-repaired sentence frame: every
     *    output (matches, co-occurrences, both failed sets, and each
     *    disambiguation self-join) reads it, so without it each one parses
@@ -333,21 +339,39 @@ object Grounding {
     *    vocabulary scan + key kernel + LUT join subtree runs three times
     *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
     */
-  def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
+  def caches(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
       diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] = {
     val idLut = loadEpmcIds(epmcIds)
     val lut = entityLut(targets, diseases, drugs)
     val sentences = filterSentences(loadSentences(graft.core.SchemaTools.replaceSpaces(epmc), idLut))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val mapped = mapEntities(sentences, lut).persist(StorageLevel.MEMORY_AND_DISK)
+    Map("sentences" -> sentences, "mappedLabels" -> mapped)
+  }
+
+  /** Fill both [[caches]] with one action: counting `mappedLabels` reads
+    * every `sentences` partition. Outputs that start after it read the
+    * caches instead of racing to build them.
+    */
+  def materialize(caches: Map[String, DataFrame]): Long = caches("mappedLabels").count()
+
+  /** The match and co-occurrence frames, valid and failed, over the
+    * [[caches]]; the caches ride along under their own keys.
+    */
+  def resolve(caches: Map[String, DataFrame]): Map[String, DataFrame] = {
+    val (sentences, mapped) = (caches("sentences"), caches("mappedLabels"))
     val (matches, matchesFailed) = resolveMatches(sentences, mapped)
     val (coocs, coocsFailed) = resolveCooccurrences(sentences, mapped)
-    Map(
+    caches ++ Map(
       "matches" -> matches,
       "matchesFailed" -> matchesFailed,
       "cooccurrences" -> coocs,
-      "cooccurrencesFailed" -> coocsFailed,
-      "sentences" -> sentences,
-      "mappedLabels" -> mapped)
+      "cooccurrencesFailed" -> coocsFailed)
   }
+
+  /** Free the [[caches]] of a grounding result, `mappedLabels` (which
+    * reads `sentences`) first.
+    */
+  def free(grounding: Map[String, DataFrame]): Unit =
+    Seq("mappedLabels", "sentences").foreach(grounding(_).unpersist())
 }

@@ -141,18 +141,21 @@ object Processing {
   }
 
   /** Full processing outputs over a grounding result (reference apply,
-    * Processing.scala:180–223): matches/cooccurrences (valid + failed) and
-    * the literature index.
+    * Processing.scala:180–223): [[groundingOutputs]] and the literature
+    * index.
     */
   def compute(grounding: Map[String, DataFrame], spark: SparkSession,
       ranks: Seq[SectionRank] = SectionRanks.default): Map[String, DataFrame] = {
-    val matches = filterMatches(grounding("matches"))
-    val coocs = filterCooccurrences(grounding("cooccurrences"))
-    Map(
-      "matches" -> matches,
-      "cooccurrences" -> coocs,
-      "failedMatches" -> grounding("matchesFailed"),
-      "failedCooccurrences" -> grounding("cooccurrencesFailed"),
-      "literatureIndex" -> literatureIndex(matches, spark, ranks))
+    val outputs = groundingOutputs(grounding)
+    outputs + ("literatureIndex" -> literatureIndex(outputs("matches"), spark, ranks))
   }
+
+  /** The four grounding datasets: unwrapped valid matches and
+    * co-occurrences, and the failed sets as resolved.
+    */
+  def groundingOutputs(grounding: Map[String, DataFrame]): Map[String, DataFrame] = Map(
+    "matches" -> filterMatches(grounding("matches")),
+    "cooccurrences" -> filterCooccurrences(grounding("cooccurrences")),
+    "failedMatches" -> grounding("matchesFailed"),
+    "failedCooccurrences" -> grounding("cooccurrencesFailed"))
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -7,9 +8,12 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.etl.{EtlConfig, Fixtures}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.{AnalysisException, GraftTestBridge}
+import org.apache.spark.ml.feature.Word2VecModel
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftTestBridge}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
@@ -111,6 +115,91 @@ class EtlMainSpec extends SparkSpec {
     val indexWrites = plans.asScala.filter(_.contains(s"${cfg.out}/literatureIndex"))
     indexWrites should have size 1
     indexWrites.head should not include "Scan json"
+  }
+
+  private val datasets = Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences",
+    "literatureIndex", "trainingSet", "vectors", "evidence")
+
+  /** Every row of `df`, printed (doubles print exactly) and sorted. */
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  "EtlMain.run(all)" should "write the same rows as the four steps run one by one" in {
+    val in = fixtureInputs()
+    // every scored pair is kept, so evidence compares many similarities
+    val graph = fixtureConfig(in, Map("threshold" -> "-2.0"))
+    val stepwise = fixtureConfig(in, Map("threshold" -> "-2.0"))
+    EtlMain.run("all", graph, spark)
+    Seq("processing", "embedding").foreach(EtlMain.run(_, stepwise, spark))
+    // MLlib's Word2Vec fit is not bit-reproducible (two fits of one
+    // training set in one JVM differ from the fourth digit on), so the stepwise
+    // vectors and evidence steps load the graph run's saved model: they
+    // compare the model run(all) hands over in memory with the same model
+    // saved and loaded back
+    def modelOf(cfg: EtlConfig) = Word2VecModel.load(s"${cfg.out}/W2VModel")
+    modelOf(stepwise).getVectors.select("word").as[String].collect().sorted shouldBe
+      modelOf(graph).getVectors.select("word").as[String].collect().sorted
+    FileUtils.deleteDirectory(new File(s"${stepwise.out}/W2VModel"))
+    FileUtils.copyDirectory(new File(s"${graph.out}/W2VModel"), new File(s"${stepwise.out}/W2VModel"))
+    Seq("vectors", "evidence").foreach(EtlMain.run(_, stepwise, spark))
+
+    for (name <- datasets) withClue(s"$name: ") {
+      rows(spark.read.parquet(s"${graph.out}/$name")) shouldBe
+        rows(spark.read.parquet(s"${stepwise.out}/$name"))
+    }
+    for (name <- Seq("matches", "trainingSet", "vectors", "evidence")) withClue(s"$name: ") {
+      spark.read.parquet(s"${graph.out}/$name").count() should be > 0L
+    }
+    // the saved model holds the vectors run(all) wrote from memory
+    rows(modelOf(graph).getVectors.select(col("word"), vector_to_array(col("vector")))) shouldBe
+      rows(spark.read.parquet(s"${graph.out}/vectors").select("word", "vector"))
+  }
+
+  it should "rethrow a failed write as itself and leave no cached frame, persisted RDD, " +
+    "running job or pool thread behind" in {
+    val in = fixtureInputs()
+    def cached = (GraftTestBridge.cachedEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-etl-"))
+
+    val (entriesBefore, rddsBefore) = cached
+    // cooccurrences is partitioned by a column it lacks: its write throws
+    // while the matches write runs next to it
+    intercept[AnalysisException] {
+      EtlMain.run("all",
+        fixtureConfig(in, Map("outputs.cooccurrences.partitionBy" -> "no_such_column")), spark)
+    }
+    poolThreads shouldBe empty
+    GraftTestBridge.drainListenerBus(spark)
+    spark.sparkContext.statusTracker.getActiveJobIds shouldBe empty
+    cached._1 shouldBe entriesBefore
+    cached._2.diff(rddsBefore) shouldBe empty
+  }
+
+  it should "parse the EPMC JSON once across the run, and never read the saved model back" in {
+    val in = fixtureInputs(copies = 100)
+    val lines = spark.read.text(s"$in/epmc").count()
+    val cfg = fixtureConfig(in)
+    val jsonStages = new ConcurrentLinkedQueue[Long]
+    val plans = new ConcurrentLinkedQueue[String]
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (i.rddInfos.exists(GraftTestBridge.scopeNames(_).exists(_.startsWith("Scan json"))))
+          jsonStages.add(i.taskMetrics.inputMetrics.recordsRead)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    })(EtlMain.run("all", cfg, spark))
+
+    withClue(s"records read by stages under a Scan json scope: ${jsonStages.asScala.mkString(", ")}; ") {
+      jsonStages.asScala.count(_ == lines) shouldBe 1
+    }
+    val model = s"${cfg.out}/W2VModel"
+    // the save writes the model's data; nothing scans it
+    plans.asScala.filter(_.contains(s"Arguments: file:$model")) should not be empty
+    plans.asScala.flatMap(_.linesIterator).filter(l => l.contains("Location:") && l.contains(model)) shouldBe empty
   }
 
   "EtlMain.run" should "execute all steps and write every dataset" in {

@@ -4,8 +4,9 @@ import org.apache.spark.rdd.RDDOperationScope
 import org.apache.spark.storage.RDDInfo
 
 /** Spark-private reads the specs need to lock plan shapes and cache
-  * hygiene: the number of cache-manager entries, and the operation scopes
-  * an RDD was created under.
+  * hygiene: the number of cache-manager entries, the operation scopes an
+  * RDD was created under, and a drained listener bus (the status tracker
+  * is fed from it).
   */
 object GraftTestBridge {
   def cachedEntries(spark: SparkSession): Int =
@@ -16,4 +17,7 @@ object GraftTestBridge {
     def names(s: RDDOperationScope): Seq[String] = s.name +: s.parent.toSeq.flatMap(names)
     rdd.scope.toSeq.flatMap(names)
   }
+
+  /** Wait until the listener bus has delivered every event posted so far. */
+  def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 }
