@@ -1,14 +1,15 @@
 #!/bin/bash
 # Stand up a single-box Spark STANDALONE cluster (1 master + 1 worker
-# offering enough cores/memory for N executor JVMs) and run a graft soak
-# main against it — the multi-executor validation path for SCALE.md's
+# offering enough cores/memory for N executor JVMs) and run graft.ScaleSoak
+# against it — the multi-executor validation path for SCALE.md's
 # "on a real cluster local[32]'s spills become more partitions, not more
 # bytes" claim. Each executor is its own JVM with its own heap and
 # shuffle/spill accounting, so memory pressure and task placement behave
 # like a real cluster's, unlike local[32]'s one shared heap.
 #
 # Usage: scripts/run_cluster_soak.sh [executors] [exec_cores] [exec_mem] [driver_xmx]
-#   (env knobs ride through: GRAFT_SOAK_DOCS/STAGES/DIM/SHUFFLE_PARTITIONS...)
+#   The soak's env rides through: GRAFT_SOAK_DOCS, GRAFT_SOAK_DIM and
+#   GRAFT_SOAK_STAGES; this script sets GRAFT_SOAK_MASTER to the cluster.
 # Cleans up master+worker on exit.
 set -e
 cd "$(dirname "${BASH_SOURCE[0]}")/.."
@@ -16,7 +17,6 @@ EXECUTORS=${1:-4}
 EXEC_CORES=${2:-8}
 EXEC_MEM=${3:-18g}
 DRIVER_XMX=${4:-16g}
-MAIN=${GRAFT_CLUSTER_MAIN:-graft.ScaleSoak}
 
 export SPARK_HOME=/opt/spark
 export SPARK_MASTER_HOST=127.0.0.1
@@ -52,4 +52,4 @@ SOAK_JAVA_OPTS="-Dspark.jars=file://$JAR \
  -Dspark.cores.max=$((EXECUTORS * EXEC_CORES))" \
 GRAFT_SOAK_MASTER="spark://127.0.0.1:7077" \
 SPARK_GRAFT_CPUS=$((EXECUTORS * EXEC_CORES)) \
-  scripts/run_soak.sh "$MAIN" "$DRIVER_XMX"
+  scripts/run_soak.sh graft.ScaleSoak "$DRIVER_XMX"

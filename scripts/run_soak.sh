@@ -1,7 +1,9 @@
 #!/bin/bash
-# Launch a graft main class against the packaged jar with the JDK17
-# --add-opens set Spark needs. Usage:
-#   scripts/run_soak.sh <MainClass> [xmx] (env vars ride through)
+# Launch a graft main class (default graft.ScaleSoak, the soak) against
+# the packaged jar with the JDK17 --add-opens set Spark needs. Usage:
+#   scripts/run_soak.sh [MainClass] [xmx]
+# The soak reads GRAFT_SOAK_DOCS, GRAFT_SOAK_DIM, GRAFT_SOAK_STAGES and
+# GRAFT_SOAK_MASTER (see ScaleSoak's scaladoc); they ride through.
 set -e
 cd "$(dirname "${BASH_SOURCE[0]}")/.."
 MAIN=${1:-graft.ScaleSoak}

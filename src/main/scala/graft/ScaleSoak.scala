@@ -1,12 +1,17 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.core.Sessions
+import graft.dedup.Dedup
+import graft.multimodal.{ImageHash, MediaRow}
+import graft.streaming.{CorpusStream, CrawlFetch, CrawlStream, CrawlUpdate, MediaStream}
 
 /** Scale soak: generates an sf1-equivalent documents + embeddings corpus
   * ENTIRELY as distributed expressions (spark.range + column builders —
@@ -26,11 +31,31 @@ import graft.core.Sessions
   * dedup output sizes are predictable at any N and a soak run is also a
   * sanity check, not just a stopwatch.
   *
-  * Env: GRAFT_SOAK_DOCS (default 2,500,000), GRAFT_SOAK_DIM (default 64),
-  * GRAFT_SOAK_VECS (default = docs), SPARK_GRAFT_CPUS. Prints one JSON
-  * line: per-stage {sec, shuffle_bytes, spill_bytes} plus totals.
+  * Every stage is one entry of [[stages]]: default stages run unless
+  * GRAFT_SOAK_STAGES names a subset; explicit-only ones run only when
+  * named. The three stream stages (`stream_admission`, `image_admission`,
+  * `crawl_cdc`) drive a Structured Streaming writer over micro-batches
+  * whose sizes are fixed ratios of the corpus size ([[streamSizes]]) and
+  * check their planted per-batch counts; a broken count is a violation,
+  * and a run with any violation exits non-zero.
+  *
+  * Env: GRAFT_SOAK_DOCS (default 2,500,000; a multiple of 12,500),
+  * GRAFT_SOAK_DIM (default 64), GRAFT_SOAK_STAGES (comma-separated stage
+  * names), GRAFT_SOAK_MASTER (cluster manager address, default
+  * local[SPARK_GRAFT_CPUS]). Prints one JSON line: per-stage {sec,
+  * shuffle_bytes, spill_bytes, rows, task_skew[, batches]} plus totals
+  * and violations; stderr carries one line per Spark stage and per
+  * micro-batch.
   */
 object ScaleSoak {
+
+  /** The planted 50-block structure as projections of `spark.range`'s
+    * `id`: ids ≡ 1,2,3 (mod 50) take their block leader's content as
+    * `seed`, and id ≡ 3 is the `near` dup.
+    */
+  private val blockSeed = Seq(
+    "case when id % 50 in (1, 2, 3) then (id div 50) * 50 else id end as seed",
+    "cast(id % 50 = 3 as boolean) as near")
 
   /** English-looking deterministic text: 36 words — mostly content words
     * from a ~10k-word vocabulary, with an isolated English stopword every
@@ -63,15 +88,11 @@ object ScaleSoak {
     * "clean_corpus decomposition").
     */
   def documents(spark: SparkSession, n: Long, parts: Int): DataFrame =
-    spark.range(0, n, 1, parts).selectExpr(
-      "id as doc_id",
-      // block leader's content for dup/near-dup rows, own id otherwise
-      "case when id % 50 in (1, 2, 3) then (id div 50) * 50 else id end as seed",
-      "cast(id % 50 = 3 as boolean) as near")
+    spark.range(0, n, 1, parts).selectExpr("id as doc_id" +: blockSeed: _*)
       .selectExpr("doc_id", s"$textFromSeedSql as text")
 
-  /** The seed → text expression shared by [[documents]] and StreamSoak's
-    * cross-batch generator: expects `seed` (long), `near` (boolean) and
+  /** The seed → text expression shared by [[documents]] and the
+    * stream_admission batches: expects `seed` (long), `near` (boolean) and
     * `doc_id` columns in scope.
     */
   def textFromSeedSql: String =
@@ -92,10 +113,7 @@ object ScaleSoak {
     embeddings(spark, n, dim, spark.sparkContext.defaultParallelism)
 
   def embeddings(spark: SparkSession, n: Long, dim: Int, parts: Int): DataFrame =
-    spark.range(0, n, 1, parts).selectExpr(
-      "id as vec_id",
-      "case when id % 50 in (1, 2, 3) then (id div 50) * 50 else id end as seed",
-      "cast(id % 50 = 3 as boolean) as near")
+    spark.range(0, n, 1, parts).selectExpr("id as vec_id" +: blockSeed: _*)
       .selectExpr(
         "vec_id",
         s"""transform(sequence(0, ${dim - 1}),
@@ -107,288 +125,273 @@ object ScaleSoak {
         "case when near then concat(slice(base, 1, size(base) - 1), " +
           "array(cast(0.49 as float))) else base end as embedding")
 
-  def main(args: Array[String]): Unit = {
-    val docs = sys.env.getOrElse("GRAFT_SOAK_DOCS", "2500000").toLong
-    val dim = sys.env.getOrElse("GRAFT_SOAK_DIM", "64").toInt
-    val vecs = sys.env.getOrElse("GRAFT_SOAK_VECS", docs.toString).toLong
-    val cpus = RegistryRunner.cpus
-    // GRAFT_SOAK_MASTER: point the soak at a real cluster manager
-    // (e.g. spark://host:7077 standalone) instead of local[cpus] — the
-    // multi-executor validation path. Executor sizing rides the usual
-    // spark.executor.* system properties / spark-defaults; the
-    // application jar must be on spark.jars so executors can load it.
-    val master = sys.env.getOrElse("GRAFT_SOAK_MASTER", s"local[$cpus]")
-    val spark = Sessions.builder("graft-scale-soak", Some(master), cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_SOAK_SHUFFLE_PARTITIONS: override the bench-sized default
-    // (= cores). The clean_corpus 10M probe measured why this matters:
-    // window/sort partition COUNT is fixed at this setting (AQE splits
-    // skewed joins, never window sorts), so at 10M docs a 32-partition
-    // shingle-window sort runs ~10M-row single-threaded sorts that
-    // outgrow memory and spill — wall goes superlinear while shuffle
-    // bytes stay linear. A real cluster sizes this with executors;
-    // the soak must be able to do the same.
-    sys.env.get("GRAFT_SOAK_SHUFFLE_PARTITIONS")
-      .foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-
-    // cumulative shuffle/spill across all Spark stages; snapshot deltas
-    // bracket each logical soak stage
-    val shuffleBytes = new AtomicLong
-    val spillBytes = new AtomicLong
-    val peakStageShuffle = new AtomicLong
-    // per-task run times, drained per soak stage: p99/median is the
-    // straggler diagnostic for wall-superlinear-at-linear-shuffle stages
-    // boxed Long on purpose: with scala.Long the poll()-vs-null check
-    // unboxes null to 0 and the drain loop never terminates
-    val taskMillis = new ConcurrentLinkedQueue[java.lang.Long]
-    // GRAFT_SOAK_STAGE_DETAIL=1: per-SPARK-stage attribution — callsite,
-    // task count, summed/max task runtime, shuffle write, spill — the
-    // probe that names WHICH operator owns a hot task when the
-    // per-soak-stage aggregate only proves one exists.
-    val stageDetail = sys.env.get("GRAFT_SOAK_STAGE_DETAIL").contains("1")
-    val stageTask =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          val w = m.shuffleWriteMetrics.bytesWritten
-          shuffleBytes.addAndGet(w)
-          spillBytes.addAndGet(m.diskBytesSpilled)
-          peakStageShuffle.updateAndGet(p => math.max(p, w))
-          if (stageDetail) {
-            val (n, sum, max) =
-              Option(stageTask.remove(sc.stageInfo.stageId)).getOrElse((0L, 0L, 0L))
-            System.err.println(
-              f"[stage] id=${sc.stageInfo.stageId}%-4d tasks=$n%-5d " +
-                f"sum=${sum / 1000}%-6d s max=${max / 1000.0}%-8.1f s " +
-                f"write=${w / 1e9}%-7.2f GB spill=${m.diskBytesSpilled / 1e9}%-7.2f GB " +
-                f"${sc.stageInfo.name}")
-          }
-        }
+  /** A 9×8 grey PNG whose pixels hash (seed, position) — ~uniform 64-bit
+    * dHashes, unlike the oracle fixture's 251-class gradient. `near`
+    * shifts the top-left pixel: a one-bit near-dup of the same seed.
+    */
+  private def png(seed: Long, near: Boolean): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(9, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < 8) {
+      var x = 0
+      while (x < 9) {
+        var v = java.lang.Long.remainderUnsigned(
+          scala.util.hashing.byteswap64(seed * 72 + y * 9 + x), 251).toInt
+        if (near && x == 0 && y == 0) v = (v + 3) % 251
+        img.setRGB(x, y, (v << 16) | (v << 8) | v)
+        x += 1
       }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          taskMillis.add(te.taskMetrics.executorRunTime)
-          if (stageDetail) {
-            val t = te.taskMetrics.executorRunTime
-            stageTask.merge(te.stageId, (1L, t, t),
-              (a, b) => (a._1 + 1, a._2 + t, math.max(a._3, t)))
-          }
-        }
+      y += 1
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", out)
+    out.toByteArray
+  }
+
+  /** (doc_id, media_type, payload) PNG rows over a (doc_id, seed, near,
+    * corrupt) frame; a corrupt row keeps only the 8-byte PNG signature.
+    */
+  private def pngs(rows: DataFrame): Dataset[MediaRow] = {
+    import rows.sparkSession.implicits._
+    rows.as[(Long, Long, Boolean, Boolean)].mapPartitions(_.map { case (id, seed, near, corrupt) =>
+      val bytes = png(seed, near)
+      MediaRow(id, "image/png", if (corrupt) java.util.Arrays.copyOf(bytes, 8) else bytes)
     })
+  }
 
-    def sink(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+  /** Deterministic degree-2 random graph over ids [0, n): 2n edges, hubs
+    * from pmod collisions.
+    */
+  private def hashEdges(spark: SparkSession, n: Long): DataFrame =
+    Seq(7, 11).map(s => spark.range(n).selectExpr("id as src", s"pmod(xxhash64(id, $s), $n) as dst"))
+      .reduce(_ unionAll _)
 
-    // GRAFT_SOAK_INPUT_PARTS: generator input-split count (default =
-    // cores). A real corpus scan splits at ~128 MB regardless of total
-    // size, so per-task operator state is bounded; emulate that here by
-    // scaling splits with N instead of letting per-task partial-agg
-    // hash state grow into sort-fallback (the measured 10M stage-0 CPU
-    // superlinearity — SCALE.md "clean_corpus decomposition").
-    val inputParts = sys.env.get("GRAFT_SOAK_INPUT_PARTS").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val corpus = documents(spark, docs, inputParts)
-    val emb = embeddings(spark, vecs, dim, inputParts)
+  /** Corpus sizes must be a multiple of this: the least size every stream
+    * stage's batch ratios split into whole 50-doc blocks.
+    */
+  private val DocsStep = 12500L
 
-    // GRAFT_SOAK_STAGES: comma-separated stage names — run a subset (new
-    // stages get their growth curves without re-running settled ones)
-    val onlyStages = sys.env.get("GRAFT_SOAK_STAGES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+  /** The stream stages' batch shapes at `docs`, as (initial, per-batch
+    * parts, batches):
+    *  - stream_admission: docs/25 signed up front, 25 batches of docs/25;
+    *  - image_admission: docs/50 hashed up front, 10 batches of docs/125;
+    *  - crawl_cdc: a first batch of 0.4·docs URLs, then 9 batches of
+    *    docs/5 new + docs/5 revisits + docs/25 stale fetches.
+    * At the 2.5M default these are the runs SCALE.md records. A size the
+    * ratios cannot split exactly is rejected with the nearest valid one.
+    */
+  def streamSizes(docs: Long): Map[String, (Long, Seq[Long], Int)] = {
+    val nearest = math.max(1L, math.round(docs.toDouble / DocsStep)) * DocsStep
+    require(docs > 0 && docs % DocsStep == 0,
+      s"GRAFT_SOAK_DOCS=$docs does not split into the stream stages' batches: " +
+        s"use a multiple of $DocsStep (nearest: $nearest)")
+    Map(
+      "stream_admission" -> ((docs / 25, Seq(docs / 25), 25)),
+      "image_admission" -> ((docs / 50, Seq(docs / 125), 10)),
+      "crawl_cdc" -> ((2 * docs / 5, Seq(docs / 5, docs / 5, docs / 25), 10)))
+  }
 
-    var results = Vector.empty[(String, Double, Long, Long, Long, String)]
-    def timed(name: String)(f: => Long): Unit = if (onlyStages.forall(_(name))) {
-      taskMillis.clear()
-      val (s0, p0) = (shuffleBytes.get, spillBytes.get)
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      // wait for straggler task-end events already in flight
-      Thread.sleep(200)
-      val ts = {
-        val b = Vector.newBuilder[Long]
-        var v = taskMillis.poll(); while (v ne null) { b += v.longValue; v = taskMillis.poll() }
-        b.result().sorted
-      }
-      val skew = if (ts.isEmpty) """{"tasks":0}""" else {
-        def q(p: Double) = ts(math.min(ts.size - 1, (p * ts.size).toInt))
-        s"""{"tasks":${ts.size},"p50_ms":${q(0.5)},"p99_ms":${q(0.99)},""" +
-          s""""max_ms":${ts.last},"sum_task_sec":${ts.sum / 1000}}"""
-      }
-      results :+= ((name, sec, shuffleBytes.get - s0, spillBytes.get - p0, rows, skew))
-      System.err.println(f"[soak] $name%-22s $sec%8.1f s  " +
-        f"shuffle ${(shuffleBytes.get - s0) / 1e9}%8.3f GB  rows $rows%d  skew $skew")
-    }
-    def sinkCount(df: DataFrame): Long = { sink(df); -1L }
+  /** Input splits and shuffle partitions: the cores, or one per 78,125
+    * docs when that is more (32 at 2.5M, 128 at 10M) — partitions ∝ N,
+    * so per-task state stays bounded as the corpus grows (SCALE.md
+    * "clean_corpus decomposition", finding 3).
+    */
+  def partitions(docs: Long, cpus: Int): Int = math.max(cpus, ((docs + 78124) / 78125).toInt)
 
-    timed("exact_dedup") { graft.dedup.Dedup.exact(corpus).count() }
-    timed("minhash_pairs_clusters") {
-      val sigs = graft.dedup.Dedup.minhashSignatures(corpus, numPerms = 8)
-      val pairs = graft.dedup.Dedup.minhashCandidates(sigs, numPerms = 8, bandSize = 2)
-      graft.dedup.Dedup.clusters(pairs).count()
+  /** One soak run: the session, corpus size, embedding dim and input
+    * splits, and what the stream stages report back — the current
+    * stage's [[BatchLog]] and the run's violations.
+    */
+  final class Run(val spark: SparkSession, val docs: Long, val dim: Int, val parts: Int) {
+    lazy val corpus: DataFrame = documents(spark, docs, parts)
+    lazy val emb: DataFrame = embeddings(spark, docs, dim, parts)
+    private[ScaleSoak] var stage = ""
+    private[ScaleSoak] var log: Option[BatchLog] = None
+    private[ScaleSoak] val violations = new ConcurrentLinkedQueue[String]
+
+    /** Record a broken pass criterion of the current stage. */
+    def violate(msg: String): Unit = violations.add(s"$stage $msg")
+
+    /** Start the current stage's per-batch log; its clock starts now. */
+    def batchLog(): BatchLog = { val l = new BatchLog(spark, stage); log = Some(l); l }
+  }
+
+  /** One micro-batch: seconds since the previous batch ended (the first
+    * from the stream's start), its named counts, and the session's
+    * persisted RDDs when it was observed.
+    */
+  final case class Batch(id: Long, sec: Double, counts: Seq[(String, Long)], persistedRdds: Int) {
+    def apply(name: String): Long = counts.collectFirst { case (`name`, v) => v }.getOrElse(0L)
+    def json: String = (Seq(s""""batch":$id""", s""""sec":$sec""") ++
+      counts.map { case (k, v) => s""""$k":$v""" } :+ s""""persisted_rdds":$persistedRdds""")
+      .mkString("{", ",", "}")
+  }
+
+  /** The per-batch observer every stream stage shares. `observe` runs in
+    * the stream's foreachBatch (one thread per query) and prints one
+    * stderr line; `add` attaches counts known only after the stream ends.
+    */
+  final class BatchLog(spark: SparkSession, stage: String) {
+    private var t = System.nanoTime()
+    @volatile private var rows = Vector.empty[Batch]
+    def batches: Seq[Batch] = rows
+
+    def observe(id: Long, counts: (String, Long)*): Unit = {
+      val b = Batch(id, (System.nanoTime() - t) / 1e9, counts, spark.sparkContext.getPersistentRDDs.size)
+      rows :+= b
+      System.err.println((f"[soak] $stage batch $id%2d ${b.sec}%6.2f s" +:
+        counts.map { case (k, v) => s"$k $v" } :+ s"persisted_rdds ${b.persistedRdds}").mkString("  "))
+      t = System.nanoTime()
     }
-    timed("simhash_pairs") {
-      graft.dedup.Dedup.simhashPairs(graft.dedup.Dedup.simhash(corpus)).count()
+
+    def add(id: Long, counts: (String, Long)*): Unit =
+      rows = rows.map(b => if (b.id == id) b.copy(counts = b.counts ++ counts) else b)
+
+    def total(name: String): Long = rows.map(_(name)).sum
+  }
+
+  /** One soak stage: `body` runs it and returns its row count. */
+  final case class Stage(name: String, default: Boolean, body: Run => Long)
+
+  private def stage(name: String)(body: Run => Long) = Stage(name, default = true, body)
+  private def probe(name: String)(body: Run => Long) = Stage(name, default = false, body)
+
+  private def sinkCount(df: DataFrame): Long = { df.write.format("noop").mode("overwrite").save(); -1L }
+
+  /** Run `f` with the given session confs, restoring each key's own prior
+    * state after — an unset key goes back to unset, so Spark's built-in
+    * default keeps governing later stages.
+    */
+  private def withConf[A](spark: SparkSession, confs: (String, String)*)(f: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    timed("simhash_pairs_comb") {
-      // same verified pair set, block-pair bucket keys — the soak's own
-      // finding (single-band candidates grow ~N^2/2^16) motivated this;
-      // the stage pair quantifies the candidate-volume win at each N
-      graft.dedup.Dedup.simhashPairsCombinatorial(
-        graft.dedup.Dedup.simhash(corpus)).count()
+  }
+
+  // range-built frames carry tiny size estimates, so any stage whose
+  // join sides are actually corpus-sized must forbid broadcast or the
+  // planner materializes multi-GB "small" sides on the driver (the
+  // lsh payload stages hit this first; prefix_jaccard's 500k run died
+  // on an attempted 10 GiB broadcast of the prefix stream)
+  private def noBroadcast(spark: SparkSession)(f: => Long): Long =
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(f)
+
+  private def withTempDir[A](prefix: String)(f: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir) finally scala.util.Using.resource(Files.walk(dir)) {
+      _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
     }
-    timed("clean_corpus") {
-      graft.pipelines.CorpusClean(corpus, minQuality = 0.3, minJaccard = 0.5,
-        maxShingleDf = 50).count()
-    }
-    // clean_corpus decomposition probes (explicit GRAFT_SOAK_STAGES only,
-    // never part of the default soak): the 10M isolated runs measured the
-    // whole pipeline superlinear with a ~500 s straggler task that MORE
-    // shuffle partitions made worse (32→256 parts: 1275→1504 s wall,
-    // spill 3.6 GB→75 MB, p99 task 431→540 s) — so it is a hot KEY, not
-    // partition sizing. These sub-stages re-run each step of the chain
-    // in isolation so the per-stage skew histogram names the culprit.
-    def probed(name: String)(f: => Long): Unit =
-      if (onlyStages.exists(_(name))) timed(name)(f)
-    probed("clean_scored") {
-      import graft.text.TextAnalysis
-      corpus.select(col("doc_id"), col("text"),
-          TextAnalysis.langId(col("text")).as("pl"),
-          TextAnalysis.wordCount(col("text")).as("nw"),
-          TextAnalysis.punctCount(col("text")).as("np"),
-          length(col("text")).as("nc"))
-        .filter(col("pl") === "en" && col("nw") > 0)
-        .filter(TextAnalysis.qualityScore(col("nw"), col("np"), col("nc")) >= 0.3)
-        .select(col("doc_id")).count()
-    }
-    probed("clean_exact_canon") {
-      corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("doc_id"))
-        .count()
-    }
-    probed("clean_shingle_df_hotset_bcast") {
-      // the SHIPPED shape (Dedup.jaccardPairs since the round-7 A/B):
-      // combinable groupBy df → tiny over-cap set → EXPLICIT broadcast
-      // anti-join — no sort, no second index shuffle, no key-occupancy
-      // task
-      val dist = graft.dedup.Dedup.shingles(corpus).distinct()
-      val hot = dist.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > 50).select(col("shingle"))
-      dist.join(broadcast(hot), Seq("shingle"), "left_anti").count()
-    }
-    probed("clean_jaccard") {
-      graft.dedup.Dedup.jaccardPairs(corpus, minJaccard = 0.5, maxShingleDf = 50)
-        .count()
-    }
-    probed("clean_clusters") {
-      graft.dedup.Dedup.clusters(
-        graft.dedup.Dedup.jaccardPairs(corpus, minJaccard = 0.5, maxShingleDf = 50))
-        .count()
-    }
-    // explicit-only growth probes for the round-7 pair operators: same
-    // capped-index scale shape as clean_jaccard, different measures
-    probed("containment_pairs") {
-      graft.dedup.Dedup.containmentPairs(corpus, minContainment = 0.9,
-        maxShingleDf = 50).count()
-    }
-    probed("cosine_pairs") {
-      graft.text.TextSearch.cosinePairs(corpus, minCos = 0.5, maxDf = 50).count()
-    }
-    // explicit-only growth probes for the later round-7 operators.
-    probed("sorted_neighborhood") {
-      // every soak doc starts "the w…", so the default rangePrefix=2
-      // collapses to ONE range bucket = one window partition holding the
-      // whole corpus — exactly the occupancy knob the scaladoc names.
-      // rangePrefix=8 reaches past the shared prefix into the hashed
-      // first word (~10k distinct ranges); candidate volume stays
-      // (w−1)·N by construction at every N.
-      graft.dedup.Dedup.sortedNeighborhoodPairs(corpus, windowSize = 4,
-        maxDist = 12, rangePrefix = 8).count()
-    }
-    probed("exact_dup_spans") {
-      // 37-token docs → 18 k-windows each; the planted 50-blocks (4
-      // identical docs) sit under the df cap, so every block contributes
-      // its full diagonal-run merge — linear in N blocks
-      graft.dedup.Dedup.exactDupSpans(corpus, k = 20, maxWindowDf = 10).count()
-    }
-    probed("overlap_pairs") {
-      // winnowed-fingerprint span-overlap pairs over the same planted
-      // blocks; with the shared doc-keyed exchange the winnowing lineage
-      // must execute ONCE (the anti-join-pushdown fix — session 8), so
-      // wall should track the single fingerprint pass plus the capped
-      // self-join, not 2× the map stage
-      graft.text.TextQuality.overlapPairs(
-        graft.text.TextQuality.winnowedFingerprints(corpus),
+  }
+
+  /** Write `batches` frames as one parquet file each under `dir/landing`
+    * and return the stream that reads them back one file per micro-batch
+    * (the zero-padded names fix the delivery order).
+    */
+  private def land(spark: SparkSession, dir: Path, batches: Int)(frame: Int => DataFrame): DataFrame = {
+    (0 until batches).foreach(b => frame(b).coalesce(1).write.parquet(f"$dir/landing/b$b%04d.parquet"))
+    spark.readStream.schema(frame(0).schema).option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/landing/*.parquet")
+  }
+
+  /** Every soak stage, in run order. */
+  lazy val stages: Seq[Stage] = Seq(
+    stage("exact_dedup")(r => Dedup.exact(r.corpus).count()),
+    stage("minhash_pairs_clusters") { r =>
+      val sigs = Dedup.minhashSignatures(r.corpus, numPerms = 8)
+      Dedup.clusters(Dedup.minhashCandidates(sigs, numPerms = 8, bandSize = 2)).count()
+    },
+    stage("simhash_pairs")(r => Dedup.simhashPairs(Dedup.simhash(r.corpus)).count()),
+    // same verified pair set, block-pair bucket keys — the soak's own
+    // finding (single-band candidates grow ~N^2/2^16) motivated this;
+    // the stage pair quantifies the candidate-volume win at each N
+    stage("simhash_pairs_comb")(r => Dedup.simhashPairsCombinatorial(Dedup.simhash(r.corpus)).count()),
+    stage("clean_corpus") { r =>
+      graft.pipelines.CorpusClean(r.corpus, minQuality = 0.3, minJaccard = 0.5, maxShingleDf = 50).count()
+    },
+    // clean_corpus decomposition probes: the 10M isolated runs measured
+    // the whole pipeline superlinear with a ~500 s straggler task; these
+    // re-run each step of the chain in isolation so the per-stage skew
+    // histogram names the culprit
+    probe("clean_jaccard")(r => Dedup.jaccardPairs(r.corpus, minJaccard = 0.5, maxShingleDf = 50).count()),
+    probe("clean_clusters") { r =>
+      Dedup.clusters(Dedup.jaccardPairs(r.corpus, minJaccard = 0.5, maxShingleDf = 50)).count()
+    },
+    // growth probes for the round-7 pair operators: same capped-index
+    // scale shape as clean_jaccard, different measures
+    probe("containment_pairs") { r =>
+      Dedup.containmentPairs(r.corpus, minContainment = 0.9, maxShingleDf = 50).count()
+    },
+    probe("cosine_pairs")(r => graft.text.TextSearch.cosinePairs(r.corpus, minCos = 0.5, maxDf = 50).count()),
+    // every soak doc starts "the w…", so the default rangePrefix=2
+    // collapses to ONE range bucket = one window partition holding the
+    // whole corpus — exactly the occupancy knob the scaladoc names.
+    // rangePrefix=8 reaches past the shared prefix into the hashed first
+    // word (~10k distinct ranges); candidate volume stays (w−1)·N by
+    // construction at every N.
+    probe("sorted_neighborhood") { r =>
+      Dedup.sortedNeighborhoodPairs(r.corpus, windowSize = 4, maxDist = 12, rangePrefix = 8).count()
+    },
+    // 37-token docs → 18 k-windows each; the planted 50-blocks (4
+    // identical docs) sit under the df cap, so every block contributes
+    // its full diagonal-run merge — linear in N blocks
+    probe("exact_dup_spans")(r => Dedup.exactDupSpans(r.corpus, k = 20, maxWindowDf = 10).count()),
+    // winnowed-fingerprint span-overlap pairs over the same planted
+    // blocks; with the shared doc-keyed exchange the winnowing lineage
+    // must execute ONCE (the anti-join-pushdown fix — session 8), so
+    // wall should track the single fingerprint pass plus the capped
+    // self-join, not 2× the map stage
+    probe("overlap_pairs") { r =>
+      graft.text.TextQuality.overlapPairs(graft.text.TextQuality.winnowedFingerprints(r.corpus),
         minShared = 2, maxFpDf = 10).count()
-    }
-    probed("phrase_search") {
-      // "of note" is the 96%-of-corpus tail phrase — the HOT case: the
-      // broadcast phrase filter keeps ~2N postings, the anchor-vote agg
-      // is combinable, and no key sees more than a doc's occurrences
-      graft.text.TextSearch.phraseSearch(corpus, Seq("of", "note")).count()
-    }
-    probed("heavy_hitters") {
-      // token stream ~38N rows; 'the'/'and'/'of'/'note' are the planted
-      // heavy keys — the CMS prune must drop the 9973-word hashed tail
-      // map-side before the exact count
+    },
+    // "of note" is the 96%-of-corpus tail phrase — the HOT case: the
+    // broadcast phrase filter keeps ~2N postings, the anchor-vote agg is
+    // combinable, and no key sees more than a doc's occurrences
+    probe("phrase_search")(r => graft.text.TextSearch.phraseSearch(r.corpus, Seq("of", "note")).count()),
+    // token stream ~38N rows; 'the'/'and'/'of'/'note' are the planted
+    // heavy keys — the CMS prune must drop the 9973-word hashed tail
+    // map-side before the exact count
+    probe("heavy_hitters") { r =>
       graft.functions.Sketches.heavyHitters(
-        corpus.select(explode(split(col("text"), " ")).as("tok")),
-        col("tok")).count()
-    }
-    probed("pagerank") {
-      // deterministic degree-2 random graph over the doc ids: 2N edges,
-      // hubs arise from pmod collisions; 3 fixed-point iterations
-      val edges = spark.range(docs).selectExpr(
-        "id as src", s"pmod(xxhash64(id, 7), $docs) as dst")
-        .unionAll(spark.range(docs).selectExpr(
-          "id as src", s"pmod(xxhash64(id, 11), $docs) as dst"))
-      graft.graph.Graph.pageRank(edges, iterations = 3).count()
-    }
-    // explicit-only growth probes for the session-10 operators.
-    probed("bpe_train") {
-      // vocabulary here is ~10k hashed words plus one 'extraN' word per
-      // near-dup row (~N/50 singleton words) — maxWords prunes the
-      // singleton tail deterministically, so the collected model stays
-      // bounded while the distributed word-count aggregation sees the
-      // full Heaps tail; 50 merges over the 65k-word model is the
-      // in-memory loop's cost, deliberately driver-side (model, not data)
-      graft.text.Bpe.train(corpus, numMerges = 50).size.toLong
-    }
-    probed("bpe_encode") {
-      // map-side subword encode + count over the whole corpus under a
-      // small fixed merge table: the per-token cost of the greedy merge
-      // loop with the word memo hot (the corpus has ~10k distinct words)
+        r.corpus.select(explode(split(col("text"), " ")).as("tok")), col("tok")).count()
+    },
+    // 3 fixed-point iterations over the hash graph
+    probe("pagerank")(r => graft.graph.Graph.pageRank(hashEdges(r.spark, r.docs), iterations = 3).count()),
+    // vocabulary here is ~10k hashed words plus one 'extraN' word per
+    // near-dup row (~N/50 singleton words) — maxWords prunes the
+    // singleton tail deterministically, so the collected model stays
+    // bounded while the distributed word-count aggregation sees the full
+    // Heaps tail; 50 merges over the 65k-word model is the in-memory
+    // loop's cost, deliberately driver-side (model, not data)
+    probe("bpe_train")(r => graft.text.Bpe.train(r.corpus, numMerges = 50).size.toLong),
+    // map-side subword encode + count over the whole corpus under a
+    // small fixed merge table: the per-token cost of the greedy merge
+    // loop with the word memo hot (the corpus has ~10k distinct words)
+    probe("bpe_encode") { r =>
       val merges = graft.text.Bpe.trainInMemory(
         Seq(("the", 50L), ("and", 40L), ("note", 30L), ("of", 20L),
-          ("w1234", 10L), ("w999", 10L), ("extra7", 5L)), numMerges = 24,
-        minPairFreq = 1L)
-      sinkCount(corpus.select(col("doc_id"),
-        graft.text.Bpe.tokenCount(col("text"), merges).as("n")))
-    }
-    probed("label_propagation") {
-      // the pagerank graph (2N edges, hash hubs), 3 sync rounds: per
-      // round one adjacency join + two combinable aggs — shuffle should
-      // track pagerank's within a small factor at every N
-      val edges = spark.range(docs).selectExpr(
-        "id as src", s"pmod(xxhash64(id, 7), $docs) as dst")
-        .unionAll(spark.range(docs).selectExpr(
-          "id as src", s"pmod(xxhash64(id, 11), $docs) as dst"))
-      graft.graph.Graph.labelPropagation(edges, rounds = 3).count()
-    }
-    // round-9 operator growth probes (explicit-only).
-    probed("ngram_novelty") {
-      // ~36N hashed trigrams; the 50-block dup structure gives planted
-      // df>=2 shingles so the df join is never trivially all-novel
-      graft.text.TextQuality.ngramNovelty(corpus).count()
-    }
-    probed("url_latest_wins") {
-      // N fetches over ~N/3 pages in the d22 variant structure (case
-      // host + tracking params + query-less form); content repeats per
-      // fetch pair so changed/unchanged both occur. Group occupancy is
-      // the per-page revisit count (<= 3) at every N.
-      val fetches = spark.range(0, docs, 1, inputParts).selectExpr(
+          ("w1234", 10L), ("w999", 10L), ("extra7", 5L)), numMerges = 24, minPairFreq = 1L)
+      sinkCount(r.corpus.select(col("doc_id"), graft.text.Bpe.tokenCount(col("text"), merges).as("n")))
+    },
+    // the pagerank graph, 3 sync rounds: per round one adjacency join +
+    // two combinable aggs — shuffle should track pagerank's within a
+    // small factor at every N
+    probe("label_propagation") { r =>
+      graft.graph.Graph.labelPropagation(hashEdges(r.spark, r.docs), rounds = 3).count()
+    },
+    // ~36N hashed trigrams; the 50-block dup structure gives planted
+    // df>=2 shingles so the df join is never trivially all-novel
+    probe("ngram_novelty")(r => graft.text.TextQuality.ngramNovelty(r.corpus).count()),
+    // N fetches over ~N/3 pages in the d22 variant structure (case host
+    // + tracking params + query-less form); content repeats per fetch
+    // pair so changed/unchanged both occur. Group occupancy is the
+    // per-page revisit count (<= 3) at every N.
+    probe("url_latest_wins") { r =>
+      val fetches = r.spark.range(0, r.docs, 1, r.parts).selectExpr(
         "id as fetch_ts",
         """concat(case when id % 3 = 0 then 'https://S' else 'https://s' end,
           |  pmod(id div 3, 9973), '.example.com/p/', id div 3,
@@ -396,88 +399,51 @@ object ScaleSoak {
           |       when id % 3 = 2 then '?a=1' else '' end) as url""".stripMargin,
         "concat('c', id div 2) as content")
       graft.pipelines.CrawlSnapshots.latestWins(fetches).count()
-    }
-    probed("scene_cuts") {
-      // shot segmentation over STORED frame hashes (the decode stage is
-      // codec-bound per the image/audio probes — this isolates the
-      // doc-keyed lag-window + rollup shape): N frame rows = N/10
-      // videos x 10 frames, scene flip at frame 5 (hash base changes),
-      // +frame perturbation within a scene (hamming ~2 vs ~32)
-      val hashes = spark.range(0, docs, 1, inputParts).selectExpr(
+    },
+    // shot segmentation over STORED frame hashes (the decode stage is
+    // codec-bound per the image/audio probes — this isolates the
+    // doc-keyed lag-window + rollup shape): N frame rows = N/10 videos x
+    // 10 frames, scene flip at frame 5 (hash base changes), +frame
+    // perturbation within a scene (hamming ~2 vs ~32)
+    probe("scene_cuts") { r =>
+      val hashes = r.spark.range(0, r.docs, 1, r.parts).selectExpr(
         "id div 10 as doc_id",
         "cast(id % 10 as int) as frame_no",
         // XOR, not +: ANSI addition on a near-MAX hash would overflow;
         // the low-bit XOR keeps within-scene hamming <= 4 (vs ~32 across)
         "xxhash64(id div 10, case when id % 10 < 5 then 0 else 1 end) ^ (id % 10) as simhash")
       graft.multimodal.VideoHash.sceneCuts(hashes, threshold = 8).count()
-    }
-    // image near-dup end-to-end: deterministic 9×8 hash-pixel PNGs with
-    // the standard 50-block planted structure (3 exact copies + 1
-    // one-pixel near-dup per block → 6 hamming<=1 pairs/block), encoded
-    // and REAL-decoded per row. Hashes are ~uniform 64-bit (hashed
-    // pixels, unlike the oracle fixture's 251-class gradient), so the
+    },
+    // image near-dup end-to-end: [[png]] rows with the standard 50-block
+    // planted structure (3 exact copies + 1 one-pixel near-dup per block
+    // → 6 hamming<=1 pairs/block), encoded and REAL-decoded per row. The
     // pair stage sits in the text simhash banding regime — but the
     // measured 2.5M stage-detail A/B showed the END-TO-END stage is
     // CODEC-bound (decode ≈ 97% of task CPU, candidate join ~1% even
     // with candidates already quadratic), so the banding choice only
     // matters over STORED hashes, where the text curves transfer
     // directly (SCALE.md "Image near-dup banding A/B").
-    def imagePngs() = {
-      import spark.implicits._
-      spark.range(0, docs, 1, inputParts).selectExpr(
-          "id as doc_id",
-          "case when id % 50 in (1, 2, 3) then (id div 50) * 50 else id end as seed",
-          "cast(id % 50 = 3 as boolean) as near")
-        .as[(Long, Long, Boolean)]
-        .mapPartitions { it =>
-          it.map { case (id, seed, near) =>
-            val img = new java.awt.image.BufferedImage(
-              9, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 9) {
-                var v = java.lang.Long.remainderUnsigned(
-                  scala.util.hashing.byteswap64(seed * 72 + y * 9 + x), 251).toInt
-                if (near && x == 0 && y == 0) v = (v + 3) % 251
-                img.setRGB(x, y, (v << 16) | (v << 8) | v)
-                x += 1
-              }
-              y += 1
-            }
-            val out = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", out)
-            graft.multimodal.MediaRow(id, "image/png", out.toByteArray)
-          }
-        }
-    }
-    probed("image_dhash_pairs") {
-      graft.dedup.Dedup.simhashPairs(
-        graft.multimodal.ImageHash.dhashDocs(imagePngs(), spark)).count()
-    }
-    probed("image_dhash_pairs_comb") {
-      graft.dedup.Dedup.simhashPairsCombinatorial(
-        graft.multimodal.ImageHash.dhashDocs(imagePngs(), spark)).count()
-    }
-    probed("audio_fp_pairs") {
-      // tri-modal parity probe: 260-sample PCM WAVs with the standard
-      // 50-block planted structure, real javax.sound decode → energy
-      // fingerprint → the SAME banded pair join as text/image. Samples
-      // are HASHED per (seed, i) — uniform 64-bit fingerprints, the
-      // sparse banding regime (the oracle fixture's 251-class family
-      // would make soak-scale bucket occupancy quadratic by design) —
-      // and near rows perturb sample 0, the one-window near-dup.
-      import spark.implicits._
-      val rows = spark.range(0, docs, 1, inputParts).selectExpr(
-          "id as doc_id",
-          "case when id % 50 in (1, 2, 3) then (id div 50) * 50 else id end as seed",
-          "cast(id % 50 = 3 as boolean) as near")
+    probe("image_dhash_pairs") { r =>
+      Dedup.simhashPairs(ImageHash.dhashDocs(imagePngs(r), r.spark)).count()
+    },
+    probe("image_dhash_pairs_comb") { r =>
+      Dedup.simhashPairsCombinatorial(ImageHash.dhashDocs(imagePngs(r), r.spark)).count()
+    },
+    // tri-modal parity probe: 260-sample PCM WAVs with the standard
+    // 50-block planted structure, real javax.sound decode → energy
+    // fingerprint → the SAME banded pair join as text/image. Samples are
+    // HASHED per (seed, i) — uniform 64-bit fingerprints, the sparse
+    // banding regime (the oracle fixture's 251-class family would make
+    // soak-scale bucket occupancy quadratic by design) — and near rows
+    // perturb sample 0, the one-window near-dup.
+    probe("audio_fp_pairs") { r =>
+      import r.spark.implicits._
+      val rows = r.spark.range(0, r.docs, 1, r.parts).selectExpr("id as doc_id" +: blockSeed: _*)
         .as[(Long, Long, Boolean)]
         .map { case (id, seed, near) =>
           val n = 260
           val bytes = new Array[Byte](44 + n * 2)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
           def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
           cc("RIFF"); bb.putInt(36 + n * 2); cc("WAVE")
           cc("fmt "); bb.putInt(16)
@@ -492,187 +458,438 @@ object ScaleSoak {
             bb.putShort(v.toShort)
             i += 1
           }
-          graft.multimodal.MediaRow(id, "audio/wav", bytes)
+          MediaRow(id, "audio/wav", bytes)
         }
-      graft.dedup.Dedup.simhashPairs(
-        graft.multimodal.AudioHash.fingerprintDocs(rows, spark)).count()
-    }
-    probed("token_budget_mixture") {
-      // 20 domains (one corpus-hot: half the corpus lands in domain
-      // d0), budget 1M tokens each — the funnel the two-level range
-      // construction must absorb: a per-domain window would put ~N/2
-      // rows in one task
-      val domains = corpus.withColumn("dom",
-        concat(lit("d"), when(col("doc_id") % 2 === 0, lit(0))
-          .otherwise(pmod(col("doc_id"), lit(20)))))
+      Dedup.simhashPairs(graft.multimodal.AudioHash.fingerprintDocs(rows, r.spark)).count()
+    },
+    // 20 domains (one corpus-hot: half the corpus lands in domain d0),
+    // budget 1M tokens each — the funnel the two-level range
+    // construction must absorb: a per-domain window would put ~N/2 rows
+    // in one task
+    probe("token_budget_mixture") { r =>
+      val domains = r.corpus.withColumn("dom",
+        concat(lit("d"), when(col("doc_id") % 2 === 0, lit(0)).otherwise(pmod(col("doc_id"), lit(20)))))
       graft.dedup.Sampling.tokenBudgetMixture(domains, "doc_id", "dom",
-        graft.text.TextAnalysis.wordCount(col("text")),
-        budgetPerDomain = 1000000L).count()
-    }
-    probed("lr_quality_score") {
-      // fit on a 4% hash sample (the published-pipeline posture: the
-      // classifier needs exemplars, not the corpus), then score the
-      // full corpus map-side — fit cost is LBFGS over sample×256 dense
-      // vectors, score cost is the pure scan
-      val sample = corpus.filter(pmod(xxhash64(col("doc_id"), lit(5)), lit(25)) === 0)
+        graft.text.TextAnalysis.wordCount(col("text")), budgetPerDomain = 1000000L).count()
+    },
+    // fit on a 4% hash sample (the published-pipeline posture: the
+    // classifier needs exemplars, not the corpus), then score the full
+    // corpus map-side — fit cost is LBFGS over sample×256 dense vectors,
+    // score cost is the pure scan
+    probe("lr_quality_score") { r =>
+      val sample = r.corpus.filter(pmod(xxhash64(col("doc_id"), lit(5)), lit(25)) === 0)
         .withColumn("label", (col("doc_id") % 50 === 3).cast("double"))
-      val (w, b) = graft.text.QualityClassifier.fit(sample, spark, maxIter = 10)
-      sinkCount(graft.text.QualityClassifier.score(corpus, w, b))
-    }
-    // range-built frames carry tiny size estimates, so any stage whose
-    // join sides are actually corpus-sized must forbid broadcast or the
-    // planner materializes multi-GB "small" sides on the driver (the
-    // lsh payload stages hit this first; prefix_jaccard's 500k run died
-    // on an attempted 10 GiB broadcast of the prefix stream)
-    def noBroadcast(f: => Long): Long = {
-      // capture each key's own prior state and restore EXACTLY it —
-      // unset keys go back to unset (so Spark's built-in defaults keep
-      // governing later stages), not to a literal fallback value
-      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val prev = keys.map(k => k -> spark.conf.getOption(k))
-      keys.foreach(spark.conf.set(_, "-1"))
-      try f finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    // explicit-only growth probes for the session-9 operators.
-    probed("prefix_jaccard") {
-      // EXACT threshold join vs clean_jaccard's capped one, same corpus:
-      // the soak's corpus-hot shingles ("and of note", df = 0.96·N) are
-      // the stop-phrase keys that forced the df cap — under prefix
-      // filtering they enter a doc's prefix only when the doc has
-      // almost nothing rarer, so the hot postings never reach the join
-      // and no cap (hence no recall caveat) is needed. Candidate volume
-      // should track the planted near-dup density, linearly in N.
-      val sh = graft.dedup.Dedup.shingles(corpus)
-        .select(col("doc_id"), col("shingle").as("tok")).distinct()
-      noBroadcast(
-        graft.dedup.SimilarityJoin.prefixJaccardPairsOver(sh, minJaccard = 0.5).count())
-    }
-    probed("editdist_pairs") {
-      // 16-hex-char entity names, one planted 1-char typo per 20 ids:
-      // deletion-neighborhood keys are 17·N with bucket sizes ~2 (random
-      // hex shares almost no subsequences), so candidates ≈ planted
-      // pairs and the join is output-bound — the blocking claim at N
-      val names = spark.range(docs).selectExpr(
-        "id", "hex(xxhash64(id, 3)) AS name")
-      val typos = spark.range(docs).filter(col("id") % 20 === 0)
+      val (w, b) = graft.text.QualityClassifier.fit(sample, r.spark, maxIter = 10)
+      sinkCount(graft.text.QualityClassifier.score(r.corpus, w, b))
+    },
+    // EXACT threshold join vs clean_jaccard's capped one, same corpus:
+    // the soak's corpus-hot shingles ("and of note", df = 0.96·N) are
+    // the stop-phrase keys that forced the df cap — under prefix
+    // filtering they enter a doc's prefix only when the doc has almost
+    // nothing rarer, so the hot postings never reach the join and no cap
+    // (hence no recall caveat) is needed. Candidate volume should track
+    // the planted near-dup density, linearly in N.
+    probe("prefix_jaccard") { r =>
+      val sh = Dedup.shingles(r.corpus).select(col("doc_id"), col("shingle").as("tok")).distinct()
+      noBroadcast(r.spark)(graft.dedup.SimilarityJoin.prefixJaccardPairsOver(sh, minJaccard = 0.5).count())
+    },
+    // 16-hex-char entity names, one planted 1-char typo per 20 ids:
+    // deletion-neighborhood keys are 17·N with bucket sizes ~2 (random
+    // hex shares almost no subsequences), so candidates ≈ planted pairs
+    // and the join is output-bound — the blocking claim at N
+    probe("editdist_pairs") { r =>
+      val names = r.spark.range(r.docs).selectExpr("id", "hex(xxhash64(id, 3)) AS name")
+      val typos = r.spark.range(r.docs).filter(col("id") % 20 === 0)
         .selectExpr("id + 1000000000 AS id",
           // substitute the first char with one outside the hex alphabet
           "concat('Z', substr(hex(xxhash64(id, 3)), 2)) AS name")
-      graft.dedup.SimilarityJoin.editDistancePairs(
-        names.unionByName(typos), "name", "id").count()
-    }
-    probed("warc_records") {
-      // build + parse: 16 docs/file, gzip on the driver-prescribed
-      // rotation; measures end-to-end container throughput (the build's
-      // groupByKey is the fixture's cost, the parse is map-side)
+      graft.dedup.SimilarityJoin.editDistancePairs(names.unionByName(typos), "name", "id").count()
+    },
+    // build + parse: 16 docs/file, gzip on the driver-prescribed
+    // rotation; measures end-to-end container throughput (the build's
+    // groupByKey is the fixture's cost, the parse is map-side)
+    probe("warc_records") { r =>
       graft.sources.Warc.extractRecords(
-        graft.sources.Warc.syntheticWarcFiles(corpus, spark), spark,
-        lenient = true).count()
-    }
-    probed("html_extract") {
-      // pure map-side regex chain over a markup shell around each doc:
-      // the per-MB cost of extraction, no shuffle anywhere
-      import graft.text.HtmlExtract
-      val html = corpus.select(col("doc_id"),
+        graft.sources.Warc.syntheticWarcFiles(r.corpus, r.spark), r.spark, lenient = true).count()
+    },
+    // pure map-side regex chain over a markup shell around each doc: the
+    // per-MB cost of extraction, no shuffle anywhere
+    probe("html_extract") { r =>
+      val html = r.corpus.select(col("doc_id"),
         concat(lit("<html><head><title>D"), col("doc_id"),
           lit("</title><script>var x = 1;</script></head><body><p>"),
           col("text"), lit("</p><a href=\"x\">n</a></body></html>")).as("h"))
-      html.select(length(HtmlExtract.htmlToText(col("h"))).as("n"))
+      html.select(length(graft.text.HtmlExtract.htmlToText(col("h"))).as("n"))
         .agg(sum(col("n"))).collect()
-      corpus.count()
-    }
-    // ivfpq decomposition probes: the 2.5M run measured linear CPU
-    // (4.3× for 5× data) concentrated in ~3 full-width uniform stages;
-    // these attribute it to the components (coarse quantizer, codebook
+      r.corpus.count()
+    },
+    // ivfpq decomposition probes: the 2.5M run measured linear CPU (4.3×
+    // for 5× data) concentrated in ~3 full-width uniform stages; these
+    // attribute it to the components (coarse quantizer, codebook
     // training, code assignment) so the growth table names the owner
-    probed("ivfpq_cells") {
-      sinkCount(graft.ann.Ann.kmeansCells(emb, k = 64, iters = 1))
-    }
-    probed("ivfpq_codebooks") {
-      sinkCount(graft.ann.Pq.codebooks(emb, dim = dim, m = 8, k = 16))
-    }
-    probed("ivfpq_encode") {
-      val books = graft.ann.Pq.codebooks(emb, dim = dim, m = 8, k = 16)
-      sinkCount(graft.ann.Pq.encode(emb, books, dim = dim, m = 8))
-    }
-    probed("ivfpq") {
-      // the billion-vector layout at soak scale: 64 coarse cells,
-      // m=8 × k=16 codebooks, 64 queries routed to nprobe=2 cells —
-      // ADC scores (nprobe/kCells)·N code rows per query
-      val queries = emb.filter(col("vec_id") % (vecs / 64) === 0)
-      graft.ann.Pq.ivfAdcTopK(emb, queries, dim = dim, m = 8, k = 16,
+    probe("ivfpq_cells")(r => sinkCount(graft.ann.Ann.kmeansCells(r.emb, k = 64, iters = 1))),
+    probe("ivfpq_codebooks")(r => sinkCount(graft.ann.Pq.codebooks(r.emb, dim = r.dim, m = 8, k = 16))),
+    probe("ivfpq_encode") { r =>
+      val books = graft.ann.Pq.codebooks(r.emb, dim = r.dim, m = 8, k = 16)
+      sinkCount(graft.ann.Pq.encode(r.emb, books, dim = r.dim, m = 8))
+    },
+    // the billion-vector layout at soak scale: 64 coarse cells, m=8 ×
+    // k=16 codebooks, 64 queries routed to nprobe=2 cells — ADC scores
+    // (nprobe/kCells)·N code rows per query
+    probe("ivfpq") { r =>
+      val queries = r.emb.filter(col("vec_id") % (r.docs / 64) === 0)
+      graft.ann.Pq.ivfAdcTopK(r.emb, queries, dim = r.dim, m = 8, k = 16,
         kCells = 64, nprobe = 2, topK = 10).count()
-    }
-    timed("kmeans_cells") {
-      sinkCount(graft.ann.Ann.kmeansCells(emb, k = 64, iters = 2))
-    }
-    timed("ivf_search") {
-      val cells = graft.ann.Ann.kmeansCells(emb, k = 64, iters = 1)
-        .withColumnRenamed("cell", "label")
-      val indexed = emb.join(cells, "vec_id")
-      val queries = emb.filter(col("vec_id") % (vecs / 64) === 0)
-      graft.ann.Ann.ivfSearch(indexed, "label", queries, k = 10, nprobe = 2).count()
-    }
-    timed("int8_quantize") { sinkCount(graft.ann.Ann.quantizeInt8(emb)) }
+    },
+    stage("kmeans_cells")(r => sinkCount(graft.ann.Ann.kmeansCells(r.emb, k = 64, iters = 2))),
+    stage("ivf_search") { r =>
+      val cells = graft.ann.Ann.kmeansCells(r.emb, k = 64, iters = 1).withColumnRenamed("cell", "label")
+      val queries = r.emb.filter(col("vec_id") % (r.docs / 64) === 0)
+      graft.ann.Ann.ivfSearch(r.emb.join(cells, "vec_id"), "label", queries, k = 10, nprobe = 2).count()
+    },
+    stage("int8_quantize")(r => sinkCount(graft.ann.Ann.quantizeInt8(r.emb))),
     // lsh_pairs_carry measures SHUFFLE-JOIN payload cost, so force
-    // shuffle plans: spark.range's tiny size estimate otherwise baits the
-    // planner into BROADCASTING the multi-GB banded frame — a plan a real
-    // corpus-scale band join can never take (and whose driver
-    // materialization cost swamps the thing being measured)
-    timed("lsh_pairs_carry") {
-      // vectors ride the band-key shuffle (2 exchanges, dim-wide rows);
-      // GRAFT_SOAK_DIM sweeps its payload — see SCALE.md lsh payload table
-      noBroadcast(graft.ann.Ann.lshPairs(emb, dim = dim).count())
-    }
-    timed("shuffle_order") {
-      sinkCount(graft.dedup.Sampling.shuffleOrder(corpus.select("doc_id"), "doc_id"))
-    }
-    timed("packed_shards") {
-      // whitespace words as the token stream (~38/doc): the two-level
-      // prefix sum, straddle-split explode, and bounded per-pack
-      // assembly are what the growth curve must prove out
-      val toks = corpus.select(col("doc_id"), split(col("text"), " ").as("w"))
-      graft.dedup.Sampling.packedShards(toks, "doc_id", col("w"), budget = 2048L)
-        .count()
-    }
-    timed("bm25_topk") {
-      // 8 queries of 4 content words each against the full inverted
-      // index — the index build (one corpus scan + term shuffle)
-      // dominates, which is what the growth curve must show linear
-      val queries = corpus.filter(col("doc_id") % (docs / 8) === 0)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 2, 4).as("terms"))
-      graft.text.TextSearch.bm25TopK(corpus, queries, k = 10).count()
-    }
-    timed("tfidf_topterms") {
-      // maxDfRatio 0.5 is the at-scale configuration: corpus stopwords
-      // (df ≈ N) are the hot join/window keys behind the measured 16×
-      // straggler and can never win a top-k slot anyway
-      graft.text.TextSearch.tfidfTopTerms(corpus, k = 3,
-        maxDfRatio = Some(0.5)).count()
-    }
-    timed("contrastive_triples") {
-      // pairs straight from the planted 50-block dup structure (the
-      // minhash stage already times candidate generation itself)
-      val pairs = spark.range(docs).filter(col("id") % 50 === 1)
+    // shuffle plans: vectors ride the band-key shuffle (2 exchanges,
+    // dim-wide rows); GRAFT_SOAK_DIM sweeps its payload — see SCALE.md
+    // lsh payload table
+    stage("lsh_pairs_carry")(r => noBroadcast(r.spark)(graft.ann.Ann.lshPairs(r.emb, dim = r.dim).count())),
+    stage("shuffle_order") { r =>
+      sinkCount(graft.dedup.Sampling.shuffleOrder(r.corpus.select("doc_id"), "doc_id"))
+    },
+    // whitespace words as the token stream (~38/doc): the two-level
+    // prefix sum, straddle-split explode, and bounded per-pack assembly
+    // are what the growth curve must prove out
+    stage("packed_shards") { r =>
+      val toks = r.corpus.select(col("doc_id"), split(col("text"), " ").as("w"))
+      graft.dedup.Sampling.packedShards(toks, "doc_id", col("w"), budget = 2048L).count()
+    },
+    // 8 queries of 4 content words each against the full inverted index
+    // — the index build (one corpus scan + term shuffle) dominates,
+    // which is what the growth curve must show linear
+    stage("bm25_topk") { r =>
+      val queries = r.corpus.filter(col("doc_id") % (r.docs / 8) === 0)
+        .select(col("doc_id").as("query_id"), slice(split(col("text"), " "), 2, 4).as("terms"))
+      graft.text.TextSearch.bm25TopK(r.corpus, queries, k = 10).count()
+    },
+    // maxDfRatio 0.5 is the at-scale configuration: corpus stopwords (df
+    // ≈ N) are the hot join/window keys behind the measured 16×
+    // straggler and can never win a top-k slot anyway
+    stage("tfidf_topterms") { r =>
+      graft.text.TextSearch.tfidfTopTerms(r.corpus, k = 3, maxDfRatio = Some(0.5)).count()
+    },
+    // pairs straight from the planted 50-block dup structure (the
+    // minhash stage already times candidate generation itself)
+    stage("contrastive_triples") { r =>
+      val pairs = r.spark.range(r.docs).filter(col("id") % 50 === 1)
         .select((col("id") - 1).as("id1"), col("id").as("id2"))
-      graft.dedup.Sampling.contrastiveTriples(
-        corpus.select("doc_id"), "doc_id", pairs).count()
+      graft.dedup.Sampling.contrastiveTriples(r.corpus.select("doc_id"), "doc_id", pairs).count()
+    },
+    probe("stream_admission")(streamAdmission),
+    probe("image_admission")(imageAdmission),
+    probe("crawl_cdc")(crawlCdc))
+
+  /** The [[stages]] `only` names, in table order; the default stages when
+    * None. A name the table lacks throws: silently dropping a typo would
+    * give a normal-looking run over the wrong stage set.
+    */
+  def select(only: Option[String]): Seq[Stage] = only match {
+    case None => stages.filter(_.default)
+    case Some(s) =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- stages.map(_.name)
+      require(unknown.isEmpty, s"GRAFT_SOAK_STAGES names no soak stage: ${unknown.toSeq.sorted.mkString(", ")}")
+      stages.filter(st => names(st.name))
+  }
+
+  private def imagePngs(r: Run): Dataset[MediaRow] =
+    pngs(r.spark.range(0, r.docs, 1, r.parts)
+      .selectExpr(Seq("id as doc_id") ++ blockSeed :+ "false as corrupt": _*))
+
+  /** CorpusStream's growing near-dup index over 25 micro-batches: the
+    * docs/25 standing signatures, then batch b covers ids [S·(b+1),
+    * S·(b+2)). Ids ≡ 1,2 (mod 50) copy their block leader intra-batch;
+    * ids ≡ 7 (mod 50) in batch b ≥ 1 copy plain id − S − 1 (≡ 6, admitted
+    * one batch earlier) — flaggable only because the index grows with
+    * admissions. Exact: flagged = S/50 on every batch after the first.
+    */
+  private def streamAdmission(r: Run): Long = {
+    val spark = r.spark
+    val (initial, Seq(s), batches) = streamSizes(r.docs)("stream_admission")
+    withTempDir("graft-soak-stream") { dir =>
+      val stream = land(spark, dir, batches) { b =>
+        spark.range(initial + b * s, initial + (b + 1) * s, 1, r.parts).selectExpr(
+          "id as doc_id",
+          s"""case when id % 50 in (1, 2) then (id div 50) * 50
+             |     when id % 50 = 7 and id >= ${initial + s} then id - $s - 1
+             |     else id end as seed""".stripMargin,
+          "false as near")
+          .selectExpr("doc_id", s"$textFromSeedSql as text")
+      }
+      val initialSigs = Dedup.minhashSignatures(documents(spark, initial, r.parts))
+      val log = r.batchLog()
+      CorpusStream.backfill(CorpusStream.admissionWriter(stream, initialSigs, minSim = 0.8, out => {
+        // block leaders (id ≡ 0, 49 mod 50) are always admitted, so
+        // admitted's min/max are the batch's id window
+        val row = out.admitted.agg(count(lit(1)), min("doc_id"), max("doc_id")).head()
+        val from = initial + out.batchId * s
+        if (row.getLong(1) != from || row.getLong(2) != from + s - 1)
+          r.violate(s"batch ${out.batchId} out of order: ids " +
+            s"[${row.getLong(1)}, ${row.getLong(2)}], want [$from, ${from + s - 1}]")
+        val flagged = out.flagged.count()
+        log.observe(out.batchId, "admitted" -> row.getLong(0), "flagged" -> flagged)
+        if (out.batchId > 0 && flagged != s / 50)
+          r.violate(s"batch ${out.batchId} flagged: got $flagged want ${s / 50}")
+      })).awaitTermination()
+      log.total("admitted")
+    }
+  }
+
+  /** MediaStream's growing dHash index over 10 micro-batches of real
+    * PNGs: docs/50 standing images, then batches of S = docs/125. Ids ≡
+    * 7 (mod 50) in batch b ≥ 1 carry the image of id − S − 1 (plain,
+    * admitted one batch earlier); ids ≡ 13 are truncated payloads, the
+    * quarantine path. Exact: rejected = S/50 every batch; flagged ≥ S/50
+    * after the first (chance hamming-≤3 collisions add a few).
+    */
+  private def imageAdmission(r: Run): Long = {
+    val spark = r.spark
+    val (initial, Seq(s), batches) = streamSizes(r.docs)("image_admission")
+    def images(from: Long, until: Long, copyBack: Long) =
+      pngs(spark.range(from, until, 1, r.parts).selectExpr(
+        "id as doc_id",
+        s"case when id % 50 = 7 and $copyBack > 0 then id - $copyBack else id end as seed",
+        "false as near",
+        "id % 50 = 13 as corrupt"))
+    withTempDir("graft-soak-image") { dir =>
+      val stream = land(spark, dir, batches) { b =>
+        images(initial + b * s, initial + (b + 1) * s, copyBack = if (b > 0) s + 1 else 0).toDF()
+      }
+      val initialHashes = ImageHash.dhashDocs(images(0, initial, 0).filter(col("doc_id") % 50 =!= 13), spark)
+      val log = r.batchLog()
+      MediaStream.backfill(MediaStream.imageAdmissionWriter(stream, initialHashes, maxHamming = 3, out => {
+        val row = out.admitted.agg(count(lit(1)), min("doc_id")).head()
+        if (row.getLong(1) != initial + out.batchId * s)
+          r.violate(s"batch ${out.batchId} out of order: first id ${row.getLong(1)}")
+        val (flagged, rejected) = (out.flagged.count(), out.rejected.count())
+        log.observe(out.batchId, "admitted" -> row.getLong(0), "flagged" -> flagged, "rejected" -> rejected)
+        if (rejected != s / 50)
+          r.violate(s"batch ${out.batchId} rejected: got $rejected want ${s / 50}")
+        if (out.batchId > 0 && flagged < s / 50)
+          r.violate(s"batch ${out.batchId} flagged: got $flagged want >= ${s / 50}")
+      })).awaitTermination()
+      log.total("admitted")
+    }
+  }
+
+  private val CrawlStatuses = Seq("new", "changed", "unchanged", "stale")
+
+  /** CrawlStream's latest-wins URL state (RocksDB) over 10 micro-batches
+    * of a growing frontier. Batch 0: `initial` first-sight URLs; batch b
+    * ≥ 1: `fresh` new URLs (ts 10 + 1000·b) + `revisits` of batch-0 URLs
+    * at ts 11 + 1000·b — even slots with per-batch content (changed), odd
+    * ones with the original (unchanged) — + `stale` late fetches at ts 1.
+    * Exact: every batch's status counts; state rows after batch b =
+    * initial + b·fresh (one per distinct URL, never per fetch), read
+    * from the query's progress; and the surviving non-stale frontier
+    * equals the batch latest-wins replay over every fetch delivered.
+    */
+  private def crawlCdc(r: Run): Long = {
+    val spark = r.spark
+    import spark.implicits._
+    val (initial, Seq(fresh, revisits, stale), batches) = streamSizes(r.docs)("crawl_cdc")
+    def fetches(b: Int): DataFrame = {
+      val (from, until) = if (b == 0) (0L, initial) else (initial + (b - 1) * fresh, initial + b * fresh)
+      val first = spark.range(from, until, 1, r.parts).selectExpr("concat('u', id) as canonical_url",
+        s"${10 + 1000L * b}L as fetch_ts", "concat('c', id) as content_hash")
+      if (b == 0) first
+      else first.unionByName(spark.range(0L, revisits, 1, r.parts).selectExpr(
+          "concat('u', id) as canonical_url", s"${11 + 1000L * b}L as fetch_ts",
+          s"if(id % 2 = 0, concat('c', id, 'b', $b), concat('c', id)) as content_hash"))
+        .unionByName(spark.range(0L, stale, 1, r.parts).selectExpr(
+          "concat('u', id) as canonical_url", "1L as fetch_ts", "'late' as content_hash"))
+    }
+    withTempDir("graft-soak-crawl") { dir =>
+      val stream = land(spark, dir, batches)(fetches).as[CrawlFetch]
+      val log = r.batchLog()
+      val q = withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        val q = CrawlStream.latestWins(stream).writeStream
+          .option("checkpointLocation", s"$dir/chk")
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (df: Dataset[CrawlUpdate], batchId: Long) =>
+            df.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(s"$dir/updates")
+            log.observe(batchId)
+          }
+          .start()
+        q.awaitTermination()
+        q
+      }
+      val state = q.recentProgress.flatMap(p => p.stateOperators.headOption.map(p.batchId -> _)).toMap
+      val updates = spark.read.parquet(s"$dir/updates")
+      val counts = updates.groupBy("batch_id", "status").count().as[(Long, String, Long)].collect()
+        .map { case (b, st, n) => (b, st) -> n }.toMap
+      (0L until batches).foreach { b =>
+        val got = CrawlStatuses.map(st => st -> counts.getOrElse((b, st), 0L))
+        val want = if (b == 0) Seq(initial, 0L, 0L, 0L) else Seq(fresh, revisits / 2, revisits / 2, stale)
+        got.zip(want).foreach { case ((st, n), w) =>
+          if (n != w) r.violate(s"batch $b $st: got $n want $w")
+        }
+        val (rows, bytes) = state.get(b).fold((-1L, -1L))(o => (o.numRowsTotal, o.memoryUsedBytes))
+        log.add(b, got :+ ("state_rows" -> rows) :+ ("state_bytes" -> bytes): _*)
+        if (rows != initial + b * fresh)
+          r.violate(s"batch $b state rows: got $rows want ${initial + b * fresh}")
+      }
+      // the stream's surviving non-stale frontier per URL against the
+      // batch latest-wins over every fetch delivered: newest ts, smallest
+      // hash on a tie
+      val frontier = updates.filter(col("status") =!= "stale").groupBy("canonical_url")
+        .agg(max(struct(col("fetch_ts"), col("content_hash"))).as("s"))
+        .select(col("canonical_url"), col("s.fetch_ts"), col("s.content_hash"))
+      val delivered = spark.read.parquet(s"$dir/landing/*.parquet")
+      val replay = delivered.groupBy("canonical_url").agg(max(col("fetch_ts")).as("max_ts"))
+        .join(delivered, Seq("canonical_url"))
+        .filter(col("fetch_ts") === col("max_ts"))
+        .groupBy("canonical_url")
+        .agg(max(col("fetch_ts")).as("fetch_ts"), min(col("content_hash")).as("content_hash"))
+      val diff = frontier.exceptAll(replay).count() + replay.exceptAll(frontier).count()
+      if (diff != 0) r.violate(s"frontier disagreement rows: $diff")
+      counts.values.sum
+    }
+  }
+
+  /** What one stage measured. */
+  final case class StageResult(name: String, sec: Double, shuffleBytes: Long, spillBytes: Long,
+      rows: Long, skew: String, batches: Seq[Batch]) {
+    def json: String =
+      s""""$name":{"sec":$sec,"shuffle_bytes":$shuffleBytes,"spill_bytes":$spillBytes,""" +
+        s""""rows":$rows,"task_skew":$skew""" +
+        (if (batches.isEmpty) "" else batches.map(_.json).mkString(""","batches":[""", ",", "]")) + "}"
+  }
+
+  /** A whole run: every stage's result, the run's shuffle and spill
+    * totals, and every violation.
+    */
+  final case class Report(docs: Long, dim: Int, parts: Int, stages: Seq[StageResult],
+      shuffleBytes: Long, peakStageShuffle: Long, spillBytes: Long, violations: Seq[String]) {
+    def json: String = {
+      val total = stages.map(_.sec).sum
+      s"""{"metric":"soak_total","value":$total,"unit":"sec","docs":$docs,"dim":$dim,""" +
+        s""""parts":$parts,"docs_per_sec":${(docs / total).toLong},""" +
+        s""""shuffle_total_bytes":$shuffleBytes,"peak_stage_shuffle_bytes":$peakStageShuffle,""" +
+        s""""spill_total_bytes":$spillBytes,""" +
+        s""""violations":${violations.map(v => "\"" + v + "\"").mkString("[", ",", "]")},""" +
+        s""""stages":${stages.map(_.json).mkString("{", ",", "}")}}"""
+    }
+  }
+
+  /** The soak's one listener: cumulative shuffle write and spill, the
+    * largest single Spark stage's shuffle, every task's run time (drained
+    * per soak stage for the skew summary), and one stderr line per Spark
+    * stage — callsite, task count, summed/max task time, shuffle write,
+    * spill — which names the operator owning a hot task.
+    */
+  private final class Metrics extends SparkListener {
+    val shuffle = new AtomicLong
+    val spill = new AtomicLong
+    val peakShuffle = new AtomicLong
+    // boxed Long on purpose: with scala.Long the poll()-vs-null check
+    // unboxes null to 0 and the drain loop never terminates
+    private val taskMillis = new ConcurrentLinkedQueue[java.lang.Long]
+    private val stageTasks = new ConcurrentHashMap[Int, (Long, Long, Long)]
+
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val m = sc.stageInfo.taskMetrics
+      if (m != null) {
+        val w = m.shuffleWriteMetrics.bytesWritten
+        shuffle.addAndGet(w)
+        spill.addAndGet(m.diskBytesSpilled)
+        peakShuffle.updateAndGet(p => math.max(p, w))
+        val (n, sum, max) = Option(stageTasks.remove(sc.stageInfo.stageId)).getOrElse((0L, 0L, 0L))
+        System.err.println(
+          f"[stage] id=${sc.stageInfo.stageId}%-4d tasks=$n%-5d " +
+            f"sum=${sum / 1000}%-6d s max=${max / 1000.0}%-8.1f s " +
+            f"write=${w / 1e9}%-7.2f GB spill=${m.diskBytesSpilled / 1e9}%-7.2f GB " +
+            f"${sc.stageInfo.name}")
+      }
     }
 
-    val total = results.map(_._2).sum
-    val stages = results.map { case (n, s, sh, sp, r, skew) =>
-      s""""$n":{"sec":$s,"shuffle_bytes":$sh,"spill_bytes":$sp,"rows":$r,"task_skew":$skew}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"soak_total","value":$total,"unit":"sec","docs":$docs,""" +
-      s""""vecs":$vecs,"dim":$dim,"docs_per_sec":${(docs / total).toLong},""" +
-      s""""shuffle_total_bytes":${shuffleBytes.get},""" +
-      s""""peak_stage_shuffle_bytes":${peakStageShuffle.get},""" +
-      s""""spill_total_bytes":${spillBytes.get},"stages":$stages}""")
-    spark.stop()
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+      if (te.taskMetrics != null) {
+        val t = te.taskMetrics.executorRunTime
+        taskMillis.add(t)
+        stageTasks.merge(te.stageId, (1L, t, t), (a, b) => (a._1 + 1, a._2 + t, math.max(a._3, t)))
+      }
+
+    /** p50/p99/max task time since the last drain, as JSON. */
+    def drainSkew(): String = {
+      val b = Vector.newBuilder[Long]
+      var v = taskMillis.poll(); while (v ne null) { b += v.longValue; v = taskMillis.poll() }
+      val ts = b.result().sorted
+      if (ts.isEmpty) """{"tasks":0}""" else {
+        def q(p: Double) = ts(math.min(ts.size - 1, (p * ts.size).toInt))
+        s"""{"tasks":${ts.size},"p50_ms":${q(0.5)},"p99_ms":${q(0.99)},""" +
+          s""""max_ms":${ts.last},"sum_task_sec":${ts.sum / 1000}}"""
+      }
+    }
+  }
+
+  /** Run `selected` stages over a `docs`-document corpus in `spark`, each
+    * measured by one listener, and report. A stream stage whose
+    * persisted RDD count grows across its batches is a violation too.
+    */
+  def run(spark: SparkSession, docs: Long, dim: Int, parts: Int, selected: Seq[Stage]): Report = {
+    val r = new Run(spark, docs, dim, parts)
+    val metrics = new Metrics
+    spark.sparkContext.addSparkListener(metrics)
+    try {
+      val results = selected.map { st =>
+        r.stage = st.name
+        r.log = None
+        metrics.drainSkew() // drop task events from before this stage
+        val (s0, p0) = (metrics.shuffle.get, metrics.spill.get)
+        val t0 = System.nanoTime()
+        val rows = st.body(r)
+        val sec = (System.nanoTime() - t0) / 1e9
+        // wait for straggler task-end events already in flight
+        Thread.sleep(200)
+        val skew = metrics.drainSkew()
+        val batches = r.log.fold(Seq.empty[Batch])(_.batches)
+        val persisted = batches.map(_.persistedRdds)
+        if (persisted.nonEmpty && persisted.max > persisted.head)
+          r.violate(s"persisted_rdds grew: ${persisted.mkString(",")}")
+        val res = StageResult(st.name, sec, metrics.shuffle.get - s0, metrics.spill.get - p0, rows, skew, batches)
+        System.err.println(f"[soak] ${st.name}%-22s $sec%8.1f s  " +
+          f"shuffle ${res.shuffleBytes / 1e9}%8.3f GB  rows $rows%d  skew $skew")
+        res
+      }
+      Report(docs, dim, parts, results, metrics.shuffle.get, metrics.peakShuffle.get,
+        metrics.spill.get, r.violations.toArray(Array.empty[String]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val docs = sys.env.getOrElse("GRAFT_SOAK_DOCS", "2500000").toLong
+    val dim = sys.env.getOrElse("GRAFT_SOAK_DIM", "64").toInt
+    // both throw on a bad value before any Spark work starts
+    val selected = select(sys.env.get("GRAFT_SOAK_STAGES"))
+    streamSizes(docs)
+    val cpus = RegistryRunner.cpus
+    val parts = partitions(docs, cpus)
+    // GRAFT_SOAK_MASTER: point the soak at a real cluster manager
+    // (e.g. spark://host:7077 standalone) instead of local[cpus] — the
+    // multi-executor validation path. Executor sizing rides the usual
+    // spark.executor.* system properties / spark-defaults; the
+    // application jar must be on spark.jars so executors can load it.
+    val master = sys.env.getOrElse("GRAFT_SOAK_MASTER", s"local[$cpus]")
+    val spark = Sessions.builder("graft-scale-soak", Some(master), parts)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val report = try run(spark, docs, dim, parts, selected) finally spark.stop()
+    println(report.json)
+    if (report.violations.nonEmpty) {
+      System.err.println(s"soak violations: ${report.violations.mkString("; ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -12,9 +12,14 @@ object Embedding {
 
   /** Reference hyperparameters (reference.conf:84–90) + a fixed seed —
     * the reference leaves the seed to Spark's default (nondeterministic
-    * across runs); training here is reproducible by default.
-    */
-  /** numPartitions: the reference pins 16; the round-7 isolated fit
+    * across runs). The seed alone does not make training reproducible:
+    * with numPartitions > 1 (the default 16) MLlib sums the partition
+    * replicas' float vectors in a reduceByKey, in whatever order the
+    * shuffle delivers them, so two fits can differ in the last bits.
+    * Only numPartitions = 1 fits are reproducible (PipelineSpec pins
+    * that).
+    *
+    * numPartitions: the reference pins 16; the round-7 isolated fit
     * sweep (SCALE.md "Embedding") measured the optimum scaling with the
     * corpus — ≈ cores at 7.5M bags, and 64 beating 16 by 1.4× at 30M
     * bags. Size it ≈ max(cores, bags / 500k), but no higher than

@@ -340,9 +340,20 @@ object Grounding {
     *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
     */
   def caches(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
-      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] = {
-    val idLut = loadEpmcIds(epmcIds)
-    val lut = entityLut(targets, diseases, drugs)
+      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] =
+    caches(epmc, lookups(epmcIds, targets, diseases, drugs))
+
+  /** The two static lookups grounding joins against: the PMID↔PMCID id
+    * LUT and the entity LUT. A stream builds them once for all its
+    * batches.
+    */
+  def lookups(epmcIds: DataFrame, targets: DataFrame, diseases: DataFrame,
+      drugs: DataFrame): (DataFrame, DataFrame) =
+    (loadEpmcIds(epmcIds), entityLut(targets, diseases, drugs))
+
+  /** [[caches]] over already-built [[lookups]]. */
+  def caches(epmc: DataFrame, lookups: (DataFrame, DataFrame)): Map[String, DataFrame] = {
+    val (idLut, lut) = lookups
     val sentences = filterSentences(loadSentences(graft.core.SchemaTools.replaceSpaces(epmc), idLut))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val mapped = mapEntities(sentences, lut).persist(StorageLevel.MEMORY_AND_DISK)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import org.apache.spark.storage.StorageLevel
 import graft.etl.{Grounding, Processing}
 
 /** Incremental literature ingestion: ground new EPMC documents as they
@@ -35,24 +34,18 @@ object LiteratureStream {
       drugs: DataFrame,
       sink: BatchOutputs => Unit): DataStreamWriter[Row] = {
     // static side: built once, reused every batch
-    val idLut = Grounding.loadEpmcIds(epmcIds).cache()
-    val lut = Grounding.entityLut(targets, diseases, drugs).cache()
+    val (idLut, lut) = Grounding.lookups(epmcIds, targets, diseases, drugs)
+    val lookups = (idLut.cache(), lut.cache())
 
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
-        // one parse of the batch's files and one label grounding for the
-        // matches and both co-occurrence sides, as in Grounding.compute
-        val sentences = Grounding.filterSentences(
-          Grounding.loadSentences(graft.core.SchemaTools.replaceSpaces(batch), idLut))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val mapped = Grounding.mapEntities(sentences, lut).persist(StorageLevel.MEMORY_AND_DISK)
+        // the batch path's caches → resolve → free over the batch's
+        // documents: one parse and one label grounding per batch
+        val caches = Grounding.caches(batch, lookups)
         try {
-          val (matches, _) = Grounding.resolveMatches(sentences, mapped)
-          val (coocs, _) = Grounding.resolveCooccurrences(sentences, mapped)
-          sink(BatchOutputs(batchId,
-            Processing.filterMatches(matches),
-            Processing.filterCooccurrences(coocs)))
-        } finally Seq(mapped, sentences).foreach(_.unpersist())
+          val out = Processing.groundingOutputs(Grounding.resolve(caches))
+          sink(BatchOutputs(batchId, out("matches"), out("cooccurrences")))
+        } finally Grounding.free(caches)
       }
     }
   }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
   * itself verified: the 50-block structure (ids ≡ 1,2 mod 50 copy the
   * leader, id ≡ 3 appends one word), hashed (non-affine) word choice,
   * English stopword density, and the near-dup embedding perturbation.
+  * Also the stage table's name check, the derived stream sizes, and the
+  * three stream stages end to end at the smallest valid corpus.
   */
 class SoakSpec extends SparkSpec {
   import spark.implicits._
@@ -56,5 +58,59 @@ class SoakSpec extends SparkSpec {
     v(103L).last shouldBe 0.49f
     // non-dup vectors are distinct
     v(104L) should not be v(100L)
+  }
+
+  "ScaleSoak.select" should "reject stage names the table lacks, naming each one" in {
+    val e = intercept[IllegalArgumentException](
+      ScaleSoak.select(Some("exact_dedup, bm25_topk_typo,crawl_cdcx")))
+    e.getMessage should include("bm25_topk_typo, crawl_cdcx")
+    e.getMessage should not include "exact_dedup"
+    ScaleSoak.select(Some("crawl_cdc,exact_dedup")).map(_.name) shouldBe
+      Seq("exact_dedup", "crawl_cdc")
+    val defaults = ScaleSoak.select(None).map(_.name)
+    defaults should contain("clean_corpus")
+    defaults should not contain "stream_admission"
+  }
+
+  "ScaleSoak.streamSizes" should "derive the recorded 2.5M stream runs and reject sizes the ratios cannot split" in {
+    ScaleSoak.streamSizes(2500000L) shouldBe Map(
+      "stream_admission" -> ((100000L, Seq(100000L), 25)),
+      "image_admission" -> ((50000L, Seq(20000L), 10)),
+      "crawl_cdc" -> ((1000000L, Seq(500000L, 500000L, 100000L), 10)))
+    val e = intercept[IllegalArgumentException](ScaleSoak.streamSizes(130000L))
+    e.getMessage should include("nearest: 125000")
+    ScaleSoak.partitions(2500000L, cpus = 32) shouldBe 32
+    ScaleSoak.partitions(10000000L, cpus = 32) shouldBe 128
+  }
+
+  "ScaleSoak.run" should "run the three stream stages with the planted per-batch counts and no violation" in {
+    val report = ScaleSoak.run(spark, 12500L, dim = 8, parts = 4,
+      ScaleSoak.select(Some("stream_admission,image_admission,crawl_cdc")))
+    report.violations shouldBe empty
+    val stages = report.stages.map(s => s.name -> s.batches).toMap
+
+    // 25 batches of 500 docs; every batch after the first flags its 10
+    // planted copies of the previous batch
+    val stream = stages("stream_admission")
+    stream.map(_.id) shouldBe (0L until 25L)
+    stream.foreach(b => b("admitted") + b("flagged") shouldBe 500L)
+    stream.tail.map(_("flagged")).distinct shouldBe Seq(10L)
+
+    // 10 batches of 100 images: 2 corrupt ones rejected each batch, and
+    // at least the 2 planted copies flagged after the first
+    val image = stages("image_admission")
+    image.map(_.id) shouldBe (0L until 10L)
+    image.foreach(b => b("admitted") + b("flagged") + b("rejected") shouldBe 100L)
+    image.map(_("rejected")).distinct shouldBe Seq(2L)
+    all(image.tail.map(_("flagged"))) should be >= 2L
+
+    // 5,000 first-sight URLs, then 2,500 new + 2,500 revisits (half
+    // changed) + 500 stale per batch; state holds one row per URL
+    val crawl = stages("crawl_cdc")
+    crawl.map(_.id) shouldBe (0L until 10L)
+    crawl.head.counts.take(4) shouldBe Seq("new" -> 5000L, "changed" -> 0L, "unchanged" -> 0L, "stale" -> 0L)
+    crawl.tail.map(_.counts.take(4)).distinct shouldBe
+      Seq(Seq("new" -> 2500L, "changed" -> 1250L, "unchanged" -> 1250L, "stale" -> 500L))
+    crawl.map(_("state_rows")) shouldBe (0 until 10).map(b => 5000L + b * 2500L)
   }
 }
