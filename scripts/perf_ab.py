@@ -12,7 +12,10 @@ as it finishes. At the end, for each end-to-end metric of BENCHMARK.json, it
 prints each side's quartiles, the base's spread (IQR / median), the
 change/base ratio of the medians, and the pairs the change won (ties count
 for neither side), and applies the gain rule: the change wins at least nine
-tenths of the pairs and the medians differ by more than the base's IQR.
+tenths of the pairs and the medians differ by more than the base's IQR. A
+metric whose base spread is wider than its bound reads `unresolved`, not
+`within bound`, unless every change run beats every base run: such a run
+set could not have shown a regression of the bound's size.
 It also prints each side's `peak_heap_mb` quartiles: run.py prints that
 value, but BENCHMARK.json does not bound it.
 
@@ -107,14 +110,18 @@ def main():
         won = sum((y < x) if lower else (y > x) for x, y in zip(b, c))
         ratio = cq[1] / bq[1] if bq[1] else float("nan")
         worse = (ratio - 1) if lower else (1 - ratio)
+        spread = iqr / bq[1] if bq[1] else (float("inf") if iqr else 0.0)
+        dominates = max(c) < min(b) if lower else min(c) > max(b)
         if won >= 0.9 * len(pairs) and abs(cq[1] - bq[1]) > iqr:
             verdict = "gain"
         elif worse > m["bound"]:
             verdict = f"worse than bound {m['bound']}"
+        elif spread > m["bound"] and not dominates:
+            verdict = f"unresolved: base spread {spread:.4f} > bound {m['bound']}"
         else:
             verdict = f"within bound {m['bound']}"
         print(f"{name:14s} {bq[0]:9.3f}{bq[1]:9.3f}{bq[2]:9.3f} {cq[0]:9.3f}{cq[1]:9.3f}{cq[2]:9.3f} "
-              f"{iqr / bq[1] if bq[1] else float('nan'):12.4f} {ratio:9.4f} {won:3d}/{len(pairs):<3d}  {verdict}")
+              f"{spread:12.4f} {ratio:9.4f} {won:3d}/{len(pairs):<3d}  {verdict}")
     if heaps["base"] and heaps["change"]:
         print("peak_heap_mb (printed only, no bound): "
               + "  ".join(f"{side} q1/med/q3 " + "/".join(f"{q:.1f}" for q in quartiles(heaps[side]))

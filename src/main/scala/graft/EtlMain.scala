@@ -114,15 +114,15 @@ object EtlMain {
         val epmc = Io.read(spark, cfg.readSpec("epmc", "json", Some(EpmcSchema.schema)))
         val ids = Io.read(spark,
           cfg.readSpec("epmcids", "csv", None, Map("header" -> "true")))
-        val caches = Grounding.caches(
-          epmc, ids,
+        val caches = Grounding.caches(epmc, Grounding.lookups(
+          ids,
           Io.read(spark, cfg.readSpec("targets", "parquet")),
           Io.read(spark, cfg.readSpec("diseases", "parquet")),
-          Io.read(spark, cfg.readSpec("drugs", "parquet")))
+          Io.read(spark, cfg.readSpec("drugs", "parquet"))))
         val cached = g.task()(Grounding.materialize(caches))
         var readers: Seq[CompletableFuture[_]] = Seq(cached)
         try {
-          val written = Processing.groundingOutputs(Grounding.resolve(caches))
+          val written = Grounding.resolve(caches)
             .map { case (n, df) => n -> g.task(cached)(w(n, df)) }
           readers ++= written.values
           matches = written("matches")
@@ -146,7 +146,7 @@ object EtlMain {
       if (steps.contains("evidence"))
         g.task(model, matches, cooccurrences)(w("evidence", Evidence.generate(
           model.join(), r("matches"), r("cooccurrences"),
-          spark, Some(cfg.threshold), cfg.sectionRanks)))
+          spark, cfg.threshold, cfg.sectionRanks)))
     }
   }
 }

@@ -164,9 +164,6 @@ object Io {
     if (spec.withProvenance) df.withColumn("trace_source", input_file_name()) else df
   }
 
-  def readAll(spark: SparkSession, specs: Map[String, ReadSpec]): Map[String, DataFrame] =
-    specs.map { case (k, s) => k -> read(spark, s) }
-
   def write(df: DataFrame, spec: WriteSpec): Unit = {
     val sized =
       if (spec.targetFiles <= 0) df

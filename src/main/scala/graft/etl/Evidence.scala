@@ -37,7 +37,7 @@ object Evidence {
     * (hot genes/diseases) is AQE's skew-join territory.
     */
   def fromMatches(model: Word2VecModel, matches: DataFrame, spark: SparkSession,
-      threshold: Option[Double] = Some(0.01),
+      threshold: Double = 0.01,
       ranks: Seq[SectionRank] = SectionRanks.default): DataFrame = {
     val rankTable = broadcast(SectionRanks.table(spark, ranks))
     val vectors = model.getVectors.select(col("word"), vector_to_array(col("vector")).as("vector"))
@@ -68,7 +68,7 @@ object Evidence {
         mean(col("diseaseF")).as("meanDiseaseFreqPerPub"),
         count(col("targetP")).cast(IntegerType).as("sharedPublicationCount"))
       .withColumn("similarity", VectorOps.cosine(col("targetV"), col("diseaseV")))
-      .filter(col("similarity") > threshold.getOrElse(Double.MinPositiveValue))
+      .filter(col("similarity") > threshold)
       .withColumn("harmonicSimilarity",
         Scoring.harmonicSorted(array_repeat(col("similarity"), col("sharedPublicationCount"))))
       .withColumn("resourceScore", col("harmonicSimilarity"))
@@ -82,7 +82,7 @@ object Evidence {
     * sentiment score ÷ 10, harmonic-summed per pair with a distinct-pub
     * count.
     */
-  def fromCooccurrences(coocs: DataFrame, threshold: Option[Double] = Some(0.01)): DataFrame =
+  def fromCooccurrences(coocs: DataFrame): DataFrame =
     coocs
       .filter(col("isMapped") === true && col("type1") === "GP" &&
         col("type2") === "DS" && length(col("text")) < 600)
@@ -101,10 +101,10 @@ object Evidence {
     * Evidence.scala:132–146).
     */
   def generate(model: Word2VecModel, matches: DataFrame, coocs: DataFrame,
-      spark: SparkSession, threshold: Option[Double] = Some(0.01),
+      spark: SparkSession, threshold: Double = 0.01,
       ranks: Seq[SectionRank] = SectionRanks.default): DataFrame =
     fromMatches(model, matches, spark, threshold, ranks)
-      .join(fromCooccurrences(coocs, threshold),
+      .join(fromCooccurrences(coocs),
         Seq("targetFromSourceId", "diseaseFromSourceMappedId"), "left_outer")
       .na.fill(0d)
       .select((matchesColumns ++

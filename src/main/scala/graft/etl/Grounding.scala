@@ -141,8 +141,8 @@ object Grounding {
     *     left-outer + coalesce);
     *  4. derive date/year/month/day, explode sentences, lowercase section,
     *     flag non-printable-ASCII sentences.
-    * `failed_*` diagnostic flags are kept for the failed-output datasets
-    * and swept by `filterSentences`.
+    * The `failed_*` flags are diagnostics for inspecting this frame alone:
+    * `filterSentences` drops them before any output is built.
     */
   def loadSentences(epmc: DataFrame, epmcIds: DataFrame): DataFrame = {
     val cleaned = epmc
@@ -255,8 +255,10 @@ object Grounding {
 
   /** Resolve per-sentence matches against the grounded label table
     * (reference resolveEntities matches branch, Grounding.scala:228–256).
-    * Returns (valid, failed): valid rows carry the match struct with
-    * keywordId/isMapped, failed rows are the unmapped originals.
+    * Returns (valid, failed): valid rows are the base columns followed by
+    * the match fields with keywordId/isMapped, flat (the reference wraps
+    * them in a `match` struct and unwraps it again, reference
+    * Processing.scala:40–51); failed rows are the unmapped originals.
     */
   def resolveMatches(sentences: DataFrame, mappedLabels: DataFrame): (DataFrame, DataFrame) = {
     val merged = sentences
@@ -271,11 +273,10 @@ object Grounding {
       .withColumn("isMapped", col("keywordId").isNotNull)
 
     val valid = disambiguate(merged.filter(col("isMapped")), "keywordId", "uniqueKeywordIdsPerLabelN")
-      .withColumn("match", struct(
+      .select(baseCols ++ List(
         col("endInSentence"), col("label"), col("labelN"), col("sectionEnd"),
         col("sectionStart"), col("startInSentence"), col("type"),
-        col("keywordId"), col("isMapped")))
-      .select(baseCols :+ col("match"): _*)
+        col("keywordId"), col("isMapped")): _*)
 
     (valid, merged.filter(!col("isMapped")))
   }
@@ -284,6 +285,8 @@ object Grounding {
     * type, ground each side independently against the label table, keep
     * pairs with both sides mapped, disambiguate each side (reference
     * resolveEntities cooccurrence branch, Grounding.scala:258–304).
+    * Returns (valid, failed) like [[resolveMatches]]: valid rows are the
+    * base columns followed by the pair fields, flat.
     */
   def resolveCooccurrences(sentences: DataFrame, mappedLabels: DataFrame): (DataFrame, DataFrame) = {
     def side(n: Int): DataFrame = mappedLabels.select(
@@ -306,14 +309,13 @@ object Grounding {
     val valid = merged.filter(col("isMapped"))
       .transform(disambiguate(_, "keywordId1", "uniqueKeywordIdsPerLabelN1", "type1"))
       .transform(disambiguate(_, "keywordId2", "uniqueKeywordIdsPerLabelN2", "type2"))
-      .withColumn("co-occurrence", struct(
+      .select(baseCols ++ List(
         col("end1"), col("end2"), col("sentEvidenceScore").as("evidence_score"),
         col("label1"), col("labelN1"), col("keywordId1"),
         col("label2"), col("labelN2"), col("keywordId2"),
         col("start1"), col("start2"),
         concat_ws("-", col("type1"), col("type2")).as("type"),
-        col("type1"), col("type2"), col("isMapped")))
-      .select(baseCols :+ col("co-occurrence"): _*)
+        col("type1"), col("type2"), col("isMapped")): _*)
 
     (valid, merged.filter(!col("isMapped")))
   }
@@ -322,26 +324,13 @@ object Grounding {
     * co-occurrence resolution (reference compute, Grounding.scala:563–610),
     * in two phases: [[caches]] then [[resolve]]. It returns the resolved
     * frames and both caches, which the caller frees ([[free]]) once every
-    * output is written.
+    * output is read.
     */
   def compute(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
-      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] =
-    resolve(caches(epmc, epmcIds, targets, diseases, drugs))
-
-  /** The two frames every grounding output reads, persisted
-    * MEMORY_AND_DISK and not yet materialized:
-    *  - `sentences`, the filtered, id-repaired sentence frame: every
-    *    output (matches, co-occurrences, both failed sets, and each
-    *    disambiguation self-join) reads it, so without it each one parses
-    *    the EPMC JSON and repairs ids again;
-    *  - `mappedLabels`, the grounded-label table: it feeds both resolves
-    *    (matches and two co-occurrence sides), so without it the
-    *    vocabulary scan + key kernel + LUT join subtree runs three times
-    *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
-    */
-  def caches(epmc: DataFrame, epmcIds: DataFrame, targets: DataFrame,
-      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] =
-    caches(epmc, lookups(epmcIds, targets, diseases, drugs))
+      diseases: DataFrame, drugs: DataFrame): Map[String, DataFrame] = {
+    val c = caches(epmc, lookups(epmcIds, targets, diseases, drugs))
+    c ++ resolve(c)
+  }
 
   /** The two static lookups grounding joins against: the PMID↔PMCID id
     * LUT and the entity LUT. A stream builds them once for all its
@@ -351,7 +340,17 @@ object Grounding {
       drugs: DataFrame): (DataFrame, DataFrame) =
     (loadEpmcIds(epmcIds), entityLut(targets, diseases, drugs))
 
-  /** [[caches]] over already-built [[lookups]]. */
+  /** The two frames every grounding output reads, over already-built
+    * [[lookups]], persisted MEMORY_AND_DISK and not yet materialized:
+    *  - `sentences`, the filtered, id-repaired sentence frame: every
+    *    output (matches, co-occurrences, both failed sets, and each
+    *    disambiguation self-join) reads it, so without it each one parses
+    *    the EPMC JSON and repairs ids again;
+    *  - `mappedLabels`, the grounded-label table: it feeds both resolves
+    *    (matches and two co-occurrence sides), so without it the
+    *    vocabulary scan + key kernel + LUT join subtree runs three times
+    *    (reference Grounding.scala:603 persists the same frame DISK_ONLY).
+    */
   def caches(epmc: DataFrame, lookups: (DataFrame, DataFrame)): Map[String, DataFrame] = {
     val (idLut, lut) = lookups
     val sentences = filterSentences(loadSentences(graft.core.SchemaTools.replaceSpaces(epmc), idLut))
@@ -366,21 +365,22 @@ object Grounding {
     */
   def materialize(caches: Map[String, DataFrame]): Long = caches("mappedLabels").count()
 
-  /** The match and co-occurrence frames, valid and failed, over the
-    * [[caches]]; the caches ride along under their own keys.
+  /** The four grounding datasets over the [[caches]], keyed by the names
+    * they are written under: `matches` and `cooccurrences` (mapped, flat)
+    * and `failedMatches` and `failedCooccurrences` (the unmapped rows).
     */
   def resolve(caches: Map[String, DataFrame]): Map[String, DataFrame] = {
     val (sentences, mapped) = (caches("sentences"), caches("mappedLabels"))
-    val (matches, matchesFailed) = resolveMatches(sentences, mapped)
-    val (coocs, coocsFailed) = resolveCooccurrences(sentences, mapped)
-    caches ++ Map(
+    val (matches, failedMatches) = resolveMatches(sentences, mapped)
+    val (coocs, failedCoocs) = resolveCooccurrences(sentences, mapped)
+    Map(
       "matches" -> matches,
-      "matchesFailed" -> matchesFailed,
       "cooccurrences" -> coocs,
-      "cooccurrencesFailed" -> coocsFailed)
+      "failedMatches" -> failedMatches,
+      "failedCooccurrences" -> failedCoocs)
   }
 
-  /** Free the [[caches]] of a grounding result, `mappedLabels` (which
+  /** Free the [[caches]] (or a [[compute]] result), `mappedLabels` (which
     * reads `sentences`) first.
     */
   def free(grounding: Map[String, DataFrame]): Unit =

@@ -1,14 +1,16 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.functions.Scoring
 
-/** Processing step: unwrap the grounded match/co-occurrence structs and
-  * build the literature index with per-(publication, keyword) harmonic
-  * relevance (capability-parity rebuild of reference Processing.scala).
+/** Processing step: the literature index with per-(publication,
+  * keyword) harmonic relevance over the grounded matches, and the
+  * per-publication match rollup (capability-parity rebuild of reference
+  * Processing.scala). The grounding datasets themselves come flat from
+  * [[Grounding.resolve]], so the reference's unwrap of the match and
+  * co-occurrence structs has no counterpart here.
   *
   * Determinism note (SURVEY.md §4 landmines): the reference computes the
   * relevance vector with `collect_list(...).over(w.orderBy(rank))` — an
@@ -20,20 +22,6 @@ import graft.functions.Scoring
   * shuffles at scale.
   */
 object Processing {
-
-  /** Unwrap the `match` struct and filter on mapping state (reference
-    * filterMatches, Processing.scala:40–51).
-    */
-  def filterMatches(df: DataFrame, isMapped: Boolean = true): DataFrame =
-    df.selectExpr("*", "match.*").drop("match").filter(col("isMapped") === isMapped)
-
-  /** Unwrap the `co-occurrence` struct (hyphenated name — backticks are
-    * load-bearing) and filter on mapping state (reference
-    * filterCooccurrences, Processing.scala:27–38).
-    */
-  def filterCooccurrences(df: DataFrame, isMapped: Boolean = true): DataFrame =
-    df.selectExpr("*", "`co-occurrence`.*").drop("co-occurrence")
-      .filter(col("isMapped") === isMapped)
 
   /** Literature index: one row per (pmid, keywordId) with a
     * section-weighted harmonic relevance and a JSON `sentences` payload of
@@ -108,8 +96,8 @@ object Processing {
     * are replaced by deterministic `max` over per-pub-constant columns,
     * and collected arrays are sorted (SURVEY.md §4).
     */
-  def aggregateMatches(unwrappedMatches: DataFrame): DataFrame = {
-    val base = unwrappedMatches.filter(col("section").isNotNull && col("isMapped") === true)
+  def aggregateMatches(matches: DataFrame): DataFrame = {
+    val base = matches.filter(col("section").isNotNull && col("isMapped") === true)
 
     val countsPerKey = base
       .groupBy(col("pmid"), col("keywordId"))
@@ -139,23 +127,4 @@ object Processing {
 
     countsPerKey.join(aggregated, Seq("pmid"), "left_outer")
   }
-
-  /** Full processing outputs over a grounding result (reference apply,
-    * Processing.scala:180–223): [[groundingOutputs]] and the literature
-    * index.
-    */
-  def compute(grounding: Map[String, DataFrame], spark: SparkSession,
-      ranks: Seq[SectionRank] = SectionRanks.default): Map[String, DataFrame] = {
-    val outputs = groundingOutputs(grounding)
-    outputs + ("literatureIndex" -> literatureIndex(outputs("matches"), spark, ranks))
-  }
-
-  /** The four grounding datasets: unwrapped valid matches and
-    * co-occurrences, and the failed sets as resolved.
-    */
-  def groundingOutputs(grounding: Map[String, DataFrame]): Map[String, DataFrame] = Map(
-    "matches" -> filterMatches(grounding("matches")),
-    "cooccurrences" -> filterCooccurrences(grounding("cooccurrences")),
-    "failedMatches" -> grounding("matchesFailed"),
-    "failedCooccurrences" -> grounding("cooccurrencesFailed"))
 }

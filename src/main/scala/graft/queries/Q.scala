@@ -25,9 +25,6 @@ object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))
 
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
-
   /** testdata table loader shorthand. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables(spark, dir, name)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.etl.{Grounding, Processing}
+import graft.etl.Grounding
 
 /** Incremental literature ingestion: ground new EPMC documents as they
   * arrive instead of re-running the batch pipeline over the whole corpus
@@ -43,7 +43,7 @@ object LiteratureStream {
         // documents: one parse and one label grounding per batch
         val caches = Grounding.caches(batch, lookups)
         try {
-          val out = Processing.groundingOutputs(Grounding.resolve(caches))
+          val out = Grounding.resolve(caches)
           sink(BatchOutputs(batchId, out("matches"), out("cooccurrences")))
         } finally Grounding.free(caches)
       }

@@ -117,6 +117,44 @@ class EtlMainSpec extends SparkSpec {
     indexWrites.head should not include "Scan json"
   }
 
+  it should "write the four grounding datasets with locked column names, order and types" in {
+    // the key-column hashes of the benchmark's output check cannot see a
+    // change of shape; this pins every column of what processing writes
+    val cfg = fixtureConfig(fixtureInputs())
+    EtlMain.run("processing", cfg, spark)
+    def columns(name: String): Seq[String] = spark.read.parquet(s"${cfg.out}/$name").schema.fields.toSeq
+      .map(f => s"${f.name} ${f.dataType.simpleString}")
+    val groundedBase = Seq("pmid string", "pmcid string", "pubDate string", "date date", "year int",
+      "month int", "day int", "organisms array<string>", "section string", "text string",
+      "trace_source string")
+    // a failed set keeps the other sentence column unexploded
+    val coocStruct = "array<struct<label1:string,label2:string,type:string,start1:bigint," +
+      "end1:bigint,start2:bigint,end2:bigint,association:string,relation:string,sentEvidenceScore:double>>"
+    val matchStruct = "array<struct<label:string,type:string,startInSentence:bigint," +
+      "endInSentence:bigint,sectionStart:bigint,sectionEnd:bigint>>"
+    val failedBase = Seq("pmid string", "pmcid string", "pubDate string", "organisms array<string>",
+      "journal_info struct<name:string>", "trace_source string", "date date", "year int",
+      "month int", "day int", "section string", "text string")
+    val expected = Map(
+      "matches" -> (groundedBase ++ Seq("endInSentence bigint", "label string", "labelN string",
+        "sectionEnd bigint", "sectionStart bigint", "startInSentence bigint", "type string",
+        "keywordId string", "isMapped boolean")),
+      "cooccurrences" -> (groundedBase ++ Seq("end1 bigint", "end2 bigint", "evidence_score double",
+        "label1 string", "labelN1 string", "keywordId1 string", "label2 string", "labelN2 string",
+        "keywordId2 string", "start1 bigint", "start2 bigint", "type string", "type1 string",
+        "type2 string", "isMapped boolean")),
+      "failedMatches" -> (Seq("type string", "label string") ++ failedBase ++ Seq(
+        s"co-occurrence $coocStruct", "startInSentence bigint", "endInSentence bigint",
+        "sectionStart bigint", "sectionEnd bigint", "labelN string", "keywordId string",
+        "uniqueKeywordIdsPerLabelN bigint", "isMapped boolean")),
+      "failedCooccurrences" -> (Seq("type2 string", "label2 string", "type1 string", "label1 string") ++
+        failedBase ++ Seq(s"matches $matchStruct", "start1 bigint", "end1 bigint", "start2 bigint",
+        "end2 bigint", "association string", "relation string", "sentEvidenceScore double",
+        "labelN1 string", "keywordId1 string", "uniqueKeywordIdsPerLabelN1 bigint", "labelN2 string",
+        "keywordId2 string", "uniqueKeywordIdsPerLabelN2 bigint", "isMapped boolean")))
+    for ((name, cols) <- expected) withClue(s"$name: ") { columns(name) shouldBe cols }
+  }
+
   private val datasets = Seq("matches", "cooccurrences", "failedMatches", "failedCooccurrences",
     "literatureIndex", "trainingSet", "vectors", "evidence")
 

@@ -74,17 +74,17 @@ class GroundingSpec extends SparkSpec {
       .collect().toSet shouldBe Set("ENSG0003", "ENSG0004")
   }
 
-  "resolveMatches" should "produce mapped match structs and failed rows" in {
+  "resolveMatches" should "produce flat mapped matches and failed rows" in {
     // doc1: SNCA ×3 (title + results ×2) + asthma; doc2: TNF + cancer;
     // doc4: α-synuclein; doc5: p38 ×2 groundings
     matches.count() shouldBe 9
-    matches.select(col("match.keywordId")).as[String].collect().toSet shouldBe
+    matches.select(col("keywordId")).as[String].collect().toSet shouldBe
       Set("ENSG0001", "EFO_0000270", "ENSG0002", "EFO_0000305", "ENSG0003", "ENSG0004")
     // the OG (organism) match can never ground — types outside GP/DS/CD
     // have no key flavor (reference Grounding.scala:173–181) — and must
     // surface in the failed output, not silently vanish
-    g("matchesFailed").count() shouldBe 1
-    g("matchesFailed").select("label", "type").as[(String, String)].head() shouldBe
+    g("failedMatches").count() shouldBe 1
+    g("failedMatches").select("label", "type").as[(String, String)].head() shouldBe
       (("mouse", "OG"))
   }
 
@@ -92,8 +92,7 @@ class GroundingSpec extends SparkSpec {
     val coocs = g("cooccurrences").cache()
     coocs.count() shouldBe 2
     val pair = coocs.filter(col("pmid") === "1")
-      .select(col("`co-occurrence`.keywordId1"), col("`co-occurrence`.keywordId2"),
-        col("`co-occurrence`.evidence_score"), col("`co-occurrence`.type"))
+      .select("keywordId1", "keywordId2", "evidence_score", "type")
       .as[(String, String, Double, String)].head()
     pair shouldBe (("ENSG0001", "EFO_0000270", 5.0, "GP-DS"))
   }

@@ -12,17 +12,16 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val g = Fixtures.grounding(spark)
-  private lazy val processed = Processing.compute(g, spark)
-  private lazy val matches = processed("matches").cache()
-  private lazy val coocs = processed("cooccurrences").cache()
+  private lazy val matches = g("matches").cache()
+  private lazy val coocs = g("cooccurrences").cache()
 
-  "Processing.filterMatches" should "unwrap the match struct" in {
+  "Grounding.resolve" should "return flat matches, mapped rows only" in {
     matches.columns should contain allOf ("keywordId", "isMapped", "label", "labelN", "type")
     matches.filter(col("isMapped") === false).count() shouldBe 0
   }
 
   "literatureIndex" should "compute section-weighted harmonic relevance" in {
-    val idx = processed("literatureIndex").cache()
+    val idx = Processing.literatureIndex(matches, spark).cache()
 
     // doc1 / ENSG0001: title once (w=1.0) + results twice (w=0.6, rank 2)
     // → relevance = 1/1 + 0.6/4 + 0.6/9
@@ -137,7 +136,7 @@ class PipelineSpec extends SparkSpec {
     val model = Embedding.generateModel(matches, spark,
       Embedding.W2VConfig(vectorSize = 8, numPartitions = 1))
     // threshold -2 keeps every pair regardless of cosine sign
-    val ev = Evidence.generate(model, matches, coocs, spark, threshold = Some(-2.0)).cache()
+    val ev = Evidence.generate(model, matches, coocs, spark, threshold = -2.0).cache()
 
     val row = ev.filter(col("targetFromSourceId") === "ENSG0001" &&
         col("diseaseFromSourceMappedId") === "EFO_0000270")
@@ -169,7 +168,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   "Evidence.fromCooccurrences" should "honor the text-length and type filters" in {
-    val evc = Evidence.fromCooccurrences(coocs, threshold = None)
+    val evc = Evidence.fromCooccurrences(coocs)
     evc.count() shouldBe 2 // both GP-DS pairs, both sentences < 600 chars
     evc.filter(col("targetFromSourceId") === "ENSG0001")
       .select("harmonicCooccurrenceSentiment").as[Double].head() shouldBe 0.5 +- 1e-12

@@ -37,10 +37,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   "the evidence self-join" should "be an equi join on pmid, not a cartesian" in {
-    val matches = Processing.filterMatches(g("matches"))
+    val matches = g("matches")
     val model = Embedding.generateModel(matches, spark,
       Embedding.W2VConfig(vectorSize = 4, numPartitions = 1))
-    val p = plan(Evidence.fromMatches(model, matches, spark, threshold = Some(-2.0)))
+    val p = plan(Evidence.fromMatches(model, matches, spark, threshold = -2.0))
     p should not include "CartesianProduct"
     p should not include "BroadcastNestedLoopJoin"
   }
@@ -60,7 +60,7 @@ class PlanShapeSpec extends SparkSpec {
     // computation itself, not the upstream grounding subtree (whose
     // disambiguation windows would otherwise appear in the same plan)
     val dir = java.nio.file.Files.createTempDirectory("graft-plan").toFile.getAbsolutePath
-    Processing.filterMatches(g("matches")).write.mode("overwrite").parquet(dir)
+    g("matches").write.mode("overwrite").parquet(dir)
     val p = plan(Processing.literatureIndex(spark.read.parquet(dir), spark))
     p should not include "Window"
   }
