@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.core.Sessions
 import graft.dedup.Dedup
 import graft.multimodal.{ImageHash, MediaRow}
-import graft.streaming.{CorpusStream, CrawlFetch, CrawlStream, CrawlUpdate, MediaStream}
+import graft.streaming.{CorpusStream, CrawlFetch, CrawlStream, CrawlUpdate, LiteratureStream, MediaStream}
 
 /** Scale soak: generates an sf1-equivalent documents + embeddings corpus
   * ENTIRELY as distributed expressions (spark.range + column builders —
@@ -627,7 +627,7 @@ object ScaleSoak {
       }
       val initialSigs = Dedup.minhashSignatures(documents(spark, initial, r.parts))
       val log = r.batchLog()
-      CorpusStream.backfill(CorpusStream.admissionWriter(stream, initialSigs, minSim = 0.8, out => {
+      LiteratureStream.backfill(CorpusStream.admissionWriter(stream, initialSigs, minSim = 0.8, out => {
         // block leaders (id ≡ 0, 49 mod 50) are always admitted, so
         // admitted's min/max are the batch's id window
         val row = out.admitted.agg(count(lit(1)), min("doc_id"), max("doc_id")).head()
@@ -666,7 +666,7 @@ object ScaleSoak {
       }
       val initialHashes = ImageHash.dhashDocs(images(0, initial, 0).filter(col("doc_id") % 50 =!= 13), spark)
       val log = r.batchLog()
-      MediaStream.backfill(MediaStream.imageAdmissionWriter(stream, initialHashes, maxHamming = 3, out => {
+      LiteratureStream.backfill(MediaStream.imageAdmissionWriter(stream, initialHashes, maxHamming = 3, out => {
         val row = out.admitted.agg(count(lit(1)), min("doc_id")).head()
         if (row.getLong(1) != initial + out.batchId * s)
           r.violate(s"batch ${out.batchId} out of order: first id ${row.getLong(1)}")
@@ -835,7 +835,9 @@ object ScaleSoak {
 
   /** Run `selected` stages over a `docs`-document corpus in `spark`, each
     * measured by one listener, and report. A stream stage whose
-    * persisted RDD count grows across its batches is a violation too.
+    * persisted RDD count grows across its batches, or that still holds
+    * a persisted RDD it did not start with once it ends, is a violation
+    * too.
     */
   def run(spark: SparkSession, docs: Long, dim: Int, parts: Int, selected: Seq[Stage]): Report = {
     val r = new Run(spark, docs, dim, parts)
@@ -847,9 +849,18 @@ object ScaleSoak {
         r.log = None
         metrics.drainSkew() // drop task events from before this stage
         val (s0, p0) = (metrics.shuffle.get, metrics.spill.get)
+        val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
         val rows = st.body(r)
         val sec = (System.nanoTime() - t0) / 1e9
+        if (r.log.nonEmpty) {
+          // a stream stage frees what it held once its queries end, by an
+          // asynchronous unpersist: wait up to 30 s for it
+          def left = spark.sparkContext.getPersistentRDDs.keySet -- persisted0
+          val deadline = System.nanoTime() + 30000000000L
+          while (left.nonEmpty && System.nanoTime() < deadline) Thread.sleep(200)
+          if (left.nonEmpty) r.violate(s"persisted_rdds left: ${left.toSeq.sorted.mkString(",")}")
+        }
         // wait for straggler task-end events already in flight
         Thread.sleep(200)
         val skew = metrics.drainSkew()

@@ -291,6 +291,16 @@ object Ann {
       transform(col("codes"), c => c.cast("double") * col("scale")).as("embedding"))
     val coarse = bruteForceKnn(recon, queries, coarseK)
       .select(col("query_id"), col("neighbor_id"))
+    exactRerank(coarse, embeddings, queries, k)
+  }
+
+  /** The exact second stage every two-stage retrieval shares: join the
+    * coarse (query_id, neighbor_id) candidates to the full-precision
+    * embeddings, score by cosine, and keep each query's top `k` (sim
+    * desc, neighbor_id asc). Queries broadcast: they are the small side.
+    */
+  private[ann] def exactRerank(coarse: DataFrame, embeddings: DataFrame,
+      queries: DataFrame, k: Int): DataFrame = {
     val sim = VectorOps.cosine(col("qe"), col("ne"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     coarse
@@ -356,16 +366,7 @@ object Ann {
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKAgg.topK(coarseK)(col("score"), col("neighbor_id")).as("top"))
       .select(col("query_id"), explode(col("top").getField("id")).as("neighbor_id"))
-    val sim = VectorOps.cosine(col("qe"), col("ne"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    coarse
-      .join(embeddings.select(col("vec_id").as("neighbor_id"),
-        toD(col("embedding")).as("ne")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        toD(col("embedding")).as("qe"))), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), sim.as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    exactRerank(coarse, embeddings, queries, k)
   }
 
   /** IVF search: route each query to its `nprobe` nearest centroid cells,

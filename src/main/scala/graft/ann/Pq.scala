@@ -234,15 +234,6 @@ object Pq {
       k: Int, topK: Int, coarseK: Int = 32, iters: Int = 1): DataFrame = {
     val coarse = adcTopK(embeddings, queries, dim, m, k, coarseK, iters)
       .select(col("query_id"), col("neighbor_id"))
-    val sim = VectorOps.cosine(col("qe"), col("ne"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    coarse
-      .join(embeddings.select(col("vec_id").as("neighbor_id"),
-        toD(col("embedding")).as("ne")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        toD(col("embedding")).as("qe"))), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), sim.as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    Ann.exactRerank(coarse, embeddings, queries, topK)
   }
 }

@@ -103,18 +103,31 @@ object Io {
     finally out.close()
   }
 
-  private[core] def readSchemaSidecar(spark: SparkSession, dir: String): Option[Sidecar] = {
-    val p = sidecarPath(dir)
+  /** The whole of a small file as UTF-8, or None when it does not exist. */
+  private def readWhole(spark: SparkSession, p: org.apache.hadoop.fs.Path): Option[String] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val text =
-        try {
-          val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes)
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
+      try {
+        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+        in.readFully(bytes)
+        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      } finally in.close()
+    }
+  }
+
+  /** A JSON object's fields as a name → text map. */
+  private def textFields(o: com.fasterxml.jackson.databind.JsonNode): Map[String, String] = {
+    val it = o.fields()
+    val b = Map.newBuilder[String, String]
+    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
+    b.result()
+  }
+
+  private[core] def readSchemaSidecar(spark: SparkSession, dir: String): Option[Sidecar] = {
+    val p = sidecarPath(dir)
+    readWhole(spark, p).map { text =>
       val root =
         try new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
         catch {
@@ -129,20 +142,16 @@ object Io {
         }
       if (root == null || !root.isObject) throw new IllegalStateException(
         s"corrupt sidecar $p — fix or delete it")
-      else if (!root.has("version")) Some(Sidecar(struct(text))) // v0: bare schema
+      else if (!root.has("version")) Sidecar(struct(text)) // v0: bare schema
       else {
         val v = root.get("version").asInt()
         if (v > SidecarVersion) throw new IllegalStateException(
           s"sidecar $p has version $v but this build reads ≤ $SidecarVersion — " +
             "upgrade the library or regenerate the dataset")
-        val opts = Option(root.get("options")).filter(_.isObject).map { o =>
-          val it = o.fields()
-          val b = Map.newBuilder[String, String]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-          b.result()
-        }.getOrElse(Map.empty[String, String])
-        Some(Sidecar(struct(root.get("schema").toString), opts,
-          Option(root.get("format")).map(_.asText())))
+        val opts = Option(root.get("options")).filter(_.isObject).map(textFields)
+          .getOrElse(Map.empty[String, String])
+        Sidecar(struct(root.get("schema").toString), opts,
+          Option(root.get("format")).map(_.asText()))
       }
     }
   }
@@ -257,23 +266,7 @@ object Io {
     * last [[writeAllAtomic]] run under `manifestDir` was torn (died
     * between dataset writes) or never ran.
     */
-  def fanOutManifest(spark: SparkSession, manifestDir: String): Option[Map[String, String]] = {
-    val p = manifestPath(manifestDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try {
-          val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes)
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      val it = root.get("datasets").fields()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-      Some(b.result())
-    }
-  }
+  def fanOutManifest(spark: SparkSession, manifestDir: String): Option[Map[String, String]] =
+    readWhole(spark, manifestPath(manifestDir)).map(text =>
+      textFields(new com.fasterxml.jackson.databind.ObjectMapper().readTree(text).get("datasets")))
 }

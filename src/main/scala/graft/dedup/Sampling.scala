@@ -357,6 +357,33 @@ object Sampling {
         size(col("tokens")).cast("long").as("n_tokens"), col("tokens"))
   }
 
+  /** The budget mixtures' key: tokens `_t`, md5 `_h`, range `_rng`. */
+  private def rangeKeyed(df: DataFrame, idCol: String, tokens: Column,
+      numRanges: Int): DataFrame = {
+    require(numRanges > 0 && numRanges <= 65536, "numRanges must be in (0, 65536]")
+    df.withColumn("_t", tokens.cast("long"))
+      .withColumn("_h", md5(col(idCol).cast("string")))
+      .withColumn("_rng",
+        conv(substring(col("_h"), 1, 4), 16, 10).cast("long") * numRanges / 65536L)
+  }
+
+  /** Adds `cum_before`, the tokens before each row in its domain's (md5,
+    * id) order: the two-level range prefix [[tokenBudgetMixture]] states.
+    */
+  private def withCumBefore(keyed: DataFrame, idCol: String, domainCol: String): DataFrame = {
+    val wr = Window.partitionBy(col(domainCol)).orderBy(col("_rng"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = keyed.groupBy(col(domainCol), col("_rng"))
+      .agg(sum(col("_t")).as("_rtok"))
+      .withColumn("_roff", coalesce(sum(col("_rtok")).over(wr), lit(0L)))
+      .select(col(domainCol), col("_rng"), col("_roff"))
+    val wd = Window.partitionBy(col(domainCol), col("_rng"))
+      .orderBy(col("_h"), col(idCol))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    keyed.join(broadcast(offsets), Seq(domainCol, "_rng"))
+      .withColumn("cum_before", col("_roff") + coalesce(sum(col("_t")).over(wd), lit(0L)))
+  }
+
   /** Token-budget mixture: per domain, take documents in the stable
     * pseudo-random (md5(id), id) order until the domain's token budget
     * is spent — the "N billion tokens of web, M of code" recipe step
@@ -378,23 +405,7 @@ object Sampling {
   def tokenBudgetMixture(df: DataFrame, idCol: String, domainCol: String,
       tokens: Column, budgetPerDomain: Long, numRanges: Int = 4096): DataFrame = {
     require(budgetPerDomain > 0, "budgetPerDomain must be positive")
-    require(numRanges > 0 && numRanges <= 65536, "numRanges must be in (0, 65536]")
-    val withKey = df
-      .withColumn("_t", tokens.cast("long"))
-      .withColumn("_h", md5(col(idCol).cast("string")))
-      .withColumn("_rng",
-        conv(substring(col("_h"), 1, 4), 16, 10).cast("long") * numRanges / 65536L)
-    val wr = Window.partitionBy(col(domainCol)).orderBy(col("_rng"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withKey.groupBy(col(domainCol), col("_rng"))
-      .agg(sum(col("_t")).as("_rtok"))
-      .withColumn("_roff", coalesce(sum(col("_rtok")).over(wr), lit(0L)))
-      .select(col(domainCol), col("_rng"), col("_roff"))
-    val wd = Window.partitionBy(col(domainCol), col("_rng"))
-      .orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    withKey.join(broadcast(offsets), Seq(domainCol, "_rng"))
-      .withColumn("cum_before", col("_roff") + coalesce(sum(col("_t")).over(wd), lit(0L)))
+    withCumBefore(rangeKeyed(df, idCol, tokens, numRanges), idCol, domainCol)
       .filter(col("cum_before") < budgetPerDomain)
       .select(col(idCol), col(domainCol), col("_t").as("n_tokens"), col("cum_before"))
   }
@@ -422,12 +433,7 @@ object Sampling {
       numRanges: Int = 4096): DataFrame = {
     require(budgetPerDomain > 0, "budgetPerDomain must be positive")
     require(maxEpochs >= 1, "maxEpochs must be >= 1")
-    require(numRanges > 0 && numRanges <= 65536, "numRanges must be in (0, 65536]")
-    val withKey = df
-      .withColumn("_t", tokens.cast("long"))
-      .withColumn("_h", md5(col(idCol).cast("string")))
-      .withColumn("_rng",
-        conv(substring(col("_h"), 1, 4), 16, 10).cast("long") * numRanges / 65536L)
+    val withKey = rangeKeyed(df, idCol, tokens, numRanges)
     // ANSI-safe integer division: a zero-token domain takes no epochs
     val avail = withKey.groupBy(col(domainCol))
       .agg(sum(col("_t")).as("_avail"))
@@ -444,18 +450,7 @@ object Sampling {
     // partial epoch _fe: the tokenBudgetMixture construction against the
     // per-domain remainder (same ordering, same first-crossing rule)
     val inPartial = joined.filter(col("_fe") < maxEpochs && col("_rem") > 0)
-    val wr = Window.partitionBy(col(domainCol)).orderBy(col("_rng"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = inPartial.groupBy(col(domainCol), col("_rng"))
-      .agg(sum(col("_t")).as("_rtok"))
-      .withColumn("_roff", coalesce(sum(col("_rtok")).over(wr), lit(0L)))
-      .select(col(domainCol), col("_rng"), col("_roff"))
-    val wd = Window.partitionBy(col(domainCol), col("_rng"))
-      .orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val partial = inPartial
-      .join(broadcast(offsets), Seq(domainCol, "_rng"))
-      .withColumn("cum_before", col("_roff") + coalesce(sum(col("_t")).over(wd), lit(0L)))
+    val partial = withCumBefore(inPartial, idCol, domainCol)
       .filter(col("cum_before") < col("_rem"))
       .select(col(idCol), col(domainCol), col("_fe").cast("int").as("epoch"),
         col("_t").as("n_tokens"))

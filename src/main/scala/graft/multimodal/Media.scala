@@ -825,6 +825,22 @@ object Media {
     }
   }
 
+  // ISO-BMFF writers the synthetic MP4 generators share: a box of
+  // `typ` around `body`, a full box (version + zero flags) and
+  // big-endian 32/64-bit fields
+  private def box(typ: String, body: Array[Byte]): Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream()
+    val d = new java.io.DataOutputStream(b)
+    d.writeInt(8 + body.length); d.write(typ.getBytes("US-ASCII")); d.write(body)
+    b.toByteArray
+  }
+  private def fullBox(typ: String, version: Int, body: Array[Byte]): Array[Byte] =
+    box(typ, Array[Byte](version.toByte, 0, 0, 0) ++ body)
+  private def be32(x: Long): Array[Byte] =
+    Array(((x >> 24) & 0xff).toByte, ((x >> 16) & 0xff).toByte,
+      ((x >> 8) & 0xff).toByte, (x & 0xff).toByte)
+  private def be64(x: Long): Array[Byte] = be32(x >> 32) ++ be32(x & 0xffffffffL)
+
   /** Deterministic REAL mp4 (ISO-BMFF) payloads derived purely from doc
     * ids: a structurally honest `ftyp` + `moov`(`mvhd` + n×`trak`) tree
     * with correct box sizes. Movie timescale is `600·(1 + id % 3)`,
@@ -850,18 +866,6 @@ object Media {
         val out = new java.io.ByteArrayOutputStream()
         val bb = new java.io.DataOutputStream(out)
         def cc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
-        def box(typ: String, body: Array[Byte]): Array[Byte] = {
-          val b = new java.io.ByteArrayOutputStream()
-          val d = new java.io.DataOutputStream(b)
-          d.writeInt(8 + body.length); d.write(typ.getBytes("US-ASCII")); d.write(body)
-          b.toByteArray
-        }
-        def fullBox(typ: String, version: Int, body: Array[Byte]): Array[Byte] =
-          box(typ, Array[Byte](version.toByte, 0, 0, 0) ++ body)
-        def be32(x: Long): Array[Byte] =
-          Array(((x >> 24) & 0xff).toByte, ((x >> 16) & 0xff).toByte,
-            ((x >> 8) & 0xff).toByte, (x & 0xff).toByte)
-        def be64(x: Long): Array[Byte] = be32(x >> 32) ++ be32(x & 0xffffffffL)
 
         val mvhd = fullBox("mvhd", v,
           (if (v == 1) be64(0) ++ be64(0) ++ be32(timescale) ++ be64(duration)
@@ -924,18 +928,6 @@ object Media {
             (((id * 7 + 5 * f) % 256) << 8) | ((id * 13 + 3 * f) % 256)).toInt
           solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, rgb)
         }
-        def box(typ: String, body: Array[Byte]): Array[Byte] = {
-          val b = new java.io.ByteArrayOutputStream()
-          val d = new java.io.DataOutputStream(b)
-          d.writeInt(8 + body.length); d.write(typ.getBytes("US-ASCII")); d.write(body)
-          b.toByteArray
-        }
-        def fullBox(typ: String, version: Int, body: Array[Byte]): Array[Byte] =
-          box(typ, Array[Byte](version.toByte, 0, 0, 0) ++ body)
-        def be32(x: Long): Array[Byte] =
-          Array(((x >> 24) & 0xff).toByte, ((x >> 16) & 0xff).toByte,
-            ((x >> 8) & 0xff).toByte, (x & 0xff).toByte)
-        def be64(x: Long): Array[Byte] = be32(x >> 32) ++ be32(x & 0xffffffffL)
 
         // layout: ftyp (20 B) + mdat header (8 B) + concatenated frames,
         // chunked 2 samples per chunk → absolute chunk offsets
@@ -1018,17 +1010,6 @@ object Media {
         val nSamples = (4 + id % 6).toInt
         val stride = (2 + id % 3).toInt
         val codec = Seq("avc1", "hvc1", "vp09", "av01")((id % 4).toInt)
-        def box(typ: String, body: Array[Byte]): Array[Byte] = {
-          val b = new java.io.ByteArrayOutputStream()
-          val d = new java.io.DataOutputStream(b)
-          d.writeInt(8 + body.length); d.write(typ.getBytes("US-ASCII")); d.write(body)
-          b.toByteArray
-        }
-        def fullBox(typ: String, version: Int, body: Array[Byte]): Array[Byte] =
-          box(typ, Array[Byte](version.toByte, 0, 0, 0) ++ body)
-        def be32(x: Long): Array[Byte] =
-          Array(((x >> 24) & 0xff).toByte, ((x >> 16) & 0xff).toByte,
-            ((x >> 8) & 0xff).toByte, (x & 0xff).toByte)
 
         val timescale = 600L
         val duration = 3 * 600L + (nSamples - 3) * 300L

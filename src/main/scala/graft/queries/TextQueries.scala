@@ -987,6 +987,37 @@ object TextQueries {
     }
   }
 
+  /** The packing oracle over a `toks(doc_id, w)` CTE: the global
+    * cumulative token sum, each doc's spans per `budget`-token pack, and
+    * per pack its span count, token count and the md5 of its text.
+    */
+  private def packSql(budget: Long): String =
+    s"""cum AS (
+       |  SELECT doc_id, CAST(len(w) AS BIGINT) AS tokens,
+       |    CAST(COALESCE(sum(len(w)) OVER (ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
+       |  FROM toks),
+       |spans AS (
+       |  SELECT doc_id, pack,
+       |    greatest(start, pack * $budget) - pack * $budget AS off,
+       |    least(start + tokens, (pack + 1) * $budget)
+       |      - greatest(start, pack * $budget) AS take,
+       |    greatest(start, pack * $budget) - start AS doff
+       |  FROM (
+       |    SELECT doc_id, tokens, start,
+       |      unnest(range(start // $budget,
+       |                   greatest(start // $budget, (start + tokens - 1) // $budget) + 1)) AS pack
+       |    FROM cum)),
+       |pieces AS (
+       |  SELECT s.pack, s.off, s.take,
+       |    array_to_string(t.w[s.doff + 1 : s.doff + s.take], ' ') AS piece
+       |  FROM spans s JOIN toks t USING (doc_id) WHERE s.take > 0)
+       |SELECT CAST(pack AS BIGINT) AS pack_id,
+       |  count(*) AS n_spans,
+       |  CAST(sum(take) AS BIGINT) AS n_tokens,
+       |  md5(string_agg(piece, ' ' ORDER BY off)) AS shard_md5
+       |FROM pieces GROUP BY pack""".stripMargin
+
   /** Materialized packed sequences (Sampling.packedShards): the x16 span
     * assignments joined back to token arrays and assembled into one
     * token sequence per context window — what a packed-dataset writer
@@ -1002,31 +1033,7 @@ object TextQueries {
       s"""WITH toks AS (SELECT doc_id,
          |    regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]') AS w
          |  FROM documents),
-         |cum AS (
-         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS tokens,
-         |    CAST(COALESCE(sum(len(w)) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
-         |  FROM toks),
-         |spans AS (
-         |  SELECT doc_id, pack,
-         |    greatest(start, pack * $budget) - pack * $budget AS off,
-         |    least(start + tokens, (pack + 1) * $budget)
-         |      - greatest(start, pack * $budget) AS take,
-         |    greatest(start, pack * $budget) - start AS doff
-         |  FROM (
-         |    SELECT doc_id, tokens, start,
-         |      unnest(range(start // $budget,
-         |                   greatest(start // $budget, (start + tokens - 1) // $budget) + 1)) AS pack
-         |    FROM cum)),
-         |pieces AS (
-         |  SELECT s.pack, s.off, s.take,
-         |    array_to_string(t.w[s.doff + 1 : s.doff + s.take], ' ') AS piece
-         |  FROM spans s JOIN toks t USING (doc_id) WHERE s.take > 0)
-         |SELECT CAST(pack AS BIGINT) AS pack_id,
-         |  count(*) AS n_spans,
-         |  CAST(sum(take) AS BIGINT) AS n_tokens,
-         |  md5(string_agg(piece, ' ' ORDER BY off)) AS shard_md5
-         |FROM pieces GROUP BY pack""".stripMargin) { (s, dir) =>
+         |""".stripMargin + packSql(budget)) { (s, dir) =>
       graft.dedup.Sampling.packedShards(
         t(s, dir, "documents"), "doc_id",
         regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)),
@@ -1550,6 +1557,26 @@ object TextQueries {
       minShared = 2, maxFpDf = 100)
   }
 
+  /** x41/d22's messy URL of each doc_id on site `k`: four rotating
+    * shapes (case, default ports, tracking and unsorted query params,
+    * fragments), three doc_ids per page.
+    */
+  private def messyUrl(k: Column): Column = {
+    val page = floor(col("doc_id") / 3).cast("string")
+    when(col("doc_id") % 4 === 0,
+        concat(lit("HTTPS://Site"), k, lit(".Example.COM:443/doc/"), page,
+          lit("?utm_source=feed&b=2&a=1#frag")))
+      .when(col("doc_id") % 4 === 1,
+        concat(lit("http://site"), k, lit(".example.com:80/doc/"), page,
+          lit("?a=1&b=2&fbclid=x"), col("doc_id").cast("string")))
+      .when(col("doc_id") % 4 === 2,
+        concat(lit("https://site"), k, lit(".example.com/doc/"), page,
+          lit("?b=2&a=1")))
+      .otherwise(
+        concat(lit("https://SITE"), k, lit(".Example.com/doc/"), page,
+          lit("#sec")))
+  }
+
   /** URL canonicalization + URL-level dedup (UrlOps.canonicalizeUrl):
     * deterministic messy URL variants are synthesized from doc_id
     * (mixed-case scheme/host, default ports, tracking params, unsorted
@@ -1601,20 +1628,7 @@ object TextQueries {
       |  FROM kept)
       |SELECT canon_url, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS first_doc
       |FROM canon GROUP BY 1""".stripMargin) { (s, dir) =>
-    val k = (col("doc_id") % 23).cast("string")
-    val page = floor(col("doc_id") / 3).cast("string")
-    val url = when(col("doc_id") % 4 === 0,
-        concat(lit("HTTPS://Site"), k, lit(".Example.COM:443/doc/"), page,
-          lit("?utm_source=feed&b=2&a=1#frag")))
-      .when(col("doc_id") % 4 === 1,
-        concat(lit("http://site"), k, lit(".example.com:80/doc/"), page,
-          lit("?a=1&b=2&fbclid=x"), col("doc_id").cast("string")))
-      .when(col("doc_id") % 4 === 2,
-        concat(lit("https://site"), k, lit(".example.com/doc/"), page,
-          lit("?b=2&a=1")))
-      .otherwise(
-        concat(lit("https://SITE"), k, lit(".Example.com/doc/"), page,
-          lit("#sec")))
+    val url = messyUrl((col("doc_id") % 23).cast("string"))
     t(s, dir, "documents")
       .select(col("doc_id"), url.as("url"))
       .select(col("doc_id"), graft.text.UrlOps.canonicalizeUrl(col("url")).as("canon_url"))
@@ -1965,20 +1979,7 @@ object TextQueries {
       |  (max(CASE WHEN rn = 2 THEN h END) IS NOT NULL AND
       |   max(CASE WHEN rn = 2 THEN h END) <> max(CASE WHEN rn = 1 THEN h END)) AS changed_last
       |FROM rn GROUP BY 1""".stripMargin) { (s, dir) =>
-    val k = (floor(col("doc_id") / 3) % 23).cast("string")
-    val page = floor(col("doc_id") / 3).cast("string")
-    val url = when(col("doc_id") % 4 === 0,
-        concat(lit("HTTPS://Site"), k, lit(".Example.COM:443/doc/"), page,
-          lit("?utm_source=feed&b=2&a=1#frag")))
-      .when(col("doc_id") % 4 === 1,
-        concat(lit("http://site"), k, lit(".example.com:80/doc/"), page,
-          lit("?a=1&b=2&fbclid=x"), col("doc_id").cast("string")))
-      .when(col("doc_id") % 4 === 2,
-        concat(lit("https://site"), k, lit(".example.com/doc/"), page,
-          lit("?b=2&a=1")))
-      .otherwise(
-        concat(lit("https://SITE"), k, lit(".Example.com/doc/"), page,
-          lit("#sec")))
+    val url = messyUrl((floor(col("doc_id") / 3) % 23).cast("string"))
     val docs = t(s, dir, "documents")
     val fetches = docs
       .select(url.as("url"), col("doc_id").as("fetch_ts"),
@@ -2261,18 +2262,12 @@ object TextQueries {
       toks.unionByName(grams), col("key"), denom = 128L)
   }
 
-  /** Exact duplicate spans (Dedup.exactDupSpans — the Lee et al. 2022
-    * exact-substring dedup): every 20-token window hashed at every
-    * position, cross-doc hash matches merged along (pair, diagonal)
-    * runs into maximal spans. On the planted corpus each 10th doc and
-    * its "xx "-prefixed copy share their full token stream, so the
-    * expected output is one maximal span per planted pair at diagonal
-    * −1 covering the whole original — which the oracle reproduces with
-    * the identical position/hash/island arithmetic.
+  /** x36/x45's oracle CTEs: the corpus `c`, its words `wt`, and `isl`,
+    * every cross-doc 20-token window match with its diagonal `d` and run
+    * `island` (windows in more than 10 docs excluded).
     */
-  val exactDupSpans: Q = Q(
-    "x36_exact_dup_spans",
-    s"""WITH c AS ($corpusSql),
+  private val dupIslandsSql =
+    s"""c AS ($corpusSql),
        |wt AS (SELECT doc_id, string_split(text, ' ') AS w FROM c),
        |pos AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
@@ -2287,7 +2282,20 @@ object TextQueries {
        |isl AS (SELECT doc1, doc2, pos1 - pos2 AS d, pos1, pos2,
        |        pos1 - row_number() OVER (PARTITION BY doc1, doc2, pos1 - pos2
        |                                  ORDER BY pos1) AS island
-       |        FROM m)
+       |        FROM m)""".stripMargin
+
+  /** Exact duplicate spans (Dedup.exactDupSpans — the Lee et al. 2022
+    * exact-substring dedup): every 20-token window hashed at every
+    * position, cross-doc hash matches merged along (pair, diagonal)
+    * runs into maximal spans. On the planted corpus each 10th doc and
+    * its "xx "-prefixed copy share their full token stream, so the
+    * expected output is one maximal span per planted pair at diagonal
+    * −1 covering the whole original — which the oracle reproduces with
+    * the identical position/hash/island arithmetic.
+    */
+  val exactDupSpans: Q = Q(
+    "x36_exact_dup_spans",
+    s"""WITH $dupIslandsSql
        |SELECT doc1, doc2, min(pos1) AS start1, min(pos2) AS start2,
        |  count(*) + 19 AS span_tokens
        |FROM isl GROUP BY doc1, doc2, d, island""".stripMargin) { (s, dir) =>
@@ -2306,22 +2314,7 @@ object TextQueries {
     */
   val spanRemoval: Q = Q(
     "x45_span_removal",
-    s"""WITH c AS ($corpusSql),
-       |wt AS (SELECT doc_id, string_split(text, ' ') AS w FROM c),
-       |pos AS (
-       |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-       |    substr(md5(array_to_string(w[i:i+19], ' ')), 1, 16) AS h
-       |  FROM (SELECT doc_id, w, unnest(range(1, len(w) - 18)) AS i
-       |        FROM wt WHERE len(w) >= 20)),
-       |hot AS (SELECT h FROM (
-       |  SELECT h, count(DISTINCT doc_id) AS df FROM pos GROUP BY h) WHERE df > 10),
-       |idx AS (SELECT * FROM pos WHERE h NOT IN (SELECT h FROM hot)),
-       |m AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, a.pos AS pos1, b.pos AS pos2
-       |      FROM idx a JOIN idx b ON a.h = b.h AND a.doc_id < b.doc_id),
-       |isl AS (SELECT doc1, doc2, pos1 - pos2 AS d, pos1, pos2,
-       |        pos1 - row_number() OVER (PARTITION BY doc1, doc2, pos1 - pos2
-       |                                  ORDER BY pos1) AS island
-       |        FROM m),
+    s"""WITH $dupIslandsSql,
        |spans AS (
        |  SELECT doc1, doc2, min(pos1) AS start1, min(pos2) AS start2,
        |    count(*) + 19 AS span_tokens
@@ -2573,31 +2566,7 @@ object TextQueries {
          |      list_filter(string_split(text, ' '), t -> t <> ''),
          |      t -> string_split($bpeCaseSql, ' '))) AS w
          |  FROM documents),
-         |cum AS (
-         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS tokens,
-         |    CAST(COALESCE(sum(len(w)) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
-         |  FROM toks),
-         |spans AS (
-         |  SELECT doc_id, pack,
-         |    greatest(start, pack * $budget) - pack * $budget AS off,
-         |    least(start + tokens, (pack + 1) * $budget)
-         |      - greatest(start, pack * $budget) AS take,
-         |    greatest(start, pack * $budget) - start AS doff
-         |  FROM (
-         |    SELECT doc_id, tokens, start,
-         |      unnest(range(start // $budget,
-         |                   greatest(start // $budget, (start + tokens - 1) // $budget) + 1)) AS pack
-         |    FROM cum)),
-         |pieces AS (
-         |  SELECT s.pack, s.off, s.take,
-         |    array_to_string(t.w[s.doff + 1 : s.doff + s.take], ' ') AS piece
-         |  FROM spans s JOIN toks t USING (doc_id) WHERE s.take > 0)
-         |SELECT CAST(pack AS BIGINT) AS pack_id,
-         |  count(*) AS n_spans,
-         |  CAST(sum(take) AS BIGINT) AS n_tokens,
-         |  md5(string_agg(piece, ' ' ORDER BY off)) AS shard_md5
-         |FROM pieces GROUP BY pack""".stripMargin) { (s, dir) =>
+         |""".stripMargin + packSql(budget)) { (s, dir) =>
       graft.dedup.Sampling.packedShards(
         t(s, dir, "documents"), "doc_id",
         Bpe.encode(col("text"), bpeMerges),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.dedup.Dedup
 
@@ -14,18 +14,10 @@ import graft.dedup.Dedup
   *
   * The index GROWS: admitted documents' signatures fold into it after
   * every batch, so a duplicate of an earlier admitted batch is flagged
-  * too, not just duplicates of the initial corpus. Each fold is an
-  * eager localCheckpoint — per-batch lineage stays constant instead of
-  * accumulating one union per batch (the classic streaming-state leak
-  * when state lives outside the engine) — and the superseded index
-  * generation plus the batch's signature checkpoint are unpersisted
-  * once the new fold is materialized (core.Checkpoints), so the block
-  * manager retains exactly ONE index generation regardless of stream
-  * lifetime. The retained state is still the full signature index
-  * (growing with admissions), so an indefinitely-lived admission
-  * stream should persist the index as an appendable TABLE (the
-  * LiteratureStream.parquetSink pattern: append admitted signatures
-  * per batch_id, read back per batch) and restart from it.
+  * too, not just duplicates of the initial corpus ([[QueryState.indexFold]]:
+  * serialized eager checkpoints per fold, the superseded generation and
+  * the batch's signatures freed after each, and nothing outlives the
+  * query). The writer checkpoints nothing until its first non-empty batch.
   * Intra-batch duplicates are the batch operators' job (run
   * Dedup.exact/minhashCandidates on the batch before admission if
   * drops can contain self-dups); this writer's contract is
@@ -54,39 +46,13 @@ object CorpusStream {
     * checkpoint block, it does not silently reread old state.
     */
   def admissionWriter(docs: DataFrame, initialSigs: DataFrame,
-      minSim: Double, sink: BatchAdmissions => Unit): DataStreamWriter[Row] = {
-    // mutable standing index — updated once per micro-batch inside
-    // foreachBatch (single-threaded per query), checkpointed per fold.
-    // SERIALIZED blocks: the index grows with the admitted corpus and is
-    // only ever scanned by the band join — the scan-only corpus-sized
-    // checkpoint rule (SCALE.md 40M step); deserialized row objects
-    // would amplify the standing generation ~5× in the block manager
-    // over a long-lived stream.
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    var index = initialSigs.localCheckpoint(true, ser)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        val sigs = Dedup.minhashSignatures(batch).localCheckpoint()
-        val dupIds = Dedup.incrementalMinhashCandidates(sigs, index)
-          .filter(col("est_sim") >= minSim)
-          .select(col("new_id").as("doc_id")).distinct()
-        val admitted = batch.join(dupIds, Seq("doc_id"), "left_anti")
-        val flagged = batch.join(dupIds, Seq("doc_id"), "left_semi")
-        sink(BatchAdmissions(batchId, admitted, flagged))
-        val admittedSigs = sigs.join(dupIds, Seq("doc_id"), "left_anti")
-        val previous = index
-        index = index.unionByName(admittedSigs).localCheckpoint(true, ser)
-        // the new fold is materialized (eager checkpoint) — free the
-        // superseded generation and the batch's signature blocks so
-        // block-manager usage stays one-generation-bounded over a
-        // long-lived stream
-        graft.core.Checkpoints.unpersistCheckpoint(previous)
-        graft.core.Checkpoints.unpersistCheckpoint(sigs)
-      }
+      minSim: Double, sink: BatchAdmissions => Unit): DataStreamWriter[Row] =
+    QueryState.indexFold(docs, initialSigs)(
+      Dedup.minhashSignatures(_),
+      (sigs, index) => Dedup.incrementalMinhashCandidates(sigs, index)
+        .filter(col("est_sim") >= minSim)) { (batchId, batch, _, dupIds) =>
+      sink(BatchAdmissions(batchId,
+        batch.join(dupIds, Seq("doc_id"), "left_anti"),
+        batch.join(dupIds, Seq("doc_id"), "left_semi")))
     }
-  }
-
-  /** Drain-what's-there backfill mode, like LiteratureStream.backfill. */
-  def backfill(writer: DataStreamWriter[Row]): StreamingQuery =
-    writer.trigger(Trigger.AvailableNow()).start()
 }

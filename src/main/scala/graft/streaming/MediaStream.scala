@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.dedup.Dedup
 import graft.multimodal.{ImageHash, MediaRow}
@@ -17,10 +17,10 @@ import graft.multimodal.{ImageHash, MediaRow}
   * 8-byte hash, and re-checks band against it without ever re-decoding
   * the corpus.
   *
-  * The index GROWS with admissions (the CorpusStream discipline, same
-  * storage bound: eager serialized checkpoints per fold, superseded
-  * generation unpersisted, so exactly one index generation outlives any
-  * batch). Undecodable payloads are QUARANTINED to `rejected` — they are
+  * The index GROWS with admissions (the CorpusStream discipline, the
+  * same [[QueryState.indexFold]]: eager serialized checkpoints per fold,
+  * the superseded generation freed, and nothing outlives the query).
+  * Undecodable payloads are QUARANTINED to `rejected` — they are
   * neither admitted nor indexed, so a corrupt blob can never poison the
   * index or silently enter the corpus.
   *
@@ -46,37 +46,20 @@ object MediaStream {
     * is flagged.
     */
   def imageAdmissionWriter(media: DataFrame, initialHashes: DataFrame,
-      maxHamming: Int, sink: ImageAdmissions => Unit): DataStreamWriter[Row] = {
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    var index = initialHashes.localCheckpoint(true, ser)
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
+      maxHamming: Int, sink: ImageAdmissions => Unit): DataStreamWriter[Row] =
+    QueryState.indexFold(media, initialHashes)(
+      batch => {
         val spark = batch.sparkSession
         import spark.implicits._
-        val rows = batch
-          .select(col("doc_id"), col("media_type"), col("payload"))
-          .as[MediaRow]
-        val hashes = ImageHash.dhashDocs(rows, spark, lenient = true)
-          .localCheckpoint()
-        val dupIds = Dedup
-          .incrementalHammingCandidates(hashes, index, maxHamming = maxHamming)
-          .select(col("new_id").as("doc_id")).distinct()
-        val decoded = hashes.select(col("doc_id"))
-        val rejected = batch.join(decoded, Seq("doc_id"), "left_anti")
-        val flagged = batch.join(dupIds, Seq("doc_id"), "left_semi")
-        val admitted = batch.join(decoded, Seq("doc_id"), "left_semi")
-          .join(dupIds, Seq("doc_id"), "left_anti")
-        sink(ImageAdmissions(batchId, admitted, flagged, rejected))
-        val admittedHashes = hashes.join(dupIds, Seq("doc_id"), "left_anti")
-        val previous = index
-        index = index.unionByName(admittedHashes).localCheckpoint(true, ser)
-        graft.core.Checkpoints.unpersistCheckpoint(previous)
-        graft.core.Checkpoints.unpersistCheckpoint(hashes)
-      }
+        val rows = batch.select(col("doc_id"), col("media_type"), col("payload")).as[MediaRow]
+        ImageHash.dhashDocs(rows, spark, lenient = true)
+      },
+      (hashes, index) => Dedup.incrementalHammingCandidates(hashes, index, maxHamming = maxHamming)
+    ) { (batchId, batch, hashes, dupIds) =>
+      val decoded = hashes.select(col("doc_id"))
+      sink(ImageAdmissions(batchId,
+        batch.join(decoded, Seq("doc_id"), "left_semi").join(dupIds, Seq("doc_id"), "left_anti"),
+        batch.join(dupIds, Seq("doc_id"), "left_semi"),
+        batch.join(decoded, Seq("doc_id"), "left_anti")))
     }
-  }
-
-  /** Drain-what's-there backfill mode, like CorpusStream.backfill. */
-  def backfill(writer: DataStreamWriter[Row]): StreamingQuery =
-    writer.trigger(Trigger.AvailableNow()).start()
 }

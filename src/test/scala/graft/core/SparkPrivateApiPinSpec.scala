@@ -1,8 +1,11 @@
 package graft.core
 
+import java.nio.file.Files
+
 import graft.SparkSpec
-import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, GraftTestBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryManager, Trigger}
 
 /** Pins the private/fragile Spark API surface this library reaches past
   * the public DataFrame API for, so a Spark upgrade fails HERE with an
@@ -16,7 +19,11 @@ import org.apache.spark.sql.functions._
   *      blocks);
   *   3. `sessionState.functionRegistry.registerFunction` +
   *      `CatalystSqlParser.parseExpression` with UnresolvedAttribute
-  *      splicing (via GraftExtensions' SQL function registration).
+  *      splicing (via GraftExtensions' SQL function registration);
+  *   4. the `sql.streaming.queryId` local property of a foreachBatch
+  *      thread, and which session's StreamingQueryManager knows the
+  *      query and hears it end (via streaming.QueryState, which frees a
+  *      run's frames then).
   *
   * The version gate is deliberately exact on the minor line: these are
   * internal classes with no compatibility contract, so even a minor bump
@@ -66,5 +73,39 @@ class SparkPrivateApiPinSpec extends SparkSpec {
         "graft_l2_norm(array(3.0D, 4.0D)) AS n").head()
     r.getDouble(0) shouldBe 1.0 +- 1e-12
     r.getDouble(1) shouldBe 5.0 +- 1e-12
+  }
+
+  "a foreachBatch query" should "carry its id as the batch thread's local property, " +
+    "and be known to and end on the starting session's manager only" in {
+    val landing = Files.createTempDirectory("graft-pin-landing").toFile.getAbsolutePath
+    Seq(1L, 2L).toDF("id").coalesce(1).write.json(s"$landing/f1")
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.runId.toString)
+    }
+    spark.streams.addListener(listener)
+    var seen = Option.empty[(String, java.util.UUID, StreamingQueryManager)]
+    val q = try {
+      val q = spark.readStream.schema("id long").json(s"$landing/f*").writeStream
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val id = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+          seen = Some((id, spark.streams.get(id).runId, batch.sparkSession.streams))
+        }
+        .start()
+      assert(q.awaitTermination(120000), "stream did not terminate in 120 s")
+      GraftTestBridge.drainListenerBus(spark)
+      q
+    } finally spark.streams.removeListener(listener)
+    val (queryId, runId, batchStreams) = seen.get
+    queryId shouldBe q.id.toString
+    runId shouldBe q.runId
+    ended.toArray.toSeq should contain (q.runId.toString)
+    // the batch's session is a clone with its own manager: a listener
+    // added there would never hear the query end
+    batchStreams should not be theSameInstanceAs (spark.streams)
   }
 }

@@ -5,6 +5,9 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.dedup.Dedup
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 class CorpusStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -14,9 +17,10 @@ class CorpusStreamSpec extends SparkSpec {
 
   "CorpusStream" should "flag near-dups against a growing index across micro-batches" in {
     val landing = Files.createTempDirectory("graft-corpus-landing").toFile.getAbsolutePath
-    // the session is JVM-shared across suites, so the block-manager bound
-    // below is asserted as a DELTA over whatever other suites persisted
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    // the session is JVM-shared across suites, so the block-manager
+    // checks below are on the RDDs this stream persists
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def persistedNew = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
 
     // standing corpus: docs 0 and 1
     val corpus = Seq(doc(0L, 0L), doc(1L, 1L)).toDF("doc_id", "text")
@@ -37,35 +41,31 @@ class CorpusStreamSpec extends SparkSpec {
 
     var admitted = Vector.empty[Long]
     var flagged = Vector.empty[Long]
+    var levels = Vector.empty[StorageLevel]
     val writer = CorpusStream.admissionWriter(stream, initialSigs, minSim = 0.8,
       out => {
         admitted ++= out.admitted.select("doc_id").as[Long].collect().sorted
         flagged ++= out.flagged.select("doc_id").as[Long].collect().sorted
+        levels ++= spark.sparkContext.getPersistentRDDs.values.map(_.getStorageLevel)
       })
-    val q = CorpusStream.backfill(writer)
+    // a writer that is built and never started holds nothing
+    persistedNew shouldBe empty
+    val q = LiteratureStream.backfill(writer)
     q.awaitTermination(120000)
 
     flagged.toSet shouldBe Set(10L, 20L) // vs corpus AND vs earlier batch
     admitted.toSet shouldBe Set(11L, 21L)
 
-    // block-manager bound: superseded index generations and per-batch
-    // signature checkpoints are unpersisted after each fold, so at most
-    // ONE index generation's RDD outlives the drained stream — without
-    // the unpersists this 2-batch run retains 5 checkpoints (initial +
-    // 2 sigs + 2 folds). Unpersist is async — poll briefly.
-    val deadline = System.currentTimeMillis() + 30000
-    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
-    while (persisted > persistedBefore + 1 && System.currentTimeMillis() < deadline)
-      Thread.sleep(200)
-    persisted should be <= (persistedBefore + 1)
-
     // storage-level pin: the standing index grows with the admitted
-    // corpus and must live SERIALIZED in the block manager (SCALE.md 40M
-    // storage-level rule) — a regression to deserialized default only
-    // hurts at scale, so it must fail here
-    import org.apache.spark.storage.StorageLevel
-    val levels = spark.sparkContext.getPersistentRDDs.values
-      .map(_.getStorageLevel).toSeq
+    // corpus and must live SERIALIZED in the block manager while the
+    // stream runs (SCALE.md 40M storage-level rule) — a regression to
+    // deserialized default only hurts at scale, so it must fail here
     levels should contain (StorageLevel.MEMORY_AND_DISK_SER)
+
+    // nothing outlives the query: superseded index generations and
+    // per-batch signatures are freed after each fold, and the last
+    // generation when the query ends (a listener event, then an async
+    // unpersist, so poll)
+    eventually(timeout(30.seconds), interval(200.millis)) { persistedNew shouldBe empty }
   }
 }

@@ -4,9 +4,24 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.etl.Fixtures
+import org.apache.spark.sql.GraftTestBridge
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 class LiteratureStreamSpec extends SparkSpec {
+
+  // the session's cache-manager entries and persisted RDDs
+  private def held = (GraftTestBridge.cachedEntries(spark),
+    spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  // nothing cached or persisted beyond `before`, once a query has ended
+  // (a listener event, then an async unpersist, so poll)
+  private def nothingBeyond(before: (Int, Set[Int])): Unit =
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      held._1 shouldBe before._1
+      held._2.diff(before._2) shouldBe empty
+    }
 
   "LiteratureStream" should "ground documents incrementally via foreachBatch" in {
     val landing = Files.createTempDirectory("graft-landing").toFile.getAbsolutePath
@@ -17,6 +32,7 @@ class LiteratureStreamSpec extends SparkSpec {
 
     val stream = spark.readStream.schema(staticDocs.schema).json(landing)
 
+    val before = held
     var matchTotal = 0L
     var coocTotal = 0L
     var batches = 0
@@ -37,6 +53,7 @@ class LiteratureStreamSpec extends SparkSpec {
     // slow run under full-suite contention asserts against partial counts
     assert(q.awaitTermination(300000), "stream did not terminate in 300 s")
 
+    nothingBeyond(before)
     batches should be >= 1
     // same totals as the batch pipeline over the same corpus
     matchTotal shouldBe 9L
@@ -47,6 +64,8 @@ class LiteratureStreamSpec extends SparkSpec {
     val landing = Files.createTempDirectory("graft-landing2").toFile.getAbsolutePath
     val checkpoint = Files.createTempDirectory("graft-ckpt").toFile.getAbsolutePath
     val out = Files.createTempDirectory("graft-stream-out").toFile.getAbsolutePath
+    // each run frees its cached lookups when it ends, by failure or drain
+    val before = held
     val staticDocs = Fixtures.epmc(spark)
     staticDocs.write.mode("overwrite").json(landing)
 
@@ -74,12 +93,14 @@ class LiteratureStreamSpec extends SparkSpec {
       q1.awaitTermination(300000)
     }
     crashed shouldBe true
+    nothingBeyond(before)
 
     // run 2: same checkpoint — the engine replays the uncommitted batch
     // with the SAME batchId; the overwrite-by-batch sink rewrites it
     // instead of appending a duplicate
     val q2 = LiteratureStream.backfill(writer(base))
     assert(q2.awaitTermination(300000), "replay stream did not terminate in 300 s")
+    nothingBeyond(before)
 
     // totals match the batch pipeline exactly — an appending sink would
     // have double-counted the replayed batch

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.multimodal.{ImageHash, MediaRow}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 class MediaStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -20,7 +22,8 @@ class MediaStreamSpec extends SparkSpec {
 
   "MediaStream" should "admit, flag against a growing index, and quarantine corrupt blobs" in {
     val landing = Files.createTempDirectory("graft-media-landing").toFile.getAbsolutePath
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def persistedNew = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
 
     // standing corpus: one image (img 0)
     val corpus = Seq(row(0L, 0L, 0)).toDS()
@@ -50,19 +53,16 @@ class MediaStreamSpec extends SparkSpec {
         flagged ++= out.flagged.select("doc_id").as[Long].collect()
         rejected ++= out.rejected.select("doc_id").as[Long].collect()
       })
-    val q = MediaStream.backfill(writer)
+    // a writer that is built and never started holds nothing
+    persistedNew shouldBe empty
+    val q = LiteratureStream.backfill(writer)
     q.awaitTermination(120000)
 
     flagged.toSet shouldBe Set(10L, 20L) // vs corpus AND vs earlier batch
     admitted.toSet shouldBe Set(11L, 21L)
     rejected.toSet shouldBe Set(12L) // quarantined, never indexed
 
-    // the CorpusStream storage bound carries over: at most one index
-    // generation outlives the drained stream, serialized
-    val deadline = System.currentTimeMillis() + 30000
-    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
-    while (persisted > persistedBefore + 1 && System.currentTimeMillis() < deadline)
-      Thread.sleep(200)
-    persisted should be <= (persistedBefore + 1)
+    // the CorpusStream bound carries over: nothing outlives the query
+    eventually(timeout(30.seconds), interval(200.millis)) { persistedNew shouldBe empty }
   }
 }
