@@ -52,4 +52,4 @@ SOAK_JAVA_OPTS="-Dspark.jars=file://$JAR \
  -Dspark.cores.max=$((EXECUTORS * EXEC_CORES))" \
 GRAFT_SOAK_MASTER="spark://127.0.0.1:7077" \
 SPARK_GRAFT_CPUS=$((EXECUTORS * EXEC_CORES)) \
-  scripts/run_soak.sh graft.ScaleSoak "$DRIVER_XMX"
+  scripts/run_soak.sh "$DRIVER_XMX"

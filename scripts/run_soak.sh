@@ -1,13 +1,13 @@
 #!/bin/bash
-# Launch a graft main class (default graft.ScaleSoak, the soak) against
-# the packaged jar with the JDK17 --add-opens set Spark needs. Usage:
-#   scripts/run_soak.sh [MainClass] [xmx]
+# Launch the soak, graft.ScaleSoak, against the packaged jar with the
+# JDK17 --add-opens set Spark needs. Usage:
+#   scripts/run_soak.sh [xmx]
 # The soak reads GRAFT_SOAK_DOCS, GRAFT_SOAK_DIM, GRAFT_SOAK_STAGES and
 # GRAFT_SOAK_MASTER (see ScaleSoak's scaladoc); they ride through.
 set -e
 cd "$(dirname "${BASH_SOURCE[0]}")/.."
-MAIN=${1:-graft.ScaleSoak}
-XMX=${2:-90g}
+MAIN=graft.ScaleSoak
+XMX=${1:-90g}
 # SOAK_JAR pins an explicit jar snapshot for long multi-stage runs:
 # `sbt package` rewrites target/*.jar in place, and replacing a jar a
 # running JVM lazily loads classes from corrupts that run — so multi-hour

@@ -23,18 +23,23 @@ object RegistryRunner {
     Sessions.builder(appName, Some(s"local[$cpus]"), cpus)
       .config("spark.ui.enabled", "false")
 
+  /** The names in the comma list `list`, trimmed. A name not in `known`
+    * throws with `what` and every such name: silently dropping a typo
+    * would give a normal-looking run over the wrong set.
+    */
+  def nameList(list: String, known: Set[String], what: String): Set[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- known
+    require(unknown.isEmpty, s"$what: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** The registry entries `only` names (all of them when None), in name
-    * order. A name the registry lacks throws: silently dropping a typo
-    * would give a normal-looking run over the wrong query set.
+    * order; a name the registry lacks throws ([[nameList]]).
     */
   def select(only: Option[String]): Seq[(String, Query)] = {
     val all = SparkEntry.queries
-    val names = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    names.foreach { n =>
-      val unknown = n -- all.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val names = only.map(nameList(_, all.keySet, "SPARK_GRAFT_ONLY names not in the registry"))
     all.toSeq.filter { case (name, _) => names.forall(_(name)) }.sortBy(_._1)
   }
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.Sessions
 import graft.dedup.Dedup
+import graft.etl.EtlConfig
 import graft.multimodal.{ImageHash, MediaRow}
 import graft.streaming.{CorpusStream, CrawlFetch, CrawlStream, CrawlUpdate, LiteratureStream, MediaStream}
 
@@ -37,7 +38,9 @@ import graft.streaming.{CorpusStream, CrawlFetch, CrawlStream, CrawlUpdate, Lite
   * `crawl_cdc`) drive a Structured Streaming writer over micro-batches
   * whose sizes are fixed ratios of the corpus size ([[streamSizes]]) and
   * check their planted per-batch counts; a broken count is a violation,
-  * and a run with any violation exits non-zero.
+  * and a run with any violation exits non-zero. The explicit-only
+  * `etl_pipeline` stage runs `EtlMain all` over a synthetic EPMC corpus
+  * of the same size.
   *
   * Env: GRAFT_SOAK_DOCS (default 2,500,000; a multiple of 12,500),
   * GRAFT_SOAK_DIM (default 64), GRAFT_SOAK_STAGES (comma-separated stage
@@ -586,18 +589,16 @@ object ScaleSoak {
     },
     probe("stream_admission")(streamAdmission),
     probe("image_admission")(imageAdmission),
-    probe("crawl_cdc")(crawlCdc))
+    probe("crawl_cdc")(crawlCdc),
+    probe("etl_pipeline")(etlPipeline))
 
   /** The [[stages]] `only` names, in table order; the default stages when
-    * None. A name the table lacks throws: silently dropping a typo would
-    * give a normal-looking run over the wrong stage set.
+    * None. A name the table lacks throws ([[RegistryRunner.nameList]]).
     */
   def select(only: Option[String]): Seq[Stage] = only match {
     case None => stages.filter(_.default)
     case Some(s) =>
-      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val unknown = names -- stages.map(_.name)
-      require(unknown.isEmpty, s"GRAFT_SOAK_STAGES names no soak stage: ${unknown.toSeq.sorted.mkString(", ")}")
+      val names = RegistryRunner.nameList(s, stages.map(_.name).toSet, "GRAFT_SOAK_STAGES names no soak stage")
       stages.filter(st => names(st.name))
   }
 
@@ -754,6 +755,107 @@ object ScaleSoak {
       val diff = frontier.exceptAll(replay).count() + replay.exceptAll(frontier).count()
       if (diff != 0) r.violate(s"frontier disagreement rows: $diff")
       counts.values.sum
+    }
+  }
+
+  /** Entity universe: E targets, E diseases, E/10 drugs with names built
+    * from a shared word pool so grounding keys collide realistically
+    * (synonym hits, ambiguous labels, misses).
+    */
+  private def entities(spark: SparkSession, e: Long): (DataFrame, DataFrame, DataFrame) = {
+    val targets = spark.range(e).selectExpr(
+      "concat('ENSG', lpad(cast(id as string), 9, '0')) as id",
+      "concat('gene alpha ', id) as approvedName",
+      "concat('GN', id) as approvedSymbol",
+      "array(named_struct('label', concat('GS', id))) as symbolSynonyms",
+      "array(named_struct('label', concat('gene synonym ', id))) as nameSynonyms",
+      "cast(array() as array<struct<label:string>>) as obsoleteSymbols",
+      "cast(array() as array<struct<label:string>>) as obsoleteNames",
+      "array(named_struct('id', concat('P', lpad(cast(id as string), 5, '0')))) as proteinIds")
+    val diseases = spark.range(e).selectExpr(
+      "concat('EFO_', lpad(cast(id as string), 7, '0')) as id",
+      "concat('disease beta ', id) as name",
+      """named_struct(
+        | 'hasExactSynonym', array(concat('disorder beta ', id)),
+        | 'hasNarrowSynonym', cast(null as array<string>),
+        | 'hasBroadSynonym', cast(null as array<string>),
+        | 'hasRelatedSynonym', array(concat('syndrome beta ', id))) as synonyms""".stripMargin)
+    val drugs = spark.range(e / 10 + 1).selectExpr(
+      "concat('CHEMBL', id) as id",
+      "concat('drug gamma ', id) as name",
+      "array(concat('brand gamma ', id)) as tradeNames",
+      "array(concat('compound gamma ', id)) as synonyms")
+    (targets, diseases, drugs)
+  }
+
+  /** D EPMC documents: 90% with full ids, ~3 sentences each over ranked +
+    * unranked sections, 2 grounded-able matches and one GP-DS
+    * co-occurrence per sentence, plus a miss-rate of labels outside the
+    * entity universe.
+    */
+  private def epmc(spark: SparkSession, d: Long, e: Long, parts: Int): DataFrame = {
+    def sentence(sec: String, k: Int): String = {
+      val g = s"(id * 13 + $k) % $e"     // target index
+      val ds = s"(id * 7 + $k) % $e"     // disease index
+      s"""named_struct(
+         | 'section', '$sec',
+         | 'text', concat('GN', $g, ' associates with disease beta ', $ds, ' in cohort ', id),
+         | 'matches', array(
+         |    named_struct('label', concat('GN', $g), 'type', 'GP',
+         |      'startInSentence', 0L, 'endInSentence', 5L, 'sectionStart', 0L, 'sectionEnd', 5L),
+         |    named_struct('label', concat('disease beta ', $ds), 'type', 'DS',
+         |      'startInSentence', 10L, 'endInSentence', 20L, 'sectionStart', 10L, 'sectionEnd', 20L),
+         |    named_struct('label', concat('unknown thing ', id), 'type', 'DS',
+         |      'startInSentence', 30L, 'endInSentence', 40L, 'sectionStart', 30L, 'sectionEnd', 40L)),
+         | '`co-occurrence`', array(
+         |    named_struct('label1', concat('GN', $g), 'label2', concat('disease beta ', $ds),
+         |      'type', 'GP-DS', 'start1', 0L, 'end1', 5L, 'start2', 10L, 'end2', 20L,
+         |      'association', 'y', 'relation', 'assoc',
+         |      'sentEvidenceScore', cast((id % 10) as double)))
+         |)""".stripMargin.replace("'`co-occurrence`'", "'co-occurrence'")
+    }
+    spark.range(0, d, 1, parts).selectExpr(
+      "cast(id + 1 as string) as pmid",
+      "if(id % 10 = 0, null, concat('PMC', id + 1)) as pmcid",
+      "date_format(date_add(date'2015-01-01', cast(id % 3000 as int)), 'yyyy-MM-dd') as pubDate",
+      "array('human') as organisms",
+      s"array(${sentence("Title", 0)}, ${sentence("Abstract", 1)}, ${sentence("Results", 2)}) as sentences")
+  }
+
+  /** `EtlMain all` over a `docs`-document EPMC corpus and
+    * round(√(160·docs)) entities (2,000 at 25k docs, 20,000 at 2.5M,
+    * 40,000 at 10M), written to disk first: EPMC JSON, the three entity
+    * parquets and a header-only epmcids CSV (no PMID/PMCID pairs, so the
+    * id repair joins run against an empty LUT). Batch 0's `sec` is the
+    * pipeline's wall time without the input writes; the stage's rows are
+    * the evidence rows written.
+    */
+  private def etlPipeline(r: Run): Long = {
+    val spark = r.spark
+    val e = math.round(math.sqrt(160.0 * r.docs))
+    withTempDir("graft-soak-etl") { dir =>
+      val in = s"$dir/in"
+      val (targets, diseases, drugs) = entities(spark, e)
+      epmc(spark, r.docs, e, r.parts).write.json(s"$in/epmc")
+      targets.write.parquet(s"$in/targets")
+      diseases.write.parquet(s"$in/diseases")
+      drugs.write.parquet(s"$in/drugs")
+      Files.writeString(dir.resolve("in/epmcids.csv"), "PMID,PMCID\n")
+      // Embedding.W2VConfig's sizing rule, ≈ max(cores, bags / 500k)
+      // capped at 128 model replicas; bags ≈ 3 per doc in this corpus
+      // (per-rank + overall)
+      val w2vParts = math.max(spark.sparkContext.defaultParallelism.toLong,
+        math.min(128L, 3L * r.docs / 500000L))
+      val cfg = EtlConfig.load(None, Map(
+        "epmc" -> s"$in/epmc", "epmcids" -> s"$in/epmcids.csv", "targets" -> s"$in/targets",
+        "diseases" -> s"$in/diseases", "drugs" -> s"$in/drugs", "out" -> s"$dir/out",
+        "threshold" -> "-2.0", "w2v.vectorSize" -> "32", "w2v.numPartitions" -> w2vParts.toString))
+      val log = r.batchLog()
+      EtlMain.run("all", cfg, spark)
+      log.observe(0) // before the count, so batch 0 times EtlMain alone
+      val n = spark.read.parquet(s"$dir/out/evidence").count()
+      log.add(0, "evidence" -> n)
+      n
     }
   }
 

@@ -25,6 +25,7 @@ object Embedding {
     * bags. Size it ≈ max(cores, bags / 500k), but no higher than
     * throughput requires: every extra partition is one more
     * asynchronously averaged model replica (MLlib's accuracy caveat).
+    * ScaleSoak's `etl_pipeline` stage applies this rule, capped at 128.
     */
   final case class W2VConfig(
       windowSize: Int = 10,

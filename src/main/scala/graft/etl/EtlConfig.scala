@@ -120,7 +120,9 @@ object EtlConfig {
   /** YAML → (dotted scalar keys, structured sectionRanks). Kept separate
     * from build() so tests can exercise the parse in isolation.
     *
-    * Lists are rejected except `sectionRanks` (structured) and
+    * Lists are rejected except `sectionRanks` (a non-empty list of
+    * entries with a text `section`, an integral `rank` and a numeric
+    * `weight`; a bad entry throws, naming it) and
     * `*.partitionBy` (scalar list, comma-joined): any other YAML array —
     * e.g. a mistakenly list-valued inputs entry — fails fast instead of
     * silently degrading the run to defaults.
@@ -146,8 +148,18 @@ object EtlConfig {
     root.fieldNames().asScala.filterNot(_ == "sectionRanks")
       .foreach(f => walk(f, root.get(f)))
     val ranks = Option(root.get("sectionRanks")).map { arr =>
-      arr.elements().asScala.map { n =>
-        SectionRank(n.get("section").asText(), n.get("rank").asInt(), n.get("weight").asDouble())
+      require(arr.isArray && !arr.isEmpty,
+        s"sectionRanks must be a non-empty list of {section, rank, weight} entries, got: $arr")
+      arr.elements().asScala.zipWithIndex.map { case (n, i) =>
+        // Jackson's asInt/asDouble read a non-number as 0, and a missing
+        // key is null: check each field's type before reading it
+        def field(key: String, what: String)(ok: JsonNode => Boolean): JsonNode =
+          Option(n.get(key)).filter(ok).getOrElse(
+            throw new IllegalArgumentException(s"sectionRanks[$i] needs $what '$key': $n"))
+        SectionRank(
+          field("section", "a text")(_.isTextual).asText(),
+          field("rank", "an integral")(v => v.isIntegralNumber && v.canConvertToInt).asInt(),
+          field("weight", "a numeric")(_.isNumber).asDouble())
       }.toSeq
     }
     (flat.toMap, ranks)

@@ -453,4 +453,30 @@ class EtlMainSpec extends SparkSpec {
     idx.filter(col("pmid") === 1L && col("keywordId") === "ENSG0001")
       .select("relevance").as[Double].head() shouldBe 2.0 +- 0.01
   }
+
+  it should "reject sectionRanks that are not a non-empty list of typed entries, naming the bad entry" in {
+    def load(ranks: String): EtlConfig = {
+      val yaml = Files.createTempFile("graft-ranks", ".yaml")
+      Files.write(yaml, s"out: /tmp/x\nsectionRanks:$ranks\n".getBytes("UTF-8"))
+      EtlConfig.load(Some(yaml.toString), Map.empty)
+    }
+    def rejected(ranks: String): String =
+      intercept[IllegalArgumentException](load(ranks)).getMessage
+    val good = "\n  - {section: title, rank: 1, weight: 2}"
+    load(good).sectionRanks shouldBe Seq(etl.SectionRank("title", 1, 2.0))
+
+    // Jackson's asInt/asDouble read `one` as 0 and `0.9x` as 0.0, and a
+    // missing key is null
+    val badRank = rejected(s"$good\n  - {section: abstract, rank: one, weight: 0.9}")
+    badRank should include("sectionRanks[1] needs an integral 'rank'")
+    badRank should include("abstract")
+    rejected(s"$good\n  - {section: abstract, rank: 2, weight: 0.9x}") should include(
+      "sectionRanks[1] needs a numeric 'weight'")
+    rejected("\n  - {section: title, weight: 1.0}") should include("sectionRanks[0] needs an integral 'rank'")
+    rejected("\n  - {section: title, rank: 1.5, weight: 1.0}") should include("sectionRanks[0] needs an integral 'rank'")
+    rejected("\n  - {rank: 1, weight: 1.0}") should include("sectionRanks[0] needs a text 'section'")
+    // a scalar or an empty list names no rank at all
+    rejected(" title") should include("sectionRanks must be a non-empty list")
+    rejected(" []") should include("sectionRanks must be a non-empty list")
+  }
 }

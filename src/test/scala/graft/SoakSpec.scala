@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.GraftTestBridge
 import org.apache.spark.sql.functions._
+import org.scalatest.LoneElement._
 
 /** Locks ScaleSoak's generator contract at a small N, so the soak's
   * "dup counts are predictable, every run is a sanity check" claim is
@@ -8,7 +10,8 @@ import org.apache.spark.sql.functions._
   * leader, id ≡ 3 appends one word), hashed (non-affine) word choice,
   * English stopword density, and the near-dup embedding perturbation.
   * Also the stage table's name check, the derived stream sizes, and the
-  * three stream stages end to end at the smallest valid corpus.
+  * three stream stages end to end at the smallest valid corpus, and the
+  * `etl_pipeline` stage over a small EPMC corpus.
   */
 class SoakSpec extends SparkSpec {
   import spark.implicits._
@@ -70,6 +73,7 @@ class SoakSpec extends SparkSpec {
     val defaults = ScaleSoak.select(None).map(_.name)
     defaults should contain("clean_corpus")
     defaults should not contain "stream_admission"
+    defaults should not contain "etl_pipeline"
   }
 
   "ScaleSoak.streamSizes" should "derive the recorded 2.5M stream runs and reject sizes the ratios cannot split" in {
@@ -112,5 +116,20 @@ class SoakSpec extends SparkSpec {
     crawl.tail.map(_.counts.take(4)).distinct shouldBe
       Seq(Seq("new" -> 2500L, "changed" -> 1250L, "unchanged" -> 1250L, "stale" -> 500L))
     crawl.map(_("state_rows")) shouldBe (0 until 10).map(b => 5000L + b * 2500L)
+  }
+
+  it should "run EtlMain all as the etl_pipeline stage, timing it as batch 0 and freeing every block" in {
+    val entriesBefore = GraftTestBridge.cachedEntries(spark)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val report = ScaleSoak.run(spark, 500L, dim = 8, parts = 4, ScaleSoak.select(Some("etl_pipeline")))
+    report.violations shouldBe empty
+    val etl = report.stages.loneElement
+    etl.name shouldBe "etl_pipeline"
+    etl.rows should be > 0L
+    etl.batches.map(_.id) shouldBe Seq(0L)
+    etl.batches.head("evidence") shouldBe etl.rows
+    etl.batches.head.sec should be > 0.0
+    GraftTestBridge.cachedEntries(spark) shouldBe entriesBefore
+    spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(rddsBefore) shouldBe empty
   }
 }

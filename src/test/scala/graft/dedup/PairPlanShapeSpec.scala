@@ -87,6 +87,25 @@ class PairPlanShapeSpec extends SparkSpec {
     p should include ("LeftAnti")
   }
 
+  // explicit-count repartitions: REPARTITION_BY_NUM at defaultParallelism
+  // is exempt from AQE's byte-based coalescing, which otherwise folds the
+  // CPU-dense stage above a 16-byte-row exchange into a few tasks
+  private def repartitionByNum(keys: String*): scala.util.matching.Regex =
+    (keys.map(k => s"$k#\\d+L?").mkString("hashpartitioning\\(", ", ", ", ") +
+      s"${spark.sparkContext.defaultParallelism}\\), REPARTITION_BY_NUM").r
+
+  "SimilarityJoin.prefixJaccardPairsOver" should "dedup its candidates on an explicit-count (doc1, doc2) repartition" in {
+    val toks = Dedup.shingles(docs).select(col("doc_id"), col("shingle").as("tok")).distinct()
+    val p = plan(SimilarityJoin.prefixJaccardPairsOver(toks, minJaccard = 0.5))
+    repartitionByNum("doc1", "doc2").findFirstIn(p) should not be empty
+  }
+
+  "VideoHash.sharedFramePairs" should "count shared frames over an explicit-count simhash repartition" in {
+    val hashes = (0L until 20L).map(i => (i / 4, (i % 4).toInt, i % 7)).toDF("doc_id", "frame_no", "simhash")
+    val p = plan(graft.multimodal.VideoHash.sharedFramePairs(hashes))
+    repartitionByNum("simhash").findFirstIn(p) should not be empty
+  }
+
   "TextSearch.cosinePairs" should "join the weighted index on the term key, not a cartesian" in {
     // the single 1-row n_docs crossJoin broadcasts a count — exclude
     // cartesians only, like the bm25 stats join

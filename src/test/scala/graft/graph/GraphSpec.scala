@@ -68,6 +68,16 @@ class GraphSpec extends SparkSpec {
     got shouldBe r
   }
 
+  it should "read its checkpointed orientation as three scans, with no degree aggregate under them" in {
+    // the orientation feeds both wedge-join sides and the closing-edge
+    // semi-join; uncut, each consumer re-runs the degree aggregate and
+    // the caller's edge lineage
+    val p = Graph.triangles(edgesDf((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)))
+      .queryExecution.executedPlan.toString
+    "Scan ExistingRDD".r.findAllIn(p).size shouldBe 3
+    p should not include "HashAggregate"
+  }
+
   it should "be invariant to partitioning (exact integer arithmetic)" in {
     val edges = spark.range(0, 300)
       .selectExpr("id % 40 as src", "(id * 13 + 5) % 40 as dst")
