@@ -3,11 +3,14 @@
 
     python3 scripts/perf_ab.py --base HEAD~1 --workload etl_batch --pairs 10 --seeds 4 5 6 7
 
-Exports `--base` into a temporary directory (`git archive`, so the
-repository gains no worktree entry, even when the run is killed), then runs
-`python3 perfbench/run.py` (untraced, for BENCHMARK.json's run_seconds) in
-the base tree and in this working tree, one pair per seed, cycling through
-`--seeds`. Pairs alternate which side runs first. Every run prints one line
+Exports both sides into a temporary directory, so each builds from a clean
+tree: `--base` with `git archive` (the repository gains no worktree entry,
+even when the run is killed), and the change as a copy of this working
+tree's tracked and untracked-but-not-ignored files (`git ls-files --cached
+--others --exclude-standard`), which leaves out this checkout's build
+outputs. Then runs `python3 perfbench/run.py` (untraced, for
+BENCHMARK.json's run_seconds) in the two exports, one pair per seed, cycling
+through `--seeds`. Pairs alternate which side runs first. Every run prints one line
 as it finishes. At the end, for each end-to-end metric of BENCHMARK.json, it
 prints each side's quartiles, the base's spread (IQR / median), the
 change/base ratio of the medians, and the pairs the change won (ties count
@@ -20,7 +23,8 @@ It also prints each side's `peak_heap_mb` quartiles: run.py prints that
 value, but BENCHMARK.json does not bound it.
 
 Exits non-zero when any run fails or reports failed > 0. Nothing under
-perfbench/ is touched; each tree builds into its own .bench_build/.
+perfbench/ is touched; each export builds into its own .bench_build/, and
+both are deleted at the end.
 """
 import argparse
 import json
@@ -49,6 +53,17 @@ def run_bench(tree, workload, seed, seconds):
     return res
 
 
+def export_worktree(dest):
+    """Copy this working tree's tracked and untracked-but-not-ignored files to `dest`."""
+    names = subprocess.run(["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+                           cwd=ROOT, check=True, stdout=subprocess.PIPE).stdout.decode().split("\0")
+    for name in names:
+        src = os.path.join(ROOT, name)
+        if name and os.path.isfile(src):  # a tracked file deleted in the tree stays out
+            os.makedirs(os.path.dirname(os.path.join(dest, name)), exist_ok=True)
+            shutil.copy2(src, os.path.join(dest, name))
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -68,17 +83,18 @@ def main():
     metrics = spec["end_to_end"]
 
     tmp = tempfile.mkdtemp(prefix="perf_ab-")
-    base_tree = os.path.join(tmp, "base")
-    os.makedirs(base_tree)
-    archive = subprocess.run(["git", "archive", a.base], cwd=ROOT, check=True, stdout=subprocess.PIPE).stdout
-    subprocess.run(["tar", "-x", "-C", base_tree], input=archive, check=True)
+    base_tree, change_tree = os.path.join(tmp, "base"), os.path.join(tmp, "change")
     runs = {"base": [], "change": []}
     heaps = {"base": [], "change": []}
     failed = 0
     try:
+        os.makedirs(base_tree)
+        archive = subprocess.run(["git", "archive", a.base], cwd=ROOT, check=True, stdout=subprocess.PIPE).stdout
+        subprocess.run(["tar", "-x", "-C", base_tree], input=archive, check=True)
+        export_worktree(change_tree)
         for i in range(a.pairs):
             seed = a.seeds[i % len(a.seeds)]
-            order = [("base", base_tree), ("change", ROOT)]
+            order = [("base", base_tree), ("change", change_tree)]
             if i % 2:
                 order.reverse()
             for side, tree in order:

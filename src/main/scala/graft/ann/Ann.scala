@@ -262,7 +262,7 @@ object Ann {
     * The per-vector maxabs is PROJECTED before the code transform — a
     * lambda capturing the `array_max(transform(…))` expression inline
     * would re-reduce the whole vector once per component (O(dim²) per
-    * row, see TextAnalysis.wordTrigrams).
+    * row, see TextQuality.wordKgrams).
     */
   def quantizeInt8(embeddings: DataFrame, embCol: String = "embedding"): DataFrame =
     embeddings

@@ -83,7 +83,7 @@ object Pca {
     //   - x must be a PROJECTED attribute before the pair lambdas touch
     //     it: a lambda capturing the transform(...) expression
     //     re-evaluates the whole 64-cast per pair element (the
-    //     wordTrigrams quadratic trap) — 25 s with the captured form;
+    //     wordKgrams quadratic trap) — 25 s with the captured form;
     //   - the product stream is a FLAT DOUBLE array posexploded per
     //     row, never an array of (i, j, xi, xj) structs: the struct
     //     form allocates 2 080 objects per row and pays three

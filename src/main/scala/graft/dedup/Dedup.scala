@@ -19,19 +19,9 @@ object Dedup {
     * or hashes before any shuffle.
     */
   def shingles(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-      n: Int = 3): DataFrame = {
-    // zip_with over shifted slices, not transform(sequence, i =>
-    // slice(w, i, n)): a higher-order lambda re-evaluates captured outer
-    // expressions per element, so the indexed form re-splits the text
-    // once per shingle — O(words²) per document
-    val w = split(col(textCol), " ")
-    val m = size(w) - (n - 1)
-    val sh = (1 until n).foldLeft(slice(w, lit(1), m)) { (acc, off) =>
-      zip_with(acc, slice(w, lit(off + 1), m), (a, b) => concat(a, lit(" "), b))
-    }
-    docs.filter(size(w) >= n)
-      .select(col(idCol).as("doc_id"), explode(sh).as("shingle"))
-  }
+      n: Int = 3): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      explode(graft.text.TextQuality.wordKgrams(split(col(textCol), " "), n)).as("shingle"))
 
   /** (doc_id, shingle: long) hashed word n-grams — the narrow twin of
     * [[shingles]] for consumers that only ever compare shingles by
@@ -44,8 +34,8 @@ object Dedup {
     * string form is injective in the token sequence and both forms
     * induce the same shingle equivalence classes (modulo 2⁻⁶⁴
     * collisions). `w` is a projected attribute, so the per-position
-    * slice is a cheap array view, never a re-split (the shingles()
-    * house rule).
+    * slice is a cheap array view, never a re-split (the
+    * TextQuality.wordKgrams house rule).
     */
   def shingleHashes(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3): DataFrame = {
@@ -701,7 +691,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("w"))
       .filter(size(col("w")) >= k)
     // w is a projected attribute, so the per-position slice is a cheap
-    // array view, not a re-split (the shingles() house rule).
+    // array view, not a re-split (the TextQuality.wordKgrams house rule).
     // positions feeds both the hot-set agg and the pair self-join, and
     // UNLIKE jaccardPairs (whose distinct() puts a canonical exchange
     // below the branch point) this lineage is pure map-side — with no

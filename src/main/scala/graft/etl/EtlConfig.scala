@@ -102,8 +102,7 @@ object EtlConfig {
     }
     // normalize the bare-scalar form BEFORE layering: a YAML file's
     // `inputs.<n>: path` and a CLI `inputs.<n>.path=...` must collide on
-    // the same key so the CLI layer actually overrides (otherwise the
-    // scalar survives the merge and silently wins in inputConfs)
+    // the same key so the CLI layer actually overrides
     build(normalizeScalarInputs(fileKv) ++ normalizeScalarInputs(normalized), fileRanks)
   }
 
@@ -165,9 +164,9 @@ object EtlConfig {
     (flat.toMap, ranks)
   }
 
-  /** Group `inputs.<name>[...]` dotted keys into InputConfs. A bare
-    * `inputs.<name>=path` scalar (the legacy CLI form) and the structured
-    * `inputs.<name>.path/format/schema/options.*` form are equivalent.
+  /** Group `inputs.<name>.path/format/schema/options.*` dotted keys into
+    * InputConfs; [[load]] has already rewritten every bare
+    * `inputs.<name>=path` scalar to `inputs.<name>.path`.
     */
   private def inputConfs(kv: Map[String, String]): Map[String, InputConf] = {
     val entries = kv.collect {
@@ -181,12 +180,7 @@ object EtlConfig {
       val known = sub.keys.filter(k =>
         k != "path" && k != "format" && k != "schema" && !k.startsWith("options."))
       require(known.isEmpty, s"unknown config keys under inputs.$n: ${known.mkString(", ")}")
-      // load() normalizes bare scalars to .path before layering; if both
-      // forms still reach here the precedence is ambiguous — fail fast
-      // rather than let one silently shadow the other
-      require(!(entries.contains(n) && sub.contains("path")),
-        s"inputs.$n declared both as a bare scalar and as inputs.$n.path — use one form")
-      val path = entries.get(n).orElse(sub.get("path")).getOrElse(
+      val path = sub.getOrElse("path",
         sys.error(s"inputs.$n needs a path (inputs.$n= or inputs.$n.path=)"))
       n -> InputConf(
         path = path,

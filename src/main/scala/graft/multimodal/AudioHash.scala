@@ -104,21 +104,9 @@ object AudioHash {
     * of its source.
     */
   def syntheticPcmWavs(documents: DataFrame, spark: SparkSession,
-      planted: Boolean = false): Dataset[MediaRow] = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.flatMap { id =>
-        val base = MediaRow(id, "audio/wav", {
-          val bytes = pcmWav(id, 0)
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes
-        })
-        if (planted && id % 10 == 0)
-          Iterator(base, MediaRow(id + 1000000L, "audio/wav", pcmWav(id, 60)))
-        else Iterator.single(base)
-      }
-    }
-  }
+      planted: Boolean = false): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "audio/wav", corruptEvery = 9,
+      near = Option.when(planted)((id: Long) => pcmWav(id, 60)))(pcmWav(_, 0))
 
   /** Per-window exact-integer energies over the decoded PCM — the
     * fingerprint's index-box windows exposed as rows: (doc_id,
@@ -183,65 +171,21 @@ object AudioHash {
     * the blocks exactly, so the active/silent pattern (and the exact
     * loud-window energies) replay as integer SQL.
     */
-  def segmentedPcmWav(audioId: Long): Array[Byte] = {
-    val n = 260
-    val dataLen = n * 2
-    val bytes = new Array[Byte](44 + dataLen)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-    cc("RIFF"); bb.putInt(36 + dataLen); cc("WAVE")
-    cc("fmt "); bb.putInt(16)
-    bb.putShort(1); bb.putShort(1)
-    bb.putInt(1024); bb.putInt(1024 * 2)
-    bb.putShort(2); bb.putShort(16)
-    cc("data"); bb.putInt(dataLen)
-    var i = 0
-    while (i < n) {
-      val silent = ((i / 20) + audioId) % 3 == 0
-      bb.putShort(
-        if (silent) 0.toShort
-        else ((audioId * 31 + i.toLong * i * 7) % 251 - 125).toShort)
-      i += 1
+  def segmentedPcmWav(audioId: Long): Array[Byte] =
+    Media.pcm16Wav(260) { i =>
+      if (((i / 20) + audioId) % 3 == 0) 0
+      else ((audioId * 31 + i.toLong * i * 7) % 251 - 125).toInt
     }
-    bytes
-  }
 
   /** [[segmentedPcmWav]] per document, every 9th payload truncated for
     * the lenient drop path.
     */
-  def syntheticSegmentedWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        MediaRow(id, "audio/wav", {
-          val bytes = segmentedPcmWav(id)
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes
-        })
-      }
-    }
-  }
+  def syntheticSegmentedWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "audio/wav", corruptEvery = 9)(segmentedPcmWav)
 
-  /** One fixture WAV (RIFF, PCM 16-bit signed mono little-endian). */
-  def pcmWav(audioId: Long, delta: Int): Array[Byte] = {
-    val n = 260
-    val dataLen = n * 2
-    val bytes = new Array[Byte](44 + dataLen)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-    cc("RIFF"); bb.putInt(36 + dataLen); cc("WAVE")
-    cc("fmt "); bb.putInt(16)
-    bb.putShort(1); bb.putShort(1)             // PCM, mono
-    bb.putInt(1024); bb.putInt(1024 * 2)       // rate, byte rate
-    bb.putShort(2); bb.putShort(16)            // block align, bits
-    cc("data"); bb.putInt(dataLen)
-    var i = 0
-    while (i < n) {
-      val d = if (i == 0) delta else 0
-      bb.putShort(
-        (((audioId * 31 + i.toLong * i * 7) % 251 - 125) + d).toShort)
-      i += 1
+  /** One fixture WAV: 260 samples of the [[syntheticPcmWavs]] formula. */
+  def pcmWav(audioId: Long, delta: Int): Array[Byte] =
+    Media.pcm16Wav(260) { i =>
+      ((audioId * 31 + i.toLong * i * 7) % 251 - 125).toInt + (if (i == 0) delta else 0)
     }
-    bytes
-  }
 }

@@ -3,7 +3,6 @@ package graft.multimodal
 import java.awt.image.BufferedImage
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Perceptual image hashing for IMAGE near-duplicate detection — the
   * multimodal twin of the text SimHash stack: decode (real imageio) →
@@ -120,27 +119,14 @@ object ImageHash {
     * so the planted pair's hamming distance is 0 or 1.
     */
   def syntheticGradientPngs(documents: DataFrame, spark: SparkSession,
-      planted: Boolean = false): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.flatMap { id =>
-        val base = MediaRow(id, "image/png", {
-          val bytes = gradientPng(id, 0)
-          if (id % 11 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes
-        })
-        if (planted && id % 10 == 0)
-          Iterator(base, MediaRow(id + 1000000L, "image/png", gradientPng(id, 3)))
-        else Iterator.single(base)
-      }
-    }
-  }
+      planted: Boolean = false): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "image/png", corruptEvery = 11,
+      near = Option.when(planted)((id: Long) => gradientPng(id, 3)))(gradientPng(_, 0))
 
   /** One 9×8 gradient PNG (the [[syntheticGradientPngs]] pixel formula)
     * — public so stream/spec fixtures can plant exact payloads.
     */
   def gradientPng(imgId: Long, delta: Int): Array[Byte] =
-    // direct PNG encode (graft.multimodal.Png): same pixels, ~10 µs vs
-    // ImageIO.write's ~375 µs — fixture encode is in the timed path
     Png.encodeRgb(9, 8, (x, y) => {
       val d = if (x == 0 && y == 0) delta else 0
       val v = (((imgId * 31 + x.toLong * x * 7 + y.toLong * y * 13) % 251) + d).toInt
@@ -187,15 +173,6 @@ object ImageHash {
   /** BMP twin of [[syntheticGradientPngs]] (every 9th payload truncated
     * for the lenient drop path).
     */
-  def syntheticGradientBmps(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        MediaRow(id, "image/bmp", {
-          val bytes = gradientBmp(id, 0)
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 20) else bytes
-        })
-      }
-    }
-  }
+  def syntheticGradientBmps(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "image/bmp", corruptEvery = 9, keepBytes = 20)(gradientBmp(_, 0))
 }

@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Pure-JDK Matroska (mkv/webm) support — the EBML half of the
   * container story beside [[Media.parseMp4Meta]]'s ISO-BMFF half:
@@ -297,6 +296,15 @@ object Matroska {
     Array.tabulate(n)(i => ((v >> (8 * (n - 1 - i))) & 0xff).toByte)
   }
 
+  private def float64Bytes(d: Double): Array[Byte] =
+    java.nio.ByteBuffer.allocate(8).putDouble(d).array()
+
+  /** The EBML header every fixture opens with: EBMLVersion 1, DocType
+    * matroska.
+    */
+  private val ebmlHeader = element(IdEbml,
+    element(0x4286L, uintBytes(1)) ++ element(0x4282L, "matroska".getBytes("US-ASCII")))
+
   /** Deterministic REAL mkv payloads derived purely from doc ids, the
     * [[Media.syntheticMp4s]] discipline: EBML header + Segment
     * (Info + Tracks) with correct VINT framing. TimestampScale is
@@ -311,46 +319,35 @@ object Matroska {
     * extends-to-end parse path; every 9th payload is truncated to
     * 6 bytes for the `lenient` drop path.
     */
-  def syntheticMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val scaleNs = 1000000L * (1 + id % 4)
-        val durationUnits = 250L * (1 + id % 8)
-        val nTracks = (1 + id % 3).toInt
-        val codec = Seq("V_VP9", "V_MPEG4/ISO/AVC", "V_AV1")((id % 3).toInt)
-        val ebml = element(IdEbml, element(0x4286L, uintBytes(1)) ++ // EBMLVersion
-          element(0x4282L, "matroska".getBytes("US-ASCII"))) // DocType
-        val info = element(IdInfo,
-          element(IdTimestampScale, uintBytes(scaleNs)) ++
-            element(IdDuration, {
-              val bits = java.lang.Double.doubleToLongBits(durationUnits.toDouble)
-              Array.tabulate(8)(i => ((bits >> (8 * (7 - i))) & 0xff).toByte)
-            }))
-        def track(num: Int): Array[Byte] = element(IdTrackEntry,
-          element(0xD7L, uintBytes(num.toLong)) ++ // TrackNumber
-            (if (num == 1)
-              element(IdTrackType, uintBytes(1)) ++
-                element(IdCodecId, codec.getBytes("US-ASCII")) ++
-                element(IdVideo,
-                  element(IdPixelWidth, uintBytes(8L * (1 + id % 7))) ++
-                    element(IdPixelHeight, uintBytes(8L * (1 + id % 5))))
-            else
-              element(IdTrackType, uintBytes(2)) ++
-                element(IdCodecId, "A_OPUS".getBytes("US-ASCII"))))
-        val tracks = element(IdTracks,
-          (1 to nTracks).map(track).reduce(_ ++ _))
-        val segBody = info ++ tracks
-        val segment =
-          if (id % 5 == 0) // unknown-size Segment: all-ones 1-byte VINT
-            idBytes(IdSegment) ++ Array(0xffL.toByte) ++ segBody
-          else element(IdSegment, segBody)
-        val bytes = ebml ++ segment
-        MediaRow(id, "video/x-matroska",
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 6) else bytes)
-      }
+  def syntheticMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "video/x-matroska", corruptEvery = 9, keepBytes = 6) { id =>
+      val scaleNs = 1000000L * (1 + id % 4)
+      val durationUnits = 250L * (1 + id % 8)
+      val nTracks = (1 + id % 3).toInt
+      val codec = Seq("V_VP9", "V_MPEG4/ISO/AVC", "V_AV1")((id % 3).toInt)
+      val info = element(IdInfo,
+        element(IdTimestampScale, uintBytes(scaleNs)) ++
+          element(IdDuration, float64Bytes(durationUnits.toDouble)))
+      def track(num: Int): Array[Byte] = element(IdTrackEntry,
+        element(0xD7L, uintBytes(num.toLong)) ++ // TrackNumber
+          (if (num == 1)
+            element(IdTrackType, uintBytes(1)) ++
+              element(IdCodecId, codec.getBytes("US-ASCII")) ++
+              element(IdVideo,
+                element(IdPixelWidth, uintBytes(8L * (1 + id % 7))) ++
+                  element(IdPixelHeight, uintBytes(8L * (1 + id % 5))))
+          else
+            element(IdTrackType, uintBytes(2)) ++
+              element(IdCodecId, "A_OPUS".getBytes("US-ASCII"))))
+      val tracks = element(IdTracks,
+        (1 to nTracks).map(track).reduce(_ ++ _))
+      val segBody = info ++ tracks
+      val segment =
+        if (id % 5 == 0) // unknown-size Segment: all-ones 1-byte VINT
+          idBytes(IdSegment) ++ Array(0xffL.toByte) ++ segBody
+        else element(IdSegment, segBody)
+      ebmlHeader ++ segment
     }
-  }
 
   /** Deterministic REAL MJPEG-track mkv payloads derived purely from doc
     * ids: EBML header + Segment(Info + Tracks + Clusters) where track 1
@@ -368,57 +365,46 @@ object Matroska {
     * content — the m7/m9 pattern). Every 9th payload truncates to
     * 6 bytes for the `lenient` drop path.
     */
-  def syntheticMjpegMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val nFrames = (1 + id % 5).toInt
-        val (w, h) = ((1 + id % 7).toInt, (1 + id % 6).toInt)
-        val frames = Vector.tabulate(nFrames) { f =>
-          val rgb = ((((id + 11 * f) % 256) << 16) |
-            (((id * 7 + 5 * f) % 256) << 8) | ((id * 13 + 3 * f) % 256)).toInt
-          Media.solidPng(w, h, rgb)
-        }
-        val ebml = element(IdEbml, element(0x4286L, uintBytes(1)) ++
-          element(0x4282L, "matroska".getBytes("US-ASCII")))
-        val info = element(IdInfo,
-          element(IdTimestampScale, uintBytes(1000000L)) ++
-            element(IdDuration, {
-              val bits = java.lang.Double.doubleToLongBits(40.0 * nFrames)
-              Array.tabulate(8)(i => ((bits >> (8 * (7 - i))) & 0xff).toByte)
-            }))
-        val tracks = element(IdTracks,
-          element(IdTrackEntry,
-            element(IdTrackNumber, uintBytes(1)) ++
-              element(IdTrackType, uintBytes(1)) ++
-              element(IdCodecId, "V_MJPEG".getBytes("US-ASCII")) ++
-              element(IdVideo,
-                element(IdPixelWidth, uintBytes(w.toLong)) ++
-                  element(IdPixelHeight, uintBytes(h.toLong)))) ++
-            element(IdTrackEntry,
-              element(IdTrackNumber, uintBytes(2)) ++
-                element(IdTrackType, uintBytes(2)) ++
-                element(IdCodecId, "A_PCM/INT/LIT".getBytes("US-ASCII"))))
-        // block body: VINT track (size-form), 2-byte BE timestamp, flags
-        def blockBody(track: Long, tsMs: Int, data: Array[Byte]): Array[Byte] =
-          vintBytes(track) ++
-            Array(((tsMs >> 8) & 0xff).toByte, (tsMs & 0xff).toByte, 0x80.toByte) ++ data
-        def videoBlock(f: Int): Array[Byte] =
-          if (id % 2 == 0) element(IdSimpleBlock, blockBody(1, 40 * f, frames(f)))
-          else element(IdBlockGroup, element(IdBlock, blockBody(1, 40 * f, frames(f))))
-        def audioBlock(f: Int): Array[Byte] =
-          element(IdSimpleBlock, blockBody(2, 40 * f + 20,
-            Array.tabulate(4)(i => ((id + f + i) % 256).toByte)))
-        def cluster(fs: Range): Array[Byte] = element(IdCluster,
-          element(IdClusterTimestamp, uintBytes(40L * fs.head)) ++
-            fs.map(f => audioBlock(f) ++ videoBlock(f)).reduce(_ ++ _))
-        val clusters =
-          if (nFrames > 2) cluster(0 until 2) ++ cluster(2 until nFrames)
-          else cluster(0 until nFrames)
-        val bytes = ebml ++ element(IdSegment, info ++ tracks ++ clusters)
-        MediaRow(id, "video/x-matroska",
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 6) else bytes)
+  def syntheticMjpegMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "video/x-matroska", corruptEvery = 9, keepBytes = 6) { id =>
+      val nFrames = (1 + id % 5).toInt
+      val (w, h) = ((1 + id % 7).toInt, (1 + id % 6).toInt)
+      val frames = Vector.tabulate(nFrames) { f =>
+        val rgb = ((((id + 11 * f) % 256) << 16) |
+          (((id * 7 + 5 * f) % 256) << 8) | ((id * 13 + 3 * f) % 256)).toInt
+        Media.solidPng(w, h, rgb)
       }
+      val info = element(IdInfo,
+        element(IdTimestampScale, uintBytes(1000000L)) ++
+          element(IdDuration, float64Bytes(40.0 * nFrames)))
+      val tracks = element(IdTracks,
+        element(IdTrackEntry,
+          element(IdTrackNumber, uintBytes(1)) ++
+            element(IdTrackType, uintBytes(1)) ++
+            element(IdCodecId, "V_MJPEG".getBytes("US-ASCII")) ++
+            element(IdVideo,
+              element(IdPixelWidth, uintBytes(w.toLong)) ++
+                element(IdPixelHeight, uintBytes(h.toLong)))) ++
+          element(IdTrackEntry,
+            element(IdTrackNumber, uintBytes(2)) ++
+              element(IdTrackType, uintBytes(2)) ++
+              element(IdCodecId, "A_PCM/INT/LIT".getBytes("US-ASCII"))))
+      // block body: VINT track (size-form), 2-byte BE timestamp, flags
+      def blockBody(track: Long, tsMs: Int, data: Array[Byte]): Array[Byte] =
+        vintBytes(track) ++
+          Array(((tsMs >> 8) & 0xff).toByte, (tsMs & 0xff).toByte, 0x80.toByte) ++ data
+      def videoBlock(f: Int): Array[Byte] =
+        if (id % 2 == 0) element(IdSimpleBlock, blockBody(1, 40 * f, frames(f)))
+        else element(IdBlockGroup, element(IdBlock, blockBody(1, 40 * f, frames(f))))
+      def audioBlock(f: Int): Array[Byte] =
+        element(IdSimpleBlock, blockBody(2, 40 * f + 20,
+          Array.tabulate(4)(i => ((id + f + i) % 256).toByte)))
+      def cluster(fs: Range): Array[Byte] = element(IdCluster,
+        element(IdClusterTimestamp, uintBytes(40L * fs.head)) ++
+          fs.map(f => audioBlock(f) ++ videoBlock(f)).reduce(_ ++ _))
+      val clusters =
+        if (nFrames > 2) cluster(0 until 2) ++ cluster(2 until nFrames)
+        else cluster(0 until nFrames)
+      ebmlHeader ++ element(IdSegment, info ++ tracks ++ clusters)
     }
-  }
 }

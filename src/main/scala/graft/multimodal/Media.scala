@@ -180,6 +180,26 @@ object Media {
       }
   }
 
+  /** The one WAV writer: a RIFF/WAVE container of `n` mono 16-bit signed
+    * little-endian PCM samples at 1024 Hz, sample i being `sample(i)`
+    * narrowed to 16 bits — the format [[WavDecoder]] and
+    * AudioHash.pcm16Samples read, and the only one the fixtures write.
+    */
+  def pcm16Wav(n: Int)(sample: Int => Int): Array[Byte] = {
+    val bytes = new Array[Byte](44 + 2 * n)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
+    cc("RIFF"); bb.putInt(36 + 2 * n); cc("WAVE")
+    cc("fmt "); bb.putInt(16)
+    bb.putShort(1); bb.putShort(1)       // PCM, mono
+    bb.putInt(1024); bb.putInt(1024 * 2) // rate, byte rate
+    bb.putShort(2); bb.putShort(16)      // block align, bits
+    cc("data"); bb.putInt(2 * n)
+    var i = 0
+    while (i < n) { bb.putShort(sample(i).toShort); i += 1 }
+    bytes
+  }
+
   /** Real MJPEG/AVI video decoder — like the image and audio decoders,
     * pure JDK: the AVI container is a RIFF tree walked chunk-by-chunk
     * (LIST recursion, word-aligned chunk sizes), video frames are the
@@ -238,6 +258,28 @@ object Media {
     val fs = frames.result()
     if (fs.isEmpty) bad("no video frame chunks")
     fs
+  }
+
+  /** The one AVI writer: already-encoded frames as word-aligned `00dc`
+    * chunks in a RIFF `AVI ` tree (LIST hdrl holding a zeroed avih, then
+    * LIST movi) — the layout [[aviFrameChunks]] walks.
+    */
+  private[multimodal] def buildAvi(frames: Seq[Array[Byte]]): Array[Byte] = {
+    val hdrlBody = 4 + 8 + 56 // "hdrl" + avih chunk
+    val moviBody = 4 + frames.map(f => 8 + f.length + (f.length & 1)).sum
+    val riffBody = 4 + (8 + hdrlBody) + (8 + moviBody)
+    val bytes = new Array[Byte](8 + riffBody)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
+    cc("RIFF"); bb.putInt(riffBody); cc("AVI ")
+    cc("LIST"); bb.putInt(hdrlBody); cc("hdrl")
+    cc("avih"); bb.putInt(56); bb.position(bb.position() + 56)
+    cc("LIST"); bb.putInt(moviBody); cc("movi")
+    frames.foreach { f =>
+      cc("00dc"); bb.putInt(f.length); bb.put(f)
+      if ((f.length & 1) == 1) bb.put(0.toByte)
+    }
+    bytes
   }
 
   /** Decode one frame chunk by imageio content sniffing → (w, h,
@@ -304,6 +346,36 @@ object Media {
         .otherwise("video/mp4").as("media_type"),
       col("text").cast("binary").as("payload"))
 
+  /** The row policy every doc-id-derived fixture generator shares: one
+    * `mediaType` row per doc id holding `payload(id)`, cut to its first
+    * `keepBytes` bytes on every `corruptEvery`-th id (a deterministic
+    * corrupt blob for the `lenient` drop path), plus, when `near` is
+    * given, a planted near copy `near(id)` at id + 10⁶ for every 10th
+    * id. One map per partition over the doc ids: no extra pass, union or
+    * shuffle, so a generator inside a timed query costs its encodes only.
+    */
+  private[multimodal] def fixtureRows(documents: DataFrame, mediaType: String, corruptEvery: Int,
+      keepBytes: Int = 8, near: Option[Long => Array[Byte]] = None)(
+      payload: Long => Array[Byte]): Dataset[MediaRow] = {
+    import documents.sparkSession.implicits._
+    documents.select(col("doc_id")).as[Long].mapPartitions(_.flatMap { id =>
+      val bytes = payload(id)
+      val row = MediaRow(id, mediaType,
+        if (id % corruptEvery == 0) java.util.Arrays.copyOf(bytes, keepBytes) else bytes)
+      near match {
+        case Some(p) if id % 10 == 0 => Iterator(row, MediaRow(id + 1000000L, mediaType, p(id)))
+        case _ => Iterator.single(row)
+      }
+    })
+  }
+
+  /** Solid-color PNG bytes for the deterministic fixtures. */
+  private[multimodal] def solidPng(w: Int, h: Int, rgb: Int): Array[Byte] =
+    Png.encodeRgb(w, h, (_, _) => rgb)
+
+  private def docRgb(id: Long): Int =
+    (((id % 256) << 16) | (((id * 7) % 256) << 8) | ((id * 13) % 256)).toInt
+
   /** Deterministic REAL PNG payloads derived purely from doc ids: a
     * solid-color `(1 + id % 8) × (1 + id % 6)` image whose RGB channels
     * are `(id % 256, id·7 % 256, id·13 % 256)`, PNG-encoded in-JVM per
@@ -314,25 +386,9 @@ object Media {
     * (`round(mean · 255) = channel`), giving the decode pipeline a SQL
     * oracle despite PNG bytes themselves being codec-version-dependent.
     */
-  /** Solid-color PNG bytes for the deterministic fixtures. */
-  private[multimodal] def solidPng(w: Int, h: Int, rgb: Int): Array[Byte] =
-    // direct PNG encode (graft.multimodal.Png): same pixels, ~10 µs vs
-    // ImageIO.write's ~375 µs — fixture encode is in the timed path
-    Png.encodeRgb(w, h, (_, _) => rgb)
-
-  private def docRgb(id: Long): Int =
-    (((id % 256) << 16) | (((id * 7) % 256) << 8) | ((id * 13) % 256)).toInt
-
-  def syntheticPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val bytes = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
-        MediaRow(id, "image/png",
-          if (id % 7 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
-    }
-  }
+  def syntheticPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "image/png", corruptEvery = 7)(id =>
+      solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id)))
 
   /** Deterministic REAL AVI payloads derived purely from doc ids: a
     * structurally honest RIFF/AVI container (LIST hdrl with an avih
@@ -347,77 +403,30 @@ object Media {
     * MediaSpec covers it). Every 9th payload is truncated to its
     * 8-byte RIFF magic for the `lenient` drop path.
     */
-  def syntheticAvis(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val nFrames = (1 + id % 4).toInt
-        val frame = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
-        val pad = frame.length & 1
-        val hdrlBody = 4 + 8 + 56                       // "hdrl" + avih chunk
-        val moviBody = 4 + nFrames * (8 + frame.length + pad)
-        val riffBody = 4 + (8 + hdrlBody) + (8 + moviBody)
-        val bytes = new Array[Byte](8 + riffBody)
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-        cc("RIFF"); bb.putInt(riffBody); cc("AVI ")
-        cc("LIST"); bb.putInt(hdrlBody); cc("hdrl")
-        cc("avih"); bb.putInt(56); bb.position(bb.position() + 56)
-        cc("LIST"); bb.putInt(moviBody); cc("movi")
-        (0 until nFrames).foreach { _ =>
-          cc("00dc"); bb.putInt(frame.length); bb.put(frame)
-          if (pad == 1) bb.put(0.toByte)
-        }
-        MediaRow(id, "video/avi",
-          if (id % 9 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
+  def syntheticAvis(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "video/avi", corruptEvery = 9) { id =>
+      val frame = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
+      buildAvi(Seq.fill((1 + id % 4).toInt)(frame))
     }
-  }
 
   /** Deterministic REAL WAV payloads derived purely from doc ids: a
     * mono 16-bit PCM square wave at 1024 Hz with `64·(1 + id % 8)`
     * samples, amplitude `(1 + id % 16)·1024` (= `(1+id%16)/32` of full
-    * scale, an exact dyadic), flipping sign every `2^(id % 3)` samples —
-    * the RIFF/WAVE container is written byte-by-byte, so the payload is
-    * bit-deterministic. Every 5th payload is truncated to its 8-byte
-    * RIFF magic, a deterministic corrupt blob for the `lenient` drop
-    * path. Because amplitude, sample count and period are all dyadic,
-    * [[WavDecoder]]'s duration / mean|amp| / RMS come out EXACT and the
-    * zero-crossing count is recoverable as `round(zcr · (frames − 1))` —
-    * a pure-SQL oracle for a real audio decode.
+    * scale, an exact dyadic), flipping sign every `2^(id % 3)` samples,
+    * written by [[pcm16Wav]], so the payload is bit-deterministic. Every
+    * 5th payload is truncated to its 8-byte RIFF magic, a deterministic
+    * corrupt blob for the `lenient` drop path. Because amplitude, sample
+    * count and period are all dyadic, [[WavDecoder]]'s duration /
+    * mean|amp| / RMS come out EXACT and the zero-crossing count is
+    * recoverable as `round(zcr · (frames − 1))` — a pure-SQL oracle for a
+    * real audio decode.
     */
-  def syntheticWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val n = 64 * (1 + id % 8).toInt      // samples (mono frames)
-        val amp = (1 + id % 16).toInt * 1024 // dyadic: amp/32768 = (1+id%16)/32
-        val period = 1 << (id % 3).toInt     // sign flips every 1, 2 or 4 samples
-        val sampleRate = 1024
-        val dataLen = n * 2
-        val bytes = new Array[Byte](44 + dataLen)
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-          .put("WAVE".getBytes("US-ASCII"))
-          .put("fmt ".getBytes("US-ASCII")).putInt(16)
-          .putShort(1)              // PCM
-          .putShort(1)              // mono
-          .putInt(sampleRate)
-          .putInt(sampleRate * 2)   // byte rate
-          .putShort(2)              // block align
-          .putShort(16)             // bits per sample
-          .put("data".getBytes("US-ASCII")).putInt(dataLen)
-        var i = 0
-        while (i < n) {
-          val v = if ((i / period) % 2 == 0) amp else -amp
-          bb.putShort(v.toShort)
-          i += 1
-        }
-        MediaRow(id, "audio/wav",
-          if (id % 5 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
+  def syntheticWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "audio/wav", corruptEvery = 5) { id =>
+      val amp = (1 + id % 16).toInt * 1024 // dyadic: amp/32768 = (1+id%16)/32
+      val period = 1 << (id % 3).toInt     // sign flips every 1, 2 or 4 samples
+      pcm16Wav(64 * (1 + id % 8).toInt)(i => if ((i / period) % 2 == 0) amp else -amp)
     }
-  }
 
   /** Decode + feature-extract, one decoder instance per partition.
     * Partition count is the parallelism AND memory knob: at 100 TB of
@@ -826,20 +835,47 @@ object Media {
   }
 
   // ISO-BMFF writers the synthetic MP4 generators share: a box of
-  // `typ` around `body`, a full box (version + zero flags) and
-  // big-endian 32/64-bit fields
-  private def box(typ: String, body: Array[Byte]): Array[Byte] = {
-    val b = new java.io.ByteArrayOutputStream()
-    val d = new java.io.DataOutputStream(b)
-    d.writeInt(8 + body.length); d.write(typ.getBytes("US-ASCII")); d.write(body)
-    b.toByteArray
-  }
+  // `typ` around `body`, a full box (version + zero flags), big-endian
+  // 32/64-bit fields, and the boxes every generator writes
+  private def box(typ: String, body: Array[Byte]): Array[Byte] =
+    be32(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
   private def fullBox(typ: String, version: Int, body: Array[Byte]): Array[Byte] =
     box(typ, Array[Byte](version.toByte, 0, 0, 0) ++ body)
   private def be32(x: Long): Array[Byte] =
     Array(((x >> 24) & 0xff).toByte, ((x >> 16) & 0xff).toByte,
       ((x >> 8) & 0xff).toByte, (x & 0xff).toByte)
   private def be64(x: Long): Array[Byte] = be32(x >> 32) ++ be32(x & 0xffffffffL)
+
+  /** The 20-byte `ftyp` every fixture mp4 opens with: brand isom, minor
+    * version 0x200, compatible brand isom.
+    */
+  private val ftyp =
+    box("ftyp", "isom".getBytes("US-ASCII") ++ be32(0x200) ++ "isom".getBytes("US-ASCII"))
+
+  /** mvhd in full-box version `v` (v1: 64-bit times), rate 1.0. */
+  private def mvhd(v: Int, timescale: Long, duration: Long, nextTrackId: Long): Array[Byte] =
+    fullBox("mvhd", v,
+      (if (v == 1) be64(0) ++ be64(0) ++ be32(timescale) ++ be64(duration)
+       else be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration)) ++
+        be32(0x00010000) ++ Array.fill[Byte](2 + 10 + 36 + 24)(0) ++ be32(nextTrackId))
+
+  /** One trak: a version-`v` tkhd with `w`×`h` as 16.16 fixed point, then
+    * mdia holding a version-0 mdhd and minf → stbl around `stblBody`.
+    */
+  private def trak(v: Int, trackId: Long, timescale: Long, duration: Long, w: Long, h: Long,
+      stblBody: Array[Byte]): Array[Byte] = {
+    val tkhd = fullBox("tkhd", v,
+      (if (v == 1) be64(0) ++ be64(0) ++ be32(trackId) ++ be32(0) ++ be64(duration)
+       else be32(0) ++ be32(0) ++ be32(trackId) ++ be32(0) ++ be32(duration)) ++
+        Array.fill[Byte](8 + 2 + 2 + 2 + 2 + 36)(0) ++ be32(w << 16) ++ be32(h << 16))
+    val mdhd = fullBox("mdhd", 0,
+      be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration) ++ Array[Byte](0, 0, 0, 0))
+    box("trak", tkhd ++ box("mdia", mdhd ++ box("minf", box("stbl", stblBody))))
+  }
+
+  /** stsd with one `fourcc` sample entry (6 reserved + 2 data_ref_idx). */
+  private def stsd(fourcc: String): Array[Byte] =
+    fullBox("stsd", 0, be32(1) ++ box(fourcc, Array.fill[Byte](8)(0)))
 
   /** Deterministic REAL mp4 (ISO-BMFF) payloads derived purely from doc
     * ids: a structurally honest `ftyp` + `moov`(`mvhd` + n×`trak`) tree
@@ -854,51 +890,19 @@ object Media {
     * parity, exercising both full-box layouts. Every 11th payload is
     * truncated to 8 bytes for the `lenient` drop path.
     */
-  def syntheticMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val v = (id % 2).toInt // full-box version for mvhd/tkhd
-        val timescale = 600 * (1 + id % 3).toInt
-        val duration = (1 + id % 8) * timescale / 2
-        val nTracks = (1 + id % 3).toInt
-        val codec = Seq("avc1", "hvc1", "vp09", "av01")((id % 4).toInt)
-        val out = new java.io.ByteArrayOutputStream()
-        val bb = new java.io.DataOutputStream(out)
-        def cc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
-
-        val mvhd = fullBox("mvhd", v,
-          (if (v == 1) be64(0) ++ be64(0) ++ be32(timescale) ++ be64(duration)
-           else be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration)) ++
-            be32(0x00010000) ++ Array.fill[Byte](2 + 10 + 36 + 24)(0) ++ be32(nTracks + 1L))
-        def tkhd(trackId: Int, w: Int, h: Int): Array[Byte] = fullBox("tkhd", v,
-          (if (v == 1) be64(0) ++ be64(0) ++ be32(trackId) ++ be32(0) ++ be64(duration)
-           else be32(0) ++ be32(0) ++ be32(trackId) ++ be32(0) ++ be32(duration)) ++
-            Array.fill[Byte](8 + 2 + 2 + 2 + 2 + 36)(0) ++
-            be32(w.toLong << 16) ++ be32(h.toLong << 16))
-        def trak(trackId: Int, w: Int, h: Int, fmt: String): Array[Byte] = {
-          val mdhd = fullBox("mdhd", 0,
-            be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration) ++ Array[Byte](0, 0, 0, 0))
-          val entry = box(fmt, Array.fill[Byte](8)(0)) // 6 reserved + 2 data_ref_idx
-          val stsd = fullBox("stsd", 0, be32(1) ++ entry)
-          val stbl = box("stbl", stsd)
-          val minf = box("minf", stbl)
-          val mdia = box("mdia", mdhd ++ minf)
-          box("trak", tkhd(trackId, w, h) ++ mdia)
-        }
-        val tracks = (0 until nTracks).map { i =>
-          if (i == 0) trak(1, 16 * (1 + id % 8).toInt, 16 * (1 + id % 6).toInt, codec)
-          else trak(i + 1, 0, 0, "mp4a")
-        }.reduce(_ ++ _)
-        val moov = box("moov", mvhd ++ tracks)
-        bb.writeInt(20); cc("ftyp"); cc("isom"); bb.writeInt(0x200); cc("isom")
-        bb.write(moov)
-        val bytes = out.toByteArray
-        MediaRow(id, "video/mp4",
-          if (id % 11 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
+  def syntheticMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "video/mp4", corruptEvery = 11) { id =>
+      val v = (id % 2).toInt // full-box version for mvhd/tkhd
+      val timescale = 600L * (1 + id % 3)
+      val duration = (1 + id % 8) * timescale / 2
+      val nTracks = (1 + id % 3).toInt
+      val codec = Seq("avc1", "hvc1", "vp09", "av01")((id % 4).toInt)
+      val tracks = (0 until nTracks).map { i =>
+        if (i == 0) trak(v, 1, timescale, duration, 16 * (1 + id % 8), 16 * (1 + id % 6), stsd(codec))
+        else trak(v, i + 1, timescale, duration, 0, 0, stsd("mp4a"))
+      }.reduce(_ ++ _)
+      ftyp ++ box("moov", mvhd(v, timescale, duration, nTracks + 1L) ++ tracks)
     }
-  }
 
   /** Deterministic REAL JPEG-track mp4s derived purely from doc ids:
     * `ftyp` + `mdat` holding `1 + id % 5` solid-color frames + a `moov`
@@ -916,77 +920,47 @@ object Media {
     * the identical path — MediaSpec covers one). Every 13th payload
     * truncates to 8 bytes for the `lenient` drop path.
     */
-  def syntheticJpegMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val v = (id % 2).toInt // full-box version for mvhd/tkhd
-        val nFrames = (1 + id % 5).toInt
-        val (w, h) = (16 * (1 + id % 8).toInt, 16 * (1 + id % 6).toInt)
-        val frames = Vector.tabulate(nFrames) { f =>
-          val rgb = ((((id + 11 * f) % 256) << 16) |
-            (((id * 7 + 5 * f) % 256) << 8) | ((id * 13 + 3 * f) % 256)).toInt
-          solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, rgb)
-        }
-
-        // layout: ftyp (20 B) + mdat header (8 B) + concatenated frames,
-        // chunked 2 samples per chunk → absolute chunk offsets
-        val mdatBody = 20 + 8
-        val sampleOffsets = frames.scanLeft(mdatBody.toLong)(_ + _.length)
-        val nChunks = (nFrames + 1) / 2
-        val chunkOffsets = Vector.tabulate(nChunks)(c => sampleOffsets(2 * c))
-
-        val timescale = 600
-        val duration = 100L * nFrames
-        val mvhd = fullBox("mvhd", v,
-          (if (v == 1) be64(0) ++ be64(0) ++ be32(timescale.toLong) ++ be64(duration)
-           else be32(0) ++ be32(0) ++ be32(timescale.toLong) ++ be32(duration)) ++
-            be32(0x00010000) ++ Array.fill[Byte](2 + 10 + 36 + 24)(0) ++ be32(2L))
-        val tkhd = fullBox("tkhd", v,
-          (if (v == 1) be64(0) ++ be64(0) ++ be32(1L) ++ be32(0) ++ be64(duration)
-           else be32(0) ++ be32(0) ++ be32(1L) ++ be32(0) ++ be32(duration)) ++
-            Array.fill[Byte](8 + 2 + 2 + 2 + 2 + 36)(0) ++
-            be32(w.toLong << 16) ++ be32(h.toLong << 16))
-        val mdhd = fullBox("mdhd", 0,
-          be32(0) ++ be32(0) ++ be32(timescale.toLong) ++ be32(duration) ++
-            Array[Byte](0, 0, 0, 0))
-        val stsd = fullBox("stsd", 0,
-          be32(1) ++ box("jpeg", Array.fill[Byte](8)(0)))
-        val stsz = fullBox("stsz", 0,
-          be32(0) ++ be32(nFrames.toLong) ++
-            frames.map(fr => be32(fr.length.toLong)).foldLeft(Array.empty[Byte])(_ ++ _))
-        // runs: (1, 2) and, when the frame count is odd, a (last, 1) tail
-        val stscRuns =
-          if (nFrames == 1) Vector((1L, 1L))
-          else if (nFrames % 2 == 0) Vector((1L, 2L))
-          else Vector((1L, 2L), (nChunks.toLong, 1L))
-        val stsc = fullBox("stsc", 0,
-          be32(stscRuns.size.toLong) ++ stscRuns
-            .map { case (first, per) => be32(first) ++ be32(per) ++ be32(1L) }
-            .foldLeft(Array.empty[Byte])(_ ++ _))
-        val chunkBox =
-          if (id % 2 == 0)
-            fullBox("stco", 0, be32(nChunks.toLong) ++
-              chunkOffsets.map(be32).foldLeft(Array.empty[Byte])(_ ++ _))
-          else
-            fullBox("co64", 0, be32(nChunks.toLong) ++
-              chunkOffsets.map(be64).foldLeft(Array.empty[Byte])(_ ++ _))
-        val stbl = box("stbl", stsd ++ stsz ++ stsc ++ chunkBox)
-        val mdia = box("mdia", mdhd ++ box("minf", stbl))
-        val moov = box("moov", mvhd ++ box("trak", tkhd ++ mdia))
-
-        val out = new java.io.ByteArrayOutputStream()
-        val bb = new java.io.DataOutputStream(out)
-        def cc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
-        bb.writeInt(20); cc("ftyp"); cc("isom"); bb.writeInt(0x200); cc("isom")
-        bb.write(box("mdat", frames.foldLeft(Array.empty[Byte])(_ ++ _)))
-        bb.write(moov)
-        val bytes = out.toByteArray
-        MediaRow(id, "video/mp4",
-          if (id % 13 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
+  def syntheticJpegMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "video/mp4", corruptEvery = 13) { id =>
+      val v = (id % 2).toInt // full-box version for mvhd/tkhd
+      val nFrames = (1 + id % 5).toInt
+      val frames = Vector.tabulate(nFrames) { f =>
+        val rgb = ((((id + 11 * f) % 256) << 16) |
+          (((id * 7 + 5 * f) % 256) << 8) | ((id * 13 + 3 * f) % 256)).toInt
+        solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, rgb)
       }
+
+      // layout: ftyp + mdat header (8 B) + concatenated frames, chunked
+      // 2 samples per chunk → absolute chunk offsets
+      val sampleOffsets = frames.scanLeft(ftyp.length + 8L)(_ + _.length)
+      val nChunks = (nFrames + 1) / 2
+      val chunkOffsets = Vector.tabulate(nChunks)(c => sampleOffsets(2 * c))
+
+      val duration = 100L * nFrames
+      val stsz = fullBox("stsz", 0,
+        be32(0) ++ be32(nFrames.toLong) ++
+          frames.map(fr => be32(fr.length.toLong)).foldLeft(Array.empty[Byte])(_ ++ _))
+      // runs: (1, 2) and, when the frame count is odd, a (last, 1) tail
+      val stscRuns =
+        if (nFrames == 1) Vector((1L, 1L))
+        else if (nFrames % 2 == 0) Vector((1L, 2L))
+        else Vector((1L, 2L), (nChunks.toLong, 1L))
+      val stsc = fullBox("stsc", 0,
+        be32(stscRuns.size.toLong) ++ stscRuns
+          .map { case (first, per) => be32(first) ++ be32(per) ++ be32(1L) }
+          .foldLeft(Array.empty[Byte])(_ ++ _))
+      val chunkBox =
+        if (id % 2 == 0)
+          fullBox("stco", 0, be32(nChunks.toLong) ++
+            chunkOffsets.map(be32).foldLeft(Array.empty[Byte])(_ ++ _))
+        else
+          fullBox("co64", 0, be32(nChunks.toLong) ++
+            chunkOffsets.map(be64).foldLeft(Array.empty[Byte])(_ ++ _))
+      ftyp ++ box("mdat", frames.foldLeft(Array.empty[Byte])(_ ++ _)) ++
+        box("moov", mvhd(v, 600, duration, 2) ++
+          trak(v, 1, 600, duration, 16 * (1 + id % 8), 16 * (1 + id % 6),
+            stsd("jpeg") ++ stsz ++ stsc ++ chunkBox))
     }
-  }
 
   /** Deterministic mp4s with REAL `stts` + `stss` timing/sync tables
     * over an INTER-FRAME codec track (fourcc cycling avc1/hvc1/vp09/av01
@@ -1003,52 +977,24 @@ object Media {
     * path. No mdat/stsz/stco: a keyframe INDEX is pure moov metadata,
     * which is the point.
     */
-  def syntheticSyncMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val nSamples = (4 + id % 6).toInt
-        val stride = (2 + id % 3).toInt
-        val codec = Seq("avc1", "hvc1", "vp09", "av01")((id % 4).toInt)
-
-        val timescale = 600L
-        val duration = 3 * 600L + (nSamples - 3) * 300L
-        val mvhd = fullBox("mvhd", 0,
-          be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration) ++
-            be32(0x00010000) ++ Array.fill[Byte](2 + 10 + 36 + 24)(0) ++ be32(2L))
-        val tkhd = fullBox("tkhd", 0,
-          be32(0) ++ be32(0) ++ be32(1L) ++ be32(0) ++ be32(duration) ++
-            Array.fill[Byte](8 + 2 + 2 + 2 + 2 + 36)(0) ++
-            be32(16L << 16) ++ be32(16L << 16))
-        val mdhd = fullBox("mdhd", 0,
-          be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration) ++
-            Array[Byte](0, 0, 0, 0))
-        val stsd = fullBox("stsd", 0,
-          be32(1) ++ box(codec, Array.fill[Byte](8)(0)))
-        val stts = fullBox("stts", 0,
-          be32(2L) ++ be32(3L) ++ be32(600L) ++
-            be32(nSamples - 3L) ++ be32(300L))
-        val syncs = Vector.range(0, nSamples, stride).map(_ + 1L) // 1-based
-        val stssOpt =
-          if (id % 5 == 0) Array.empty[Byte] // all-intra: no stss at all
-          else fullBox("stss", 0,
-            be32(syncs.size.toLong) ++
-              syncs.map(be32).foldLeft(Array.empty[Byte])(_ ++ _))
-        val stbl = box("stbl", stsd ++ stts ++ stssOpt)
-        val mdia = box("mdia", mdhd ++ box("minf", stbl))
-        val moov = box("moov", mvhd ++ box("trak", tkhd ++ mdia))
-
-        val out = new java.io.ByteArrayOutputStream()
-        val bb = new java.io.DataOutputStream(out)
-        def cc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
-        bb.writeInt(20); cc("ftyp"); cc("isom"); bb.writeInt(0x200); cc("isom")
-        bb.write(moov)
-        val bytes = out.toByteArray
-        MediaRow(id, "video/mp4",
-          if (id % 11 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
+  def syntheticSyncMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "video/mp4", corruptEvery = 11) { id =>
+      val nSamples = (4 + id % 6).toInt
+      val stride = (2 + id % 3).toInt
+      val codec = Seq("avc1", "hvc1", "vp09", "av01")((id % 4).toInt)
+      val duration = 3 * 600L + (nSamples - 3) * 300L
+      val stts = fullBox("stts", 0,
+        be32(2L) ++ be32(3L) ++ be32(600L) ++
+          be32(nSamples - 3L) ++ be32(300L))
+      val syncs = Vector.range(0, nSamples, stride).map(_ + 1L) // 1-based
+      val stssOpt =
+        if (id % 5 == 0) Array.empty[Byte] // all-intra: no stss at all
+        else fullBox("stss", 0,
+          be32(syncs.size.toLong) ++
+            syncs.map(be32).foldLeft(Array.empty[Byte])(_ ++ _))
+      ftyp ++ box("moov", mvhd(0, 600, duration, 2) ++
+        trak(0, 1, 600, duration, 16, 16, stsd(codec) ++ stts ++ stssOpt))
     }
-  }
 
   // ------------------------------------------------------------ PNG chunks
 
@@ -1133,26 +1079,14 @@ object Media {
     * geometry. Every 7th payload truncates to its 8-byte magic for the
     * `lenient` drop path, as in the base fixture.
     */
-  def syntheticAnnotatedPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val png = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
-        val data = "doc".getBytes("ISO-8859-1") ++ Array(0.toByte) ++
-          id.toString.getBytes("ISO-8859-1")
-        val chunk = new java.io.ByteArrayOutputStream()
-        val d = new java.io.DataOutputStream(chunk)
-        d.writeInt(data.length); d.write("tEXt".getBytes("US-ASCII")); d.write(data)
-        val crc = new java.util.zip.CRC32()
-        crc.update("tEXt".getBytes("US-ASCII")); crc.update(data)
-        d.writeInt(crc.getValue.toInt)
-        // IEND is always the trailing 12 bytes; splice the tEXt before it
-        val bytes = png.dropRight(12) ++ chunk.toByteArray ++ png.takeRight(12)
-        MediaRow(id, "image/png",
-          if (id % 7 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes)
-      }
+  def syntheticAnnotatedPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+    fixtureRows(documents, "image/png", corruptEvery = 7) { id =>
+      val png = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
+      val text = Png.chunk("tEXt", "doc".getBytes("ISO-8859-1") ++ Array(0.toByte) ++
+        id.toString.getBytes("ISO-8859-1"))
+      // IEND is always the trailing 12 bytes; splice the tEXt before it
+      png.dropRight(12) ++ text ++ png.takeRight(12)
     }
-  }
 
   /** Resize planning: target dimensions preserving aspect ratio, never
     * upscaling — the metadata half of image resize, pure codegen'd

@@ -1,11 +1,12 @@
 package graft.multimodal
 
-/** Minimal deterministic truecolor PNG encoder for the synthetic media
-  * fixtures (optimization guide §1.2 "per-task work").
+/** Minimal deterministic truecolor PNG encoder — the one PNG writer of
+  * the synthetic media fixtures and the soak's images (optimization guide
+  * §1.2 "per-task work").
   *
   * The fixtures are generated INSIDE the timed query path (one encode per
-  * doc or per video frame), and `ImageIO.write` costs ~375 µs per 9×8
-  * image even with the memory-cache fix (BufferedImage allocation, plugin
+  * doc or per video frame), and javax.imageio's PNG writer costs ~375 µs
+  * per 9×8 image even with the memory-cache fix (BufferedImage allocation, plugin
   * lookup, ColorModel negotiation, per-scanline filtering). This encoder
   * writes the same pixels as a spec-conformant PNG — 8-bit color type 2
   * (truecolor), no interlace, filter 0 scanlines, one zlib stream
@@ -51,21 +52,6 @@ object Png {
     while (!defl.finished()) zlen += defl.deflate(zbuf, zlen, zbuf.length - zlen)
     defl.end()
 
-    val out = new java.io.ByteArrayOutputStream(zlen + 64)
-    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a))
-    def chunk(typ: String, data: Array[Byte], len: Int): Unit = {
-      val t = typ.getBytes("US-ASCII")
-      out.write((len >>> 24) & 0xff); out.write((len >>> 16) & 0xff)
-      out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-      out.write(t)
-      out.write(data, 0, len)
-      val crc = new java.util.zip.CRC32()
-      crc.update(t)
-      crc.update(data, 0, len)
-      val c = crc.getValue
-      out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    }
     val ihdr = java.nio.ByteBuffer.allocate(13)
     ihdr.putInt(w).putInt(h)
     ihdr.put(8.toByte)  // bit depth
@@ -73,9 +59,21 @@ object Png {
     ihdr.put(0.toByte)  // compression
     ihdr.put(0.toByte)  // filter method
     ihdr.put(0.toByte)  // interlace: none
-    chunk("IHDR", ihdr.array(), 13)
-    chunk("IDAT", zbuf, zlen)
-    chunk("IEND", Array.emptyByteArray, 0)
-    out.toByteArray
+    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
+      chunk("IHDR", ihdr.array()) ++
+      chunk("IDAT", java.util.Arrays.copyOf(zbuf, zlen)) ++
+      chunk("IEND", Array.emptyByteArray)
+  }
+
+  /** One PNG chunk: big-endian data length, the type, the data, and the
+    * CRC-32 of type and data.
+    */
+  private[multimodal] def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+    val t = typ.getBytes("US-ASCII")
+    val crc = new java.util.zip.CRC32()
+    crc.update(t)
+    crc.update(data)
+    java.nio.ByteBuffer.allocate(12 + data.length)
+      .putInt(data.length).put(t).put(data).putInt(crc.getValue.toInt).array()
   }
 }

@@ -216,20 +216,9 @@ object VideoHash {
     * frames' hashes exactly.
     */
   def syntheticGradientAvis(documents: DataFrame, spark: SparkSession,
-      planted: Boolean = false): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.flatMap { id =>
-        val base = MediaRow(id, "video/avi", {
-          val bytes = gradientAvi(id, 0)
-          if (id % 13 == 0) java.util.Arrays.copyOf(bytes, 8) else bytes
-        })
-        if (planted && id % 10 == 0)
-          Iterator(base, MediaRow(id + 1000000L, "video/avi", gradientAvi(id, 3)))
-        else Iterator.single(base)
-      }
-    }
-  }
+      planted: Boolean = false): Dataset[MediaRow] =
+    Media.fixtureRows(documents, "video/avi", corruptEvery = 13,
+      near = Option.when(planted)((id: Long) => gradientAvi(id, 3)))(gradientAvi(_, 0))
 
   /** Scene fixture: `4 + id % 3` frames; docs with id % 3 ≠ 0 switch
     * SCENE at frame `2 + id % 2` — the second scene swaps the gradient
@@ -258,7 +247,7 @@ object VideoHash {
             (v << 16) | (v << 8) | v
           })
         }
-        val base = MediaRow(id, "video/avi", buildAvi(frames))
+        val base = MediaRow(id, "video/avi", Media.buildAvi(frames))
         // planted TRIMMED copy (id + 10⁶, frames 1..n−1) of every 10th
         // doc: its later shots keep their boundary frames — a two-scene
         // original shares its scene-2 keyframe with the copy, while a
@@ -266,7 +255,7 @@ object VideoHash {
         // original's frame 1, not frame 0) — the discrimination
         // d23_shot_keyframe_pairs is built on
         if (planted && id % 10 == 0)
-          Iterator(base, MediaRow(id + 1000000L, "video/avi", buildAvi(frames.drop(1))))
+          Iterator(base, MediaRow(id + 1000000L, "video/avi", Media.buildAvi(frames.drop(1))))
         else Iterator.single(base)
       }
     }
@@ -290,22 +279,19 @@ object VideoHash {
     documents.select(col("doc_id")).as[Long].mapPartitions { it =>
       it.flatMap { id =>
         val frames = gradientFrames(id, 0)
-        val base = MediaRow(id, "video/avi", buildAvi(frames))
+        val base = MediaRow(id, "video/avi", Media.buildAvi(frames))
         if (id % 10 == 0)
           Iterator(base,
-            MediaRow(id + 2000000L, "video/avi", buildAvi(frames.drop(1))),
-            MediaRow(id + 3000000L, "video/avi", buildAvi(frames.reverse)))
+            MediaRow(id + 2000000L, "video/avi", Media.buildAvi(frames.drop(1))),
+            MediaRow(id + 3000000L, "video/avi", Media.buildAvi(frames.reverse)))
         else Iterator.single(base)
       }
     }
   }
 
-  /** One fixture AVI (RIFF LIST hdrl/movi, word-aligned 00dc PNG
-    * frames) — the Media.syntheticAvis container layout with gradient
-    * frames.
-    */
+  /** One fixture AVI ([[Media.buildAvi]]) of the gradient frames. */
   def gradientAvi(imgId: Long, delta: Int): Array[Byte] =
-    buildAvi(gradientFrames(imgId, delta))
+    Media.buildAvi(gradientFrames(imgId, delta))
 
   /** The fixture's PNG frame bytes: frame f's pixel (x, y) is
     * ((imgId·31 + f·17 + x²·7 + y²·13) mod 251) + delta at (0,0,f=0).
@@ -320,24 +306,5 @@ object VideoHash {
         (v << 16) | (v << 8) | v
       })
     }
-  }
-
-  /** Wrap already-encoded frames in the fixture AVI container. */
-  def buildAvi(frames: Seq[Array[Byte]]): Array[Byte] = {
-    val hdrlBody = 4 + 8 + 56
-    val moviBody = 4 + frames.map(f => 8 + f.length + (f.length & 1)).sum
-    val riffBody = 4 + (8 + hdrlBody) + (8 + moviBody)
-    val bytes = new Array[Byte](8 + riffBody)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-    cc("RIFF"); bb.putInt(riffBody); cc("AVI ")
-    cc("LIST"); bb.putInt(hdrlBody); cc("hdrl")
-    cc("avih"); bb.putInt(56); bb.position(bb.position() + 56)
-    cc("LIST"); bb.putInt(moviBody); cc("movi")
-    frames.foreach { f =>
-      cc("00dc"); bb.putInt(f.length); bb.put(f)
-      if ((f.length & 1) == 1) bb.put(0.toByte)
-    }
-    bytes
   }
 }

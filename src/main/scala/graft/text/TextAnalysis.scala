@@ -95,26 +95,11 @@ object TextAnalysis {
       (acc, c) => (acc * 31 + ascii(c)) % 1000000007L)
 
   /** Word trigrams as strings (empty below 3 words) — the unit of the
-    * intra-document repetition filter. Map-side array ops.
-    *
-    * Shape matters: a higher-order lambda body re-evaluates any OUTER
-    * expression it captures once per element (`transform(seq, i =>
-    * element_at(w, i))` re-runs the whole split+filter per index —
-    * quadratic per row, measured 1 ms/row on 54-word docs). zip_with
-    * instead evaluates the three shifted slices once per row as plain
-    * children, and the lambdas touch only their own variables.
+    * intra-document repetition filter: [[TextQuality.wordKgrams]] over
+    * the non-empty words.
     */
-  def wordTrigrams(text: Column): Column = {
-    val w = filter(split(text, " "), t => t =!= "")
-    val n = size(w)
-    when(n >= 3, {
-      val a = slice(w, lit(1), n - 2)
-      val b = slice(w, lit(2), n - 2)
-      val c = slice(w, lit(3), n - 2)
-      zip_with(zip_with(a, b, (x, y) => concat(x, lit(" "), y)), c,
-        (xy, z) => concat(xy, lit(" "), z))
-    }).otherwise(array().cast("array<string>"))
-  }
+  def wordTrigrams(text: Column): Column =
+    TextQuality.wordKgrams(filter(split(text, " "), t => t =!= ""), 3)
 
   /** PII scrubbing patterns — email addresses and long digit runs (ids,
     * phone fragments). Both use constructs shared by Java regex and RE2,

@@ -19,12 +19,13 @@ object TextQuality {
   private def words(text: Column): Column =
     filter(split(text, " "), w => w =!= "")
 
-  /** Word k-grams from a MATERIALIZED words-array column: k shifted
-    * slices folded pairwise with zip_with, so each slice evaluates once
-    * per row no matter how long the document (the transform-over-indices
-    * shape re-evaluates captured expressions per element — quadratic;
-    * see TextAnalysis.wordTrigrams). Docs under k words yield an empty
-    * array.
+  /** Word k-grams of a words-array column: k shifted slices folded
+    * pairwise with zip_with, so each slice evaluates once per row no
+    * matter how long the document. The indexed form, `transform(seq, i
+    * => slice(w, i, k))`, is quadratic: a higher-order lambda re-evaluates
+    * any outer expression it captures once per element, re-running the
+    * split per index (measured 1 ms/row on 54-word docs). Docs under k
+    * words yield an empty array.
     */
   def wordKgrams(w: Column, k: Int): Column = {
     require(k >= 1, s"wordKgrams needs k >= 1, got $k")

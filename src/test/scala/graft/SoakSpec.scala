@@ -87,6 +87,19 @@ class SoakSpec extends SparkSpec {
     ScaleSoak.partitions(10000000L, cpus = 32) shouldBe 128
   }
 
+  "ScaleSoak.Report" should "count a stage that keeps a batch log by its batches' time in the headline" in {
+    def result(name: String, sec: Double, batchSecs: Double*) = ScaleSoak.StageResult(name, sec, 0L, 0L, 1L,
+      "{}", batchSecs.zipWithIndex.map { case (b, i) => ScaleSoak.Batch(i.toLong, b, Nil, 0) })
+    // etl_pipeline's 54.4 s include writing its inputs, its batch 0 is
+    // EtlMain alone; crawl_cdc's 9 s include landing and the replay check
+    val json = ScaleSoak.Report(1000L, 8, 4,
+      Seq(result("exact_dedup", 3.0), result("etl_pipeline", 54.4, 47.0), result("crawl_cdc", 9.0, 1.5, 2.5)),
+      0L, 0L, 0L, Nil).json
+    json should include(""""value":54.0,""")
+    json should include(""""docs_per_sec":18,""")
+    json should include(""""etl_pipeline":{"sec":54.4,""")
+  }
+
   "ScaleSoak.run" should "run the three stream stages with the planted per-batch counts and no violation" in {
     val report = ScaleSoak.run(spark, 12500L, dim = 8, parts = 4,
       ScaleSoak.select(Some("stream_admission,image_admission,crawl_cdc")))
