@@ -20,7 +20,12 @@ metric whose base spread is wider than its bound reads `unresolved`, not
 `within bound`, unless every change run beats every base run: such a run
 set could not have shown a regression of the bound's size.
 It also prints each side's `peak_heap_mb` quartiles: run.py prints that
-value, but BENCHMARK.json does not bound it.
+value, but BENCHMARK.json does not bound it. Each run's line shows its
+`cpu_s` next to `wall_s`: the user plus system CPU seconds of the run's
+processes (this script's `RUSAGE_CHILDREN` delta around it, so the first
+run in each export includes its build), and the end prints each side's
+quartiles of it. A wall jump with flat CPU points at a co-tenant on a
+shared box, not at the change. Neither figure enters a verdict.
 
 Exits non-zero when any run fails or reports failed > 0. Nothing under
 perfbench/ is touched; each export builds into its own .bench_build/, and
@@ -29,6 +34,7 @@ both are deleted at the end.
 import argparse
 import json
 import os
+import resource
 import shutil
 import statistics
 import subprocess
@@ -38,11 +44,19 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def child_cpu_s():
+    """User plus system CPU seconds of this process's finished children."""
+    ru = resource.getrusage(resource.RUSAGE_CHILDREN)
+    return ru.ru_utime + ru.ru_stime
+
+
 def run_bench(tree, workload, seed, seconds):
     """One untraced benchmark run in `tree`; its result line, or None when it crashed."""
+    cpu0 = child_cpu_s()
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
                         "--seconds", str(seconds), "--trace", "0"],
                        cwd=tree, capture_output=True, text=True)
+    cpu_s = child_cpu_s() - cpu0
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-4000:])
@@ -50,6 +64,7 @@ def run_bench(tree, workload, seed, seconds):
     res = json.loads(lines[-1])
     # printed by run.py but not a BENCHMARK.json metric: read from its line
     res["peak_heap_mb"] = next((float(l.split()[1]) for l in lines if l.startswith("peak_heap_mb ")), None)
+    res["cpu_s"] = cpu_s
     return res
 
 
@@ -86,6 +101,7 @@ def main():
     base_tree, change_tree = os.path.join(tmp, "base"), os.path.join(tmp, "change")
     runs = {"base": [], "change": []}
     heaps = {"base": [], "change": []}
+    cpus = {"base": [], "change": []}
     failed = 0
     try:
         os.makedirs(base_tree)
@@ -105,9 +121,13 @@ def main():
                 runs[side].append(values)
                 if res and res["peak_heap_mb"] is not None:
                     heaps[side].append(res["peak_heap_mb"])
+                if res:
+                    cpus[side].append(res["cpu_s"])
+                shown = [f"{k} {v:.4f}" + (f"  cpu_s {res['cpu_s']:.2f}" if k == "wall_s" else "")
+                         for k, v in values.items()]
                 print(f"pair {i + 1} seed {seed} {side:6s} "
                       + ("CRASHED" if res is None else f"failed {res['failed']}/{res['attempted']}  ")
-                      + "  ".join(f"{k} {v:.4f}" for k, v in values.items())
+                      + "  ".join(shown)
                       + (f"  peak_heap_mb {res['peak_heap_mb']:.1f}" if res and res["peak_heap_mb"] else ""),
                       flush=True)
     finally:
@@ -138,10 +158,11 @@ def main():
             verdict = f"within bound {m['bound']}"
         print(f"{name:14s} {bq[0]:9.3f}{bq[1]:9.3f}{bq[2]:9.3f} {cq[0]:9.3f}{cq[1]:9.3f}{cq[2]:9.3f} "
               f"{spread:12.4f} {ratio:9.4f} {won:3d}/{len(pairs):<3d}  {verdict}")
-    if heaps["base"] and heaps["change"]:
-        print("peak_heap_mb (printed only, no bound): "
-              + "  ".join(f"{side} q1/med/q3 " + "/".join(f"{q:.1f}" for q in quartiles(heaps[side]))
-                          for side in ("base", "change")))
+    for label, xs in (("peak_heap_mb", heaps), ("cpu_s", cpus)):
+        if xs["base"] and xs["change"]:
+            print(f"{label} (printed only, no bound): "
+                  + "  ".join(f"{side} q1/med/q3 " + "/".join(f"{q:.1f}" for q in quartiles(xs[side]))
+                              for side in ("base", "change")))
     if failed:
         sys.exit(f"{failed} run(s) failed or reported failed > 0")
 

@@ -198,75 +198,4 @@ object Io {
     p.format(spec.format).save(spec.path)
     if (schemaless(spec.format) && !ignored) writeSchemaSidecar(df, spec)
   }
-
-  /** Bucketed table spec: pre-shuffling a fact table into `numBuckets` by
-    * its join/aggregation key makes every later equi-join or groupBy on
-    * that key shuffle-free — the decisive layout choice for repeatedly
-    * joined 100 TB tables. Requires saveAsTable (bucket metadata lives in
-    * the catalog).
-    */
-  final case class TableSpec(
-      table: String,
-      format: String = "parquet",
-      numBuckets: Int = 0,
-      bucketBy: Seq[String] = Nil,
-      sortBy: Seq[String] = Nil,
-      mode: String = "error")
-
-  def writeTable(df: DataFrame, spec: TableSpec): Unit = {
-    var w = df.write.mode(spec.mode).format(spec.format)
-    if (spec.bucketBy.nonEmpty) {
-      w = w.bucketBy(spec.numBuckets, spec.bucketBy.head, spec.bucketBy.tail: _*)
-      if (spec.sortBy.nonEmpty) w = w.sortBy(spec.sortBy.head, spec.sortBy.tail: _*)
-    }
-    w.saveAsTable(spec.table)
-  }
-
-  def writeAll(outputs: Map[String, (DataFrame, WriteSpec)]): Unit =
-    outputs.foreach { case (_, (df, spec)) => write(df, spec) }
-
-  private def manifestPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_graft_fanout.json")
-
-  /** Crash-detectable fan-out (the S8 shape): Spark commits each DATASET
-    * atomically (its committer stages task output and publishes
-    * `_SUCCESS`), but a multi-dataset fan-out that dies between datasets
-    * leaves a torn output root that LOOKS complete per directory — every
-    * surviving dataset has its own `_SUCCESS`. This variant writes a
-    * run-level manifest (`_graft_fanout.json` under `manifestDir`,
-    * listing every dataset name → path) strictly AFTER the last dataset
-    * commits, and deletes any stale manifest strictly BEFORE the first
-    * write starts — so the manifest's presence is equivalent to "all
-    * datasets of the LATEST run committed". Recovery contract: a missing
-    * manifest means torn — re-run the same fan-out with `mode=overwrite`
-    * specs (idempotent; each dataset republishes) and the manifest
-    * reappears. No directory renames, so it works on object stores where
-    * rename is a copy.
-    */
-  def writeAllAtomic(outputs: Map[String, (DataFrame, WriteSpec)],
-      manifestDir: String): Unit = {
-    require(outputs.nonEmpty, "writeAllAtomic needs at least one dataset")
-    val spark = outputs.head._2._1.sparkSession
-    val p = manifestPath(manifestDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false) // stale manifest must not vouch for this run
-    outputs.foreach { case (_, (df, spec)) => write(df, spec) }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("version", 1)
-    val ds = root.putObject("datasets")
-    outputs.foreach { case (name, (_, spec)) => ds.put(name, spec.path) }
-    val out = fs.create(p, true)
-    try out.write(mapper.writeValueAsString(root)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The completed fan-out's dataset name → path map, or None when the
-    * last [[writeAllAtomic]] run under `manifestDir` was torn (died
-    * between dataset writes) or never ran.
-    */
-  def fanOutManifest(spark: SparkSession, manifestDir: String): Option[Map[String, String]] =
-    readWhole(spark, manifestPath(manifestDir)).map(text =>
-      textFields(new com.fasterxml.jackson.databind.ObjectMapper().readTree(text).get("datasets")))
 }

@@ -78,12 +78,12 @@ object Layout {
       .write.mode(mode).parquet(path)
   }
 
-  /** Per-file clustering diagnostic: for each physical input file, the
-    * spread (max − min) of `valueCol` as a fraction of its global spread
-    * — the quantity parquet min-max skipping actually prunes on. One
-    * scan, one tiny aggregate keyed by file name.
+  /** Spec instrument for [[writeZordered]]: for each physical input file,
+    * the spread (max − min) of `valueCol` as a fraction of its global
+    * spread — the quantity parquet min-max skipping actually prunes on.
+    * One scan, one tiny aggregate keyed by file name.
     */
-  def fileRangeFractions(df: DataFrame, valueCol: String): DataFrame = {
+  private[core] def fileRangeFractions(df: DataFrame, valueCol: String): DataFrame = {
     val perFile = df
       .withColumn("__file", input_file_name())
       .groupBy(col("__file"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 object SchemaTools {
 
   /** `dt` with every nested field name rewritten by `fn`. */
-  def renameType(dt: DataType, fn: String => String): DataType = dt match {
+  private def renameType(dt: DataType, fn: String => String): DataType = dt match {
     case st: StructType =>
       StructType(st.fields.map(f => f.copy(name = fn(f.name), dataType = renameType(f.dataType, fn))))
     case ArrayType(et, n) => ArrayType(renameType(et, fn), n)
@@ -29,20 +29,11 @@ object SchemaTools {
     * `fn`. Used with spaces→`_` to normalize raw EPMC field names
     * (reference Grounding.scala:595 → Helpers.scala:166–175).
     */
-  def renameFields(df: DataFrame, fn: String => String): DataFrame =
+  private def renameFields(df: DataFrame, fn: String => String): DataFrame =
     df.select(df.schema.fields.map { f =>
       col(s"`${f.name}`").cast(renameType(f.dataType, fn)).alias(fn(f.name))
     }.toSeq: _*)
 
   /** Spaces → underscores across the whole schema tree. */
   def replaceSpaces(df: DataFrame): DataFrame = renameFields(df, _.replaceAll(" ", "_"))
-
-  /** snake_case → lowerCamel across the whole schema tree (reference
-    * spark/Helpers.scala:151–163).
-    */
-  def snakeToLowerCamel(df: DataFrame): DataFrame =
-    renameFields(df, s => {
-      val tokens = s.split("_")
-      tokens.head + tokens.tail.map(_.capitalize).mkString
-    })
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot keys (the "asthma"/"p53" problem: a
@@ -15,8 +15,8 @@ object Skew {
   /** Two-phase salted aggregation: group by (key, salt) with partial
     * aggregates, then re-aggregate by key. Turns one hot reducer into
     * `salts` parallel reducers at the cost of a second (tiny) shuffle.
-    * Only associative aggregates survive two-phase — counts and sums are
-    * given here; extend per use.
+    * Only associative aggregates survive two-phase; the count is given
+    * here, extend per use.
     */
   def saltedCount(df: DataFrame, keyCols: Seq[String], salts: Int = 16): DataFrame = {
     val keys = keyCols.map(col)
@@ -25,17 +25,6 @@ object Skew {
       .agg(count(lit(1)).as("_partial"))
       .groupBy(keys: _*)
       .agg(sum(col("_partial")).as("n"))
-  }
-
-  /** Salted sum over `valueCol`, same two-phase shape. */
-  def saltedSum(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      salts: Int = 16): DataFrame = {
-    val keys = keyCols.map(col)
-    df.withColumn("_salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(keys :+ col("_salt"): _*)
-      .agg(sum(col(valueCol)).as("_partial"))
-      .groupBy(keys: _*)
-      .agg(sum(col("_partial")).as(s"sum_$valueCol"))
   }
 
   /** Salted equi-join for a skewed LEFT side against a moderate right

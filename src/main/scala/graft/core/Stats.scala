@@ -153,8 +153,8 @@ object Stats {
       .select(col("q"), within.as("within_bound"))
   }
 
-  /** Spec hook: evaluate [[sketchBound]] for an arbitrary claimed
-    * (q, approx_v) pair against `df`'s histogram.
+  /** Spec instrument for [[sketchBound]]: evaluate it for an arbitrary
+    * claimed (q, approx_v) pair against `df`'s histogram.
     */
   private[core] def boundFor(df: DataFrame, value: Column, q: Double,
       approxV: Long, accuracy: Int): Boolean = {

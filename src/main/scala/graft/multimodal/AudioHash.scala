@@ -103,7 +103,7 @@ object AudioHash {
     * 10th doc — a gain-level near-dup whose fingerprint is within a bit
     * of its source.
     */
-  def syntheticPcmWavs(documents: DataFrame, spark: SparkSession,
+  def syntheticPcmWavs(documents: DataFrame,
       planted: Boolean = false): Dataset[MediaRow] =
     Media.fixtureRows(documents, "audio/wav", corruptEvery = 9,
       near = Option.when(planted)((id: Long) => pcmWav(id, 60)))(pcmWav(_, 0))
@@ -180,7 +180,7 @@ object AudioHash {
   /** [[segmentedPcmWav]] per document, every 9th payload truncated for
     * the lenient drop path.
     */
-  def syntheticSegmentedWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticSegmentedWavs(documents: DataFrame): Dataset[MediaRow] =
     Media.fixtureRows(documents, "audio/wav", corruptEvery = 9)(segmentedPcmWav)
 
   /** One fixture WAV: 260 samples of the [[syntheticPcmWavs]] formula. */

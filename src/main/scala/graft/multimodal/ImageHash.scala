@@ -118,7 +118,7 @@ object ImageHash {
     * doc — a true NEAR-duplicate: at most the (0,0) gradient bit flips,
     * so the planted pair's hamming distance is 0 or 1.
     */
-  def syntheticGradientPngs(documents: DataFrame, spark: SparkSession,
+  def syntheticGradientPngs(documents: DataFrame,
       planted: Boolean = false): Dataset[MediaRow] =
     Media.fixtureRows(documents, "image/png", corruptEvery = 11,
       near = Option.when(planted)((id: Long) => gradientPng(id, 3)))(gradientPng(_, 0))
@@ -173,6 +173,6 @@ object ImageHash {
   /** BMP twin of [[syntheticGradientPngs]] (every 9th payload truncated
     * for the lenient drop path).
     */
-  def syntheticGradientBmps(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticGradientBmps(documents: DataFrame): Dataset[MediaRow] =
     Media.fixtureRows(documents, "image/bmp", corruptEvery = 9, keepBytes = 20)(gradientBmp(_, 0))
 }

@@ -319,7 +319,7 @@ object Matroska {
     * extends-to-end parse path; every 9th payload is truncated to
     * 6 bytes for the `lenient` drop path.
     */
-  def syntheticMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticMkvs(documents: DataFrame): Dataset[MediaRow] =
     Media.fixtureRows(documents, "video/x-matroska", corruptEvery = 9, keepBytes = 6) { id =>
       val scaleNs = 1000000L * (1 + id % 4)
       val durationUnits = 250L * (1 + id % 8)
@@ -365,7 +365,7 @@ object Matroska {
     * content — the m7/m9 pattern). Every 9th payload truncates to
     * 6 bytes for the `lenient` drop path.
     */
-  def syntheticMjpegMkvs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticMjpegMkvs(documents: DataFrame): Dataset[MediaRow] =
     Media.fixtureRows(documents, "video/x-matroska", corruptEvery = 9, keepBytes = 6) { id =>
       val nFrames = (1 + id % 5).toInt
       val (w, h) = ((1 + id % 7).toInt, (1 + id % 6).toInt)

@@ -386,7 +386,7 @@ object Media {
     * (`round(mean · 255) = channel`), giving the decode pipeline a SQL
     * oracle despite PNG bytes themselves being codec-version-dependent.
     */
-  def syntheticPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticPngs(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "image/png", corruptEvery = 7)(id =>
       solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id)))
 
@@ -403,7 +403,7 @@ object Media {
     * MediaSpec covers it). Every 9th payload is truncated to its
     * 8-byte RIFF magic for the `lenient` drop path.
     */
-  def syntheticAvis(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticAvis(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "video/avi", corruptEvery = 9) { id =>
       val frame = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
       buildAvi(Seq.fill((1 + id % 4).toInt)(frame))
@@ -421,7 +421,7 @@ object Media {
     * recoverable as `round(zcr · (frames − 1))` — a pure-SQL oracle for a
     * real audio decode.
     */
-  def syntheticWavs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticWavs(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "audio/wav", corruptEvery = 5) { id =>
       val amp = (1 + id % 16).toInt * 1024 // dyadic: amp/32768 = (1+id%16)/32
       val period = 1 << (id % 3).toInt     // sign flips every 1, 2 or 4 samples
@@ -890,7 +890,7 @@ object Media {
     * parity, exercising both full-box layouts. Every 11th payload is
     * truncated to 8 bytes for the `lenient` drop path.
     */
-  def syntheticMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticMp4s(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "video/mp4", corruptEvery = 11) { id =>
       val v = (id % 2).toInt // full-box version for mvhd/tkhd
       val timescale = 600L * (1 + id % 3)
@@ -920,7 +920,7 @@ object Media {
     * the identical path — MediaSpec covers one). Every 13th payload
     * truncates to 8 bytes for the `lenient` drop path.
     */
-  def syntheticJpegMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticJpegMp4s(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "video/mp4", corruptEvery = 13) { id =>
       val v = (id % 2).toInt // full-box version for mvhd/tkhd
       val nFrames = (1 + id % 5).toInt
@@ -977,7 +977,7 @@ object Media {
     * path. No mdat/stsz/stco: a keyframe INDEX is pure moov metadata,
     * which is the point.
     */
-  def syntheticSyncMp4s(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticSyncMp4s(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "video/mp4", corruptEvery = 11) { id =>
       val nSamples = (4 + id % 6).toInt
       val stride = (2 + id % 3).toInt
@@ -1079,7 +1079,7 @@ object Media {
     * geometry. Every 7th payload truncates to its 8-byte magic for the
     * `lenient` drop path, as in the base fixture.
     */
-  def syntheticAnnotatedPngs(documents: DataFrame, spark: SparkSession): Dataset[MediaRow] =
+  def syntheticAnnotatedPngs(documents: DataFrame): Dataset[MediaRow] =
     fixtureRows(documents, "image/png", corruptEvery = 7) { id =>
       val png = solidPng((1 + id % 8).toInt, (1 + id % 6).toInt, docRgb(id))
       val text = Png.chunk("tEXt", "doc".getBytes("ISO-8859-1") ++ Array(0.toByte) ++
@@ -1108,19 +1108,4 @@ object Media {
         least(ceil(col("width") * col("scale")), lit(maxDim.toLong)).cast("int"))
       .withColumn("out_height",
         least(ceil(col("height") * col("scale")), lit(maxDim.toLong)).cast("int"))
-
-  /** Frame sampling: fixed-stride byte windows standing in for video frame
-    * extraction — explode is map-side; downstream only sees
-    * (id, frame_no, frame hash).
-    */
-  def sampleFrames(payloads: DataFrame, frameBytes: Int = 64, stride: Int = 256): DataFrame =
-    payloads
-      .withColumn("n_frames",
-        greatest(lit(1), (length(col("payload")) / stride).cast("int")))
-      .select(col("doc_id"), col("media_type"),
-        explode(sequence(lit(0), col("n_frames") - 1)).as("frame_no"),
-        col("payload"))
-      .select(col("doc_id"), col("media_type"), col("frame_no"),
-        md5(col("payload").substr(lit(1) + col("frame_no") * stride, lit(frameBytes)))
-          .as("frame_md5"))
 }

@@ -215,7 +215,7 @@ object VideoHash {
     * (id + 10⁶, delta 3) of every 10th doc, which shares all its other
     * frames' hashes exactly.
     */
-  def syntheticGradientAvis(documents: DataFrame, spark: SparkSession,
+  def syntheticGradientAvis(documents: DataFrame,
       planted: Boolean = false): Dataset[MediaRow] =
     Media.fixtureRows(documents, "video/avi", corruptEvery = 13,
       near = Option.when(planted)((id: Long) => gradientAvi(id, 3)))(gradientAvi(_, 0))

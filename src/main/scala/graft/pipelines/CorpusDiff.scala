@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: content equality travels as md5 hashes, never text —
   * the full outer join shuffles (id, 32-char hash) pairs only, one
-  * shuffle per side, combinable counts on top. Text payloads stay in
-  * their parquet files untouched (column pruning keeps them out of the
-  * scan when the caller selects only ids/hashes).
+  * shuffle per side. Text payloads stay in their parquet files untouched
+  * (column pruning keeps them out of the scan when the caller selects
+  * only ids/hashes).
   */
 object CorpusDiff {
 
@@ -35,12 +35,4 @@ object CorpusDiff {
           .when(col("h_before") =!= col("h_after"), lit("changed"))
           .otherwise(lit("same")).as("status"))
   }
-
-  /** The changelog rollup: status → count. One combinable aggregation
-    * over [[diff]]'s output.
-    */
-  def diffSummary(before: DataFrame, after: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    diff(before, after, textCol, idCol)
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
 }

@@ -104,7 +104,7 @@ object MultimodalQueries {
       |  CAST((doc_id * 7) % 256 AS INT) AS mean_g,
       |  CAST((doc_id * 13) % 256 AS INT) AS mean_b
       |FROM documents WHERE doc_id % 7 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticPngs(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticPngs(t(s, dir, "documents"))
     graft.multimodal.Media
       .extractFeatures(rows, new graft.multimodal.Media.ImageIoDecoder, s, lenient = true)
       .toDF()
@@ -139,7 +139,7 @@ object MultimodalQueries {
       |       // (CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4 END)
       |       - 1 AS BIGINT) AS crossings
       |FROM documents WHERE doc_id % 5 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticWavs(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticWavs(t(s, dir, "documents"))
     val feats = graft.multimodal.Media
       .extractFeatures(rows, new graft.multimodal.Media.WavDecoder(), s, lenient = true)
       .toDF()
@@ -177,7 +177,7 @@ object MultimodalQueries {
       |  CAST((doc_id * 7) % 256 AS INT) AS mean_g,
       |  CAST((doc_id * 13) % 256 AS INT) AS mean_b
       |FROM documents WHERE doc_id % 9 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticAvis(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticAvis(t(s, dir, "documents"))
     graft.multimodal.Media
       .extractFeatures(rows, new graft.multimodal.Media.MjpegAviDecoder(), s,
         lenient = true)
@@ -208,7 +208,7 @@ object MultimodalQueries {
       |  CAST((doc_id * 13) % 256 AS INT) AS mean_b
       |FROM documents, unnest(range(0, 1 + doc_id % 4, 2)) AS t(f)
       |WHERE doc_id % 9 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticAvis(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticAvis(t(s, dir, "documents"))
     graft.multimodal.Media.extractVideoFrames(rows, s, frameStride = 2, lenient = true)
       .toDF()
       .select(col("doc_id"), col("frame_no"), col("width"), col("height"),
@@ -240,7 +240,7 @@ object MultimodalQueries {
       |  CASE doc_id % 4 WHEN 0 THEN 'avc1' WHEN 1 THEN 'hvc1'
       |       WHEN 2 THEN 'vp09' ELSE 'av01' END AS codec
       |FROM documents WHERE doc_id % 11 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticMp4s(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticMp4s(t(s, dir, "documents"))
     graft.multimodal.Media.extractMp4Meta(rows, s, lenient = true).toDF()
   }
 
@@ -271,7 +271,7 @@ object MultimodalQueries {
       |  CAST((doc_id * 13 + 3 * f) % 256 AS INT) AS mean_b
       |FROM documents, unnest(range(0, 1 + doc_id % 5, 2)) AS t(f)
       |WHERE doc_id % 13 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticJpegMp4s(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticJpegMp4s(t(s, dir, "documents"))
     graft.multimodal.Media.extractMp4Frames(rows, s, frameStride = 2, lenient = true)
       .toDF()
       .select(col("doc_id"), col("frame_no"), col("width"), col("height"),
@@ -302,7 +302,7 @@ object MultimodalQueries {
       |  CASE doc_id % 3 WHEN 0 THEN 'V_VP9' WHEN 1 THEN 'V_MPEG4/ISO/AVC'
       |       ELSE 'V_AV1' END AS codec
       |FROM documents WHERE doc_id % 9 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Matroska.syntheticMkvs(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Matroska.syntheticMkvs(t(s, dir, "documents"))
     graft.multimodal.Matroska.extractMkvMeta(rows, s, lenient = true).toDF()
   }
 
@@ -333,7 +333,7 @@ object MultimodalQueries {
       |  CAST((doc_id * 13 + 3 * f) % 256 AS INT) AS mean_b
       |FROM documents, unnest(range(0, 1 + doc_id % 5, 2)) AS t(f)
       |WHERE doc_id % 9 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Matroska.syntheticMjpegMkvs(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Matroska.syntheticMjpegMkvs(t(s, dir, "documents"))
     graft.multimodal.Matroska.extractMkvFrames(rows, s, frameStride = 2, lenient = true)
       .toDF()
       .select(col("doc_id"), col("frame_no"), col("width"), col("height"),
@@ -366,7 +366,7 @@ object MultimodalQueries {
       |  CAST(0 AS INT) AS interlace,
       |  'doc=' || doc_id AS text_meta
       |FROM documents WHERE doc_id % 7 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticAnnotatedPngs(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticAnnotatedPngs(t(s, dir, "documents"))
     graft.multimodal.Media.extractPngMeta(rows, s, lenient = true).toDF()
       .select(col("doc_id"), col("width"), col("height"), col("bit_depth"),
         col("color_type"), col("interlace"), col("text_meta"))
@@ -463,7 +463,7 @@ object MultimodalQueries {
        |                     ${dhashHalfSql("0,1,2,3", "y")}) AS dhash
        |FROM ids""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.ImageHash
-      .syntheticGradientPngs(t(s, dir, "documents"), s)
+      .syntheticGradientPngs(t(s, dir, "documents"))
     graft.multimodal.ImageHash.dhashDocs(rows, s, lenient = true)
       .select(col("doc_id"), format_string("%016x", col("simhash")).as("dhash"))
   }
@@ -501,7 +501,7 @@ object MultimodalQueries {
        |WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3""".stripMargin) {
     (s, dir) =>
       val rows = graft.multimodal.ImageHash
-        .syntheticGradientPngs(t(s, dir, "documents"), s, planted = true)
+        .syntheticGradientPngs(t(s, dir, "documents"), planted = true)
       // EAGER CHECKPOINT of the 16-byte hash rows (r10, guide §2.4/§8):
       // the banded self-join has no exchange below the branch point (the
       // banding posexplode is pure map lineage over the decode), so the
@@ -546,7 +546,7 @@ object MultimodalQueries {
        |SELECT doc_id, min(r) AS canonical_id FROM reach GROUP BY doc_id""".stripMargin) {
     (s, dir) =>
       val rows = graft.multimodal.ImageHash
-        .syntheticGradientPngs(t(s, dir, "documents"), s, planted = true)
+        .syntheticGradientPngs(t(s, dir, "documents"), planted = true)
       // eager checkpoint: decode-once for the banded pair join (see d16)
       val hashes = graft.multimodal.ImageHash.dhashDocs(rows, s, lenient = true)
         .localCheckpoint(true)
@@ -585,7 +585,7 @@ object MultimodalQueries {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val index = graft.multimodal.ImageHash.dhashDocs(
-        graft.multimodal.ImageHash.syntheticGradientPngs(docs, s), s, lenient = true)
+        graft.multimodal.ImageHash.syntheticGradientPngs(docs), s, lenient = true)
       val dropRows = docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id")).as[Long]
         .map(id => graft.multimodal.MediaRow(id + 1000000L, "image/png",
@@ -628,7 +628,7 @@ object MultimodalQueries {
        |                     ${audioHalfSql(audioLoWs, "w")}) AS fp
        |FROM ids""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.AudioHash
-      .syntheticPcmWavs(t(s, dir, "documents"), s)
+      .syntheticPcmWavs(t(s, dir, "documents"))
     graft.multimodal.AudioHash.fingerprintDocs(rows, s, lenient = true)
       .select(col("doc_id"), format_string("%016x", col("simhash")).as("fp"))
   }
@@ -657,7 +657,7 @@ object MultimodalQueries {
        |WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3""".stripMargin) {
     (s, dir) =>
       val rows = graft.multimodal.AudioHash
-        .syntheticPcmWavs(t(s, dir, "documents"), s, planted = true)
+        .syntheticPcmWavs(t(s, dir, "documents"), planted = true)
       // eager checkpoint: decode-once for the banded pair join (see d16)
       val fps = graft.multimodal.AudioHash.fingerprintDocs(rows, s, lenient = true)
         .localCheckpoint(true)
@@ -696,7 +696,7 @@ object MultimodalQueries {
        |                     ${videoHalfSql("0,1,2,3", "y")}) AS fp
        |FROM fr""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.VideoHash
-      .syntheticGradientAvis(t(s, dir, "documents"), s)
+      .syntheticGradientAvis(t(s, dir, "documents"))
     graft.multimodal.VideoHash.frameHashes(rows, s, lenient = true)
       .select(col("doc_id"), col("frame_no"),
         format_string("%016x", col("simhash")).as("fp"))
@@ -735,7 +735,7 @@ object MultimodalQueries {
        |  ON a.hi = b.hi AND a.lo = b.lo AND a.doc_id < b.doc_id
        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.VideoHash
-      .syntheticGradientAvis(t(s, dir, "documents"), s, planted = true)
+      .syntheticGradientAvis(t(s, dir, "documents"), planted = true)
     // EAGER CHECKPOINT (r10): the d20 plan audit showed the decode chain
     // executing twice — PushDownLeftSemiAntiJoin rewrites the hot-hash
     // anti join below `dist`'s distinct aggregate on the probe side, so
@@ -884,7 +884,7 @@ object MultimodalQueries {
        |                     ${dhashHalfSql("0,1,2,3", "y")}) AS dhash
        |FROM ids""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.ImageHash
-      .syntheticGradientBmps(t(s, dir, "documents"), s)
+      .syntheticGradientBmps(t(s, dir, "documents"))
     graft.multimodal.ImageHash.dhashDocs(rows, s, lenient = true)
       .select(col("doc_id"), format_string("%016x", col("simhash")).as("dhash"))
   }
@@ -925,7 +925,7 @@ object MultimodalQueries {
       |  start_window, end_window, n_windows
       |FROM seg""".stripMargin) { (s, dir) =>
     val rows = graft.multimodal.AudioHash
-      .syntheticSegmentedWavs(t(s, dir, "documents"), s)
+      .syntheticSegmentedWavs(t(s, dir, "documents"))
     val energies = graft.multimodal.AudioHash
       .windowEnergies(rows, s, windows = 13, lenient = true)
     graft.multimodal.AudioHash.activitySegments(energies, meanThreshold = 10L)
@@ -1022,7 +1022,7 @@ object MultimodalQueries {
       |  unnest(range(0, 4 + doc_id % 6,
       |    CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 2 + doc_id % 3 END)) AS t(s)
       |WHERE doc_id % 11 <> 0""".stripMargin) { (s, dir) =>
-    val rows = graft.multimodal.Media.syntheticSyncMp4s(t(s, dir, "documents"), s)
+    val rows = graft.multimodal.Media.syntheticSyncMp4s(t(s, dir, "documents"))
     graft.multimodal.Media.extractMp4Keyframes(rows, s, lenient = true).toDF()
   }
 

@@ -1248,8 +1248,8 @@ object TextQueries {
         min(col("n")).as("min_tokens"), max(col("n")).as("max_tokens"))
   }
 
-  /** Intra-document repetition ratio (TextAnalysis.repetitionRatio):
-    * 1 − distinct/total word trigrams — the Gopher-style repetitious-text
+  /** Intra-document repetition ratio: 1 − distinct/total word trigrams
+    * (TextAnalysis.wordTrigrams) — the Gopher-style repetitious-text
     * quality filter, entirely map-side. The oracle replays the identical
     * trigram construction and ratio.
     */

@@ -187,26 +187,6 @@ object Warc {
     }
   }
 
-  /** Read WARC files from disk/object storage via Spark's binaryFile
-    * source and explode them into records: the production entry point
-    * (`path` accepts globs, e.g. an `s3://bucket/crawl/` prefix with a
-    * `.warc.gz` wildcard). Each file
-    * is one scan row, so parallelism is per-file with zero shuffle; ids
-    * are the xxhash64 of the file path (stable across runs, and the
-    * path↔id map is recoverable by re-selecting it from the same scan).
-    * binaryFile caps single files at
-    * spark.sql.sources.binaryFile.maxLength (2 GiB default) — Common
-    * Crawl segments are 1 GiB, inside the cap by design.
-    */
-  def readFiles(spark: SparkSession, path: String,
-      lenient: Boolean = true): Dataset[WarcRecord] = {
-    import spark.implicits._
-    val blobs = spark.read.format("binaryFile").load(path)
-      .select(xxhash64(col("path")).as("file_id"), col("content").as("payload"))
-      .as[WarcBlob]
-    extractRecords(blobs, spark, lenient)
-  }
-
   /** Deterministic WARC fixtures from the documents table, `docsPerFile`
     * docs per file in doc_id order. Per file: one warcinfo record, then
     * per doc a response record (HTTP 200, or 404 every 13th doc; body =

@@ -200,30 +200,6 @@ object Bpe {
     out.toArray
   }
 
-  /** Persist a learned merge table as parquet (rank, left, right) — the
-    * tokenizer-artifact sink (the W2V model sink/source posture, S6):
-    * train once on the corpus, encode everywhere from the stored table.
-    */
-  def saveMerges(spark: org.apache.spark.sql.SparkSession,
-      merges: Seq[(String, String)], path: String): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((l, r), i) => (i, l, r) }
-      .toDF("rank", "left", "right")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a merge table saved by [[saveMerges]], rank order restored. */
-  def loadMerges(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(String, String)] =
-    spark.read.parquet(path)
-      .orderBy(col("rank"))
-      .select(col("left"), col("right"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .toSeq
-
   /** Subword tokens for a whole whitespace-separated text, as a native
     * map-side expression (array<string>; null text → null).
     */

@@ -122,18 +122,6 @@ object TextAnalysis {
     regexp_replace(regexp_replace(text, emailPattern, "[EMAIL]"),
       longNumberPattern, "[NUM]")
 
-  /** Intra-document repetition ratio: 1 − distinct/total word trigrams —
-    * the Gopher-style "repetitious document" quality signal (templated or
-    * looping text scores high; a doc under 3 words scores 0). Entirely
-    * map-side.
-    */
-  def repetitionRatio(text: Column): Column = {
-    val tg = wordTrigrams(text)
-    when(size(tg) > 0,
-      lit(1.0) - size(array_distinct(tg)).cast("double") / size(tg))
-      .otherwise(lit(0.0))
-  }
-
   /** Sentence array of `text`: split on sentence punctuation, trim, drop
     * empties — the x5 segmentation as a reusable array column.
     */

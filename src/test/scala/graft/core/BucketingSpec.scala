@@ -4,7 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Bucketed-table layout: the co-located-join path for repeatedly joined
-  * fact tables (SURVEY.md §7 scale posture).
+  * fact tables (SURVEY.md §7 scale posture). Pre-shuffling a table into
+  * buckets by its join/aggregation key through Spark's own
+  * `bucketBy`/`sortBy`/`saveAsTable` makes every later equi-join or
+  * groupBy on that key shuffle-free; bucket metadata lives in the catalog.
   */
 class BucketingSpec extends SparkSpec {
 
@@ -14,10 +17,10 @@ class BucketingSpec extends SparkSpec {
     val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select("o_orderkey", "o_totalprice")
 
-    Io.writeTable(li, Io.TableSpec("li_bkt", numBuckets = 4,
-      bucketBy = Seq("l_orderkey"), sortBy = Seq("l_orderkey"), mode = "overwrite"))
-    Io.writeTable(ord, Io.TableSpec("ord_bkt", numBuckets = 4,
-      bucketBy = Seq("o_orderkey"), sortBy = Seq("o_orderkey"), mode = "overwrite"))
+    li.write.mode("overwrite").bucketBy(4, "l_orderkey").sortBy("l_orderkey")
+      .saveAsTable("li_bkt")
+    ord.write.mode("overwrite").bucketBy(4, "o_orderkey").sortBy("o_orderkey")
+      .saveAsTable("ord_bkt")
 
     // force a sort-merge join so the assertion is about bucketing, not
     // broadcast
@@ -50,8 +53,8 @@ class BucketingSpec extends SparkSpec {
     // ever shuffles, at any index size
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val indexed = emb.join(graft.ann.Ann.kmeansCells(emb, k = 8), "vec_id")
-    Io.writeTable(indexed, Io.TableSpec("ivf_idx", numBuckets = 4,
-      bucketBy = Seq("cell"), sortBy = Seq("cell"), mode = "overwrite"))
+    indexed.write.mode("overwrite").bucketBy(4, "cell").sortBy("cell")
+      .saveAsTable("ivf_idx")
 
     // force non-broadcast joins: at scale the query batch is too big to
     // broadcast, which is exactly when the index side must not reshuffle

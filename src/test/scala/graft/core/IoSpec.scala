@@ -218,42 +218,4 @@ class IoSpec extends SparkSpec {
         options = Map("mode" -> "FAILFAST"))).count()
     }
   }
-
-  it should "fan out multiple writes" in {
-    val base = tmp()
-    val df = Seq((1, "x")).toDF("a", "b")
-    Io.writeAll(Map(
-      "one" -> (df, Io.WriteSpec("parquet", s"$base/one")),
-      "two" -> (df, Io.WriteSpec("json", s"$base/two"))))
-    spark.read.parquet(s"$base/one").count() shouldBe 1
-    spark.read.json(s"$base/two").count() shouldBe 1
-  }
-
-  it should "leave a torn atomic fan-out detectable and resumable" in {
-    val base = tmp()
-    val good = Seq((1, "x")).toDF("a", "b")
-    // a dataset whose EXECUTION fails — the crash injection: the first
-    // dataset commits, then the run dies mid-fan-out
-    val bomb = good.selectExpr("a", "if(a > 0, raise_error('injected crash'), b) as b")
-    def outputs(second: org.apache.spark.sql.DataFrame) = Map(
-      "one" -> (good, Io.WriteSpec("parquet", s"$base/one", mode = "overwrite")),
-      "two" -> (second, Io.WriteSpec("parquet", s"$base/two", mode = "overwrite")))
-
-    // run 1 completes: manifest present and lists both datasets
-    Io.writeAllAtomic(outputs(good), base)
-    Io.fanOutManifest(spark, base) shouldBe
-      Some(Map("one" -> s"$base/one", "two" -> s"$base/two"))
-
-    // run 2 dies between datasets: dataset "one" is re-committed and
-    // LOOKS complete on disk, but the manifest is gone — torn run
-    // detectable even though every surviving dataset has _SUCCESS
-    an[Exception] should be thrownBy Io.writeAllAtomic(outputs(bomb), base)
-    spark.read.parquet(s"$base/one").count() shouldBe 1
-    Io.fanOutManifest(spark, base) shouldBe None
-
-    // resume = re-run the same fan-out (overwrite specs, idempotent)
-    Io.writeAllAtomic(outputs(good), base)
-    Io.fanOutManifest(spark, base).map(_.keySet) shouldBe Some(Set("one", "two"))
-    spark.read.parquet(s"$base/two").count() shouldBe 1
-  }
 }

@@ -26,11 +26,6 @@ class SchemaToolsSpec extends SparkSpec {
     out.filter(col("top_level").isNull).count() shouldBe 1
   }
 
-  "snakeToLowerCamel" should "convert snake_case names" in {
-    val df = Seq((1, 2)).toDF("abc_def_gh", "x")
-    SchemaTools.snakeToLowerCamel(df).schema.fieldNames.toSet shouldBe Set("abcDefGh", "x")
-  }
-
   it should "keep plans expression-only (no RDD round-trip)" in {
     // the rename must stay a single Project over the input (the reference's
     // df.rdd rebuild would show a fresh LogicalRDD *above* the source);

@@ -38,7 +38,7 @@ class AudioHashSpec extends SparkSpec {
         if (sums(w + 1) > sums(w)) h | (1L << w) else h)
     }
     val docs = Seq(1L, 2L, 9L, 30L).toDF("doc_id")
-    val rows = AudioHash.syntheticPcmWavs(docs, spark, planted = true)
+    val rows = AudioHash.syntheticPcmWavs(docs, planted = true)
     val got = AudioHash.fingerprintDocs(rows, spark, lenient = true)
       .as[(Long, Long)].collect().toMap
     // 9 is truncated and dropped; 30 plants a perturbed copy at 1000030
@@ -71,7 +71,7 @@ class AudioHashSpec extends SparkSpec {
   it should "segment the planted silence blocks through the real decode" in {
     // doc 1: blocks (b+1)%3==0 silent → windows 2,5,8,11 silent; active
     // runs {0,1},{3,4},{6,7},{9,10},{12}; doc 9 truncated → dropped
-    val rows = AudioHash.syntheticSegmentedWavs(Seq(1L, 9L).toDF("doc_id"), spark)
+    val rows = AudioHash.syntheticSegmentedWavs(Seq(1L, 9L).toDF("doc_id"))
     val segs = AudioHash.activitySegments(
       AudioHash.windowEnergies(rows, spark, windows = 13, lenient = true),
       meanThreshold = 10L)

@@ -74,7 +74,7 @@ class ImageHashSpec extends SparkSpec {
       h
     }
     val docs = Seq(1L, 2L, 11L, 30L).toDF("doc_id")
-    val rows = ImageHash.syntheticGradientPngs(docs, spark, planted = true)
+    val rows = ImageHash.syntheticGradientPngs(docs, planted = true)
     val got = ImageHash.dhashDocs(rows, spark, lenient = true)
       .as[(Long, Long)].collect().toMap
     // 11 is truncated and dropped; 30 plants a one-pixel copy at 1000030
@@ -93,15 +93,15 @@ class ImageHashSpec extends SparkSpec {
     // the ImageIO-encoded PNG for every (id, delta)
     val docs = Seq(1L, 2L, 30L).toDF("doc_id")
     val png = ImageHash.dhashDocs(
-      ImageHash.syntheticGradientPngs(docs, spark), spark, lenient = true)
+      ImageHash.syntheticGradientPngs(docs), spark, lenient = true)
       .as[(Long, Long)].collect().toMap
     val bmp = ImageHash.dhashDocs(
-      ImageHash.syntheticGradientBmps(docs, spark), spark, lenient = true)
+      ImageHash.syntheticGradientBmps(docs), spark, lenient = true)
       .as[(Long, Long)].collect().toMap
     bmp shouldBe png
     // truncated BMP payloads drop whole under lenient decode
     val dropped = ImageHash.dhashDocs(
-      ImageHash.syntheticGradientBmps(Seq(9L, 10L).toDF("doc_id"), spark),
+      ImageHash.syntheticGradientBmps(Seq(9L, 10L).toDF("doc_id")),
       spark, lenient = true).as[(Long, Long)].collect().toMap
     dropped.keySet shouldBe Set(10L)
   }

@@ -11,7 +11,7 @@ class MatroskaSpec extends SparkSpec {
     .cache()
 
   "syntheticMkvs + extractMkvMeta" should "round-trip the planted metadata" in {
-    val rows = Matroska.syntheticMkvs(docs, spark).as[MediaRow].repartition(3)
+    val rows = Matroska.syntheticMkvs(docs).as[MediaRow].repartition(3)
     val metas = Matroska.extractMkvMeta(rows, spark, lenient = true)
       .collect().map(m => m.doc_id -> m).toMap
 
@@ -35,7 +35,7 @@ class MatroskaSpec extends SparkSpec {
     val id = 10L // 10 % 5 == 0, 10 % 9 != 0
     val rows = Seq(id).toDF("doc_id")
     val m = Matroska.extractMkvMeta(
-      Matroska.syntheticMkvs(rows, spark).as[MediaRow], spark).head()
+      Matroska.syntheticMkvs(rows).as[MediaRow], spark).head()
     m.duration_ms shouldBe 250L * (1 + id % 8) * (1 + id % 4)
     m.n_tracks shouldBe (1 + id % 3).toInt
   }
@@ -50,7 +50,7 @@ class MatroskaSpec extends SparkSpec {
 
   "syntheticMjpegMkvs + extractMkvFrames" should
       "demux and decode planted frames across clusters and framings" in {
-    val rows = Matroska.syntheticMjpegMkvs(docs, spark).as[MediaRow].repartition(3)
+    val rows = Matroska.syntheticMjpegMkvs(docs).as[MediaRow].repartition(3)
     val frames = Matroska.extractMkvFrames(rows, spark, lenient = true)
       .collect().map(f => (f.doc_id, f.frame_no) -> f).toMap
 
@@ -72,7 +72,7 @@ class MatroskaSpec extends SparkSpec {
   }
 
   it should "sample every strideth frame" in {
-    val rows = Matroska.syntheticMjpegMkvs(Seq(4L).toDF("doc_id"), spark).as[MediaRow]
+    val rows = Matroska.syntheticMjpegMkvs(Seq(4L).toDF("doc_id")).as[MediaRow]
     val got = Matroska.extractMkvFrames(rows, spark, frameStride = 2)
       .collect().map(_.frame_no).sorted
     got shouldBe Array(0, 2, 4) // 5 frames at id 4, stride 2
@@ -81,7 +81,7 @@ class MatroskaSpec extends SparkSpec {
   it should "name the codec when block bytes need an external decoder" in {
     // the METADATA fixture carries inter-frame codec ids but no clusters;
     // build one V_VP9 payload with a junk-bytes video block instead
-    val junk = Matroska.syntheticMjpegMkvs(Seq(3L).toDF("doc_id"), spark)
+    val junk = Matroska.syntheticMjpegMkvs(Seq(3L).toDF("doc_id"))
       .as[MediaRow].head()
     // corrupt every frame's PNG magic so imageio can't decode it
     val pngMagic = Array[Byte](0x89.toByte, 0x50, 0x4E, 0x47)

@@ -149,7 +149,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "syntheticPngs" should "round-trip doc-id-derived color through real PNG decode" in {
-    val rows = Media.syntheticPngs(docs, spark)
+    val rows = Media.syntheticPngs(docs)
     val feats = Media
       .extractFeatures(rows, new Media.ImageIoDecoder, spark, lenient = true)
       .cache()
@@ -166,7 +166,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "syntheticWavs" should "round-trip doc-id-derived waveforms through real WAV decode" in {
-    val rows = Media.syntheticWavs(docs, spark)
+    val rows = Media.syntheticWavs(docs)
     val feats = Media
       .extractFeatures(rows, new Media.WavDecoder(), spark, lenient = true)
       .cache()
@@ -212,7 +212,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "MjpegAviDecoder" should "decode PNG-frame AVIs exactly, dropping truncated ones" in {
-    val rows = Media.syntheticAvis(docs, spark).repartition(3)
+    val rows = Media.syntheticAvis(docs).repartition(3)
     val feats = Media.extractFeatures(rows, new Media.MjpegAviDecoder(), spark,
       lenient = true).cache()
     // exactly the id % 9 == 0 payloads are dropped
@@ -270,7 +270,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "extractVideoFrames" should "decode sampled frames with the right stride and drop corrupt containers" in {
-    val rows = Media.syntheticAvis(docs, spark).repartition(3)
+    val rows = Media.syntheticAvis(docs).repartition(3)
     val frames = Media.extractVideoFrames(rows, spark, frameStride = 2,
       lenient = true).cache()
     val byDoc = frames.collect().groupBy(_.doc_id)
@@ -290,7 +290,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "parseMp4Meta" should "round-trip doc-id-derived box trees through the ISO-BMFF walker" in {
-    val rows = Media.syntheticMp4s(docs, spark)
+    val rows = Media.syntheticMp4s(docs)
     val metas = Media.extractMp4Meta(rows, spark, lenient = true).cache()
     val ids = docs.select("doc_id").as[Long].collect().toSet
     // every 11th payload is truncated — lenient drops exactly those
@@ -311,7 +311,7 @@ class MediaSpec extends SparkSpec {
   it should "handle 64-bit largesize boxes and reject malformed trees" in {
     // wrap a fixture's moov in a largesize box: same body, size32=1 +
     // 64-bit size — the layout real >4 GiB mdat-bearing files use
-    val sample = Media.syntheticMp4s(docs.filter(col("doc_id") === 1), spark)
+    val sample = Media.syntheticMp4s(docs.filter(col("doc_id") === 1))
       .collect().head.payload
     val ftypLen = 20
     val moov = sample.drop(ftypLen)
@@ -333,7 +333,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "parseMp4Samples" should "demux exact per-sample byte ranges from the stbl tables" in {
-    val rows = Media.syntheticJpegMp4s(docs, spark).collect()
+    val rows = Media.syntheticJpegMp4s(docs).collect()
     // even ids exercise 32-bit stco, odd ids 64-bit co64 — check both
     rows.filter(r => r.doc_id % 13 != 0).take(10).foreach { r =>
       val id = r.doc_id
@@ -395,7 +395,7 @@ class MediaSpec extends SparkSpec {
       box("trak", tkhd ++ box("mdia", box("minf", badStbl))))
     an[IllegalArgumentException] should be thrownBy Media.parseMp4Samples(badMp4)
     // m8's fixtures carry no sample tables at all — the walk names the gap
-    val noTables = Media.syntheticMp4s(docs.filter(col("doc_id") === 1), spark)
+    val noTables = Media.syntheticMp4s(docs.filter(col("doc_id") === 1))
       .collect().head.payload
     the[IllegalArgumentException] thrownBy
       Media.parseMp4Samples(noTables) should have message
@@ -403,7 +403,7 @@ class MediaSpec extends SparkSpec {
   }
 
   "extractMp4Frames" should "decode sampled JPEG-track frames and drop corrupt containers" in {
-    val rows = Media.syntheticJpegMp4s(docs, spark).repartition(3)
+    val rows = Media.syntheticJpegMp4s(docs).repartition(3)
     val frames = Media.extractMp4Frames(rows, spark, frameStride = 2,
       lenient = true).cache()
     val byDoc = frames.collect().groupBy(_.doc_id)
@@ -427,14 +427,14 @@ class MediaSpec extends SparkSpec {
       byDoc.keySet.toSeq.map(id => 1 + id % 5).sum
     // inter-frame-codec fixtures (avc1…, no sample tables) throw without
     // lenient and drop with it
-    val avc = Media.syntheticMp4s(docs, spark)
+    val avc = Media.syntheticMp4s(docs)
     an[Exception] should be thrownBy
       Media.extractMp4Frames(avc, spark).collect()
     Media.extractMp4Frames(avc, spark, lenient = true).count() shouldBe 0
   }
 
   "parsePngMeta" should "walk real imageio chunks plus a spliced tEXt annotation" in {
-    val rows = Media.syntheticAnnotatedPngs(docs, spark)
+    val rows = Media.syntheticAnnotatedPngs(docs)
     val metas = Media.extractPngMeta(rows, spark, lenient = true).cache()
     val ids = docs.select("doc_id").as[Long].collect().toSet
     // every 7th payload is truncated — lenient drops exactly those
@@ -478,7 +478,7 @@ class MediaSpec extends SparkSpec {
   "parseMp4Keyframes" should
       "read stss/stts sync positions and treat a missing stss as all-sync" in {
     val rows = Media.syntheticSyncMp4s(
-      Seq(1L, 5L, 7L, 11L).toDF("doc_id"), spark).collect()
+      Seq(1L, 5L, 7L, 11L).toDF("doc_id")).collect()
       .map(r => r.doc_id -> r.payload).toMap
     // id 1: 5 samples, sync stride 3 → samples 0 and 3; ts 0 and 3000 ms
     Media.parseMp4Keyframes(rows(1L)) shouldBe
@@ -507,15 +507,5 @@ class MediaSpec extends SparkSpec {
     System.arraycopy(bad, idx + 16, bad, idx + 12, 4)
     System.arraycopy(entry0, 0, bad, idx + 16, 4)
     an[IllegalArgumentException] should be thrownBy Media.parseMp4Keyframes(bad)
-  }
-
-  "sampleFrames" should "emit deterministic stride-sampled frame hashes" in {
-    val frames = Media.sampleFrames(Media.payloads(docs)).cache()
-    // every doc yields >= 1 frame; frame numbering starts at 0
-    frames.groupBy("doc_id").count().filter(col("count") < 1).count() shouldBe 0
-    frames.agg(min("frame_no")).as[Int].head() shouldBe 0
-    // deterministic: same input → same hashes
-    val again = Media.sampleFrames(Media.payloads(docs))
-    frames.exceptAll(again).count() shouldBe 0
   }
 }

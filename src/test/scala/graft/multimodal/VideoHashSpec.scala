@@ -20,7 +20,7 @@ class VideoHashSpec extends SparkSpec {
 
   it should "hash every frame to the formula, honor stride, and drop corrupt containers" in {
     val docs = Seq(1L, 2L, 13L).toDF("doc_id")
-    val rows = VideoHash.syntheticGradientAvis(docs, spark)
+    val rows = VideoHash.syntheticGradientAvis(docs)
     val got = VideoHash.frameHashes(rows, spark, lenient = true)
       .as[(Long, Int, Long)].collect().toSet
     // 13 is truncated and dropped WHOLE; doc 1 has 2+1%3=3 frames, doc 2 has 4
@@ -91,7 +91,7 @@ class VideoHashSpec extends SparkSpec {
     // id 20: 2+20%3=4 frames; the planted copy perturbs frame 0 only, so
     // they share at least frames 1..3
     val docs = Seq(20L).toDF("doc_id")
-    val rows = VideoHash.syntheticGradientAvis(docs, spark, planted = true)
+    val rows = VideoHash.syntheticGradientAvis(docs, planted = true)
     val pairs = VideoHash.sharedFramePairs(
       VideoHash.frameHashes(rows, spark, lenient = true), minShared = 2)
       .as[(Long, Long, Long)].collect()

@@ -24,12 +24,6 @@ class CorpusDiffSpec extends SparkSpec {
       4L -> "same", 5L -> "added")
   }
 
-  it should "roll up to a changelog summary" in {
-    val m = CorpusDiff.diffSummary(before, afterCorpus)
-      .as[(String, Long)].collect().toMap
-    m shouldBe Map("same" -> 2L, "changed" -> 1L, "removed" -> 1L, "added" -> 1L)
-  }
-
   it should "diff identical corpora to all-same, and against empty to all-added/removed" in {
     CorpusDiff.diff(before, before).filter($"status" =!= "same").count() shouldBe 0L
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")

@@ -110,18 +110,6 @@ class WarcSpec extends SparkSpec {
     plan should not include "Exchange"
   }
 
-  behavior of "Warc.readFiles"
-
-  it should "read .warc files from disk through the binaryFile source, gzip included" in {
-    val dir = java.nio.file.Files.createTempDirectory("warc-read")
-    java.nio.file.Files.write(dir.resolve("a.warc"), httpResponse)
-    java.nio.file.Files.write(dir.resolve("b.warc.gz"), Warc.gzip(httpResponse))
-    val rs = Warc.readFiles(spark, dir.toString + "/*").collect()
-    rs should have size 2
-    rs.map(_.target_uri).toSet shouldBe Set("http://x/1")
-    rs.map(_.file_id).toSet should have size 2 // distinct per path
-  }
-
   behavior of "Warc.syntheticWarcFiles"
 
   it should "emit one warcinfo plus interleaved request/response per file, in doc order" in {

@@ -94,16 +94,6 @@ class BpeSpec extends SparkSpec {
     got shouldBe Set(None, Some(4))
   }
 
-  it should "round-trip a merge table through the parquet model sink" in {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
-    Bpe.saveMerges(spark, merges, s"$dir/merges")
-    val back = Bpe.loadMerges(spark, s"$dir/merges")
-    back shouldBe merges
-    // loaded table encodes identically to the in-memory one
-    Bpe.encodeWord("lowest", Bpe.rankTable(back), "</w>").toSeq shouldBe
-      Seq("lo", "w", "est</w>")
-  }
-
   it should "handle multi-codepoint (astral) characters as single symbols" in {
     val ranks = Bpe.rankTable(Seq.empty)
     Bpe.encodeWord("a😀b", ranks, "</w>").toSeq shouldBe
